@@ -356,6 +356,12 @@ def write_index_store(
     is a per-directory swap (``store.swap_partition_dirs``); the
     bucketed-TABLE tier for shuffle-free lookup joins is
     :func:`write_index_tables`, a different axis.
+
+    The seed's manifest commit records the schema and ``n_buckets``:
+    ADD merges and term probes must hash terms with the arity the
+    store was laid out with. A seed that dies before that commit
+    leaves no manifest, so every reader and mutator refuses the
+    directory until a re-run of this overwrite.
     """
     from mapreduce_inverted_index_spark.operators.store import (
         mutation_lease,
@@ -363,6 +369,7 @@ def write_index_store(
         refresh_manifest,
     )
 
+    tagged = index.withColumn("bucket", index_bucket_col("term", n_buckets))
     # seeding is a mutation too: overwriting a store a live
     # maintenance fold is mid-swap on loses the fold's batch
     with mutation_lease(path):
@@ -373,107 +380,40 @@ def write_index_store(
         # the pre-crash state irrelevant) before writing
         purge_swap_orphans(path)
         (
-            index.withColumn("bucket", index_bucket_col("term", n_buckets))
             # one file per bucket, term-sorted within it: probe scans
             # open O(probed buckets) files and row-group-skip on the
             # term min/max stats (the write_index_tables sortBy story,
             # directory-partitioned)
-            .repartition(n_buckets, "bucket")
+            tagged.repartition(n_buckets, "bucket")
             .sortWithinPartitions("term")
             .write.mode("overwrite")
             .partitionBy("bucket")
             .parquet(path)
         )
-        # sidecar records the bucket-fn arity: ADD merges and
-        # term-probe pruning must hash NEW terms with the same
-        # n_buckets the store was laid out with (DELETE doesn't need
-        # it — the bucket column rides through its regroup). Written
-        # after the data so a failed write never leaves a meta file
-        # pointing at nothing.
-        import json
-
-        with open(f"{path}/_mii_store.json", "w") as f:
-            json.dump({"n_buckets": n_buckets}, f)
         # reader-visible commit of the seeded snapshot (the overwrite
         # dropped any prior manifest along with the old layout)
-        refresh_manifest(path, "bucket")
-
-
-def _store_n_buckets(path: str) -> int:
-    import json
-    import os
-
-    sidecar = f"{path}/_mii_store.json"
-    if not os.path.isfile(sidecar):
-        # bucket= dirs without the arity sidecar = a write_index_store
-        # that crashed between its data write and its sidecar write.
-        # ADDs can't hash new terms without the arity — fail loud with
-        # the recovery step instead of guessing (DELETEs don't come
-        # here; the bucket column rides through their regroup).
-        raise FileNotFoundError(
-            f"{sidecar} missing but the store layout is bucketed — a "
-            "prior write_index_store died before committing its "
-            "sidecar; re-run write_index_store (mode is a full "
-            "overwrite) to re-seed the store"
+        refresh_manifest(
+            path,
+            "bucket",
+            {"schema": tagged.schema.json(), "n_buckets": n_buckets},
         )
-    with open(sidecar) as f:
-        return int(json.load(f)["n_buckets"])
-
-
-def is_index_store(path: str) -> bool:
-    """True iff ``path`` is a :func:`write_index_store` layout. The
-    authority is the ``_mii_store.json`` sidecar, NOT the presence of
-    ``bucket=`` dirs: a takedown that erases every remaining doc drops
-    every bucket directory (``swap_partition_dirs`` retires a
-    partition whose last term dies), and that empty-but-bucketed store
-    must keep routing through the store maintenance paths — detection
-    off ``bucket=`` dirs would silently fall back to the flat-parquet
-    path and crash on schema inference (or rebuild a flat layout).
-    ``bucket=`` dirs WITHOUT a sidecar (a seed write that died between
-    data and sidecar) still count as a store, so the half-seeded state
-    fails loud in ``_store_n_buckets`` instead of silently rebuilding
-    a flat layout over a bucketed directory."""
-    import os
-
-    return os.path.isfile(f"{path}/_mii_store.json") or (
-        os.path.isdir(path) and bool(_store_bucket_dirs(path))
-    )
-
-
-def _store_bucket_dirs(path: str) -> "list[str]":
-    import os
-
-    return [d for d in os.listdir(path) if d.startswith("bucket=")]
-
-
-_INDEX_SCHEMA = "term string, postings array<bigint>, df bigint"
 
 
 def read_index_store(spark, path: str) -> DataFrame:
     """Read a :func:`write_index_store` store back as a plain index
     ``(term, postings, df)`` — the bucket partition column is storage
-    layout, not index content. A store whose every doc has been taken
-    down (sidecar present, zero bucket dirs) is an EMPTY index, not an
-    error.
-
-    Resolves through the reader manifest
-    (``store.resolve_manifest_files``) when present: one committed
-    snapshot's explicit file list, so a scan concurrent with a
-    maintenance swap never sees a mixed directory listing (it
-    converges to the post-swap snapshot or fails loud). Manifest-less
-    (pre-manifest) stores fall back to directory reading."""
+    layout, not index content. Opens one committed snapshot through
+    the reader manifest (``store.open_snapshot``), so a scan
+    concurrent with a maintenance swap never sees a mixed directory
+    listing (it converges to the post-swap snapshot or fails loud). A
+    store whose every doc has been taken down is an EMPTY index, not
+    an error."""
     from mapreduce_inverted_index_spark.operators.store import (
         open_snapshot,
     )
 
-    kind, df = open_snapshot(spark, path, "bucket")
-    if kind == "empty":  # committed-empty snapshot
-        return spark.createDataFrame([], _INDEX_SCHEMA)
-    if kind == "df":
-        return df.select("term", "postings", "df")
-    if not _store_bucket_dirs(path):
-        return spark.createDataFrame([], _INDEX_SCHEMA)
-    return spark.read.parquet(path).select("term", "postings", "df")
+    snap, _ = open_snapshot(spark, path, "bucket")
+    return snap.select("term", "postings", "df")
 
 
 def delete_from_index_store(
@@ -492,25 +432,26 @@ def delete_from_index_store(
     shuffle rows are bucket ids, not postings); the affected buckets'
     rows then re-aggregate per (bucket, term) with the dead ids
     anti-joined out — the bucket column rides THROUGH the regroup, so
-    no bucket recomputation (and no bucket-count parameter) is
-    needed; terms whose last posting dies drop out, a bucket whose
-    last term dies loses its directory. Commit = the shared
-    crash-safe dir swap (``store.swap_partition_dirs``). Returns the
-    affected bucket ids.
+    no bucket recomputation is needed; terms whose last posting dies
+    drop out, a bucket whose last term dies loses its directory.
+    Commit = the shared crash-safe dir swap
+    (``store.swap_partition_dirs``). Returns the affected bucket ids.
+
+    A directory with no manifest is refused (``FileNotFoundError``)
+    before anything is read: a flat or half-seeded directory has no
+    ``bucket=`` dirs to match, so the delete would be a silent no-op
+    and a takedown loop would checkpoint its ids away.
     """
     from mapreduce_inverted_index_spark.operators.store import (
         mutation_lease,
+        open_snapshot,
         recover_partition_swaps,
         swap_partition_dirs,
     )
 
     with mutation_lease(path):
         recover_partition_swaps(path, "bucket")
-        if not _store_bucket_dirs(path):
-            # every doc already taken down — the store is a valid
-            # EMPTY index (sidecar still pins the bucket arity for
-            # future ADDs) and any delete is a no-op
-            return []
+        store, _ = open_snapshot(spark, path, "bucket")
         if isinstance(doc_ids, DataFrame):
             dead = doc_ids.select(
                 F.col("doc_id").cast("bigint").alias("doc_id")
@@ -519,7 +460,6 @@ def delete_from_index_store(
             dead = spark.createDataFrame(
                 [(int(d),) for d in doc_ids], "doc_id bigint"
             )
-        store = spark.read.parquet(path)
         affected = sorted(
             r["bucket"]
             for r in store.select(
@@ -567,21 +507,26 @@ def merge_into_index_store(spark, path: str, delta: DataFrame) -> list[int]:
     batch's vocabulary footprint, not the index.
 
     Mechanics: the delta's buckets come from one bounded collect
-    (≤ n_buckets ints — the sidecar written by
-    :func:`write_index_store` pins n_buckets so new terms hash with
-    the store's arity); the affected subset full-outer-merges with
-    the delta via :func:`merge_index` and swaps in through the shared
-    crash-safe commit. Returns the affected bucket ids.
+    (≤ n_buckets ints — hashed with the manifest's ``n_buckets``, the
+    arity :func:`write_index_store` laid the store out with); the
+    affected subset full-outer-merges with the delta via
+    :func:`merge_index` and swaps in through the shared crash-safe
+    commit. A fully-taken-down store merges against its empty
+    snapshot, so re-ingest rebuilds the bucketed layout in place. A
+    directory with no manifest is refused, like
+    :func:`delete_from_index_store`. Returns the affected bucket ids.
     """
     from mapreduce_inverted_index_spark.operators.store import (
         mutation_lease,
+        open_snapshot,
         recover_partition_swaps,
         swap_partition_dirs,
     )
 
     with mutation_lease(path):
         recover_partition_swaps(path, "bucket")
-        n_buckets = _store_n_buckets(path)
+        store, manifest = open_snapshot(spark, path, "bucket")
+        n_buckets = manifest["n_buckets"]
         tagged = delta.withColumn(
             "bucket", index_bucket_col("term", n_buckets)
         )
@@ -591,17 +536,9 @@ def merge_into_index_store(spark, path: str, delta: DataFrame) -> list[int]:
         )
         if not affected:
             return []
-        if _store_bucket_dirs(path):
-            base = (
-                spark.read.parquet(path)
-                .where(F.col("bucket").isin(affected))
-                .select("term", "postings", "df")
-            )
-        else:
-            # fully-taken-down store: merge the delta against an
-            # empty base so re-ingest rebuilds the BUCKETED layout
-            # in place
-            base = spark.createDataFrame([], _INDEX_SCHEMA)
+        base = store.where(F.col("bucket").isin(affected)).select(
+            "term", "postings", "df"
+        )
         merged = (
             merge_index(base, delta)
             .withColumn("bucket", index_bucket_col("term", n_buckets))
@@ -621,14 +558,15 @@ def term_lookup_store(spark, path: str, terms: "list[str]") -> DataFrame:
     plan, pytest-audited) — the directory-layout twin of the
     bucketed-TABLE lookup (``term_queries.term_lookup_bucketed``).
     The bucket list is query metadata (≤ |terms| ints, computed with
-    the store's own hash arity from the sidecar), like an IVF probe's
+    the ``n_buckets`` of the manifest the snapshot open already
+    resolved — one metadata read per lookup), like an IVF probe's
     cell list.
 
     Output: ``term, postings ARRAY<BIGINT>, df``.
 
-    Like :func:`read_index_store`, resolves one committed snapshot
-    through the reader manifest when present (mid-swap probes never
-    see a mixed listing); the bucket predicate still reaches the
+    Like :func:`read_index_store`, opens one committed snapshot
+    through the reader manifest (mid-swap probes never see a mixed
+    listing); the bucket predicate still reaches the
     explicit-file-list scan as ``PartitionFilters`` (pytest-audited),
     so pruning is unchanged.
     """
@@ -636,19 +574,13 @@ def term_lookup_store(spark, path: str, terms: "list[str]") -> DataFrame:
         open_snapshot,
     )
 
-    kind, snap = open_snapshot(spark, path, "bucket")
-    if kind == "empty" or (
-        kind == "manifestless" and not _store_bucket_dirs(path)
-    ):
-        return spark.createDataFrame([], _INDEX_SCHEMA)
-    n_buckets = _store_n_buckets(path)
+    snap, manifest = open_snapshot(spark, path, "bucket")
     probe = spark.createDataFrame(
         [(t,) for t in terms], "term string"
-    ).select(index_bucket_col("term", n_buckets).alias("bucket"))
+    ).select(index_bucket_col("term", manifest["n_buckets"]).alias("bucket"))
     buckets = sorted(r["bucket"] for r in probe.distinct().collect())
-    src = snap if kind == "df" else spark.read.parquet(path)
     return (
-        src.where(F.col("bucket").isin(buckets) & F.col("term").isin(terms))
+        snap.where(F.col("bucket").isin(buckets) & F.col("term").isin(terms))
         .select("term", "postings", "df")
     )
 

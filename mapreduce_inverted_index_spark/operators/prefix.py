@@ -72,9 +72,15 @@ def bucketed_prefix_sum(
     """
     pairs = [(value_col, out_col), *also]
     if buckets >= 2:
+        # backtick-quote the identifier, embedded backticks doubled:
+        # any top-level column name (spaces, reserved words, backticks)
+        # parses as that one column. This matches F.col(cut_col) only
+        # for non-dotted names — a dotted name is one literal
+        # top-level column here, not F.col's struct-field path.
+        quoted = cut_col.replace("`", "``")
         fracs = [b / buckets for b in range(1, buckets)]
         cuts = df.agg(
-            F.percentile_approx(cut_col, fracs, 10_000).alias("_qs")
+            F.percentile_approx(F.col(f"`{quoted}`"), fracs, 10_000).alias("_qs")
         )
         # One SQL string parsed JVM-side instead of a (buckets-1)-term
         # F.when chain built Column-by-Column: the chain is ~180 py4j
@@ -85,22 +91,19 @@ def bucketed_prefix_sum(
         # §7, applied to the shared primitive). Identical expression
         # tree: IF(x > q, 1, 0) == WHEN(x > q, 1).OTHERWISE(0),
         # nulls included (null comparison -> false -> 0 on both).
-        # backtick-quote the interpolated identifier so a column name
-        # needing quoting (dots, spaces, reserved words) parses the
-        # same way F.col(cut_col) resolved it (ADVICE r13)
         pid = F.expr(
             " + ".join(
-                f"IF(`{cut_col}` > _qs[{i}], 1, 0)"
+                f"IF(`{quoted}` > _qs[{i}], 1, 0)"
                 for i in range(buckets - 1)
             )
         )
         ev = df.crossJoin(F.broadcast(cuts)).select(
-            pid.alias("_pid"), *df.columns
+            pid.alias("_pid"), df["*"]
         )
     else:
         # buckets=1: the naive single-partition prefix (the test
         # equality anchor).
-        ev = df.select(F.lit(0).alias("_pid"), *df.columns)
+        ev = df.select(F.lit(0).alias("_pid"), "*")
     # One materialization, one set of cuts — see module docstring.
     ev = ev.persist()
     order = [F.col(c) if isinstance(c, str) else c for c in order_cols]
@@ -110,7 +113,7 @@ def bucketed_prefix_sum(
         .rowsBetween(Window.unboundedPreceding, 0 if inclusive else -1)
     )
     local = ev.select(
-        *ev.columns,
+        "*",
         *[
             F.coalesce(F.sum(v).over(w_local), F.lit(0)).alias(f"_loc{i}")
             for i, (v, _) in enumerate(pairs)

@@ -32,8 +32,6 @@ partition-pruned scan.
 
 from __future__ import annotations
 
-import json as _json
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -262,16 +260,18 @@ def lsh_signature(vec_col: str, n_planes: int = N_PLANES, dim: int = 64) -> F.Co
     ``_hyperplane_sign`` remains the Column-level reference and
     pytest pins the two forms equal.
     """
+    # backtick-quoted identifier, embedded backticks doubled: any
+    # top-level column name parses as that one column. This matches
+    # F.col(vec_col) only for non-dotted names — a dotted name is one
+    # literal top-level column here, not F.col's struct-field path.
+    quoted = vec_col.replace("`", "``")
     terms = []
     for p in range(n_planes):
         signs = ", ".join(
             f"{float(s)}D" for s in hyperplane_signs(dim, p)
         )
-        # backtick-quoted identifier: a vector column name needing
-        # quoting parses the same way F.col(vec_col) resolved it
-        # (ADVICE r13)
         terms.append(
-            f"IF(aggregate(zip_with(`{vec_col}`, array({signs}), "
+            f"IF(aggregate(zip_with(`{quoted}`, array({signs}), "
             "(x, s) -> CAST(x AS DOUBLE) * s), 0D, "
             f"(acc, v) -> acc + v) >= 0, {1 << (n_planes - 1 - p)}, 0)"
         )
@@ -624,63 +624,7 @@ def write_ivf_cells(
         clustered.write.mode("overwrite").partitionBy("cell").parquet(path)
         # reader-visible commit of the seeded snapshot; the schema
         # rides along so a later committed-empty state stays readable
-        refresh_manifest(path, "cell", schema_json=assigned.schema.json())
-
-
-def _swap_cell_dirs(path: str, remaining, affected: "list[int]") -> None:
-    """Crash-safe commit for cell-store rewrites (delete/compact) —
-    the cell-keyed face of the shared partition-dir swap; see
-    :func:`operators.store.swap_partition_dirs` for the commit
-    discipline (uuid tmp, rename-aside-then-in, nothing unlinked
-    until both renames landed). The text index store's bucket-level
-    takedown (``inverted_index.delete_from_index_store``) commits
-    through the same helper.
-    """
-    from mapreduce_inverted_index_spark.operators.store import (
-        swap_partition_dirs,
-    )
-
-    swap_partition_dirs(path, remaining, "cell", affected)
-
-
-
-def _read_cell_store(spark, path: str) -> DataFrame:
-    """Cell-store PROBE read: resolve one committed snapshot through
-    the reader manifest when present (a probe concurrent with a
-    maintenance swap never sees a mixed listing — it converges or
-    fails loud, see ``store.resolve_manifest_files``), falling back
-    to directory reading for manifest-less layouts. The explicit file
-    list keeps partition inference, so cell predicates still reach
-    the scan as ``PartitionFilters`` (pytest-audited). Mutators
-    (delete/compact) do NOT come here: they read inside the lease,
-    after entry recovery, where listing is already race-free.
-
-    A COMMITTED-EMPTY snapshot (every cell taken down; the manifest
-    names zero files) is an EMPTY store, not an error: it reads as
-    an empty DataFrame of the manifest-carried schema — falling
-    through to a directory read would both crash on schema
-    inference and reopen the listing race the manifest closes
-    (ADVICE r11 #2)."""
-    from pyspark.sql.types import StructType
-
-    from mapreduce_inverted_index_spark.operators.store import (
-        open_snapshot,
-        resolve_manifest_schema,
-    )
-
-    kind, df = open_snapshot(spark, path, "cell")
-    if kind == "manifestless":  # pre-manifest layout
-        return spark.read.parquet(path)
-    if kind == "df":
-        return df
-    schema_json = resolve_manifest_schema(path)
-    if schema_json is None:
-        raise RuntimeError(
-            f"{path}: committed-empty cell store whose manifest "
-            "carries no schema (written before schemas rode along) — "
-            "reseed via write_ivf_cells to record one"
-        )
-    return spark.createDataFrame([], StructType.fromJson(_json.loads(schema_json)))
+        refresh_manifest(path, "cell", {"schema": assigned.schema.json()})
 
 
 def delete_from_ivf_cells(
@@ -706,25 +650,27 @@ def delete_from_ivf_cells(
     a transactional format's partition-level REPLACE, same note as
     ``maintain_index_available_now``). A cell whose last member dies
     is removed entirely. Returns the affected cell ids (diagnostics /
-    downstream cache invalidation).
+    downstream cache invalidation). A directory with no manifest is
+    refused (``FileNotFoundError`` naming :func:`write_ivf_cells`):
+    a takedown queue must not checkpoint ids away against a store
+    that does not exist yet.
     """
-    import os
-    import shutil
-
     from mapreduce_inverted_index_spark.operators.store import (
         mutation_lease,
+        open_snapshot,
         recover_partition_swaps,
+        swap_partition_dirs,
     )
 
     with mutation_lease(path):
         recover_partition_swaps(path, "cell")
+        cells, _ = open_snapshot(spark, path, "cell")
         if isinstance(vec_ids, DataFrame):
             dead = vec_ids.select(F.col(id_col).alias("vec_id"))
         else:
             dead = spark.createDataFrame(
                 [(int(v),) for v in vec_ids], "vec_id bigint"
             )
-        cells = spark.read.parquet(path)
         affected = sorted(
             r["cell"]
             for r in cells.join(F.broadcast(dead), "vec_id")
@@ -737,7 +683,7 @@ def delete_from_ivf_cells(
         remaining = cells.where(F.col("cell").isin(affected)).join(
             F.broadcast(dead), "vec_id", "left_anti"
         )
-        _swap_cell_dirs(path, remaining, affected)
+        swap_partition_dirs(path, remaining, "cell", affected)
         return affected
 
 
@@ -761,29 +707,24 @@ def compact_ivf_cells(
     a transactional REWRITE (Iceberg rewrite_data_files / Delta
     OPTIMIZE); file-count-per-partition is the trigger either way.
     """
-    import os
-    import shutil
-
     from mapreduce_inverted_index_spark.operators.store import (
         mutation_lease,
+        open_snapshot,
+        read_manifest,
         recover_partition_swaps,
+        swap_partition_dirs,
     )
 
     with mutation_lease(path):
         recover_partition_swaps(path, "cell")
-        affected = []
-        for d in os.listdir(path):
-            if d.startswith("cell="):
-                n = sum(
-                    1
-                    for f in os.listdir(f"{path}/{d}")
-                    if f.endswith(".parquet")
-                )
-                if n > max_files_per_cell:
-                    affected.append(int(d.split("=", 1)[1]))
+        affected = sorted(
+            int(cell)
+            for cell, files in read_manifest(path, "cell")["parts"].items()
+            if len(files) > max_files_per_cell
+        )
         if not affected:
             return []
-        cells = spark.read.parquet(path)
+        cells, _ = open_snapshot(spark, path, "cell")
         # hash-repartition on cell: each cell's rows land in ONE task
         # (possibly shared with other cells that hash to the same
         # task, leaving some tasks empty), and partitionBy then
@@ -797,8 +738,8 @@ def compact_ivf_cells(
             .repartition(len(affected), "cell")
             .sortWithinPartitions("vec_id")
         )
-        _swap_cell_dirs(path, packed, affected)
-        return sorted(affected)
+        swap_partition_dirs(path, packed, "cell", affected)
+        return affected
 
 
 def ivf_pruned_scan_topk(
@@ -818,7 +759,16 @@ def ivf_pruned_scan_topk(
     ints, like the term list of a term lookup), not data, and only a
     literal predicate reaches the file index as a partition filter.
     Output shape matches the other ANN tiers.
+
+    The scan opens one committed snapshot through the store's reader
+    manifest (``store.open_snapshot``): a probe concurrent with a
+    maintenance swap converges or fails loud, never reads a mixed
+    listing, and a store with no manifest is refused.
     """
+    from mapreduce_inverted_index_spark.operators.store import (
+        open_snapshot,
+    )
+
     pw = Window.partitionBy("query_id").orderBy(F.desc("cos_c"), F.asc("cell"))
     probes = (
         queries.crossJoin(F.broadcast(cents))
@@ -833,7 +783,8 @@ def ivf_pruned_scan_topk(
         .select("query_id", "query_vec", "cell")
     )
     cells = [r["cell"] for r in probes.select("cell").distinct().collect()]
-    scanned = _read_cell_store(spark, path).where(F.col("cell").isin(cells))
+    snap, _ = open_snapshot(spark, path, "cell")
+    scanned = snap.where(F.col("cell").isin(cells))
     scored = (
         scanned.join(F.broadcast(probes), "cell")
         .where(F.col("vec_id") != F.col("query_id"))
@@ -1108,6 +1059,10 @@ def hard_negatives_ivf(
     cos_sim, rank``); recall vs the exact form is governed by the
     measured IVF contract (hard_negatives_ivf_contract).
     """
+    from mapreduce_inverted_index_spark.operators.store import (
+        open_snapshot,
+    )
+
     pw = Window.partitionBy("query_id").orderBy(F.desc("cos_c"), F.asc("cell"))
     probes = (
         anchors.crossJoin(F.broadcast(cents))
@@ -1127,7 +1082,8 @@ def hard_negatives_ivf(
         .localCheckpoint(eager=True)
     )
     cells = [r["cell"] for r in probes.select("cell").distinct().collect()]
-    scanned = _read_cell_store(spark, path).where(F.col("cell").isin(cells))
+    snap, _ = open_snapshot(spark, path, "cell")
+    scanned = snap.where(F.col("cell").isin(cells))
     scored = (
         scanned.join(F.broadcast(probes), "cell")
         .where(F.col(label_col) != F.col("query_label"))

@@ -4,17 +4,26 @@ Both stored states — the IVF embedding cell store (partition col
 ``cell``, ``operators/similarity.py``) and the term-hash-bucketed
 text index store (partition col ``bucket``,
 ``operators/inverted_index.py``) — maintain themselves by rewriting
-ONLY the partitions a batch touches. This module owns the one piece
-they share: the crash-safe directory swap that commits such a
-rewrite on a bare filesystem.
+ONLY the partitions a batch touches. This module owns what they
+share: the store format, the crash-safe directory swap that commits
+such a rewrite on a bare filesystem, and the reader's snapshot open.
+
+Format: a partitioned store is its ``<part_col>=v/`` directories plus
+``_mii_manifest.json`` — ``version``, ``part_col``, ``parts`` (the
+live data files per partition), ``schema`` (the written
+``StructType`` JSON) and, for the index store, ``n_buckets`` (the
+term-hash arity). The manifest rename is the only commit point:
+readers open the snapshot it names (:func:`open_snapshot`), and a
+directory without a manifest is not a store — readers and mutators
+refuse it, naming the seed writer.
 
 At 100 TB the same bodies run against a transactional table format
 (Iceberg/Delta partition-level REPLACE); the swap is the
 filesystem-only stand-in for that commit, and :func:`mutation_lease`
 is the stand-in for that format's writer-concurrency control — every
 mutator and maintenance fold holds it, so the entry-time crash
-recovery (:func:`recover_partition_swaps` and its flat twin) can
-safely assume any orphan it finds belongs to a DEAD writer.
+recovery (:func:`recover_partition_swaps`) can safely assume any
+orphan it finds belongs to a DEAD writer.
 """
 
 from __future__ import annotations
@@ -33,9 +42,8 @@ __all__ = [
     "purge_swap_orphans",
     "mutation_lease",
     "open_snapshot",
+    "read_manifest",
     "refresh_manifest",
-    "resolve_manifest_files",
-    "resolve_manifest_schema",
     "MANIFEST_NAME",
 ]
 
@@ -79,7 +87,7 @@ def _lease_holder(lease: str) -> "int | None":
 def mutation_lease(path: str):
     """Single-writer guard for store mutations. Every mutator's first
     act is entry-time crash recovery (``recover_partition_swaps`` /
-    ``ingest.recover_flat_swaps``), which treats any sibling tmp dir
+    ``sketches.recover_flat_swaps``), which treats any sibling tmp dir
     as an orphan of a DEAD writer and rolls it back. That is only
     sound if writers never overlap: a second live writer's recovery
     would roll back the first writer's IN-FLIGHT swap while its
@@ -249,10 +257,10 @@ def swap_partition_dirs(
 
     Scope note (readers): WRITERS are serialized by
     :func:`mutation_lease` and crashes roll back via
-    :func:`recover_partition_swaps`; READERS resolve one committed
+    :func:`recover_partition_swaps`; READERS open one committed
     snapshot through the manifest this function refreshes after its
-    renames (:func:`refresh_manifest` / :func:`resolve_manifest_files`
-    — a probe concurrent with the rename window converges to the
+    renames (:func:`refresh_manifest` / :func:`open_snapshot` — a
+    probe concurrent with the rename window converges to the
     post-swap snapshot or fails loud, never a mixed listing). What
     remains out of scope on a bare filesystem is multi-mutation
     isolation for long-running readers (a job still reading files a
@@ -278,9 +286,30 @@ def swap_partition_dirs(
 
 MANIFEST_NAME = "_mii_manifest.json"
 
+# the writer that seeds each partitioned store, named when a store
+# has no manifest
+_SEEDERS = {"bucket": "write_index_store", "cell": "write_ivf_cells"}
+
+
+def read_manifest(path: str, part_col: str) -> dict:
+    """The store's manifest, or ``FileNotFoundError`` naming the seed
+    writer: a directory without one — flat, half-seeded (the seed
+    died before its manifest commit), or absent — is not a store."""
+    import json
+
+    try:
+        with open(f"{path}/{MANIFEST_NAME}") as f:
+            return json.load(f)
+    except FileNotFoundError:
+        raise FileNotFoundError(
+            f"{path}: no {MANIFEST_NAME}, so this is not a partitioned "
+            f"store — seed it with {_SEEDERS.get(part_col, 'its seed writer')} "
+            "(a full overwrite)"
+        ) from None
+
 
 def refresh_manifest(
-    path: str, part_col: str, schema_json: "str | None" = None
+    path: str, part_col: str, meta: "dict | None" = None
 ) -> dict:
     """Write the store's READER manifest: one atomic JSON file naming
     every live data file per partition, committed via tmp-file +
@@ -292,32 +321,28 @@ def refresh_manifest(
     Why: the partition-dir swap is crash-safe for writers, but a
     reader that LISTS the store during the rename window sees a mixed
     view — some partitions pre-swap, some post, some absent. Readers
-    that resolve through the manifest (:func:`resolve_manifest_files`)
-    never list, so they see exactly one committed snapshot or fail
-    loud — never a mix. This is the bare-filesystem stand-in for a
+    that open through the manifest (:func:`open_snapshot`) never
+    list, so they see exactly one committed snapshot or fail loud —
+    never a mix. This is the bare-filesystem stand-in for a
     transactional format's snapshot pointer (an Iceberg metadata.json
     at 100 TB), same as the lease stands in for its commit protocol.
 
     Listing here is safe: the caller holds the mutation lease, so no
     swap is in flight.
 
-    ``schema_json`` (a Spark ``StructType.json()`` string) rides in
-    the manifest so a COMMITTED-EMPTY store — every partition taken
-    down — stays readable as an empty DataFrame of the right shape
-    instead of an unreadable directory (ADVICE r11 #2). Writers that
-    hold the DataFrame pass it; refreshes that don't (swap commits,
-    entry recovery) carry the prior manifest's schema forward, so
-    the schema survives any mutation sequence after the seed
-    recorded it.
+    ``meta`` holds the store-defining fields a seed writer records —
+    ``schema`` (``StructType.json()``, so a COMMITTED-EMPTY store
+    reads as an empty DataFrame of the right shape) and, for the
+    index store, ``n_buckets``. Every other field of the prior
+    manifest carries forward, so refreshes that hold no DataFrame
+    (swap commits, entry recovery) keep what the seed recorded.
     """
     import json
 
-    if schema_json is None:
-        try:
-            with open(f"{path}/{MANIFEST_NAME}") as f:
-                schema_json = json.load(f).get("schema")
-        except (OSError, ValueError):
-            schema_json = None
+    try:
+        prior = read_manifest(path, part_col)
+    except FileNotFoundError:
+        prior = {}
     parts: dict = {}
     if os.path.isdir(path):
         for d in sorted(os.listdir(path)):
@@ -331,12 +356,12 @@ def refresh_manifest(
             if files:
                 parts[d.split("=", 1)[1]] = files
     manifest = {
+        **prior,
+        **(meta or {}),
         "version": uuid.uuid4().hex,
         "part_col": part_col,
         "parts": parts,
     }
-    if schema_json is not None:
-        manifest["schema"] = schema_json
     tmp = f"{path}/.{MANIFEST_NAME}.tmp-{uuid.uuid4().hex[:8]}"
     with open(tmp, "w") as f:
         json.dump(manifest, f)
@@ -344,18 +369,20 @@ def refresh_manifest(
     return manifest
 
 
-def resolve_manifest_files(
+def open_snapshot(
+    spark,
     path: str,
     part_col: str,
     retries: int = 40,
     wait_sec: float = 0.05,
-) -> "list[str] | None":
-    """Reader-side atomic snapshot resolution: return the absolute
-    data-file paths the manifest names, verified present — one
-    committed snapshot, never a mixed listing. Returns ``None`` for a
-    manifest-less store (pre-manifest layout: the caller falls back
-    to directory reading, accepting the documented listing race) and
-    ``[]`` for a committed-empty store (every partition taken down).
+) -> "tuple[DataFrame, dict]":
+    """Reader-side committed-snapshot OPEN: return ``(df, manifest)``
+    — a DataFrame over exactly the data files the manifest names
+    (partition column included, so partition predicates still reach
+    the scan as ``PartitionFilters``) and the manifest it resolved. A
+    committed-empty store (every partition taken down) opens as an
+    empty DataFrame of the recorded schema; a directory with no
+    manifest raises ``FileNotFoundError`` (:func:`read_manifest`).
 
     If a named file is missing, a swap is in flight (the writer
     renamed dirs but has not refreshed the manifest yet) or a writer
@@ -365,50 +392,6 @@ def resolve_manifest_files(
     stale manifest until the next mutation's entry recovery rolls the
     data back and refreshes — until then this fails LOUD instead of
     returning a partial view.
-
-    Scope: one consistent snapshot at resolution time. The returned
-    paths feed a lazy DataFrame; a mutation committing between
-    resolution and the job's file reads surfaces as missing-file
-    errors (fail loud). Long-running readers overlapping many
-    mutations are the transactional format's job.
-    """
-    import json
-    import time
-
-    for _ in range(retries):
-        try:
-            with open(f"{path}/{MANIFEST_NAME}") as f:
-                manifest = json.load(f)
-        except (OSError, ValueError):
-            return None
-        files = [
-            f"{path}/{part_col}={k}/{fn}"
-            for k, fns in sorted(manifest["parts"].items())
-            for fn in fns
-        ]
-        if all(os.path.isfile(p) for p in files):
-            return files
-        time.sleep(wait_sec)
-    raise RuntimeError(
-        f"{path}: the reader manifest names files that stayed missing "
-        f"through {retries} checks — a writer is mid-swap (retry once "
-        "it commits) or died mid-swap (any mutator's entry recovery "
-        "heals the store and refreshes the manifest)"
-    )
-
-
-def open_snapshot(
-    spark,
-    path: str,
-    part_col: str,
-    retries: int = 40,
-    wait_sec: float = 0.05,
-) -> "tuple[str, object]":
-    """Reader-side committed-snapshot OPEN: resolve the manifest and
-    return ``(kind, df_or_none)`` where kind is ``"df"`` (DataFrame
-    over the verified snapshot), ``"empty"`` (committed-empty store),
-    or ``"manifestless"`` (pre-manifest layout — caller falls back to
-    directory reading, accepting the documented listing race).
 
     Why a VERIFIED open and not just ``spark.read.parquet(*files)``:
     Spark checks the explicit paths on the DRIVER (missing files are
@@ -421,19 +404,34 @@ def open_snapshot(
     decade race probe measured a 3,904-file resolve materializing
     1,728 inputFiles and aggregating 45% of the store, silently. So
     after building the DataFrame we compare ``df.inputFiles()``
-    against the resolved list and RE-RESOLVE on mismatch — a
-    completing swap converges to the post-swap snapshot; a wedged one
-    fails loud, same contract as :func:`resolve_manifest_files`.
+    against the resolved list and RE-RESOLVE on mismatch.
+
+    Scope: one consistent snapshot at open time. The DataFrame is
+    lazy; a mutation committing between the open and the job's file
+    reads surfaces as missing-file errors (fail loud). Long-running
+    readers overlapping many mutations are the transactional
+    format's job.
     """
+    import json
     import time
+
+    from pyspark.sql.types import StructType
 
     last = None
     for _ in range(retries):
-        files = resolve_manifest_files(path, part_col)
-        if files is None:
-            return ("manifestless", None)
+        manifest = read_manifest(path, part_col)
+        files = [
+            f"{path}/{part_col}={k}/{fn}"
+            for k, fns in sorted(manifest["parts"].items())
+            for fn in fns
+        ]
         if not files:
-            return ("empty", None)
+            schema = StructType.fromJson(json.loads(manifest["schema"]))
+            return spark.createDataFrame([], schema), manifest
+        if not all(os.path.isfile(p) for p in files):
+            last = "the manifest names files that are missing"
+            time.sleep(wait_sec)
+            continue
         try:
             df = spark.read.option("basePath", path).parquet(*files)
             n_indexed = len(df.inputFiles())
@@ -444,7 +442,7 @@ def open_snapshot(
             time.sleep(wait_sec)
             continue
         if n_indexed == len(files):
-            return ("df", df)
+            return df, manifest
         last = f"file index holds {n_indexed} of {len(files)} resolved files"
         time.sleep(wait_sec)
     raise RuntimeError(
@@ -453,21 +451,6 @@ def open_snapshot(
         f"commits) or died mid-swap (any mutator's entry recovery heals "
         f"the store). Last observation: {last}"
     )
-
-
-def resolve_manifest_schema(path: str) -> "str | None":
-    """The ``StructType.json()`` string the manifest carries, or
-    ``None`` for a manifest-less store / a manifest written before
-    schemas rode along. Readers use it to materialize a
-    COMMITTED-EMPTY store as an empty DataFrame of the committed
-    shape (the file-level snapshot has nothing left to infer from)."""
-    import json
-
-    try:
-        with open(f"{path}/{MANIFEST_NAME}") as f:
-            return json.load(f).get("schema")
-    except (OSError, ValueError):
-        return None
 
 
 def purge_swap_orphans(path: str) -> "list[str]":

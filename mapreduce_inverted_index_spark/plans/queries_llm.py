@@ -1817,15 +1817,22 @@ def q_ivf_cells_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         compact_ivf_cells,
         ivf_assign,
     )
+    from mapreduce_inverted_index_spark.operators.store import (
+        refresh_manifest,
+    )
 
     work = tempfile.mkdtemp(prefix="mii_ivf_compact_")
     path = f"{work}/cells"
     emb = _emb(spark, sf_dir)
     cents = _ivf_cents(spark, sf_dir)
+    # four appends, each committed to the manifest the way the
+    # streaming publish commits a batch
     for k in range(4):
-        ivf_assign(emb.where(F.col("vec_id") % 4 == k), cents).repartition(
-            1
-        ).write.mode("append").partitionBy("cell").parquet(path)
+        batch = ivf_assign(emb.where(F.col("vec_id") % 4 == k), cents)
+        batch.repartition(1).write.mode("append").partitionBy("cell").parquet(
+            path
+        )
+        refresh_manifest(path, "cell", {"schema": batch.schema.json()})
     before = spark.read.parquet(path).select("vec_id", "cell")
     before_rows = before.count()  # materialized before the rewrite
     compacted = set(compact_ivf_cells(spark, path, max_files_per_cell=1))

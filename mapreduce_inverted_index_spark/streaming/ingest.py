@@ -13,6 +13,12 @@ At 100 TB this is the standing ingestion pattern: drop new corpus
 shards into a landing directory (or Kafka topic — same downstream
 code), run the ingest on a schedule or continuously, and every
 downstream operator reads the growing canonical table.
+
+The maintenance loops fold into partitioned, manifest-committed
+stores (``operators.store``): the index loops into the bucketed
+index store, the semantic and cell-takedown loops into the IVF cell
+store. A directory without a store manifest is refused, failing the
+micro-batch so it replays after a reseed.
 """
 
 from __future__ import annotations
@@ -86,97 +92,6 @@ def streamed_doc_ids(corpus: DataFrame) -> DataFrame:
     )
 
 
-def _swap_flat_dir(df: DataFrame, live_dir: str, tag: str) -> None:
-    """Crash-safe whole-dir commit for FLAT (unpartitioned) stores:
-    write to a uuid tmp, rename the live dir ASIDE, rename the tmp
-    in, then drop the retired copy — nothing is unlinked until the
-    new dir is live, so a kill at any point leaves a complete copy
-    on disk (live, ``.retired-*``, or ``.tmp-*`` — the recovery
-    order the takedown loop's fail-loud message names). The
-    partition-level twin is ``operators.store.swap_partition_dirs``.
-
-    Readers need no manifest here, unlike the partitioned stores
-    (``store.refresh_manifest``): the whole store is ONE directory
-    swapped by whole-dir renames, so a reader's listing resolves
-    entirely against a single dir incarnation — it sees the complete
-    old state, the complete new state, or fails loud (dir missing in
-    the two-rename window; old files unlinked under a scan that
-    listed pre-swap). A MIXED view would need per-partition renames,
-    which flat stores don't have.
-    """
-    import uuid
-
-    u = uuid.uuid4().hex[:8]
-    tmp = live_dir.rstrip("/") + f".tmp-{tag}-{u}"
-    retired = live_dir.rstrip("/") + f".retired-{tag}-{u}"
-    df.write.mode("overwrite").parquet(tmp)
-    if os.path.isdir(live_dir):
-        os.rename(live_dir, retired)
-    os.rename(tmp, live_dir)
-    shutil.rmtree(retired, ignore_errors=True)
-
-
-def recover_flat_swaps(live_dir: str) -> "list[str]":
-    """Executable crash recovery for :func:`_swap_flat_dir` orphans —
-    the flat-store twin of ``store.recover_partition_swaps``. A swap
-    that died mid-commit leaves one of three states, each with a
-    complete copy on disk; this rolls the store back (or finishes
-    cleanup) so a restarted maintenance loop just replays the
-    uncommitted batch:
-
-    - tmp present, live present: crash during the tmp WRITE — the
-      live dir is untouched; drop the partial tmp.
-    - tmp present, live missing: crash between rename-aside and
-      rename-in — restore the retired copy, or when no retired copy
-      exists (the swap was the FIRST-ever write) drop the tmp so the
-      state is simply absent again. Rollback in both cases, never
-      roll-forward: the replayed batch re-derives the new state, and
-      rolling the tmp in would make a non-idempotent fold (e.g. the
-      MG count merge) double-count its replay.
-    - retired present, no tmp: crash after commit, before cleanup —
-      the live dir is the new state; drop the retired copy.
-
-    ``.tmp-swap-*`` siblings are the PARTITIONED store's orphans and
-    belong to ``recover_partition_swaps`` — skipped here. Idempotent;
-    returns the orphan dirs handled. The maintenance loops call this
-    before every flat fold, so crash-restart self-heals."""
-    base = os.path.basename(live_dir.rstrip("/"))
-    parent = os.path.dirname(live_dir.rstrip("/")) or "."
-    recovered: list = []
-    if not os.path.isdir(parent):
-        return recovered
-    tmps: dict = {}
-    retireds: dict = {}
-    for d in os.listdir(parent):
-        if d.startswith(f"{base}.tmp-swap-"):
-            continue
-        if d.startswith(f"{base}.tmp-"):
-            tmps[d[len(base) + 5:]] = d
-        elif d.startswith(f"{base}.retired-"):
-            retireds[d[len(base) + 9:]] = d
-    live_exists = os.path.isdir(live_dir)
-    for key, d in sorted(tmps.items()):
-        tmp = f"{parent}/{d}"
-        if live_exists:
-            shutil.rmtree(tmp)
-        elif key in retireds:
-            os.rename(f"{parent}/{retireds.pop(key)}", live_dir)
-            shutil.rmtree(tmp)
-            live_exists = True
-        else:
-            # first-ever write died pre-commit: rollback = no state
-            shutil.rmtree(tmp)
-        recovered.append(d)
-    for key, d in sorted(retireds.items()):
-        if live_exists:
-            shutil.rmtree(f"{parent}/{d}")
-        else:
-            os.rename(f"{parent}/{d}", live_dir)
-            live_exists = True
-        recovered.append(d)
-    return recovered
-
-
 def _publish_batch_files(
     df: DataFrame, target_dir: str, batch_id: int, part_col: "str | None" = None
 ) -> None:
@@ -238,7 +153,7 @@ def _publish_batch_files(
     # stay manifest-less.
     if part_col is not None:
         store.refresh_manifest(
-            target_dir, part_col, schema_json=df.schema.json()
+            target_dir, part_col, {"schema": df.schema.json()}
         )
 
 
@@ -292,32 +207,30 @@ def maintain_index_available_now(
 ) -> None:
     """Stream-maintained inverted index: one AvailableNow pass indexes
     exactly the files that arrived since the last pass and folds them
-    into the persisted index via :func:`operators.inverted_index.
-    merge_index` (delta build + term-keyed full-outer merge).
+    into the bucketed index store (``write_index_store`` layout) via
+    :func:`operators.inverted_index.merge_into_index_store` (delta
+    build + term-keyed full-outer merge of only the bucket dirs the
+    delta's vocabulary hashes into — the same partition-local
+    discipline as the takedown loop's DELETE).
 
     This replaces the reference's re-run-the-whole-job model
     (``master/src/master.py:123-176`` rebuilds the index from scratch
-    per /scrape): cost per pass is O(new docs) + O(index merge), not
-    O(corpus). Invariant (pytest-pinned): after every pass the stored
-    index equals a batch ``build_index`` over all files so far.
+    per /scrape): cost per pass is O(new docs) + O(touched buckets),
+    not O(corpus). Invariant (pytest-pinned): after every pass the
+    stored index equals a batch ``build_index`` over all files so far.
 
-    Store layouts (same detection as the takedown loop): a BUCKETED
-    store (``write_index_store`` layout) folds each delta
-    bucket-locally via ``merge_into_index_store`` — only the bucket
-    dirs the delta's vocabulary hashes into rewrite, so ADD and
-    DELETE now share the partition-local discipline. A flat dir
-    keeps the whole-index ``merge_index`` with the rename-aside
-    commit (write-to-tmp because the merged plan READS ``index_dir``
-    while its sink would truncate it — DSv1 overwrite truncates
-    before compute). On a real cluster the same foreachBatch body
-    targets a transactional table format (Iceberg/Delta MERGE); the
-    dir swaps are the filesystem-only stand-in for that commit.
+    A missing ``index_dir`` is seeded by the first non-empty batch
+    (``write_index_store(delta)``); an existing directory without a
+    store manifest (flat, or a seed that died before its commit)
+    fails the micro-batch loud, uncommitted, until it is reseeded. On
+    a real cluster the same foreachBatch body targets a transactional
+    table format (Iceberg/Delta MERGE); the dir swaps are the
+    filesystem-only stand-in for that commit.
     """
     from mapreduce_inverted_index_spark.operators.inverted_index import (
         build_index,
-        is_index_store,
-        merge_index,
         merge_into_index_store,
+        write_index_store,
     )
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
@@ -328,20 +241,11 @@ def maintain_index_available_now(
         # would roll back THIS fold's in-flight swap (store.
         # mutation_lease docstring); the leaf mutator re-enters
         with mutation_lease(index_dir):
-            recover_flat_swaps(index_dir)  # heal crashed prior commit
             delta = build_index(streamed_doc_ids(batch_df))
-            # layout authority is the sidecar, not bucket= dirs: a
-            # store whose every doc was taken down has zero bucket
-            # dirs but must stay bucketed (merge_into_index_store
-            # rebuilds in place)
-            if os.path.isdir(index_dir) and is_index_store(index_dir):
-                merge_into_index_store(sess, index_dir, delta)
-                return
             if os.path.isdir(index_dir):
-                merged = merge_index(sess.read.parquet(index_dir), delta)
+                merge_into_index_store(sess, index_dir, delta)
             else:
-                merged = delta
-            _swap_flat_dir(merged, index_dir, f"add-{batch_id}")
+                write_index_store(delta, index_dir)
 
     q = (
         stream_text_corpus(spark, corpus_path)
@@ -502,15 +406,15 @@ def _takedown_loop(
     glob: str,
     checkpoint_path: str,
     state_dir: str,
-    state_kind: str,
     fold,
 ) -> None:
     """Shared AvailableNow scaffolding for the erasure queues: file
-    stream over the id directory, empty-batch skip, FAIL-LOUD when
-    the target state does not exist yet (the micro-batch stays
-    uncommitted and replays once the state appears — a silent return
-    would checkpoint erasure ids away forever), then the
-    state-specific ``fold(batch_df)``."""
+    stream over the id directory, empty-batch skip, then the
+    state-specific ``fold(batch_df)`` inside the store's lease. The
+    fold's mutator refuses a store with no manifest (not built yet,
+    flat, or half-seeded), which FAILS the micro-batch: it stays
+    uncommitted and replays once the store is seeded — a silent
+    return would checkpoint erasure ids away forever."""
     schema = (
         spark.read.option("pathGlobFilter", glob).parquet(takedown_dir).schema
     )
@@ -529,23 +433,7 @@ def _takedown_loop(
         # instead (store.mutation_lease docstring); leaf mutators
         # re-enter the lease
         with mutation_lease(state_dir):
-            # a prior pass that crashed mid-commit left the state
-            # intact in a sibling dir; heal it before the existence
-            # check (a state-dir missing because of such a crash must
-            # NOT fail loud forever — only a never-built state should)
-            recover_flat_swaps(state_dir)
-            if not os.path.isdir(state_dir):
-                raise FileNotFoundError(
-                    f"takedown fold: no {state_kind} at {state_dir}; "
-                    "build it first, then re-run (the uncommitted "
-                    "batch replays). If a prior run crashed "
-                    "mid-commit, the fully written state sits intact "
-                    f"next to this path in a '{state_dir}.retired-*' "
-                    f"or '{state_dir}.tmp-*' dir — recover_flat_swaps "
-                    "/ recover_partition_swaps heals it on the next "
-                    "maintenance pass"
-                )
-            fold(batch_df, batch_id)
+            fold(batch_df)
 
     q = (
         stream.writeStream.foreachBatch(_fold)
@@ -566,61 +454,39 @@ def maintain_takedowns_available_now(
     """The DELETE side of stream maintenance — a takedown queue
     (GDPR erasure, opt-outs, retention expiry) as a checkpointed file
     stream: each AvailableNow pass folds exactly the takedown-id
-    files that arrived since the last pass into the stored inverted
-    index.
+    files that arrived since the last pass into the bucketed index
+    store (``write_index_store`` layout).
 
-    Two store layouts, detected by the ``_mii_store.json`` sidecar
-    (NOT by ``bucket=`` dirs — an emptied bucketed store has none):
-
-    - **bucketed store** (``write_index_store`` layout,
-      ``bucket=K/`` partition dirs — the production path): the batch
-      folds via ``delete_from_index_store``, which rewrites ONLY the
-      bucket partitions whose postings contain the batch's ids and
-      commits with the shared crash-safe dir swap. Per-batch IO is
-      O(affected buckets), not O(index) — a 64-doc takedown must not
-      rewrite a multi-TB index. This is the discipline the embedding
-      twin (``maintain_cell_takedowns_available_now`` →
-      ``delete_from_ivf_cells``) has always had.
-    - **flat parquet dir** (legacy / small indexes): whole-index
-      rewrite via ``delete_from_index`` (DataFrame batch — the
-      broadcast-anti-join branch, plan size constant in queue
-      length), committed by the rename-aside swap (a crash at any
-      point leaves a complete copy on disk).
+    Each batch folds via ``delete_from_index_store``, which rewrites
+    ONLY the bucket partitions whose postings contain the batch's ids
+    and commits with the shared crash-safe dir swap. Per-batch IO is
+    O(affected buckets), not O(index) — a 64-doc takedown must not
+    rewrite a multi-TB index. This is the discipline the embedding
+    twin (``maintain_cell_takedowns_available_now`` →
+    ``delete_from_ivf_cells``) has always had. A directory that is
+    not a store (no manifest) fails the micro-batch instead of
+    no-opping it away.
 
     Together with the ADD loops (index/chunks/MG/semantic cells) this
     closes the maintenance pair: a corpus pipeline runs both on a
     schedule and the stored state tracks ingest MINUS erasure without
-    ever re-reading document text. Invariant (pytest-pinned for both
-    layouts): after any pass history, the stored index equals
-    ``build_index`` of the ingested corpus minus every taken-down
-    doc_id. Ids with no postings (already deleted, never ingested)
-    fold through as no-ops — takedown queues are idempotent by
-    nature.
+    ever re-reading document text. Invariant (pytest-pinned): after
+    any pass history, the stored index equals ``build_index`` of the
+    ingested corpus minus every taken-down doc_id. Ids with no
+    postings (already deleted, never ingested) fold through as
+    no-ops — takedown queues are idempotent by nature.
     """
     from mapreduce_inverted_index_spark.operators.inverted_index import (
-        delete_from_index,
         delete_from_index_store,
-        is_index_store,
     )
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        # sidecar-based detection (see maintain_index_available_now):
-        # an emptied bucketed store must no-op here, not crash the
-        # flat path on schema inference
-        if is_index_store(index_dir):
-            delete_from_index_store(
-                sess, index_dir, batch_df.select("doc_id")
-            )
-            return
-        merged = delete_from_index(
-            sess.read.parquet(index_dir), batch_df.select("doc_id")
+    def fold(batch_df: DataFrame) -> None:
+        delete_from_index_store(
+            batch_df.sparkSession, index_dir, batch_df.select("doc_id")
         )
-        _swap_flat_dir(merged, index_dir, f"del-{batch_id}")
 
     _takedown_loop(
-        spark, takedown_dir, glob, checkpoint_path, index_dir,
-        "index", fold,
+        spark, takedown_dir, glob, checkpoint_path, index_dir, fold
     )
 
 
@@ -648,12 +514,11 @@ def maintain_cell_takedowns_available_now(
         delete_from_ivf_cells,
     )
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
+    def fold(batch_df: DataFrame) -> None:
         delete_from_ivf_cells(
             batch_df.sparkSession, cells_dir, batch_df.select("vec_id")
         )
 
     _takedown_loop(
-        spark, takedown_dir, glob, checkpoint_path, cells_dir,
-        "cell store", fold,
+        spark, takedown_dir, glob, checkpoint_path, cells_dir, fold
     )

@@ -13,14 +13,16 @@ with phase 1 incremental.
 
 State lives as a tiny Parquet table (≤ k rows) swapped per batch —
 the filesystem stand-in for a transactional state table, committed
-through the shared retire-aside swap (``ingest._swap_flat_dir``)
-with entry-time orphan recovery (``ingest.recover_flat_swaps``),
-same discipline as ``ingest.maintain_index_available_now``.
+through a whole-dir retire-aside swap (:func:`_swap_flat_dir`) with
+entry-time orphan recovery (:func:`recover_flat_swaps`). It is the
+one flat (unpartitioned) stored state; the index and cell stores are
+partitioned and manifest-committed (``operators.store``).
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -74,6 +76,96 @@ def mg_merge_summaries(summary: DataFrame, batch_counts: DataFrame, k: int) -> D
     )
 
 
+def _swap_flat_dir(df: DataFrame, live_dir: str, tag: str) -> None:
+    """Crash-safe whole-dir commit for the FLAT (unpartitioned) MG
+    state: write to a uuid tmp, rename the live dir ASIDE, rename the
+    tmp in, then drop the retired copy — nothing is unlinked until
+    the new dir is live, so a kill at any point leaves a complete
+    copy on disk (live, ``.retired-*``, or ``.tmp-*``). The
+    partition-level twin is ``operators.store.swap_partition_dirs``.
+
+    Readers need no manifest here, unlike the partitioned stores
+    (``store.refresh_manifest``): the whole state is ONE directory
+    swapped by whole-dir renames, so a reader's listing resolves
+    entirely against a single dir incarnation — it sees the complete
+    old state, the complete new state, or fails loud (dir missing in
+    the two-rename window; old files unlinked under a scan that
+    listed pre-swap). A MIXED view would need per-partition renames,
+    which flat state doesn't have.
+    """
+    import uuid
+
+    u = uuid.uuid4().hex[:8]
+    tmp = live_dir.rstrip("/") + f".tmp-{tag}-{u}"
+    retired = live_dir.rstrip("/") + f".retired-{tag}-{u}"
+    df.write.mode("overwrite").parquet(tmp)
+    if os.path.isdir(live_dir):
+        os.rename(live_dir, retired)
+    os.rename(tmp, live_dir)
+    shutil.rmtree(retired, ignore_errors=True)
+
+
+def recover_flat_swaps(live_dir: str) -> "list[str]":
+    """Executable crash recovery for :func:`_swap_flat_dir` orphans —
+    the flat-store twin of ``store.recover_partition_swaps``. A swap
+    that died mid-commit leaves one of three states, each with a
+    complete copy on disk; this rolls the store back (or finishes
+    cleanup) so a restarted maintenance loop just replays the
+    uncommitted batch:
+
+    - tmp present, live present: crash during the tmp WRITE — the
+      live dir is untouched; drop the partial tmp.
+    - tmp present, live missing: crash between rename-aside and
+      rename-in — restore the retired copy, or when no retired copy
+      exists (the swap was the FIRST-ever write) drop the tmp so the
+      state is simply absent again. Rollback in both cases, never
+      roll-forward: the replayed batch re-derives the new state, and
+      rolling the tmp in would make a non-idempotent fold (e.g. the
+      MG count merge) double-count its replay.
+    - retired present, no tmp: crash after commit, before cleanup —
+      the live dir is the new state; drop the retired copy.
+
+    ``.tmp-swap-*`` siblings are the PARTITIONED store's orphans and
+    belong to ``recover_partition_swaps`` — skipped here. Idempotent;
+    returns the orphan dirs handled. The MG fold calls this before
+    every merge, so crash-restart self-heals."""
+    base = os.path.basename(live_dir.rstrip("/"))
+    parent = os.path.dirname(live_dir.rstrip("/")) or "."
+    recovered: list = []
+    if not os.path.isdir(parent):
+        return recovered
+    tmps: dict = {}
+    retireds: dict = {}
+    for d in os.listdir(parent):
+        if d.startswith(f"{base}.tmp-swap-"):
+            continue
+        if d.startswith(f"{base}.tmp-"):
+            tmps[d[len(base) + 5:]] = d
+        elif d.startswith(f"{base}.retired-"):
+            retireds[d[len(base) + 9:]] = d
+    live_exists = os.path.isdir(live_dir)
+    for key, d in sorted(tmps.items()):
+        tmp = f"{parent}/{d}"
+        if live_exists:
+            shutil.rmtree(tmp)
+        elif key in retireds:
+            os.rename(f"{parent}/{retireds.pop(key)}", live_dir)
+            shutil.rmtree(tmp)
+            live_exists = True
+        else:
+            # first-ever write died pre-commit: rollback = no state
+            shutil.rmtree(tmp)
+        recovered.append(d)
+    for key, d in sorted(retireds.items()):
+        if live_exists:
+            shutil.rmtree(f"{parent}/{d}")
+        else:
+            os.rename(f"{parent}/{d}", live_dir)
+            live_exists = True
+        recovered.append(d)
+    return recovered
+
+
 def maintain_frequent_terms_available_now(
     spark: SparkSession,
     sf_dir: str,
@@ -99,10 +191,6 @@ def maintain_frequent_terms_available_now(
         # that window a clean rollback-and-replay instead
         from mapreduce_inverted_index_spark.operators.store import (
             mutation_lease,
-        )
-        from mapreduce_inverted_index_spark.streaming.ingest import (
-            _swap_flat_dir,
-            recover_flat_swaps,
         )
 
         # single-writer guard: a concurrent fold's entry recovery

@@ -152,6 +152,7 @@ def test_ivf_cell_mutators_share_the_guard(spark, tmp_path):
     from mapreduce_inverted_index_spark.operators.similarity import (
         compact_ivf_cells,
         delete_from_ivf_cells,
+        write_ivf_cells,
     )
 
     path = str(tmp_path / "cells")
@@ -159,7 +160,7 @@ def test_ivf_cell_mutators_share_the_guard(spark, tmp_path):
         [(i, i % 3, [float(i), 1.0]) for i in range(9)],
         "vec_id bigint, cell int, embedding array<double>",
     )
-    vecs.write.partitionBy("cell").parquet(path)
+    write_ivf_cells(vecs, path)
 
     lease = _plant_lease(path, pid=1)
     with pytest.raises(RuntimeError, match="live process 1"):

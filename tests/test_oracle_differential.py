@@ -18,9 +18,10 @@ _QUERIES = all_queries()
 @pytest.mark.parametrize("name", sorted(_QUERIES))
 def test_query_matches_oracle(spark, sf_oracle, query_df, name):
     q = _QUERIES[name]
-    # session query_df cache: the catalog-wide schema guard already
-    # constructed every oracle-carrying query at this SF; reuse that
-    # construction (and its eager build work) instead of re-paying it
+    # session query_df cache: the differential builds each query
+    # first (construct, then materialize back to back); the
+    # catalog-wide schema guard is sorted last (conftest) and reuses
+    # these builds instead of re-paying their eager work
     sdf = query_df(name, sf_oracle)
     if q.oracle is None:
         # rows-only check (non-SQL-expressible op)

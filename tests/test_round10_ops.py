@@ -2,11 +2,10 @@
 
 A takedown batch that erases every remaining doc drops every
 ``bucket=`` directory (``swap_partition_dirs`` retires a partition
-whose last term dies), leaving only the ``_mii_store.json`` sidecar.
-That store must stay a STORE: reads see an empty index, further
-deletes no-op, and re-ingest rebuilds the bucketed layout in place —
-never a silent fallback to the flat-parquet path (which would crash
-on schema inference or rebuild a non-bucketed layout).
+whose last term dies), leaving only the reader manifest, which names
+no files and still records the schema and ``n_buckets``. That store
+must stay a STORE: reads see an empty index, further deletes no-op,
+and re-ingest rebuilds the bucketed layout in place.
 """
 
 from __future__ import annotations
@@ -30,16 +29,16 @@ def _bucket_dirs(path):
 
 
 def test_emptied_store_reads_as_empty_index(spark, tmp_path):
-    """Deleting EVERY doc leaves a sidecar-only store that reads as an
-    empty index; probes return empty; a further delete is a no-op."""
+    """Deleting EVERY doc leaves a manifest-only store that reads as
+    an empty index; probes return empty; a further delete is a no-op."""
     from mapreduce_inverted_index_spark.operators.inverted_index import (
         build_index,
         delete_from_index_store,
-        is_index_store,
         read_index_store,
         term_lookup_store,
         write_index_store,
     )
+    from mapreduce_inverted_index_spark.operators.store import read_manifest
 
     docs = spark.createDataFrame(
         [(1, "alpha beta"), (2, "beta gamma"), (3, "gamma alpha")],
@@ -51,7 +50,9 @@ def test_emptied_store_reads_as_empty_index(spark, tmp_path):
 
     delete_from_index_store(spark, path, [1, 2, 3])
     assert _bucket_dirs(path) == []
-    assert is_index_store(path)  # the sidecar is the layout authority
+    # the manifest is the layout authority: no files, arity kept
+    manifest = read_manifest(path, "bucket")
+    assert manifest["parts"] == {} and manifest["n_buckets"] == 16
     assert read_index_store(spark, path).count() == 0
     assert term_lookup_store(spark, path, ["alpha", "beta"]).count() == 0
     # a delete against the emptied store is a clean no-op, not a crash
@@ -60,7 +61,7 @@ def test_emptied_store_reads_as_empty_index(spark, tmp_path):
 
 def test_emptied_store_reingest_rebuilds_bucketed_layout(spark, tmp_path):
     """merge_into_index_store against the emptied store rebuilds the
-    bucketed layout in place (empty base), with the sidecar's pinned
+    bucketed layout in place (empty base), with the manifest's pinned
     arity — and the result equals a fresh build."""
     from mapreduce_inverted_index_spark.operators.inverted_index import (
         build_index,
@@ -96,8 +97,8 @@ def test_streaming_loops_route_emptied_store_through_store_paths(
 ):
     """End-to-end through the maintenance loops: takedown of every doc,
     then a takedown pass against the emptied store (must no-op, not
-    crash on the flat path), then re-ingest (must rebuild BUCKETED,
-    not flat). Invariant: stored index == build_index(ingested minus
+    crash), then re-ingest (must rebuild the BUCKETED layout in
+    place). Invariant: stored index == build_index(ingested minus
     taken-down) at every step."""
     from mapreduce_inverted_index_spark.operators.inverted_index import (
         build_index,
@@ -127,14 +128,14 @@ def test_streaming_loops_route_emptied_store_through_store_paths(
     assert _bucket_dirs(index_dir) == []
 
     # pass 2: another takedown against the emptied store — a no-op,
-    # NOT a flat-path schema-inference crash
+    # NOT a schema-inference crash
     spark.createDataFrame([(99,)], "doc_id bigint").coalesce(
         1
     ).write.mode("append").parquet(queue)
     maintain_takedowns_available_now(spark, queue, index_dir, ckpt_del)
     assert _bucket_dirs(index_dir) == []
 
-    # pass 3: re-ingest — must rebuild the BUCKETED layout, not flat
+    # pass 3: re-ingest — must rebuild the BUCKETED layout in place
     # (the ingest loop streams text files with provenance-hash ids)
     from mapreduce_inverted_index_spark.streaming.ingest import (
         streamed_doc_ids,
@@ -284,7 +285,7 @@ def test_recover_flat_swaps_all_crash_states(spark, tmp_path):
     orphaned."""
     import shutil
 
-    from mapreduce_inverted_index_spark.streaming.ingest import (
+    from mapreduce_inverted_index_spark.streaming.sketches import (
         recover_flat_swaps,
     )
 
@@ -338,19 +339,21 @@ def test_recover_flat_swaps_all_crash_states(spark, tmp_path):
     assert os.path.exists(f"{live}.tmp-swap-eeee/part")
 
 
-def test_flat_takedown_loop_self_heals_after_mid_swap_crash(
-    spark, tmp_path, monkeypatch
+def test_takedown_loop_refuses_flat_index_and_keeps_its_batch(
+    spark, tmp_path
 ):
-    """A FLAT-store takedown pass that crashes between rename-aside
-    and rename-in leaves the live dir missing; restarting the loop
-    must recover the store and replay the batch — not fail loud as
-    'no index' forever."""
+    """A FLAT parquet index is not a store: the takedown pass must
+    fail loud (no manifest, so the delete would otherwise match no
+    ``bucket=`` dirs and checkpoint its ids away as a silent no-op),
+    leave the directory untouched, and NOT commit the batch — after a
+    reseed as a store the same queue files fold."""
     import pytest
 
     from mapreduce_inverted_index_spark.operators.inverted_index import (
         build_index,
+        read_index_store,
+        write_index_store,
     )
-    from mapreduce_inverted_index_spark.streaming import ingest as ingest_mod
     from mapreduce_inverted_index_spark.streaming.ingest import (
         maintain_takedowns_available_now,
     )
@@ -363,40 +366,20 @@ def test_flat_takedown_loop_self_heals_after_mid_swap_crash(
     queue = str(tmp_path / "queue")
     ckpt = str(tmp_path / "ckpt")
     build_index(docs).write.parquet(index_dir)  # FLAT layout
+    before = sorted(os.listdir(index_dir))
     spark.createDataFrame([(0,), (2,)], "doc_id bigint").coalesce(
         1
     ).write.mode("append").parquet(queue)
 
-    real_rename = os.rename
-    calls = {"n": 0}
-
-    def dying_rename(src, dst):
-        calls["n"] += 1
-        if calls["n"] == 1:  # the rename-ASIDE: live moves to retired
-            real_rename(src, dst)
-            raise OSError("injected crash mid-flat-swap")
-        real_rename(src, dst)
-
-    monkeypatch.setattr(ingest_mod.os, "rename", dying_rename)
-    with pytest.raises(Exception, match="injected crash"):
+    with pytest.raises(Exception, match="write_index_store"):
         maintain_takedowns_available_now(spark, queue, index_dir, ckpt)
-    monkeypatch.undo()
-    assert not os.path.isdir(index_dir)  # live is gone — the bad state
+    assert sorted(os.listdir(index_dir)) == before
 
-    # restart: loop-entry recovery restores the store, replay folds
+    # reseed as a store; the uncommitted batch replays and folds
+    write_index_store(build_index(docs), index_dir)
     maintain_takedowns_available_now(spark, queue, index_dir, ckpt)
-    got = sorted(
-        (r["term"], tuple(r["postings"]), r["df"])
-        for r in spark.read.parquet(index_dir)
-        .select("term", "postings", "df")
-        .collect()
-    )
-    want = sorted(
-        (r["term"], tuple(r["postings"]), r["df"])
-        for r in build_index(docs.where(~F.col("doc_id").isin([0, 2])))
-        .collect()
-    )
-    assert got == want
+    want = _index_rows(build_index(docs.where(~F.col("doc_id").isin([0, 2]))))
+    assert _index_rows(read_index_store(spark, index_dir)) == want
 
 
 def test_ivf_cell_store_self_heals_after_mid_swap_crash(
@@ -457,21 +440,21 @@ def test_ivf_cell_store_self_heals_after_mid_swap_crash(
 
 def test_half_seeded_store_fails_loud_not_flat_rebuild(spark, tmp_path):
     """A write_index_store that died between its data write and its
-    sidecar write leaves bucket dirs with no _mii_store.json. That is
-    still a STORE (is_index_store True), and an ADD — which needs the
-    hash arity — fails loud with the re-seed instruction instead of
-    silently rebuilding a flat layout; a DELETE (arity-free: the
-    bucket column rides through its regroup) still works."""
+    manifest commit leaves bucket dirs with no manifest. That is not a
+    store: both mutators fail loud naming the re-seed step instead of
+    guessing the hash arity or treating the directory as flat, the
+    directory is left as it was, and the reseed restores a working
+    store (the readers' refusal: test_manifest_less_store_fails_loud)."""
     import pytest
 
     from mapreduce_inverted_index_spark.operators.inverted_index import (
         build_index,
         delete_from_index_store,
-        is_index_store,
         merge_into_index_store,
         read_index_store,
         write_index_store,
     )
+    from mapreduce_inverted_index_spark.operators.store import MANIFEST_NAME
 
     docs = spark.createDataFrame(
         [(1, "alpha beta"), (2, "beta gamma")],
@@ -479,20 +462,19 @@ def test_half_seeded_store_fails_loud_not_flat_rebuild(spark, tmp_path):
     )
     path = str(tmp_path / "store")
     write_index_store(build_index(docs), path)
-    os.remove(f"{path}/_mii_store.json")  # the simulated crash state
+    os.remove(f"{path}/{MANIFEST_NAME}")  # the simulated crash state
+    dirs = _bucket_dirs(path)
 
-    assert is_index_store(path)
-    with pytest.raises(FileNotFoundError, match="re-run write_index_store"):
-        merge_into_index_store(
-            spark,
-            path,
-            build_index(
-                spark.createDataFrame(
-                    [(9, "delta")], "doc_id bigint, text string"
-                )
-            ),
-        )
-    # DELETE never touches the sidecar
+    delta = build_index(
+        spark.createDataFrame([(9, "delta")], "doc_id bigint, text string")
+    )
+    with pytest.raises(FileNotFoundError, match="write_index_store"):
+        merge_into_index_store(spark, path, delta)
+    with pytest.raises(FileNotFoundError, match="write_index_store"):
+        delete_from_index_store(spark, path, [1])
+    assert _bucket_dirs(path) == dirs
+
+    write_index_store(build_index(docs), path)
     delete_from_index_store(spark, path, [1])
     want = _index_rows(build_index(docs.where(F.col("doc_id") != 1)))
     assert _index_rows(read_index_store(spark, path)) == want
@@ -506,7 +488,7 @@ def test_mg_state_survives_mid_commit_crash(spark, tmp_path, monkeypatch):
     and the replayed batch folds into the intact prior state."""
     import pytest
 
-    from mapreduce_inverted_index_spark.streaming import ingest as ingest_mod
+    from mapreduce_inverted_index_spark.streaming import sketches as sketches_mod
     from mapreduce_inverted_index_spark.streaming.sketches import (
         maintain_frequent_terms_available_now,
     )
@@ -556,7 +538,7 @@ def test_mg_state_survives_mid_commit_crash(spark, tmp_path, monkeypatch):
             raise OSError("injected crash mid-mg-commit")
         real_rename(src, dst)
 
-    monkeypatch.setattr(ingest_mod.os, "rename", dying_rename)
+    monkeypatch.setattr(sketches_mod.os, "rename", dying_rename)
     with pytest.raises(Exception, match="injected crash"):
         maintain_frequent_terms_available_now(
             spark, str(land), state, ckpt, k=25, glob="*.parquet"

@@ -52,14 +52,8 @@ def _fast_retries(monkeypatch):
 
     monkeypatch.setattr(
         store_mod,
-        "resolve_manifest_files",
-        functools.partial(
-            store_mod.resolve_manifest_files.__wrapped__
-            if hasattr(store_mod.resolve_manifest_files, "__wrapped__")
-            else store_mod.resolve_manifest_files,
-            retries=3,
-            wait_sec=0.01,
-        ),
+        "open_snapshot",
+        functools.partial(store_mod.open_snapshot, retries=3, wait_sec=0.01),
     )
 
 
@@ -274,21 +268,52 @@ def test_crash_after_manifest_refresh_heals_on_next_mutation(
     assert got != before
 
 
-def test_manifest_less_store_falls_back_to_listing(spark, tmp_path):
-    """Pre-manifest layouts stay readable: delete the manifest and
-    the readers list directories as before."""
+def test_manifest_less_store_fails_loud(spark, tmp_path):
+    """There is no manifest-less read: delete the manifest and every
+    index-store reader and mutator raises ``FileNotFoundError`` naming
+    the seed writer, and the IVF probe names its own seed writer —
+    nothing falls back to a directory listing."""
     from mapreduce_inverted_index_spark.operators.inverted_index import (
+        build_index,
+        delete_from_index_store,
+        merge_into_index_store,
         read_index_store,
         term_lookup_store,
+    )
+    from mapreduce_inverted_index_spark.operators.similarity import (
+        ivf_pruned_scan_topk,
+        write_ivf_cells,
     )
     from mapreduce_inverted_index_spark.operators.store import MANIFEST_NAME
 
     path = str(tmp_path / "store")
-    _seed(spark, path)
-    before = _rows(read_index_store(spark, path))
+    docs = _seed(spark, path)
     os.remove(f"{path}/{MANIFEST_NAME}")
-    assert _rows(read_index_store(spark, path)) == before
-    assert term_lookup_store(spark, path, ["common"]).count() == 1
+    for call in (
+        lambda: read_index_store(spark, path),
+        lambda: term_lookup_store(spark, path, ["common"]),
+        lambda: merge_into_index_store(spark, path, build_index(docs)),
+        lambda: delete_from_index_store(spark, path, [0]),
+    ):
+        with pytest.raises(FileNotFoundError, match="write_index_store"):
+            call()
+
+    cells = str(tmp_path / "cells")
+    vecs = spark.createDataFrame(
+        [(i, i % 2, [float(i), 1.0]) for i in range(8)],
+        "vec_id bigint, cell int, vec array<double>",
+    )
+    write_ivf_cells(vecs, cells)
+    os.remove(f"{cells}/{MANIFEST_NAME}")
+    cents = spark.createDataFrame(
+        [(0, [0.0, 1.0]), (1, [1.0, 1.0])],
+        "cell int, centroid array<double>",
+    )
+    queries = spark.createDataFrame(
+        [(100, [1.0, 1.0])], "query_id bigint, query_vec array<double>"
+    )
+    with pytest.raises(FileNotFoundError, match="write_ivf_cells"):
+        ivf_pruned_scan_topk(spark, cells, cents, queries, k=2, n_probe=1)
 
 
 def test_ivf_probe_resolves_through_manifest(spark, tmp_path):

@@ -3,7 +3,7 @@
 #1 (HIGH): the streaming semantic-cells fold APPENDS batch files via
 ``_publish_batch_files`` — but once a delete/compact had written a
 reader manifest, those appended files were never named in it, so
-manifest-resolved probes (``_read_cell_store`` behind
+manifest-resolved probes (``store.open_snapshot`` behind
 ``ivf_pruned_scan_topk`` / ``hard_negatives_ivf``) silently returned
 a stale subset missing every vector appended since the last refresh.
 The publish now refreshes the manifest (inside the fold's lease)
@@ -14,7 +14,7 @@ manifest names zero files) fell through ``if files:`` to a directory
 read, which crashes on schema inference and reopens the listing race.
 The manifest now carries the store schema (seeded by
 ``write_ivf_cells``, carried forward across swaps), and
-``_read_cell_store`` returns an empty DataFrame of that shape.
+``store.open_snapshot`` returns an empty DataFrame of that shape.
 """
 
 from __future__ import annotations
@@ -45,12 +45,12 @@ def test_streaming_append_refreshes_existing_manifest(spark, tmp_path):
     vectors APPENDED by the streaming fold after a delete/compact
     created the manifest — stale-subset reads were silent."""
     from mapreduce_inverted_index_spark.operators.similarity import (
-        _read_cell_store,
         delete_from_ivf_cells,
     )
     from mapreduce_inverted_index_spark.operators.store import (
         MANIFEST_NAME,
-        resolve_manifest_files,
+        open_snapshot,
+        read_manifest,
     )
     from mapreduce_inverted_index_spark.streaming.ingest import (
         maintain_semantic_cells_available_now,
@@ -90,12 +90,11 @@ def test_streaming_append_refreshes_existing_manifest(spark, tmp_path):
     assert n_direct > n_after_delete  # the append landed on disk
 
     # the manifest names the appended batch files ...
-    files = resolve_manifest_files(cells, "cell")
-    assert files is not None
-    assert any("batch-" in f for f in files)
+    parts = read_manifest(cells, "cell")["parts"]
+    assert any("batch-" in f for fns in parts.values() for f in fns)
     # ... and the manifest-resolved probe read sees EVERY live vector,
     # not the pre-append subset
-    assert _read_cell_store(spark, cells).count() == n_direct
+    assert open_snapshot(spark, cells, "cell")[0].count() == n_direct
 
 
 def test_committed_empty_cell_store_reads_as_empty(spark, tmp_path):
@@ -103,12 +102,12 @@ def test_committed_empty_cell_store_reads_as_empty(spark, tmp_path):
     down is an EMPTY store, not an 'Unable to infer schema' crash —
     and the empty DataFrame carries the committed schema."""
     from mapreduce_inverted_index_spark.operators.similarity import (
-        _read_cell_store,
         delete_from_ivf_cells,
         ivf_pruned_scan_topk,
     )
     from mapreduce_inverted_index_spark.operators.store import (
-        resolve_manifest_files,
+        open_snapshot,
+        read_manifest,
     )
 
     path = str(tmp_path / "cells")
@@ -118,8 +117,8 @@ def test_committed_empty_cell_store_reads_as_empty(spark, tmp_path):
     all_ids = [r["vec_id"] for r in emb.select("vec_id").collect()]
     delete_from_ivf_cells(spark, path, all_ids)
 
-    assert resolve_manifest_files(path, "cell") == []  # committed-empty
-    out = _read_cell_store(spark, path)
+    assert read_manifest(path, "cell")["parts"] == {}  # committed-empty
+    out, _ = open_snapshot(spark, path, "cell")
     assert out.count() == 0
     assert set(out.columns) == seeded_cols
 
@@ -151,55 +150,110 @@ def test_open_snapshot_verifies_the_materialized_file_index(
 
     path = str(tmp_path / "cells")
     emb, _ = _seed_cells(spark, path)
-    kind, df = store_mod.open_snapshot(spark, path, "cell")
-    assert kind == "df"
+    df, _ = store_mod.open_snapshot(spark, path, "cell")
     total = df.count()
     assert total == emb.count()
 
-    # force a resolve that names one file the FileIndex will not hold
+    # force a manifest that names one file the FileIndex will not hold
     # (a real listing race drops existing-at-resolve-time files; here
-    # we fake the same mismatch by resolving a list with a duplicate
-    # counted once) — open_snapshot must NOT hand back a DataFrame
-    real = store_mod.resolve_manifest_files
+    # we fake the same mismatch by naming a file twice, which the
+    # index counts once) — open_snapshot must NOT hand back a DataFrame
+    real = store_mod.read_manifest
 
-    def over_resolving(p, part_col, *a, **k):
-        files = real(p, part_col, *a, **k)
-        return files + files[:1] if files else files
+    def over_resolving(p, part_col):
+        m = real(p, part_col)
+        k = sorted(m["parts"])[0]
+        m["parts"][k] = m["parts"][k] + m["parts"][k][:1]
+        return m
 
-    monkeypatch.setattr(store_mod, "resolve_manifest_files", over_resolving)
+    monkeypatch.setattr(store_mod, "read_manifest", over_resolving)
     with pytest.raises(RuntimeError, match="committed snapshot"):
         store_mod.open_snapshot(spark, path, "cell", retries=3,
                                 wait_sec=0.01)
     monkeypatch.undo()
 
-    # and the committed-empty path still reports kind="empty"
+    # and the committed-empty path opens as an empty DataFrame
     all_ids = [r["vec_id"] for r in emb.select("vec_id").collect()]
     delete_from_ivf_cells(spark, path, all_ids)
-    kind, df = store_mod.open_snapshot(spark, path, "cell")
-    assert kind == "empty" and df is None
+    df, manifest = store_mod.open_snapshot(spark, path, "cell")
+    assert manifest["parts"] == {} and df.count() == 0
 
 
-def test_manifest_schema_carries_forward_across_swaps(spark, tmp_path):
-    """Swap commits (delete) refresh the manifest WITHOUT holding the
-    DataFrame — the seed-recorded schema must survive them, so the
-    store stays empty-readable after any mutation sequence."""
+def test_manifest_schema_carries_forward_across_swaps(
+    spark, tmp_path, monkeypatch
+):
+    """Swap commits (delete/merge) and entry recovery refresh the
+    manifest WITHOUT holding the DataFrame — the seed-recorded schema
+    (and, for the index store, ``n_buckets``) must survive them, so
+    the store stays empty-readable and hashes new terms with its own
+    arity after any mutation sequence."""
+    import shutil
+
+    from mapreduce_inverted_index_spark.operators import store as store_mod
+    from mapreduce_inverted_index_spark.operators.inverted_index import (
+        build_index,
+        delete_from_index_store,
+        merge_into_index_store,
+        read_index_store,
+        write_index_store,
+    )
     from mapreduce_inverted_index_spark.operators.similarity import (
         delete_from_ivf_cells,
     )
     from mapreduce_inverted_index_spark.operators.store import (
         MANIFEST_NAME,
-        resolve_manifest_schema,
+        read_manifest,
     )
 
     path = str(tmp_path / "cells")
     emb, _ = _seed_cells(spark, path)
-    schema0 = resolve_manifest_schema(path)
-    assert schema0 is not None
-    assert "vec_id" in json.loads(schema0)["fields"][0]["name"] or any(
-        f["name"] == "vec_id" for f in json.loads(schema0)["fields"]
-    )
+    schema0 = read_manifest(path, "cell")["schema"]
+    assert any(f["name"] == "vec_id" for f in json.loads(schema0)["fields"])
 
     some = [r["vec_id"] for r in emb.select("vec_id").limit(3).collect()]
     delete_from_ivf_cells(spark, path, some)
     assert os.path.isfile(f"{path}/{MANIFEST_NAME}")
-    assert resolve_manifest_schema(path) == schema0
+    assert read_manifest(path, "cell")["schema"] == schema0
+
+    # the index store: seed -> merge -> delete -> crash recovery
+    idx = str(tmp_path / "index")
+    docs = spark.createDataFrame(
+        [(i, f"alpha{chr(97 + i)} common") for i in range(6)],
+        "doc_id bigint, text string",
+    )
+    write_index_store(build_index(docs), idx, n_buckets=5)
+    seeded = read_manifest(idx, "bucket")
+    assert seeded["n_buckets"] == 5
+    more = spark.createDataFrame(
+        [(10, "betaq common"), (11, "gammaq")], "doc_id bigint, text string"
+    )
+    merge_into_index_store(spark, idx, build_index(more))
+    delete_from_index_store(spark, idx, [0])
+
+    real_rmtree = shutil.rmtree
+
+    def dying_rmtree(p, *a, **k):
+        if ".tmp-swap-" in str(p):
+            raise OSError("injected crash before tmp cleanup")
+        return real_rmtree(p, *a, **k)
+
+    monkeypatch.setattr(store_mod.shutil, "rmtree", dying_rmtree)
+    with pytest.raises(OSError, match="injected crash"):
+        delete_from_index_store(spark, idx, [1])
+    monkeypatch.undo()
+    assert store_mod.recover_partition_swaps(idx, "bucket")
+
+    healed = read_manifest(idx, "bucket")
+    assert healed["n_buckets"] == 5
+    assert healed["schema"] == seeded["schema"]
+    assert healed["version"] != seeded["version"]
+    # doc 1's delete rolled back (awaiting replay); doc 0 stays gone
+    want = docs.where(F.col("doc_id") != 0).unionByName(more)
+    got = {
+        (r["term"], tuple(r["postings"]))
+        for r in read_index_store(spark, idx).collect()
+    }
+    assert got == {
+        (r["term"], tuple(r["postings"]))
+        for r in build_index(want).collect()
+    }

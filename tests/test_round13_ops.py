@@ -18,7 +18,7 @@ def test_stream_born_cell_store_carries_manifest(spark, tmp_path):
     manifest-less by design."""
     from mapreduce_inverted_index_spark.operators.store import (
         MANIFEST_NAME,
-        resolve_manifest_files,
+        read_manifest,
     )
     from mapreduce_inverted_index_spark.streaming.ingest import (
         maintain_semantic_cells_available_now,
@@ -46,7 +46,7 @@ def test_stream_born_cell_store_carries_manifest(spark, tmp_path):
     )
     cells = f"{state}/cells"
     assert os.path.isfile(f"{cells}/{MANIFEST_NAME}")
-    assert resolve_manifest_files(cells, "cell"), (
+    assert read_manifest(cells, "cell")["parts"], (
         "first-publish manifest resolves no files"
     )
     listed = manifest_files(cells)

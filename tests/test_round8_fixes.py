@@ -230,6 +230,8 @@ def test_takedown_fold_fails_loud_without_index(spark, tmp_path):
 
     from mapreduce_inverted_index_spark.operators.inverted_index import (
         build_index,
+        read_index_store,
+        write_index_store,
     )
     from mapreduce_inverted_index_spark.sources.tables import load_table
     from mapreduce_inverted_index_spark.streaming.ingest import (
@@ -248,7 +250,7 @@ def test_takedown_fold_fails_loud_without_index(spark, tmp_path):
     with _pytest.raises(StreamingQueryException):
         maintain_takedowns_available_now(spark, queue, index_dir, ckpt)
     # index appears; the SAME queue files must now apply
-    build_index(docs).write.mode("overwrite").parquet(index_dir)
+    write_index_store(build_index(docs), index_dir)
     maintain_takedowns_available_now(spark, queue, index_dir, ckpt)
     want = sorted(
         map(
@@ -256,7 +258,7 @@ def test_takedown_fold_fails_loud_without_index(spark, tmp_path):
             build_index(docs.where(~F.col("doc_id").isin(dead))).collect(),
         )
     )
-    assert sorted(map(tuple, spark.read.parquet(index_dir).collect())) == want
+    assert sorted(map(tuple, read_index_store(spark, index_dir).collect())) == want
 
 
 def test_log_histogram_guards(spark):

@@ -411,15 +411,21 @@ def test_compact_ivf_cells_layout_only(spark, tmp_path):
         ivf_assign,
         ivf_centroids,
     )
+    from mapreduce_inverted_index_spark.operators.store import (
+        refresh_manifest,
+    )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     cents = ivf_centroids(emb, 4, 3)
     path = str(tmp_path / "cells")
-    # simulate 6 streaming appends -> 6 files per cell
+    # simulate 6 streaming appends -> 6 files per cell, each committed
+    # to the manifest the way the streaming publish commits it
     for k in range(6):
-        ivf_assign(emb.where(F.col("vec_id") % 6 == k), cents).repartition(
-            1
-        ).write.mode("append").partitionBy("cell").parquet(path)
+        batch = ivf_assign(emb.where(F.col("vec_id") % 6 == k), cents)
+        batch.repartition(1).write.mode("append").partitionBy("cell").parquet(
+            path
+        )
+        refresh_manifest(path, "cell", {"schema": batch.schema.json()})
 
     def files(d):
         return sorted(
@@ -450,6 +456,8 @@ def test_takedown_stream_maintenance(spark, tmp_path):
     pass with no new files leaves the index untouched."""
     from mapreduce_inverted_index_spark.operators.inverted_index import (
         build_index,
+        read_index_store,
+        write_index_store,
     )
     from mapreduce_inverted_index_spark.sources.tables import load_table
     from mapreduce_inverted_index_spark.streaming.ingest import (
@@ -460,7 +468,13 @@ def test_takedown_stream_maintenance(spark, tmp_path):
     index_dir = str(tmp_path / "index")
     queue = str(tmp_path / "queue")
     ckpt = str(tmp_path / "ckpt")
-    build_index(docs).write.mode("overwrite").parquet(index_dir)
+    write_index_store(build_index(docs), index_dir)
+
+    def stored():
+        return sorted(
+            (r["term"], tuple(r["postings"]), r["df"])
+            for r in read_index_store(spark, index_dir).collect()
+        )
 
     batches = [
         [r["doc_id"] for r in docs.where(F.col("doc_id") % 10 == 0).collect()],
@@ -476,22 +490,15 @@ def test_takedown_stream_maintenance(spark, tmp_path):
         maintain_takedowns_available_now(spark, queue, index_dir, ckpt)
         gone |= set(ids)
         want = sorted(
-            map(
-                tuple,
-                build_index(
-                    docs.where(~F.col("doc_id").isin(list(gone)))
-                ).collect(),
-            )
+            (r["term"], tuple(r["postings"]), r["df"])
+            for r in build_index(
+                docs.where(~F.col("doc_id").isin(list(gone)))
+            ).collect()
         )
-        got = sorted(
-            map(tuple, spark.read.parquet(index_dir).collect())
-        )
-        assert got == want
+        assert stored() == want
 
     maintain_takedowns_available_now(spark, queue, index_dir, ckpt)
-    assert (
-        sorted(map(tuple, spark.read.parquet(index_dir).collect())) == want
-    )
+    assert stored() == want
 
 
 def test_smb_join_has_no_pre_join_exchange(spark):

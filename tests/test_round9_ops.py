@@ -162,7 +162,7 @@ def test_flat_swap_leaves_complete_copy(spark, tmp_path):
     and no step window exists where neither copy is complete (proxy:
     the retired dir is created by rename, so a crash between the two
     renames leaves the full old copy under .retired-*)."""
-    from mapreduce_inverted_index_spark.streaming.ingest import _swap_flat_dir
+    from mapreduce_inverted_index_spark.streaming.sketches import _swap_flat_dir
 
     live = str(tmp_path / "state")
     spark.range(5).write.parquet(live)

@@ -71,7 +71,7 @@ def test_store_delete_property(spark, tmp_path_factory):
             build_index(docs.where(~F.col("doc_id").isin(dead or [10**9])))
         )
         # read_index_store handles the fully-emptied store directly
-        # (sidecar present, zero bucket dirs → empty index)
+        # (manifest names no files → empty index of the recorded schema)
         got = _index_rows(read_index_store(spark, path))
         assert got == want
 

@@ -179,8 +179,13 @@ def test_stream_maintained_index_equals_batch_rebuild(spark, tmp_path):
     ``build_index`` over all files so far (same provenance-hash ids),
     and a pass with nothing new must leave the index untouched — the
     incremental replacement for the reference's rebuild-per-run model
-    (``master/src/master.py:123-176``)."""
-    from mapreduce_inverted_index_spark.operators.inverted_index import build_index
+    (``master/src/master.py:123-176``). The first pass seeds the
+    bucketed store; later passes merge bucket-locally."""
+    from mapreduce_inverted_index_spark.operators.inverted_index import (
+        build_index,
+        read_index_store,
+    )
+    from mapreduce_inverted_index_spark.operators.store import read_manifest
     from mapreduce_inverted_index_spark.streaming.ingest import (
         maintain_index_available_now,
         streamed_doc_ids,
@@ -203,7 +208,7 @@ def test_stream_maintained_index_equals_batch_rebuild(spark, tmp_path):
     def stored():
         return sorted(
             (r["term"], tuple(r["postings"]), r["df"])
-            for r in spark.read.parquet(index_dir).collect()
+            for r in read_index_store(spark, index_dir).collect()
         )
 
     def expected():
@@ -216,6 +221,8 @@ def test_stream_maintained_index_equals_batch_rebuild(spark, tmp_path):
     (src / "b.txt").write_text("spark merges batches")
     maintain_index_available_now(spark, str(src), index_dir, ckpt)
     assert stored() == expected()
+    # stream-born as a bucketed store, not a flat parquet dir
+    assert read_manifest(index_dir, "bucket")["n_buckets"] == 16
 
     (src / "c.txt").write_text("indexes grow as streams arrive")
     maintain_index_available_now(spark, str(src), index_dir, ckpt)

@@ -66,7 +66,7 @@ def main() -> None:
         with mutation_lease(path):
             purge_swap_orphans(path)
             a.write.mode("overwrite").partitionBy("cell").parquet(path)
-            refresh_manifest(path, "cell", schema_json=a.schema.json())
+            refresh_manifest(path, "cell", {"schema": a.schema.json()})
 
     def seed_new(path: str) -> None:
         write_ivf_cells(assigned(), path)

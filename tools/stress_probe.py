@@ -483,13 +483,13 @@ def race() -> None:
         write_index_store,
     )
     from mapreduce_inverted_index_spark.operators.similarity import (
-        _read_cell_store,
         compact_ivf_cells,
         delete_from_ivf_cells,
         ivf_assign,
         ivf_centroids,
         write_ivf_cells,
     )
+    from mapreduce_inverted_index_spark.operators.store import open_snapshot
 
     spark = get_spark(
         app_name="stress-race",
@@ -658,7 +658,7 @@ def race() -> None:
     cents.count()
 
     def ivf_fp():
-        return content_fp("ivf", _read_cell_store(spark, cells_path))
+        return content_fp("ivf", open_snapshot(spark, cells_path, "cell")[0])
 
     run_storm(
         "IVF cell store, 500k vectors / 64 cells",
@@ -722,7 +722,7 @@ def race() -> None:
         "semantic cell store, 500k vectors stream-born, 3 append passes",
         sem_seed,
         lambda: content_fp(
-            "sem", _read_cell_store(spark, f"{state}/cells")
+            "sem", open_snapshot(spark, f"{state}/cells", "cell")[0]
         ),
         [lambda k=k: sem_pass(k) for k in range(3)],
     )
