@@ -535,7 +535,6 @@ def minhash_incremental_dedup(
     n: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    persist_shingles: bool = True,
 ) -> DataFrame:
     """Near-dup matches of a NEW batch against a stored corpus state —
     the form a production pipeline actually runs: the corpus's band
@@ -551,15 +550,10 @@ def minhash_incremental_dedup(
     doc LSH-collides with at ``jaccard >= threshold``. Route through
     ``groupBy(new_id).agg(min(dup_of))`` for a keep/drop decision.
 
-    ``persist_shingles`` (same contract as :func:`minhash_near_dup`):
-    the batch's shingle table feeds both the signature pipeline and
-    the verify join — persisted by default, LRU-evicted; a
-    per-batch caller that manages its own cache passes False (or
-    calls ``spark.catalog.clearCache()`` to drop eagerly).
+    The batch's shingle table is persisted because it feeds both the
+    signature pipeline and the verify join.
     """
-    new_sh = word_shingles(new_docs, n, text_col, id_col)
-    if persist_shingles:
-        new_sh = new_sh.persist()
+    new_sh = word_shingles(new_docs, n, text_col, id_col).persist()
     new_bands = band_table(_minhash_signatures_from(new_sh))
     cands = (
         new_bands.select(
@@ -598,7 +592,6 @@ def minhash_near_dup(
     n: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    persist_shingles: bool = True,
     shingles: DataFrame | None = None,
 ) -> DataFrame:
     """Unblocked near-duplicate pairs via MinHash LSH + exact verify.
@@ -612,23 +605,16 @@ def minhash_near_dup(
     Output: ``doc_a, doc_b, jaccard`` — same shape as the blocked
     brute-force operator, so the two are interchangeable downstream.
 
-    ``persist_shingles``: the shingle table feeds three branches of
-    one DAG (signatures + both sides of the verification join);
-    persisting it trades one materialization for two recomputes
-    (~30% wall time here; at 100 TB you would persist signatures to
-    storage instead). LRU-evicted; call
-    ``spark.catalog.clearCache()`` to drop eagerly.
+    A computed shingle table is persisted because it feeds three
+    branches (signatures + both sides of the verification join).
 
     ``shingles``: optional prebuilt ``(doc_id, shingles)`` table
-    (assumed already persisted by the caller; ``persist_shingles`` is
-    ignored for it).
+    (assumed already persisted by the caller).
     """
     if shingles is not None:
         sh_all = shingles.select("doc_id", "shingles")
     else:
-        sh_all = word_shingles(docs, n, text_col, id_col)
-        if persist_shingles:
-            sh_all = sh_all.persist()
+        sh_all = word_shingles(docs, n, text_col, id_col).persist()
     bands = band_table(_minhash_signatures_from(sh_all))
     # Persist the band table: BOTH sides of the self-join below are
     # derived from it, and without a persist Spark recomputes the

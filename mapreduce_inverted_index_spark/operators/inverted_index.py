@@ -342,6 +342,23 @@ def index_bucket_col(term: "F.Column | str", n_buckets: int = INDEX_STORE_BUCKET
     return F.pmod(F.xxhash64(t), F.lit(n_buckets)).cast("int")
 
 
+def _packed_buckets(
+    index: DataFrame, n_buckets: int, n_files: int
+) -> DataFrame:
+    """Tag ``(term, postings, df)`` rows with their store bucket and
+    lay them out one file per bucket, term-sorted within it: probe
+    scans open O(probed buckets) files and row-group-skip on the term
+    min/max stats (the write_index_tables sortBy story,
+    directory-partitioned). ``n_files`` is the number of buckets
+    written; ``partitionBy`` splits a task that holds several buckets
+    into one file each, so hash collisions add no files."""
+    return (
+        index.withColumn("bucket", index_bucket_col("term", n_buckets))
+        .repartition(n_files, "bucket")
+        .sortWithinPartitions("term")
+    )
+
+
 def write_index_store(
     index: DataFrame, path: str, n_buckets: int = INDEX_STORE_BUCKETS
 ) -> None:
@@ -353,50 +370,22 @@ def write_index_store(
     else), the exact discipline the IVF cell store already has
     (``similarity.delete_from_ivf_cells``). Directory partitioning —
     not ``bucketBy`` table buckets — because the maintenance commit
-    is a per-directory swap (``store.swap_partition_dirs``); the
+    is a per-directory swap (``store.rewrite_partitions``); the
     bucketed-TABLE tier for shuffle-free lookup joins is
     :func:`write_index_tables`, a different axis.
 
-    The seed's manifest commit records the schema and ``n_buckets``:
-    ADD merges and term probes must hash terms with the arity the
-    store was laid out with. A seed that dies before that commit
-    leaves no manifest, so every reader and mutator refuses the
-    directory until a re-run of this overwrite.
+    The seed's manifest commit (``store.seed_store``) records the
+    schema and ``n_buckets``: ADD merges and term probes must hash
+    terms with the arity the store was laid out with.
     """
-    from mapreduce_inverted_index_spark.operators.store import (
-        mutation_lease,
-        purge_swap_orphans,
-        refresh_manifest,
-    )
+    from mapreduce_inverted_index_spark.operators.store import seed_store
 
-    tagged = index.withColumn("bucket", index_bucket_col("term", n_buckets))
-    # seeding is a mutation too: overwriting a store a live
-    # maintenance fold is mid-swap on loses the fold's batch
-    with mutation_lease(path):
-        # a tmp-swap orphan from a writer that died mid-swap would
-        # survive the overwrite, and the NEXT mutator's entry
-        # recovery would roll its pre-crash retired copies in over
-        # the fresh seed — purge (not recover: the overwrite makes
-        # the pre-crash state irrelevant) before writing
-        purge_swap_orphans(path)
-        (
-            # one file per bucket, term-sorted within it: probe scans
-            # open O(probed buckets) files and row-group-skip on the
-            # term min/max stats (the write_index_tables sortBy story,
-            # directory-partitioned)
-            tagged.repartition(n_buckets, "bucket")
-            .sortWithinPartitions("term")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(path)
-        )
-        # reader-visible commit of the seeded snapshot (the overwrite
-        # dropped any prior manifest along with the old layout)
-        refresh_manifest(
-            path,
-            "bucket",
-            {"schema": tagged.schema.json(), "n_buckets": n_buckets},
-        )
+    seed_store(
+        _packed_buckets(index, n_buckets, n_buckets),
+        path,
+        "bucket",
+        {"n_buckets": n_buckets},
+    )
 
 
 def read_index_store(spark, path: str) -> DataFrame:
@@ -430,36 +419,22 @@ def delete_from_index_store(
     Mechanics: one scan locates the affected buckets (explode
     postings, broadcast semi-join on the id batch, distinct bucket —
     shuffle rows are bucket ids, not postings); the affected buckets'
-    rows then re-aggregate per (bucket, term) with the dead ids
-    anti-joined out — the bucket column rides THROUGH the regroup, so
-    no bucket recomputation is needed; terms whose last posting dies
+    rows then go through :func:`delete_from_index` and are re-tagged
+    with the manifest's ``n_buckets``. Terms whose last posting dies
     drop out, a bucket whose last term dies loses its directory.
-    Commit = the shared crash-safe dir swap
-    (``store.swap_partition_dirs``). Returns the affected bucket ids.
-
-    A directory with no manifest is refused (``FileNotFoundError``)
-    before anything is read: a flat or half-seeded directory has no
-    ``bucket=`` dirs to match, so the delete would be a silent no-op
-    and a takedown loop would checkpoint its ids away.
+    Commit = ``store.rewrite_partitions``, which refuses a directory
+    with no manifest before anything is read: a flat or half-seeded
+    directory has no ``bucket=`` dirs to match, so the delete would
+    be a silent no-op and a takedown loop would checkpoint its ids
+    away. Returns the affected bucket ids.
     """
     from mapreduce_inverted_index_spark.operators.store import (
-        mutation_lease,
-        open_snapshot,
-        recover_partition_swaps,
-        swap_partition_dirs,
+        rewrite_partitions,
     )
 
-    with mutation_lease(path):
-        recover_partition_swaps(path, "bucket")
-        store, _ = open_snapshot(spark, path, "bucket")
-        if isinstance(doc_ids, DataFrame):
-            dead = doc_ids.select(
-                F.col("doc_id").cast("bigint").alias("doc_id")
-            )
-        else:
-            dead = spark.createDataFrame(
-                [(int(d),) for d in doc_ids], "doc_id bigint"
-            )
+    dead = _doc_id_frame(spark, doc_ids)
+
+    def plan(store: DataFrame, manifest: dict):
         affected = sorted(
             r["bucket"]
             for r in store.select(
@@ -471,29 +446,16 @@ def delete_from_index_store(
             .collect()
         )
         if not affected:
-            return []
-        pairs = (
-            store.where(F.col("bucket").isin(affected))
-            .select("bucket", "term", F.explode("postings").alias("doc_id"))
-            .join(F.broadcast(dead), "doc_id", "left_anti")
+            return [], None
+        base = store.where(F.col("bucket").isin(affected)).select(
+            "term", "postings", "df"
         )
-        remaining = (
-            pairs.groupBy("bucket", "term")
-            .agg(
-                F.sort_array(F.collect_list("doc_id")).alias("postings"),
-                F.count("*").cast("bigint").alias("df"),
-            )
-            .select("term", "postings", "df", "bucket")
-            # pack each rewritten bucket into ONE file (the
-            # compact_ivf_cells discipline): without this, every
-            # rewrite scatters a bucket across up to
-            # shuffle-partition-count files, and probe scans pay the
-            # open() count forever
-            .repartition(len(affected), "bucket")
-            .sortWithinPartitions("term")
+        survivors = delete_from_index(base, dead)
+        return affected, _packed_buckets(
+            survivors, manifest["n_buckets"], len(affected)
         )
-        swap_partition_dirs(path, remaining, "bucket", affected)
-        return affected
+
+    return rewrite_partitions(spark, path, "bucket", plan)
 
 
 def merge_into_index_store(spark, path: str, delta: DataFrame) -> list[int]:
@@ -510,45 +472,36 @@ def merge_into_index_store(spark, path: str, delta: DataFrame) -> list[int]:
     (≤ n_buckets ints — hashed with the manifest's ``n_buckets``, the
     arity :func:`write_index_store` laid the store out with); the
     affected subset full-outer-merges with the delta via
-    :func:`merge_index` and swaps in through the shared crash-safe
-    commit. A fully-taken-down store merges against its empty
-    snapshot, so re-ingest rebuilds the bucketed layout in place. A
-    directory with no manifest is refused, like
+    :func:`merge_index` and commits through
+    ``store.rewrite_partitions``. A fully-taken-down store merges
+    against its empty snapshot, so re-ingest rebuilds the bucketed
+    layout in place. A directory with no manifest is refused, like
     :func:`delete_from_index_store`. Returns the affected bucket ids.
     """
     from mapreduce_inverted_index_spark.operators.store import (
-        mutation_lease,
-        open_snapshot,
-        recover_partition_swaps,
-        swap_partition_dirs,
+        rewrite_partitions,
     )
 
-    with mutation_lease(path):
-        recover_partition_swaps(path, "bucket")
-        store, manifest = open_snapshot(spark, path, "bucket")
+    def plan(store: DataFrame, manifest: dict):
         n_buckets = manifest["n_buckets"]
-        tagged = delta.withColumn(
-            "bucket", index_bucket_col("term", n_buckets)
-        )
         affected = sorted(
             r["bucket"]
-            for r in tagged.select("bucket").distinct().collect()
+            for r in delta.select(
+                index_bucket_col("term", n_buckets).alias("bucket")
+            )
+            .distinct()
+            .collect()
         )
         if not affected:
-            return []
+            return [], None
         base = store.where(F.col("bucket").isin(affected)).select(
             "term", "postings", "df"
         )
-        merged = (
-            merge_index(base, delta)
-            .withColumn("bucket", index_bucket_col("term", n_buckets))
-            # one file per rewritten bucket (see
-            # delete_from_index_store)
-            .repartition(len(affected), "bucket")
-            .sortWithinPartitions("term")
+        return affected, _packed_buckets(
+            merge_index(base, delta), n_buckets, len(affected)
         )
-        swap_partition_dirs(path, merged, "bucket", affected)
-        return affected
+
+    return rewrite_partitions(spark, path, "bucket", plan)
 
 
 def term_lookup_store(spark, path: str, terms: "list[str]") -> DataFrame:
@@ -585,13 +538,17 @@ def term_lookup_store(spark, path: str, terms: "list[str]") -> DataFrame:
     )
 
 
-DELETE_INLINE_THRESHOLD = 10_000
+def _doc_id_frame(spark, doc_ids: "list[int] | DataFrame") -> DataFrame:
+    """A deletion batch as a one-column ``doc_id bigint`` frame."""
+    if isinstance(doc_ids, DataFrame):
+        return doc_ids.select(F.col("doc_id").cast("bigint").alias("doc_id"))
+    return spark.createDataFrame(
+        [(int(d),) for d in doc_ids], "doc_id bigint"
+    )
 
 
 def delete_from_index(
-    index: DataFrame,
-    doc_ids: "list[int] | DataFrame",
-    inline_threshold: int = DELETE_INLINE_THRESHOLD,
+    index: DataFrame, doc_ids: "list[int] | DataFrame"
 ) -> DataFrame:
     """Incremental index maintenance, the DELETE half (adds are
     :func:`merge_index`): remove a batch of documents from a built
@@ -600,47 +557,18 @@ def delete_from_index(
     out — so the result is EXACTLY ``build_index`` of the surviving
     corpus (the invariant the oracle and pytest assert).
 
-    Two physical strategies, picked by batch size:
-
-    - ``len(doc_ids) <= inline_threshold`` (the common case — a
-      deletion batch from takedowns/opt-outs/retention expiry is
-      operator-input-sized, not corpus-sized): inline the ids as one
-      array literal and ``array_except`` per row. A pure per-row MAP
-      over the index — no join, no shuffle, and on a
-      ``bucketBy(term)`` index the rewrite is embarrassingly parallel
-      per bucket file.
-    - larger batches, or ``doc_ids`` passed as a DataFrame (column
-      ``doc_id``): inlining would grow the PLAN itself linearly with
-      the batch (serialization, analysis, and broadcast-to-every-task
-      costs — the scale-killer), so instead EXPLODE postings and
-      broadcast-anti-join against the deletion set, then regroup per
-      term with an explicit sort. One shuffle on term; the deletion
-      side stays broadcast-sized (a multi-GB deletion list means you
-      want :func:`build_index` on the filtered corpus instead).
+    One plan for every batch, a list of any length or a DataFrame
+    (column ``doc_id``): explode postings, broadcast-anti-join against
+    the deletion set, regroup per term with an explicit sort. One
+    shuffle on term; the plan size does not grow with the batch (an
+    inlined id literal would), and the deletion side stays
+    broadcast-sized (a multi-GB deletion list means you want
+    :func:`build_index` on the filtered corpus instead).
     """
-    if not isinstance(doc_ids, DataFrame) and len(doc_ids) <= inline_threshold:
-        dead = F.array(*[F.lit(int(d)).cast("bigint") for d in doc_ids])
-        return (
-            index.select(
-                "term", F.array_except("postings", dead).alias("postings")
-            )
-            .where(F.size("postings") > 0)
-            .select(
-                "term",
-                "postings",
-                F.size("postings").cast("bigint").alias("df"),
-            )
-        )
-    if isinstance(doc_ids, DataFrame):
-        dead_df = doc_ids.select(F.col("doc_id").cast("bigint").alias("doc_id"))
-    else:
-        spark = index.sparkSession
-        dead_df = spark.createDataFrame(
-            [(int(d),) for d in doc_ids], "doc_id bigint"
-        )
+    dead = _doc_id_frame(index.sparkSession, doc_ids)
     pairs = index.select(
         "term", F.explode("postings").alias("doc_id")
-    ).join(F.broadcast(dead_df), "doc_id", "left_anti")
+    ).join(F.broadcast(dead), "doc_id", "left_anti")
     return pairs.groupBy("term").agg(
         F.sort_array(F.collect_list("doc_id")).alias("postings"),
         F.count("*").cast("bigint").alias("df"),

@@ -600,11 +600,7 @@ def write_ivf_cells(
     number of pieces; the per-test/bench default of one file per cell
     is right whenever a cell fits a single file (clusters size it as
     ~cell_bytes / target_file_size)."""
-    from mapreduce_inverted_index_spark.operators.store import (
-        mutation_lease,
-        purge_swap_orphans,
-        refresh_manifest,
-    )
+    from mapreduce_inverted_index_spark.operators.store import seed_store
 
     if files_per_cell > 1:
         clustered = assigned.repartition(
@@ -613,18 +609,7 @@ def write_ivf_cells(
         )
     else:
         clustered = assigned.repartition("cell")
-    clustered = clustered.sortWithinPartitions("vec_id")
-    # seeding is a mutation too: overwriting a store a live
-    # maintenance fold is mid-swap on loses the fold's batch
-    with mutation_lease(path):
-        # purge (not recover) mid-swap orphans first: one that
-        # survived the overwrite would let the NEXT mutator's entry
-        # recovery resurrect pre-crash cells over the fresh seed
-        purge_swap_orphans(path)
-        clustered.write.mode("overwrite").partitionBy("cell").parquet(path)
-        # reader-visible commit of the seeded snapshot; the schema
-        # rides along so a later committed-empty state stays readable
-        refresh_manifest(path, "cell", {"schema": assigned.schema.json()})
+    seed_store(clustered.sortWithinPartitions("vec_id"), path, "cell")
 
 
 def delete_from_ivf_cells(
@@ -636,8 +621,8 @@ def delete_from_ivf_cells(
     """Takedown from the IVF cell store — the DELETE half of the
     embedding-state maintenance pair (:func:`write_ivf_cells` /
     ``streaming.ingest.maintain_semantic_cells_available_now`` are
-    the ADD half, ``inverted_index.delete_from_index`` is the text
-    twin): remove a batch of vector ids, rewriting ONLY the cell
+    the ADD half, ``inverted_index.delete_from_index_store`` is the
+    text twin): remove a batch of vector ids, rewriting ONLY the cell
     partitions that actually contain them. Untouched cell
     directories keep their exact files (pytest-pinned by file
     listing) — at 100 TB a takedown touches r ≈ batch-sized cells,
@@ -656,21 +641,17 @@ def delete_from_ivf_cells(
     that does not exist yet.
     """
     from mapreduce_inverted_index_spark.operators.store import (
-        mutation_lease,
-        open_snapshot,
-        recover_partition_swaps,
-        swap_partition_dirs,
+        rewrite_partitions,
     )
 
-    with mutation_lease(path):
-        recover_partition_swaps(path, "cell")
-        cells, _ = open_snapshot(spark, path, "cell")
-        if isinstance(vec_ids, DataFrame):
-            dead = vec_ids.select(F.col(id_col).alias("vec_id"))
-        else:
-            dead = spark.createDataFrame(
-                [(int(v),) for v in vec_ids], "vec_id bigint"
-            )
+    if isinstance(vec_ids, DataFrame):
+        dead = vec_ids.select(F.col(id_col).alias("vec_id"))
+    else:
+        dead = spark.createDataFrame(
+            [(int(v),) for v in vec_ids], "vec_id bigint"
+        )
+
+    def plan(cells: DataFrame, manifest: dict):
         affected = sorted(
             r["cell"]
             for r in cells.join(F.broadcast(dead), "vec_id")
@@ -678,13 +659,12 @@ def delete_from_ivf_cells(
             .distinct()
             .collect()
         )
-        if not affected:
-            return []
         remaining = cells.where(F.col("cell").isin(affected)).join(
             F.broadcast(dead), "vec_id", "left_anti"
         )
-        swap_partition_dirs(path, remaining, "cell", affected)
-        return affected
+        return affected, remaining
+
+    return rewrite_partitions(spark, path, "cell", plan)
 
 
 def compact_ivf_cells(
@@ -708,23 +688,17 @@ def compact_ivf_cells(
     OPTIMIZE); file-count-per-partition is the trigger either way.
     """
     from mapreduce_inverted_index_spark.operators.store import (
-        mutation_lease,
-        open_snapshot,
-        read_manifest,
-        recover_partition_swaps,
-        swap_partition_dirs,
+        rewrite_partitions,
     )
 
-    with mutation_lease(path):
-        recover_partition_swaps(path, "cell")
+    def plan(cells: DataFrame, manifest: dict):
         affected = sorted(
             int(cell)
-            for cell, files in read_manifest(path, "cell")["parts"].items()
+            for cell, files in manifest["parts"].items()
             if len(files) > max_files_per_cell
         )
         if not affected:
-            return []
-        cells, _ = open_snapshot(spark, path, "cell")
+            return [], None
         # hash-repartition on cell: each cell's rows land in ONE task
         # (possibly shared with other cells that hash to the same
         # task, leaving some tasks empty), and partitionBy then
@@ -738,8 +712,9 @@ def compact_ivf_cells(
             .repartition(len(affected), "cell")
             .sortWithinPartitions("vec_id")
         )
-        swap_partition_dirs(path, packed, "cell", affected)
-        return affected
+        return affected, packed
+
+    return rewrite_partitions(spark, path, "cell", plan)
 
 
 def ivf_pruned_scan_topk(

@@ -8,6 +8,14 @@ ONLY the partitions a batch touches. This module owns what they
 share: the store format, the crash-safe directory swap that commits
 such a rewrite on a bare filesystem, and the reader's snapshot open.
 
+Writers go through two entry points, which own the whole commit
+protocol so no operator repeats it: :func:`seed_store` (lease, purge
+crash orphans, overwrite, commit the manifest) and
+:func:`rewrite_partitions` (lease, crash recovery, snapshot open, the
+caller's rewrite plan, partition swap). An operator supplies only the
+DataFrame to seed or the plan that says which partitions a batch
+touches and what they hold afterwards.
+
 Format: a partitioned store is its ``<part_col>=v/`` directories plus
 ``_mii_manifest.json`` — ``version``, ``part_col``, ``parts`` (the
 live data files per partition), ``schema`` (the written
@@ -37,6 +45,8 @@ import uuid
 from pyspark.sql import DataFrame
 
 __all__ = [
+    "seed_store",
+    "rewrite_partitions",
     "swap_partition_dirs",
     "recover_partition_swaps",
     "purge_swap_orphans",
@@ -232,6 +242,52 @@ def _sweep_lease_orphans(lease: str) -> None:
             pid = _lease_holder(full)
             if pid is None or not _pid_alive(pid):
                 shutil.rmtree(full, ignore_errors=True)
+
+
+def seed_store(
+    df: DataFrame, path: str, part_col: str, meta: "dict | None" = None
+) -> None:
+    """Seed (or reseed) a partitioned store with ``df`` as a full
+    ``partitionBy(part_col)`` overwrite, then commit its manifest with
+    ``meta`` and ``df``'s schema. The caller lays ``df`` out (file
+    count and sort order per partition); this owns the commit.
+
+    Seeding is a mutation too, so it holds the lease: overwriting a
+    store a live maintenance fold is mid-swap on loses the fold's
+    batch. Mid-swap orphans are purged, not recovered, before the
+    overwrite (:func:`purge_swap_orphans`). The overwrite drops any
+    prior manifest, so a seed that dies before its manifest commit
+    leaves a directory every reader and mutator refuses until a
+    re-run of the seed.
+    """
+    with mutation_lease(path):
+        purge_swap_orphans(path)
+        df.write.mode("overwrite").partitionBy(part_col).parquet(path)
+        refresh_manifest(
+            path, part_col, {**(meta or {}), "schema": df.schema.json()}
+        )
+
+
+def rewrite_partitions(spark, path: str, part_col: str, plan) -> "list":
+    """Rewrite only the partitions a batch touches: under the lease,
+    roll back any dead writer's half-done swap
+    (:func:`recover_partition_swaps`), open the committed snapshot
+    (:func:`open_snapshot`, which refuses a directory with no
+    manifest), then call ``plan(snapshot, manifest)``. The plan
+    returns ``(affected, rewritten)``: the partition values the batch
+    touches and a DataFrame of every row those partitions hold
+    afterwards, partition column included. If anything is affected,
+    :func:`swap_partition_dirs` commits ``rewritten`` over exactly
+    those partitions; every other partition keeps its files. Returns
+    ``affected``.
+    """
+    with mutation_lease(path):
+        recover_partition_swaps(path, part_col)
+        snapshot, manifest = open_snapshot(spark, path, part_col)
+        affected, rewritten = plan(snapshot, manifest)
+        if affected:
+            swap_partition_dirs(path, rewritten, part_col, affected)
+        return affected
 
 
 def swap_partition_dirs(

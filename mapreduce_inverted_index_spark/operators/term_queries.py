@@ -133,7 +133,7 @@ def not_query(docs: DataFrame, include_term: str, exclude_term: str,
 
 
 def tf_idf(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-           round_to: int = 4, persist_weights: bool = True) -> DataFrame:
+           round_to: int = 4) -> DataFrame:
     """tf-idf score per (doc_id, term).
 
     tf = raw in-doc term count (duplicates preserved through the
@@ -143,17 +143,13 @@ def tf_idf(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     broadcast the df side when small. Score rounded so differential
     oracles compare stably across engines.
 
-    ``persist_weights``: ``tf`` feeds two branches (the join's left
-    side and the df aggregation) — unpersisted, the explode + regex
-    tokenize over the whole corpus runs once per branch. Same
-    two-consumer hazard and same fix as ``bm25_rank``; at 100 TB the
-    tf table would be a materialized index table instead.
+    ``tf`` is persisted because it feeds two branches (the join and
+    the df aggregation), which would otherwise each re-tokenize the
+    corpus.
     """
     from mapreduce_inverted_index_spark.operators.inverted_index import doc_term_freq
 
-    tf = doc_term_freq(docs, text_col, id_col)
-    if persist_weights:
-        tf = tf.persist()
+    tf = doc_term_freq(docs, text_col, id_col).persist()
     df_ = tf.groupBy("term").agg(F.count("*").alias("df"))
     total = docs.agg(F.countDistinct(id_col).alias("n_docs"))
     return (
@@ -248,7 +244,6 @@ def phrase_query(docs: DataFrame, phrase: list[str], text_col: str = "text",
 def bm25_rank(docs: DataFrame, query_terms: list[str], *, k1: float = 1.2,
               b: float = 0.75, k: int = 10, text_col: str = "text",
               id_col: str = "doc_id",
-              persist_weights: bool = True,
               tf: DataFrame | None = None,
               dl: DataFrame | None = None) -> DataFrame:
     """Okapi BM25 top-k ranking for a bag-of-terms query.
@@ -262,15 +257,9 @@ def bm25_rank(docs: DataFrame, query_terms: list[str], *, k1: float = 1.2,
     transcendental and summed in fixed query order, so a DuckDB twin
     reproduces them bit-exactly; ties break on doc_id.
 
-    ``persist_weights``: ``tf`` feeds three branches (doc lengths,
-    query-term rows, and through ``dl`` the corpus stats) and ``dl``
-    feeds two (stats + the score join) — unpersisted, the whole
-    tokenize/explode/groupBy corpus pipeline is re-derived per branch
-    (3-4 corpus scans in the physical plan). Persisting both collapses
-    that to one corpus scan. At 100 TB read ``tf``/``dl`` from the
-    materialized index tables instead (they ARE the index); persist is
-    the single-session analog. LRU-evicted; ``spark.catalog
-    .clearCache()`` drops them eagerly.
+    A computed ``tf``/``dl`` is persisted because each feeds several
+    branches (doc lengths, query-term rows, stats, the score join),
+    which would otherwise each re-derive the corpus pipeline.
 
     ``tf``: optional precomputed (doc_id, term, tf) table — pass
     ``spark.table(tf_table)`` from ``write_index_tables`` so the qtf
@@ -287,13 +276,9 @@ def bm25_rank(docs: DataFrame, query_terms: list[str], *, k1: float = 1.2,
     from mapreduce_inverted_index_spark.operators.inverted_index import doc_term_freq
 
     if tf is None:
-        tf = doc_term_freq(docs, text_col, id_col)
-        if persist_weights:
-            tf = tf.persist()
+        tf = doc_term_freq(docs, text_col, id_col).persist()
     if dl is None:
-        dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-        if persist_weights:
-            dl = dl.persist()
+        dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl")).persist()
     else:
         # precomputed (co-bucketed) dl: pin the sort-merge shape so
         # the zero-Exchange bucket join is the plan at EVERY scale —
@@ -352,7 +337,6 @@ def tfidf_cosine_pairs(
     max_df: int | None = None,
     text_col: str = "text",
     id_col: str = "doc_id",
-    persist_weights: bool = True,
 ) -> DataFrame:
     """All-pairs document cosine similarity over tf-idf vectors via a
     posting-list join — the classic sparse similarity join (and the
@@ -378,20 +362,13 @@ def tfidf_cosine_pairs(
 
     Output: ``doc_a, doc_b, cosine`` (doc_a < doc_b).
 
-    ``persist_weights``: the tf table feeds two branches (df counts +
-    the weight join) and the weight table feeds three (norms + both
-    sides of the pair join) — unpersisted, Spark re-derives the whole
-    tokenize/tf pipeline per branch (12 corpus scans in the physical
-    plan). Persisting both collapses that to one scan; at 100 TB you
-    would write the weighted postings to storage instead (they are
-    the reusable index). LRU-evicted; ``spark.catalog.clearCache()``
-    drops them eagerly.
+    The tf and weight tables are persisted because they feed two and
+    three branches, which would otherwise each re-derive the whole
+    tokenize/tf pipeline.
     """
     from mapreduce_inverted_index_spark.operators.inverted_index import doc_term_freq
 
-    tf = doc_term_freq(docs, text_col, id_col)
-    if persist_weights:
-        tf = tf.persist()
+    tf = doc_term_freq(docs, text_col, id_col).persist()
     n_docs = docs.agg(F.count("*").alias("n_docs"))
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
     if max_df is not None:
@@ -416,9 +393,8 @@ def tfidf_cosine_pairs(
             .cast("decimal(18,9)")
             .alias("w"),
         )
+        .persist()
     )
-    if persist_weights:
-        w = w.persist()
     norms = w.groupBy("doc_id").agg(
         F.sqrt(F.sum(F.col("w") * F.col("w")).cast("double")).alias("nrm")
     )

@@ -943,8 +943,8 @@ def lm_bigram_scores(
     base = docs.select(F.col(id_col).alias("doc_id"), tokenize(text_col).alias("toks"))
     # the tokenized corpus feeds FOUR branches (route probe, unigram
     # counts, bigram stream, final per-doc left join) — unpersisted,
-    # each branch re-runs the tokenize scan (the bm25_rank
-    # persist_weights discipline; LRU-evicted, clearCache drops it;
+    # each branch re-runs the tokenize scan (the bm25_rank tf
+    # persist discipline; LRU-evicted, clearCache drops it;
     # at 100 TB read a materialized tokens table instead)
     if persist_tokens:
         base = base.persist()

@@ -149,15 +149,13 @@ def q_prefix_query_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Index maintenance, the DELETE half (merge_index is the ADD "
         "half): remove a takedown/opt-out batch from a built index "
-        "WITHOUT re-reading document text — per-term array_except + "
-        "df recompute, terms losing their last posting drop out. The "
-        "demo derives a BOUNDED batch (64 lowest doc_ids ≡ 0 mod 7 — "
-        "deterministic at every SF, so the collected list never "
-        "scales with the corpus); small batches inline as an array "
-        "literal (pure per-row map, no join/shuffle; per bucket file "
-        "on a bucketBy(term) index), while batches above "
-        "DELETE_INLINE_THRESHOLD switch to a broadcast-anti-join on "
-        "exploded postings so the PLAN stays constant-size. The "
+        "WITHOUT re-reading document text — exploded postings "
+        "broadcast-anti-joined against the batch, regrouped per term "
+        "with df recomputed; terms losing their last posting drop "
+        "out. The demo derives a BOUNDED batch (64 lowest doc_ids ≡ 0 "
+        "mod 7 — deterministic at every SF, so the collected list "
+        "never scales with the corpus); the plan is the same at every "
+        "batch size, so it stays constant-size. The "
         "oracle rebuilds the index from the SURVIVING corpus, so a "
         "green row proves the invariant delete(build(all)) == "
         "build(all - deleted). "
@@ -1113,7 +1111,6 @@ def q_bm25_topk_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
         k1=_BM25_K1,
         b=_BM25_B,
         k=10,
-        persist_weights=False,
         tf=spark.table(tf_name),
         dl=spark.table(dlen_name),
     )

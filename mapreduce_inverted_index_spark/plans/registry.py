@@ -126,228 +126,58 @@ def _load() -> None:
 # root changes this tool's output, so the regen MUST ride the same
 # commit — re-run `python tools/driver_window.py --write` whenever a
 # round's result files are committed (the tool warns on untracked
-# CORRECTNESS files for exactly this reason). As of round 10 the
-# window is the r5-green stale cohort re-proving first; every query
-# rotated OUT holds a green r5-r9 driver row on current fixtures plus
-# the per-session full-catalog differential (tools/drive_contract.py).
+# CORRECTNESS files for exactly this reason).
 _DRIVER_PRIORITY = (
-    "term_lookup_store_pruned",  # latest green r9
-    "index_store_merge_docs",  # latest green r9
-    "bm25_topk_colocated",  # latest green r9
-    "groupwise_zscore_pandas_api",  # latest green r9
-    "ivf_cells_compaction",  # latest green r9
-    "lm_bigram_quality_scores",  # latest green r9
-    "skipgram_cooccurrence",  # latest green r9
-    "stream_takedown_queue",  # latest green r9
-    "media_stats",  # latest green r9
-    "media_frame_samples",  # latest green r9
-    "media_exact_dedup",  # latest green r9
-    "hll_rollup_merge_users",  # latest green r9
-    "approx_quantiles_lineitem",  # latest green r9
-    "string_funcs_parts",  # latest green r9
-    "math_funcs_lineitem",  # latest green r9
-    "above_avg_acctbal_customers",  # latest green r9
-    "null_handling_funcs",  # latest green r9
-    "median_stats_lineitem",  # latest green r9
-    "multiset_ops_orderkeys",  # latest green r9
-    "shipping_priority_topk",  # latest green r9
-    "forecast_revenue_filter_agg",  # latest green r9
-    "calendar_axis_order_counts",  # latest green r9
-    "window_rank_family",  # latest green r9
-    "bool_agg_flags",  # latest green r9
-    "date_arithmetic_orders",  # latest green r9
-    "full_outer_nation_footprint",  # latest green r9
-    "customer_order_distribution",  # latest green r9
-    "large_volume_orders",  # latest green r9
-    "quiet_rich_customers",  # latest green r9
-    "percentile_quantity_by_flag",  # latest green r9
-    "unpivot_lineitem_measures",  # latest green r9
-    "time_range_window_orders",  # latest green r9
-    "value_window_family",  # latest green r9
-    "width_bucket_price_histogram",  # latest green r9
-    "string_agg_rich_names",  # latest green r9
-    "grouping_id_rollup",  # latest green r9
-    "sessionize_events",  # latest green r9
-    "event_funnel_colocated",  # latest green r9
-    "priority_shipping_mix",  # latest green r9
-    "smb_join_lineitem_orders",  # latest green r9
-    "term_lookup_bucketed",  # latest green r10
-    "tf_idf",  # latest green r10
-    "doc_terms_udtf_api",  # latest green r10
-    "tfidf_cosine_pairs",  # latest green r10
-    "top_k_terms",  # latest green r10
-    "and_query_postings",  # latest green r10
-    "not_query_postings",  # latest green r10
-    "assign_dense_ids",  # latest green r10
-    "from_json_validation",  # latest green r10
-    "inverted_index_struct",  # latest green r10
-)
-
-# Round-7 window, kept for the rotation audit trail: the 37
-# never-driver-checked queries (all went green r7 except the two
-# array-output ones now leading the r8 window) + the nine round-7
-# additions + four round-7 operator-change re-proofs. Every green
-# name holds its r7 row on current fixtures.
-_R7_WINDOW = (
-    "contrastive_negatives_docs", "hard_negatives_topk",
-    "vocab_token_ids", "train_val_test_split", "weighted_sample_docs",
-    "bpe_merge_step", "stream_chunk_ingest", "media_resize_pixels",
-    "term_association_lift", "shard_manifest_docs",
-    "zorder_layout_orders", "group_sample_docs",
-    "scd2_order_status_history", "compaction_plan_files",
-    "rag_chunk_docs", "join_skew_profile_events", "ewma_user_values",
-    "small_qty_part_revenue", "top_revenue_supplier",
-    "grouped_agg_pandas_wavg", "variant_events_agg", "sql_pipe_syntax",
-    "recursive_monthly_cumsum", "ansi_safe_math_lineitem",
-    "attribution_lag_quantiles", "range_partition_boundaries",
-    "bootstrap_ci_price", "volume_shipping_nation_pairs",
-    "nation_market_share", "product_type_profit",
-    "promo_revenue_share", "disjunctive_predicate_revenue",
-    "min_cost_part_suppliers", "important_part_value_share",
-    "supplier_cnt_by_part_attrs", "excess_shipped_part_suppliers",
-    "returned_item_reporting", "auto_routed_join_events",
-    "dsir_importance_weights", "minhash_incremental_dedup",
-    "prefix_query_index", "bpe_encode_docs", "kmv_user_overlap",
-    "index_delete_docs", "semantic_incremental_contract",
-    "dsir_topk_selection", "linear_probe_embeddings",
-    "event_type_hour_chi2", "embedding_gram_matrix",
-    "stream_transition_matrix",
-)
-
-# Round-6 window, kept for the rotation audit trail (every name here
-# has a green r5/r6 driver row; none re-enters until the catalog has
-# full coverage).
-_R6_WINDOW = (
-    "approx_distinct_users",
-    # continuation-session additions — fifteen wholly new operator
-    # FAMILIES (graph traversal, skyline, sufficient-statistic
-    # regression, distribution divergence, distributed sweep-line,
-    # linear-probe OLS, chi-square association, token entropy,
-    # distributed exact AUC), so they outrank keeping the nine
-    # decorrelated TPC-H shapes in-window (all nine rotate out —
-    # the family shares one decorrelation pattern, is bench-covered
-    # by volume_shipping/excess_shipped in BENCH_r06, and every
-    # member holds this session's exact local DuckDB sweep at
-    # sf0.01 AND sf0.1)
-    "graph_bfs_levels",
-    "skyline_orders",
-    "nation_revenue_trend",
-    "source_token_hellinger",
-    "peak_concurrent_sessions",
-    "linear_probe_embeddings",
-    "event_type_hour_chi2",
-    "corpus_token_entropy",
-    "embedding_dim_auc",
-    "event_transition_matrix",
-    "embedding_quantile_normalize",
-    "customer_revenue_gini",
-    "stream_transition_matrix",
-    "label_embedding_anova",
-    "source_mixture_report",
-    # final-session round-6 additions (no driver row exists yet):
-    # the Q2/Q7/Q8/Q9/Q11/Q14/Q16/Q19/Q20 decorrelated family, the
-    # outer stream-stream join, watermark-bounded dedup, and the
-    # training-order shuffle
-    "stream_attribution_join_outer",
-    "stream_dedup_within_watermark",
-    "corpus_shuffle_order",
-    "cms_user_counts",
-    "embedding_gram_matrix",
-    "event_funnel_conversion",
-    "user_retention_cohorts",
-    "embedding_pca_contract",
-    "crawl_source_docs",
-    "crawl_sink_roundtrip",
-    "temperature_mixture_sample",
-    # late-round-6 additions (no driver row exists yet for these)
-    "late_order_priority_counts",
-    "waiting_orders_suppliers",
-    "gap_fill_daily_user_values",
-    "dedup_keep_best",
-    # round-6 additions
-    "term_lookup_bucketed",
-    "fuzzy_unblocked_pairs",
-    "gap_encoded_index",
-    "semantic_dedup_contract",
-    "common_passages",
-    "boilerplate_profile",
-    "user_cooccurrence_edges",
-    "event_graph_triangles",
-    "snapshot_merge_orders",
-    "lm_quality_scores",
-    "ann_ivf_pruned_scan",
-    "stream_frequent_terms",
-    "curation_policy_filter",
-    "media_phash_near_dup",
-    "pagerank_user_graph",
-    # continuation-session-2 additions: the salted skew JOIN and the
-    # keyless grid-bucketed band join (never driver-proven;
-    # small_qty_part_revenue and top_revenue_supplier rotated out —
-    # their decorrelation pattern is represented in-window by
-    # late_order_priority_counts / waiting_orders_suppliers and both
-    # hold the exact local sweep)
-    "salted_skew_join_events",
-    "keyless_band_pairs_events",
-    # (grouped_agg_pandas_wavg and train_val_test_split — an
-    # API-surface demo and a deterministic md5 split, both with
-    # strong pytest cover and the exact local sweep — rotated out
-    # for the hashed-classifier inference and the Heaps'-law
-    # vocabulary growth curve, both new capabilities)
-    "quality_classifier_margins",
-    "vocab_growth_curve",
-    # (scd2_order_status_history rotated out for
-    # source_mixture_report: snapshot_merge_orders stays as the
-    # lakehouse-write representative; scd2 holds strong pytest cover
-    # and this session's local sweep.)
-    # (rag_chunk_docs rotated out for label_embedding_anova: the
-    # chunker is property-tested (coverage/uniqueness invariants) and
-    # holds this session's local sweep at both scales.)
-    # (stream_chunk_ingest rotated out for stream_transition_matrix:
-    # the ingest walker is 3-pass pytest-proven and the streaming
-    # family keeps five window slots incl. the new stateful op.)
-    # (compaction_plan_files rotated out for customer_revenue_gini:
-    # it is a file-layout diagnostic with strong pytest cover and
-    # this session's local sweep.)
-    # (hard_negatives_topk and contrastive_negatives_docs rotated
-    # out for event_transition_matrix / embedding_quantile_normalize:
-    # the contrastive pair holds this session's exact local sweep at
-    # both scales and strong pytest cover.)
-    # (group_sample_docs, shard_manifest_docs, media_resize_pixels,
-    # vocab_token_ids, join_skew_profile_events, zorder_layout_orders,
-    # ewma_user_values (diagnostic/layout/feature ops, strong pytest
-    # cover)
-    # and the stale-evidence sessionize_events slot
-    # rotated out for cms_user_counts / embedding_gram_matrix /
-    # event_funnel_conversion / user_retention_cohorts /
-    # embedding_pca_contract: the rotated-out five are simple
-    # deterministic ops with strong pytest + local-sweep coverage,
-    # while the five rotated in are new capability families; the
-    # window stays at exactly 50.)
-    # (tfidf_cosine_pairs, frequent_bigrams, bm25_topk rotated out:
-    # their round-6 operator changes are performance-only (persist /
-    # decimal width), value-identical, and all three hold green r5
-    # driver rows; date_funcs_orders, date_arithmetic_orders,
-    # calendar_axis_order_counts, time_range_window_orders,
-    # range_join_close_events, json_events_agg, map_funcs_events,
-    # salted_agg_event_values, asof_join_event_order rotated out for
-    # the twelve final-session additions — never-proven queries
-    # outrank re-proof of queries that pass this session's local
-    # exact sweep on current fixtures; distinct_users_per_type,
-    # window_order_gaps,
-    # window_running_customer_spend, window_topn_orders_per_segment,
-    # conditional_pivot_monthly, agg_pricing_summary,
-    # anti_join_orderless_customers, broadcast_join_part_revenue
-    # rotated out for the eight late-round-6 additions at the top —
-    # new queries with NO driver row ever outrank unchanged queries
-    # that hold r1-r3 rows; plus cube_lineitem_stats,
-    # filter_pushdown_scan, global_topk_orders, grouping_sets_revenue,
-    # groupwise_zscore, join_customer_orders, left_join_order_counts,
-    # math_funcs_lineitem, median_stats_lineitem,
-    # multiway_join_region_revenue, null_handling_funcs,
-    # rollup_order_stats, semi_join_open_order_customers for the
-    # thirteen earlier-round-6 additions; every rotated-out query
-    # retains an old driver row plus this session's exact local
-    # DuckDB sweep.)
+    "term_first_positions",  # latest green r10
+    "html_strip_clean",  # latest green r10
+    "html_corpus_index",  # latest green r10
+    "incremental_index_merge",  # latest green r10
+    "gap_encoded_index",  # latest green r10
+    "positional_index",  # latest green r10
+    "phrase_query",  # latest green r10
+    "bm25_topk",  # latest green r10
+    "crawl_source_docs",  # latest green r10
+    "crawl_sink_roundtrip",  # latest green r10
+    "exact_dedup_docs",  # latest green r10
+    "fuzzy_key_pairs",  # latest green r10
+    "fuzzy_unblocked_pairs",  # latest green r10
+    "ngram_jaccard_pairs",  # latest green r10
+    "minhash_near_dup",  # latest green r10
+    "simhash_signatures",  # latest green r10
+    "simhash_candidate_pairs",  # latest green r10
+    "simhash_hamming_pairs",  # latest green r10
+    "embedding_near_dup",  # latest green r10
+    "ann_cosine_topk",  # latest green r10
+    "ann_lsh_topk",  # latest green r10
+    "label_centroid_cosines",  # latest green r10
+    "embedding_norm_profile",  # latest green r10
+    "ann_ivf_topk",  # latest green r10
+    "ann_ivf_recall_contract",  # latest green r10
+    "ann_ivf_pruned_scan",  # latest green r10
+    "semantic_dedup_contract",  # latest green r10
+    "language_id",  # latest green r10
+    "token_stats",  # latest green r10
+    "curation_policy_filter",  # latest green r10
+    "stream_tumbling_counts",  # latest green r10
+    "stream_sliding_avg",  # latest green r10
+    "stream_session_windows",  # latest green r10
+    "stream_attribution_join",  # latest green r10
+    "stream_enriched_segment_counts",  # latest green r10
+    "stream_dedup_events",  # latest green r10
+    "stream_stateful_user_peaks",  # latest green r10
+    "media_features",  # latest green r10
+    "frequent_bigrams",  # latest green r10
+    "dq_profile_lineitem",  # latest green r10
+    "prefix_query_index",  # latest green r11
+    "minhash_incremental_dedup",  # latest green r11
+    "semantic_incremental_contract",  # latest green r11
+    "contrastive_negatives_docs",  # latest green r11
+    "hard_negatives_topk",  # latest green r11
+    "dedup_keep_best",  # latest green r11
+    "train_val_test_split",  # latest green r11
+    "corpus_shuffle_order",  # latest green r11
+    "embedding_gram_matrix",  # latest green r11
+    "embedding_pca_contract",  # latest green r11
 )
 
 

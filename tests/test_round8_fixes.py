@@ -1,11 +1,9 @@
 """Round-8 regression tests for the VERDICT r7 / ADVICE r7 fixes:
 
-1. ``delete_from_index`` large-batch branch: above
-   ``DELETE_INLINE_THRESHOLD`` (or when given a DataFrame) the plan
-   must be a broadcast anti-join on exploded postings — NOT an
-   O(batch)-sized inlined array literal — and both branches must
-   produce identical results (both equal to ``build_index`` of the
-   surviving corpus).
+1. ``delete_from_index`` has one plan for every batch: a broadcast
+   anti join on exploded postings — NOT an O(batch)-sized inlined
+   array literal — whose result equals ``build_index`` of the
+   surviving corpus.
 2. ``q_index_delete_docs`` demo derivation is bounded: the collected
    deletion list is capped at 64 ids regardless of corpus size.
 3. ``semantic_incremental_dedup`` broadcast hint is gated: a batch
@@ -22,7 +20,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from mapreduce_inverted_index_spark.operators.inverted_index import (
-    DELETE_INLINE_THRESHOLD,
     build_index,
     delete_from_index,
 )
@@ -33,17 +30,16 @@ def _docs(spark, sf_smoke):
     return load_table(spark, sf_smoke, "documents")
 
 
-# -------------------------------------- 1. delete_from_index branches
+# -------------------------------------- 1. delete_from_index
 
-def test_delete_branches_agree_and_match_rebuild(spark, sf_smoke):
+def test_delete_matches_rebuild(spark, sf_smoke):
     docs = _docs(spark, sf_smoke)
     index = build_index(docs)
     dead = [
         r["doc_id"]
         for r in docs.where(F.col("doc_id") % 5 == 0).select("doc_id").collect()
     ]
-    inline = delete_from_index(index, dead)
-    joined = delete_from_index(index, dead, inline_threshold=0)
+    out = delete_from_index(index, dead)
     rebuilt = build_index(docs.where(~F.col("doc_id").isin(dead)))
 
     def rows(df):
@@ -52,8 +48,7 @@ def test_delete_branches_agree_and_match_rebuild(spark, sf_smoke):
             for r in df.collect()
         )
 
-    assert rows(inline) == rows(rebuilt)
-    assert rows(joined) == rows(rebuilt)
+    assert rows(out) == rows(rebuilt)
 
 
 def test_delete_accepts_dataframe_batch(spark, sf_smoke):
@@ -67,30 +62,20 @@ def test_delete_accepts_dataframe_batch(spark, sf_smoke):
     )
 
 
-def test_delete_large_batch_plan_is_antijoin_not_literal(spark, sf_smoke):
+@pytest.mark.parametrize(
+    "batch", [[1, 2, 3], list(range(10_001))], ids=["3_ids", "10001_ids"]
+)
+def test_delete_plan_is_broadcast_antijoin(spark, sf_smoke, batch):
     index = build_index(_docs(spark, sf_smoke))
-    big_batch = list(range(DELETE_INLINE_THRESHOLD + 1))
-    plan = delete_from_index(index, big_batch)._jdf.queryExecution().executedPlan().toString()
+    plan = delete_from_index(index, batch)._jdf.queryExecution().executedPlan().toString()
     assert "LeftAnti" in plan, plan[:2000]
     # the deletion side must stay BROADCAST: a SortMergeJoin here
     # means the whole exploded index shuffles for a tiny id batch
     assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
-    # the inline branch bakes every id into one array literal; the
-    # join branch must NOT (spot-check a mid-range id that would
-    # appear in the literal but not in any smoke-fixture posting)
-    assert str(DELETE_INLINE_THRESHOLD - 7) not in plan
-
-
-def test_delete_small_batch_plan_is_maponly(spark, sf_smoke):
-    index = build_index(_docs(spark, sf_smoke))
-    plan = (
-        delete_from_index(index, [1, 2, 3])
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "array_except" in plan
-    assert "Join" not in plan
+    # no id is baked into the plan as a literal (spot-check a
+    # mid-range id that appears in no smoke-fixture posting)
+    if len(batch) > 1_000:
+        assert str(len(batch) - 7) not in plan
 
 
 # ------------------------------- 2. bounded demo derivation

@@ -105,7 +105,7 @@ def test_operators_handle_empty_input(spark, sf_smoke):
     assert doc_freq(empty).count() == 0
     assert index_stats(empty).collect()[0]["num_postings"] == 0
     assert D.exact_dedup(empty).count() == 0
-    assert D.minhash_near_dup(empty, persist_shingles=False).count() == 0
+    assert D.minhash_near_dup(empty).count() == 0
     assert D.simhash_signatures(empty).count() == 0
     assert D.ngram_jaccard_pairs(empty).count() == 0
     assert T.language_id(empty).count() == 0

@@ -5,6 +5,8 @@ internals by name, and the benchmark's tracer (``perfbench/spans.py``)
 wraps ``operators.store`` entry points by attribute name. Nothing
 else runs these on every change, so a helper deleted or renamed in
 the package would break them silently; these tests fail instead.
+Inside the package, only ``operators/store.py`` may drive the
+partition-swap commit steps.
 """
 
 from __future__ import annotations
@@ -174,3 +176,42 @@ def test_store_readers_look_up_open_snapshot_at_call_time(
     assert calls == ["bucket", "bucket"]
     ivf_pruned_scan_topk(spark, cells, cents, queries, k=2, n_probe=1)
     assert calls == ["bucket", "bucket", "cell"]
+
+
+STORE_COMMIT_INTERNALS = (
+    "swap_partition_dirs",
+    "recover_partition_swaps",
+    "purge_swap_orphans",
+)
+
+
+def test_only_the_store_module_drives_partition_swaps():
+    """Stores commit through ``store.seed_store`` and
+    ``store.rewrite_partitions``; an operator that calls the swap,
+    crash-recovery or orphan-purge steps itself has forked the commit
+    protocol. Docstrings may name them; code may not."""
+    offenders = []
+    store = os.path.join(ROOT, PKG, "operators", "store.py")
+    for path in sorted(
+        glob.glob(os.path.join(ROOT, PKG, "**", "*.py"), recursive=True)
+    ):
+        if path == store:
+            continue
+        rel = os.path.relpath(path, ROOT)
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name):
+                names = [node.id]
+            elif isinstance(node, ast.Attribute):
+                names = [node.attr]
+            elif isinstance(node, (ast.Import, ast.ImportFrom)):
+                names = [a.name for a in node.names]
+            else:
+                continue
+            offenders += [
+                f"{rel}:{node.lineno}: {n}"
+                for n in names
+                if n in STORE_COMMIT_INTERNALS
+            ]
+    assert not offenders, "\n".join(offenders)

@@ -38,11 +38,7 @@ def main() -> None:
         ivf_centroids,
         write_ivf_cells,
     )
-    from mapreduce_inverted_index_spark.operators.store import (
-        mutation_lease,
-        purge_swap_orphans,
-        refresh_manifest,
-    )
+    from mapreduce_inverted_index_spark.operators.store import seed_store
     from mapreduce_inverted_index_spark.session import get_spark
 
     spark = get_spark(
@@ -62,11 +58,7 @@ def main() -> None:
 
     def seed_old(path: str) -> None:
         # pre-r14 write_ivf_cells body: no repartition, no sort
-        a = assigned()
-        with mutation_lease(path):
-            purge_swap_orphans(path)
-            a.write.mode("overwrite").partitionBy("cell").parquet(path)
-            refresh_manifest(path, "cell", {"schema": a.schema.json()})
+        seed_store(assigned(), path, "cell")
 
     def seed_new(path: str) -> None:
         write_ivf_cells(assigned(), path)

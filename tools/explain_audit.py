@@ -855,12 +855,11 @@ AUDITS = [
         ["SortMergeJoin"],
     ),
     (
-        # bounded-demo index deletion takes the INLINE branch: one
-        # array_except map over the built index — no join anywhere
-        # (the >threshold branch is plan-audited in pytest instead)
+        # index deletion has one plan at every batch size: exploded
+        # postings broadcast-anti-joined against the dead ids
         "index_delete_docs",
-        ["array_except"],
-        ["Join", "CartesianProduct"],
+        ["LeftAnti", "BroadcastHashJoin"],
+        ["SortMergeJoin", "CartesianProduct"],
     ),
     (
         # bloom runtime filter: the bit-test conjunction must sit in

@@ -372,11 +372,11 @@ def main() -> None:
         bloom_prefiltered_join(ev20, auto_cust, "user_id", "c_custkey"),
     )
     idx20 = build_index(docs20)
-    dead_ids = list(range(0, 100_000, 20))  # 5k ids > inline threshold
+    dead_ids = list(range(0, 100_000, 20))  # 5k ids
     timed(
-        "delete_from_index, 5k-id batch via broadcast anti-join branch "
+        "delete_from_index, 5k-id batch via broadcast anti-join "
         "over the 100k-doc index",
-        delete_from_index(idx20, dead_ids, inline_threshold=1_000),
+        delete_from_index(idx20, dead_ids),
     )
 
     #  * bucket-level store takedown: the same 5k-id batch against
