@@ -1,20 +1,25 @@
 """Shared commit scaffolding for partition-dir-swapped stores.
 
-Both stored states — the IVF embedding cell store (partition col
-``cell``, ``operators/similarity.py``) and the term-hash-bucketed
-text index store (partition col ``bucket``,
-``operators/inverted_index.py``) — maintain themselves by rewriting
-ONLY the partitions a batch touches. This module owns what they
-share: the store format, the crash-safe directory swap that commits
-such a rewrite on a bare filesystem, and the reader's snapshot open.
+Every stored state a maintenance loop keeps current is a partitioned
+store of this one format: the term-hash-bucketed text index
+(partition col ``bucket``, ``operators/inverted_index.py``), the IVF
+embedding cell store (``cell``, ``operators/similarity.py``), the
+semantic dup log (``batch``), and two one-partition states whose
+constant ``part`` column readers drop — the Misra-Gries summary
+(``streaming/sketches.py``) and the IVF codebook
+(``streaming/ingest.py``). This module owns what they share: the
+store format, the crash-safe commits on a bare filesystem, and the
+reader's snapshot open.
 
-Writers go through two entry points, which own the whole commit
+Writers go through three entry points, which own the whole commit
 protocol so no operator repeats it: :func:`seed_store` (lease, purge
-crash orphans, overwrite, commit the manifest) and
+crash orphans, overwrite, commit the manifest),
 :func:`rewrite_partitions` (lease, crash recovery, snapshot open, the
-caller's rewrite plan, partition swap). An operator supplies only the
-DataFrame to seed or the plan that says which partitions a batch
-touches and what they hold afterwards.
+caller's rewrite plan, partition swap) and :func:`append_partitions`
+(lease, crash recovery, batch-keyed file append, commit the
+manifest). An operator supplies only the DataFrame to seed or append,
+or the plan that says which partitions a batch touches and what they
+hold afterwards.
 
 Format: a partitioned store is its ``<part_col>=v/`` directories plus
 ``_mii_manifest.json`` — ``version``, ``part_col``, ``parts`` (the
@@ -26,7 +31,7 @@ directory without a manifest is not a store — readers and mutators
 refuse it, naming the seed writer.
 
 At 100 TB the same bodies run against a transactional table format
-(Iceberg/Delta partition-level REPLACE); the swap is the
+(Iceberg/Delta partition-level REPLACE and APPEND); the swap is the
 filesystem-only stand-in for that commit, and :func:`mutation_lease`
 is the stand-in for that format's writer-concurrency control — every
 mutator and maintenance fold holds it, so the entry-time crash
@@ -47,6 +52,7 @@ from pyspark.sql import DataFrame
 __all__ = [
     "seed_store",
     "rewrite_partitions",
+    "append_partitions",
     "swap_partition_dirs",
     "recover_partition_swaps",
     "purge_swap_orphans",
@@ -96,13 +102,14 @@ def _lease_holder(lease: str) -> "int | None":
 @contextlib.contextmanager
 def mutation_lease(path: str):
     """Single-writer guard for store mutations. Every mutator's first
-    act is entry-time crash recovery (``recover_partition_swaps`` /
-    ``sketches.recover_flat_swaps``), which treats any sibling tmp dir
-    as an orphan of a DEAD writer and rolls it back. That is only
-    sound if writers never overlap: a second live writer's recovery
-    would roll back the first writer's IN-FLIGHT swap while its
-    checkpoint goes on to commit — a lost batch with no error, the
-    exact failure class the swaps exist to prevent. This lease makes
+    act is entry-time crash recovery (:func:`recover_partition_swaps`,
+    run by every entry point that changes a committed store), which
+    treats any sibling tmp dir as an orphan of a DEAD writer and
+    rolls it back. That is only sound if writers never overlap: a
+    second live writer's recovery would roll back the first writer's
+    IN-FLIGHT swap while its checkpoint goes on to commit — a lost
+    batch with no error, the exact failure class the swaps exist to
+    prevent. This lease makes
     the single-writer discipline executable: concurrent mutation
     fails loud instead of corrupting.
 
@@ -288,6 +295,53 @@ def rewrite_partitions(spark, path: str, part_col: str, plan) -> "list":
         if affected:
             swap_partition_dirs(path, rewritten, part_col, affected)
         return affected
+
+
+def append_partitions(
+    df: DataFrame, path: str, part_col: str, batch_id: int
+) -> None:
+    """Idempotent batch-keyed APPEND: under the lease, roll back any
+    dead writer's half-done swap (:func:`recover_partition_swaps`),
+    write ``df`` ``partitionBy(part_col)`` into a per-batch tmp dir,
+    move each partition's output file onto the DETERMINISTIC
+    ``<part_col>=v/batch-<batch_id>.parquet``, and commit the manifest
+    with ``df``'s schema — creating it when this append births the
+    store, so every store carries one from its first batch.
+
+    The recovery comes first because appending into a half-swapped
+    store loses rows: the partition a crashed swap renamed aside
+    would be recreated holding only this batch, and the next
+    mutator's rollback would discard it to restore the retired copy.
+    A replayed batch recomputes the same rows and overwrites its own
+    files instead of appending duplicates — the filesystem analog of
+    a transactional sink keyed by batch id. The tmp name is
+    batch-deterministic too, so a crashed append's tmp is simply
+    overwritten by the replay.
+    """
+    with mutation_lease(path):
+        recover_partition_swaps(path, part_col)
+        tmp = path.rstrip("/") + f".tmp-batch-{batch_id}"
+        # repartition on the partition column: each value's rows land
+        # in one task, so each partition dir gets exactly one file
+        (
+            df.repartition(part_col)
+            .write.mode("overwrite")
+            .partitionBy(part_col)
+            .parquet(tmp)
+        )
+        os.makedirs(path, exist_ok=True)
+        for d in os.listdir(tmp):
+            if not d.startswith(f"{part_col}="):
+                continue
+            (fn,) = [
+                f for f in os.listdir(f"{tmp}/{d}") if f.endswith(".parquet")
+            ]
+            os.makedirs(f"{path}/{d}", exist_ok=True)
+            os.replace(
+                f"{tmp}/{d}/{fn}", f"{path}/{d}/batch-{batch_id}.parquet"
+            )
+        refresh_manifest(path, part_col, {"schema": df.schema.json()})
+        shutil.rmtree(tmp)
 
 
 def swap_partition_dirs(

@@ -1818,21 +1818,22 @@ def q_ivf_cells_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_assign,
     )
     from mapreduce_inverted_index_spark.operators.store import (
-        refresh_manifest,
+        append_partitions,
     )
 
     work = tempfile.mkdtemp(prefix="mii_ivf_compact_")
     path = f"{work}/cells"
     emb = _emb(spark, sf_dir)
     cents = _ivf_cents(spark, sf_dir)
-    # four appends, each committed to the manifest the way the
-    # streaming publish commits a batch
+    # four appends, one file per cell each, as the streaming loop
+    # appends its micro-batches
     for k in range(4):
-        batch = ivf_assign(emb.where(F.col("vec_id") % 4 == k), cents)
-        batch.repartition(1).write.mode("append").partitionBy("cell").parquet(
-            path
+        append_partitions(
+            ivf_assign(emb.where(F.col("vec_id") % 4 == k), cents),
+            path,
+            "cell",
+            k,
         )
-        refresh_manifest(path, "cell", {"schema": batch.schema.json()})
     before = spark.read.parquet(path).select("vec_id", "cell")
     before_rows = before.count()  # materialized before the rewrite
     compacted = set(compact_ivf_cells(spark, path, max_files_per_cell=1))

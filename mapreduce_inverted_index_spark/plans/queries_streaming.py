@@ -309,6 +309,7 @@ def q_semantic_stream_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
     from mapreduce_inverted_index_spark.functions.vectors import (
         cosine_similarity,
     )
+    from mapreduce_inverted_index_spark.operators import store
     from mapreduce_inverted_index_spark.operators.similarity import ivf_assign
     from mapreduce_inverted_index_spark.sources.tables import load_table
     from mapreduce_inverted_index_spark.streaming.ingest import (
@@ -329,19 +330,11 @@ def q_semantic_stream_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
     ).parquet(land)
     maintain_semantic_cells_available_now(spark, land, state, ckpt, tau=tau, r=r)
 
-    import os
-
-    cents = spark.read.parquet(f"{state}/cents")
-    cells = spark.read.parquet(f"{state}/cells").select("vec_id", "cell")
-    # the dup log only materializes once a batch finds matches; if no
-    # cross-batch pair clears tau the contract must report
-    # dups_nonempty=false (a red row), not crash on a missing path
-    if os.path.isdir(f"{state}/dups"):
-        dups = spark.read.parquet(f"{state}/dups")
-    else:
-        dups = spark.createDataFrame(
-            [], "new_id bigint, dup_of bigint, cos_sim double"
-        )
+    cents = store.open_snapshot(spark, f"{state}/cents", "part")[0]
+    cells = store.open_snapshot(spark, f"{state}/cells", "cell")[0].select(
+        "vec_id", "cell"
+    )
+    dups = store.open_snapshot(spark, f"{state}/dups", "batch")[0]
     rebuilt = ivf_assign(emb, cents).select("vec_id", "cell")
     sym_diff = cells.exceptAll(rebuilt).unionAll(rebuilt.exceptAll(cells))
     bad_dups = (

@@ -15,16 +15,18 @@ code), run the ingest on a schedule or continuously, and every
 downstream operator reads the growing canonical table.
 
 The maintenance loops fold into partitioned, manifest-committed
-stores (``operators.store``): the index loops into the bucketed
-index store, the semantic and cell-takedown loops into the IVF cell
-store. A directory without a store manifest is refused, failing the
-micro-batch so it replays after a reseed.
+stores and commit only through ``operators.store``'s entry points:
+the index loops into the bucketed index store, the semantic loop
+into its codebook, IVF cell store and dup log, the cell-takedown
+loop into the cell store. This module holds fold logic only — it
+renames and removes no files itself. A directory without a store
+manifest is refused, failing the micro-batch so it replays after a
+reseed.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -90,71 +92,6 @@ def streamed_doc_ids(corpus: DataFrame) -> DataFrame:
     return corpus.select(
         F.xxhash64("source").alias("doc_id"), F.col("text")
     )
-
-
-def _publish_batch_files(
-    df: DataFrame, target_dir: str, batch_id: int, part_col: "str | None" = None
-) -> None:
-    """Idempotent APPEND for foreachBatch sinks on a bare filesystem:
-    write the batch to a per-batch tmp dir, then ``os.replace`` each
-    output file onto a DETERMINISTIC batch-named target
-    (``<dir>/batch-<id>.parquet``, or per partition
-    ``<dir>/<part_col>=v/batch-<id>.parquet``). A replayed batch
-    recomputes the same rows (the fold reads only frozen state) and
-    overwrites its own files instead of appending duplicates — the
-    filesystem analog of a transactional sink keyed by batch_id. The
-    tmp name is batch-deterministic too, so a crashed publish is
-    simply overwritten by the replay and removed on its completion.
-    """
-    tmp = target_dir.rstrip("/") + f".tmp-batch-{batch_id}"
-    if part_col is None:
-        df.repartition(1).write.mode("overwrite").parquet(tmp)
-        os.makedirs(target_dir, exist_ok=True)
-        parts = [f for f in os.listdir(tmp) if f.endswith(".parquet")]
-        if parts:
-            os.replace(
-                f"{tmp}/{parts[0]}", f"{target_dir}/batch-{batch_id}.parquet"
-            )
-    else:
-        (
-            df.repartition(part_col)
-            .write.mode("overwrite")
-            .partitionBy(part_col)
-            .parquet(tmp)
-        )
-        for d in os.listdir(tmp):
-            if not d.startswith(f"{part_col}="):
-                continue
-            parts = [
-                f for f in os.listdir(f"{tmp}/{d}") if f.endswith(".parquet")
-            ]
-            if not parts:
-                continue
-            os.makedirs(f"{target_dir}/{d}", exist_ok=True)
-            os.replace(
-                f"{tmp}/{d}/{parts[0]}",
-                f"{target_dir}/{d}/batch-{batch_id}.parquet",
-            )
-    shutil.rmtree(tmp)
-    # Commit the append to manifest-resolved probe readers: refresh —
-    # or CREATE, for a store born from this loop's first batch — the
-    # reader manifest, inside the fold's mutation lease. Two reader
-    # races close here: (a) a manifest left by a prior delete/compact
-    # goes silently STALE on append (every file it names still exists,
-    # nothing fails loud — ADVICE r11 #1); (b) a stream-born store
-    # with no manifest is read by directory listing, and a multi-
-    # partition append is many renames — a concurrent listing can see
-    # SOME partitions' new batch file but not others, a state no
-    # commit ever produced (the r13 append storm's target). Creating
-    # the manifest on first publish gives every partitioned store
-    # one-swap visibility from birth: readers see the whole batch or
-    # none of it. Partition-less sinks (dups) are consumed by the
-    # fold itself inside the lease, where listing is race-free; they
-    # stay manifest-less.
-    if part_col is not None:
-        store.refresh_manifest(
-            target_dir, part_col, {"schema": df.schema.json()}
-        )
 
 
 def maintain_chunks_available_now(
@@ -276,20 +213,24 @@ def maintain_semantic_cells_available_now(
     files that arrived since the last pass (checkpoint cursor =
     exactly-once per file) and, per micro-batch,
 
-    1. dedups the batch against the STORED cells via
+    1. assigns the batch to cells against the STORED codebook and
+       APPENDS it to ``state_dir/cells`` (partition column ``cell``)
+       — so the state the NEXT batch probes stays partition-pruned;
+    2. dedups the batch against the PRIOR cells via
        ``similarity.semantic_incremental_dedup`` (batch × probed
        cells, never batch × corpus) and APPENDS the matches to
-       ``state_dir/dups`` — the takedown/skip list a training
-       pipeline consumes;
-    2. assigns the batch to cells against the STORED codebook and
-       APPENDS it to ``state_dir/cells`` ``partitionBy(cell)`` — so
-       the state the NEXT batch probes stays partition-pruned.
+       ``state_dir/dups`` (partition column ``batch``, the
+       micro-batch that found the pair) — the takedown/skip list a
+       training pipeline consumes.
 
-    The codebook (``state_dir/cents``) is trained once, on the first
-    batch, then frozen on disk — every later batch assigns against
-    the same floats, which is what makes state == batch
-    ``ivf_assign`` over everything ingested (the multi-pass pytest
-    invariant). Batches are deduped against PRIOR state only
+    The codebook (``state_dir/cents``, a one-partition store) is
+    trained on the first batch, then frozen on disk — every later
+    batch assigns against the same floats, which is what makes state
+    == batch ``ivf_assign`` over everything ingested (the multi-pass
+    pytest invariant). It is (re)seeded whenever the cell store does
+    not exist yet: no vector has been assigned against any codebook
+    until then, so a seed that died before its commit is simply
+    redone. Batches are deduped against PRIOR state only
     (within-batch duplicates are the batch operator
     ``semantic_dedup``'s job, same contract as
     ``dedup.minhash_incremental_dedup``).
@@ -303,18 +244,22 @@ def maintain_semantic_cells_available_now(
     stays bounded without a manual compaction schedule. Pass ``None``
     to disable (e.g. when an external table service owns compaction).
 
-    Durability: both sinks publish through
-    :func:`_publish_batch_files` — deterministic ``batch-<id>``-named
-    files, so a micro-batch replayed after a crash (sink writes
-    landed, checkpoint commit did not) OVERWRITES its own files
-    instead of appending duplicates; the dup recompute additionally
-    excludes the crashed attempt's own cells file from "prior state"
-    so the replay derives identical matches (pytest-pinned by a
-    deleted-commit-marker replay test). A production deployment still
-    prefers a transactional table format (Iceberg/Delta) keyed by
-    ``(batch_id, vec_id)`` — this is its bare-filesystem analog.
-    Per-pass cost: O(batch × r/n_cells of state) for the dedup +
-    O(batch) for the publish — state is never rewritten.
+    Durability: every state commits through ``operators.store``.
+    Both appends go through ``store.append_partitions`` —
+    deterministic ``batch-<id>``-named files, so a micro-batch
+    replayed after a crash (sink writes landed, checkpoint commit did
+    not) OVERWRITES its own files instead of appending duplicates.
+    The cell append runs first because it runs the entry-time crash
+    recovery: the prior-state read that follows opens a healed,
+    committed snapshot (``store.open_snapshot``), never a store a
+    crashed compaction left half-swapped. That read excludes the
+    batch's own cells file, so a replay derives identical matches
+    (pytest-pinned by a deleted-commit-marker replay test). A
+    production deployment still prefers a transactional table format
+    (Iceberg/Delta) keyed by ``(batch_id, vec_id)`` — this is its
+    bare-filesystem analog. Per-pass cost: O(batch × r/n_cells of
+    state) for the dedup + O(batch) for the appends — state is never
+    rewritten.
     """
     from mapreduce_inverted_index_spark.operators.similarity import (
         ivf_assign,
@@ -339,51 +284,46 @@ def maintain_semantic_cells_available_now(
         # lease on the CELL store — the state shared with the takedown
         # twin (maintain_cell_takedowns_available_now / compact):
         # overlapping with either would let its entry recovery roll
-        # back this fold's appends mid-batch. cents/dups are written
-        # only by this loop and ride inside the same lease.
+        # back this fold's appends mid-batch. It also serializes the
+        # codebook seed decision; the store entry points re-enter it.
         with mutation_lease(cells_dir):
-            _semantic_fold_body(sess, batch_df, batch_id)
-
-    def _semantic_fold_body(sess, batch_df, batch_id) -> None:
-        if os.path.isdir(cents_dir):
-            cents = sess.read.parquet(cents_dir)
-        else:
-            ivf_centroids(batch_df, n_cells, 3, id_col, vec_col).write.mode(
-                "overwrite"
-            ).parquet(cents_dir)
-            # re-read so every later batch assigns against the same
-            # on-disk floats, not a recomputed lineage
-            cents = sess.read.parquet(cents_dir)
-        if os.path.isdir(cells_dir):
-            # dedup against PRIOR state, materialized BEFORE the
-            # batch itself is appended below. Published as a
-            # deterministic batch-named file so a crash-replay
-            # overwrites instead of duplicating (the dedup reads only
-            # PRIOR-batch files — its own batch file, if a crashed
-            # attempt published one, is excluded so the replay
-            # recomputes the same matches)
-            prior = sess.read.parquet(cells_dir).where(
-                ~F.input_file_name().contains(f"batch-{batch_id}.parquet")
+            if not os.path.isdir(cells_dir):
+                store.seed_store(
+                    ivf_centroids(
+                        batch_df, n_cells, 3, id_col, vec_col
+                    ).withColumn("part", F.lit(0)),
+                    cents_dir,
+                    "part",
+                )
+            # every batch assigns against the on-disk floats, not a
+            # recomputed lineage
+            cents = store.open_snapshot(sess, cents_dir, "part")[0].drop(
+                "part"
             )
-            _publish_batch_files(
-                semantic_incremental_dedup(
-                    batch_df,
-                    prior,
-                    cents,
-                    tau=tau,
-                    r=r,
-                    id_col=id_col,
-                    vec_col=vec_col,
-                ),
-                dups_dir,
+            store.append_partitions(
+                ivf_assign(batch_df, cents, id_col, vec_col),
+                cells_dir,
+                "cell",
                 batch_id,
             )
-        _publish_batch_files(
-            ivf_assign(batch_df, cents, id_col, vec_col),
-            cells_dir,
-            batch_id,
-            part_col="cell",
-        )
+            prior = store.open_snapshot(sess, cells_dir, "cell")[0].where(
+                ~F.input_file_name().contains(f"batch-{batch_id}.parquet")
+            )
+            dups = semantic_incremental_dedup(
+                batch_df,
+                prior,
+                cents,
+                tau=tau,
+                r=r,
+                id_col=id_col,
+                vec_col=vec_col,
+            )
+            store.append_partitions(
+                dups.withColumn("batch", F.lit(batch_id)),
+                dups_dir,
+                "batch",
+                batch_id,
+            )
 
     q = (
         stream.writeStream.foreachBatch(_fold)

@@ -11,23 +11,25 @@ true φ-heavy items at every point in the stream, so the verify
 never misses — the same two-phase contract as the batch operator,
 with phase 1 incremental.
 
-State lives as a tiny Parquet table (≤ k rows) swapped per batch —
-the filesystem stand-in for a transactional state table, committed
-through a whole-dir retire-aside swap (:func:`_swap_flat_dir`) with
-entry-time orphan recovery (:func:`recover_flat_swaps`). It is the
-one flat (unpartitioned) stored state; the index and cell stores are
-partitioned and manifest-committed (``operators.store``).
+State lives as a tiny Parquet table (≤ k rows) rewritten per batch —
+the filesystem stand-in for a transactional state table. It is a
+one-partition store of the shared format (``operators.store``;
+constant partition column ``part``, which readers drop): the first
+fold seeds it with ``store.seed_store``, every later fold commits
+with ``store.rewrite_partitions``, whose entry-time crash recovery
+rolls a half-done commit back so the replayed batch folds exactly
+once. Readers open it with ``store.open_snapshot``.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_inverted_index_spark.functions.text import terms
+from mapreduce_inverted_index_spark.operators import store
 
 __all__ = [
     "docs_stream",
@@ -76,96 +78,6 @@ def mg_merge_summaries(summary: DataFrame, batch_counts: DataFrame, k: int) -> D
     )
 
 
-def _swap_flat_dir(df: DataFrame, live_dir: str, tag: str) -> None:
-    """Crash-safe whole-dir commit for the FLAT (unpartitioned) MG
-    state: write to a uuid tmp, rename the live dir ASIDE, rename the
-    tmp in, then drop the retired copy — nothing is unlinked until
-    the new dir is live, so a kill at any point leaves a complete
-    copy on disk (live, ``.retired-*``, or ``.tmp-*``). The
-    partition-level twin is ``operators.store.swap_partition_dirs``.
-
-    Readers need no manifest here, unlike the partitioned stores
-    (``store.refresh_manifest``): the whole state is ONE directory
-    swapped by whole-dir renames, so a reader's listing resolves
-    entirely against a single dir incarnation — it sees the complete
-    old state, the complete new state, or fails loud (dir missing in
-    the two-rename window; old files unlinked under a scan that
-    listed pre-swap). A MIXED view would need per-partition renames,
-    which flat state doesn't have.
-    """
-    import uuid
-
-    u = uuid.uuid4().hex[:8]
-    tmp = live_dir.rstrip("/") + f".tmp-{tag}-{u}"
-    retired = live_dir.rstrip("/") + f".retired-{tag}-{u}"
-    df.write.mode("overwrite").parquet(tmp)
-    if os.path.isdir(live_dir):
-        os.rename(live_dir, retired)
-    os.rename(tmp, live_dir)
-    shutil.rmtree(retired, ignore_errors=True)
-
-
-def recover_flat_swaps(live_dir: str) -> "list[str]":
-    """Executable crash recovery for :func:`_swap_flat_dir` orphans —
-    the flat-store twin of ``store.recover_partition_swaps``. A swap
-    that died mid-commit leaves one of three states, each with a
-    complete copy on disk; this rolls the store back (or finishes
-    cleanup) so a restarted maintenance loop just replays the
-    uncommitted batch:
-
-    - tmp present, live present: crash during the tmp WRITE — the
-      live dir is untouched; drop the partial tmp.
-    - tmp present, live missing: crash between rename-aside and
-      rename-in — restore the retired copy, or when no retired copy
-      exists (the swap was the FIRST-ever write) drop the tmp so the
-      state is simply absent again. Rollback in both cases, never
-      roll-forward: the replayed batch re-derives the new state, and
-      rolling the tmp in would make a non-idempotent fold (e.g. the
-      MG count merge) double-count its replay.
-    - retired present, no tmp: crash after commit, before cleanup —
-      the live dir is the new state; drop the retired copy.
-
-    ``.tmp-swap-*`` siblings are the PARTITIONED store's orphans and
-    belong to ``recover_partition_swaps`` — skipped here. Idempotent;
-    returns the orphan dirs handled. The MG fold calls this before
-    every merge, so crash-restart self-heals."""
-    base = os.path.basename(live_dir.rstrip("/"))
-    parent = os.path.dirname(live_dir.rstrip("/")) or "."
-    recovered: list = []
-    if not os.path.isdir(parent):
-        return recovered
-    tmps: dict = {}
-    retireds: dict = {}
-    for d in os.listdir(parent):
-        if d.startswith(f"{base}.tmp-swap-"):
-            continue
-        if d.startswith(f"{base}.tmp-"):
-            tmps[d[len(base) + 5:]] = d
-        elif d.startswith(f"{base}.retired-"):
-            retireds[d[len(base) + 9:]] = d
-    live_exists = os.path.isdir(live_dir)
-    for key, d in sorted(tmps.items()):
-        tmp = f"{parent}/{d}"
-        if live_exists:
-            shutil.rmtree(tmp)
-        elif key in retireds:
-            os.rename(f"{parent}/{retireds.pop(key)}", live_dir)
-            shutil.rmtree(tmp)
-            live_exists = True
-        else:
-            # first-ever write died pre-commit: rollback = no state
-            shutil.rmtree(tmp)
-        recovered.append(d)
-    for key, d in sorted(retireds.items()):
-        if live_exists:
-            shutil.rmtree(f"{parent}/{d}")
-        else:
-            os.rename(f"{parent}/{d}", live_dir)
-            live_exists = True
-        recovered.append(d)
-    return recovered
-
-
 def maintain_frequent_terms_available_now(
     spark: SparkSession,
     sf_dir: str,
@@ -178,41 +90,42 @@ def maintain_frequent_terms_available_now(
     counts into the persisted MG summary (≤ k rows). Each pass
     processes exactly the files that arrived since the last one;
     the summary after any number of passes is a valid MG summary of
-    everything ingested so far (merge associativity)."""
+    everything ingested so far (merge associativity).
+
+    A missing ``state_dir`` is seeded by the first non-empty batch; a
+    directory without a store manifest (a seed that died before its
+    commit) fails the micro-batch loud, uncommitted — the index
+    loop's rule."""
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.take(1):
             return
-        sess = batch_df.sparkSession
-        # heal any crashed prior commit BEFORE reading the state: the
-        # old rmtree-then-rename commit here could lose the live state
-        # to a mid-commit crash, and the replay would then silently
-        # merge into EMPTY state — the swap + entry recovery makes
-        # that window a clean rollback-and-replay instead
-        from mapreduce_inverted_index_spark.operators.store import (
-            mutation_lease,
+        counts = (
+            batch_df.select(
+                F.explode(terms("text", keep_duplicates=True)).alias("term")
+            )
+            .groupBy("term")
+            .agg(F.count("*").alias("n"))
         )
 
-        # single-writer guard: a concurrent fold's entry recovery
-        # would roll back this fold's in-flight swap
-        with mutation_lease(state_dir):
-            recover_flat_swaps(state_dir)
-            counts = (
-                batch_df.select(
-                    F.explode(
-                        terms("text", keep_duplicates=True)
-                    ).alias("term")
-                )
-                .groupBy("term")
-                .agg(F.count("*").alias("n"))
+        def merged(prior: DataFrame) -> DataFrame:
+            return mg_merge_summaries(prior, counts, k).withColumn(
+                "part", F.lit(0)
             )
+
+        # single-writer guard around the seed-or-merge decision: a
+        # concurrent fold's entry recovery would roll back this fold's
+        # in-flight swap; the store entry points re-enter the lease
+        with store.mutation_lease(state_dir):
             if os.path.isdir(state_dir):
-                merged = mg_merge_summaries(
-                    sess.read.parquet(state_dir), counts, k
+                store.rewrite_partitions(
+                    batch_df.sparkSession,
+                    state_dir,
+                    "part",
+                    lambda summary, _: ([0], merged(summary.drop("part"))),
                 )
             else:
-                merged = mg_merge_summaries(counts.limit(0), counts, k)
-            _swap_flat_dir(merged, state_dir, f"mg-{batch_id}")
+                store.seed_store(merged(counts.limit(0)), state_dir, "part")
 
     q = (
         docs_stream(spark, sf_dir, glob)
@@ -242,7 +155,11 @@ def verified_heavy_terms(
     toks = docs.select(
         F.explode(terms("text", keep_duplicates=True)).alias("term")
     )
-    cand = spark.read.parquet(state_dir).select("term").distinct()
+    cand = (
+        store.open_snapshot(spark, state_dir, "part")[0]
+        .select("term")
+        .distinct()
+    )
     total = toks.agg(F.count("*").alias("_n"))
     phi_exact = F.lit(decimal.Decimal(str(phi)))
     return (

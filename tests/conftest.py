@@ -52,11 +52,18 @@ def spark():
     # tooling like tools/profile_query.py builds its own session).
     # Plans, configs that affect plans, and executed semantics are
     # untouched — the driver's correctness gate tests the same engine.
+    # The heap defaults to 6g, not the package's 16g: one JVM lives for
+    # the whole suite, and on a 16 GB host a 16g heap grows until the
+    # kernel's OOM killer takes the JVM and every later test fails
+    # (measured peak RSS with 6g over the full suite: 7.6 GB).
     s = get_spark(
         app_name="mii-tests",
         extra_conf={
             "spark.ui.enabled": "false",
             "spark.ui.showConsoleProgress": "false",
+            "spark.driver.memory": os.environ.get(
+                "SPARK_GRAFT_DRIVER_MEM", "6g"
+            ),
         },
     )
     yield s

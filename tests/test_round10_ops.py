@@ -279,66 +279,6 @@ def test_takedown_loop_self_heals_after_mid_swap_crash(
     ]
 
 
-def test_recover_flat_swaps_all_crash_states(spark, tmp_path):
-    """recover_flat_swaps handles each of the three crash states a
-    flat-dir swap can die in, and is a no-op when nothing is
-    orphaned."""
-    import shutil
-
-    from mapreduce_inverted_index_spark.streaming.sketches import (
-        recover_flat_swaps,
-    )
-
-    def mkdir_with_marker(p, marker):
-        os.makedirs(p)
-        with open(f"{p}/{marker}", "w") as f:
-            f.write(marker)
-
-    live = str(tmp_path / "index")
-
-    # state 1: crash during tmp write (live intact) → drop tmp
-    mkdir_with_marker(live, "old")
-    mkdir_with_marker(f"{live}.tmp-del-1-aaaa", "new")
-    assert recover_flat_swaps(live) == ["index.tmp-del-1-aaaa"]
-    assert os.path.exists(f"{live}/old")
-    assert not os.path.exists(f"{live}.tmp-del-1-aaaa")
-
-    # state 2 (rollback): aside done, rename-in pending → restore old
-    shutil.rmtree(live)
-    mkdir_with_marker(f"{live}.retired-del-2-bbbb", "old")
-    mkdir_with_marker(f"{live}.tmp-del-2-bbbb", "new")
-    handled = recover_flat_swaps(live)
-    assert sorted(handled) == ["index.tmp-del-2-bbbb"] or sorted(
-        handled
-    ) == ["index.retired-del-2-bbbb", "index.tmp-del-2-bbbb"]
-    assert os.path.exists(f"{live}/old")
-    assert not os.path.exists(f"{live}.tmp-del-2-bbbb")
-    assert not os.path.exists(f"{live}.retired-del-2-bbbb")
-
-    # state 2 (first-ever write, no retired): ROLLBACK — drop the tmp
-    # so the state is absent again and the replayed batch re-derives
-    # it; rolling the tmp forward would double-count non-idempotent
-    # folds (the MG count merge) on replay
-    shutil.rmtree(live)
-    mkdir_with_marker(f"{live}.tmp-add-0-cccc", "new")
-    assert recover_flat_swaps(live) == ["index.tmp-add-0-cccc"]
-    assert not os.path.exists(live)
-    assert not os.path.exists(f"{live}.tmp-add-0-cccc")
-
-    # state 3: committed, cleanup pending → drop retired
-    mkdir_with_marker(live, "new")
-    mkdir_with_marker(f"{live}.retired-del-3-dddd", "old")
-    assert recover_flat_swaps(live) == ["index.retired-del-3-dddd"]
-    assert os.path.exists(f"{live}/new")
-    assert not os.path.exists(f"{live}.retired-del-3-dddd")
-
-    # idempotent no-op; .tmp-swap-* (partitioned-store orphans) are
-    # not touched
-    mkdir_with_marker(f"{live}.tmp-swap-eeee", "part")
-    assert recover_flat_swaps(live) == []
-    assert os.path.exists(f"{live}.tmp-swap-eeee/part")
-
-
 def test_takedown_loop_refuses_flat_index_and_keeps_its_batch(
     spark, tmp_path
 ):
@@ -544,7 +484,8 @@ def test_mg_state_survives_mid_commit_crash(spark, tmp_path, monkeypatch):
             spark, str(land), state, ckpt, k=25, glob="*.parquet"
         )
     monkeypatch.undo()
-    assert not os.path.isdir(state)  # the bad window: live is gone
+    # the bad window: the live partition is gone
+    assert not os.path.isdir(f"{state}/part=0")
 
     # restart: recovery restores the seeded state, replay folds batch
     # 2 exactly once — alpha counts BOTH batches (the old commit lost

@@ -1,13 +1,13 @@
 """Round-12 manifest fixes (ADVICE r11 #1/#2).
 
-#1 (HIGH): the streaming semantic-cells fold APPENDS batch files via
-``_publish_batch_files`` — but once a delete/compact had written a
-reader manifest, those appended files were never named in it, so
-manifest-resolved probes (``store.open_snapshot`` behind
-``ivf_pruned_scan_topk`` / ``hard_negatives_ivf``) silently returned
-a stale subset missing every vector appended since the last refresh.
-The publish now refreshes the manifest (inside the fold's lease)
-whenever one exists.
+#1 (HIGH): the streaming semantic-cells fold APPENDS batch files
+(now via ``store.append_partitions``) — but once a delete/compact
+had written a reader manifest, those appended files were never
+named in it, so manifest-resolved probes (``store.open_snapshot``
+behind ``ivf_pruned_scan_topk`` / ``hard_negatives_ivf``) silently
+returned a stale subset missing every vector appended since the
+last refresh. The append now refreshes the manifest (inside the
+fold's lease) whenever one exists.
 
 #2 (MEDIUM): a COMMITTED-EMPTY cell store (every cell taken down;
 manifest names zero files) fell through ``if files:`` to a directory

@@ -13,9 +13,9 @@ def test_stream_born_cell_store_carries_manifest(spark, tmp_path):
     a stream-born store stayed manifest-less until its first
     delete/compact, so probe reads were directory listings and a
     multi-cell append was not atomic to them — a concurrent reader
-    could see some cells' new batch file but not others. The dups
-    sink (partition-less, consumed inside the lease) stays
-    manifest-less by design."""
+    could see some cells' new batch file but not others. The dup log
+    is a partitioned store too (partition column ``batch``) and
+    carries its manifest from the first batch as well."""
     from mapreduce_inverted_index_spark.operators.store import (
         MANIFEST_NAME,
         read_manifest,
@@ -69,8 +69,7 @@ def test_stream_born_cell_store_carries_manifest(spark, tmp_path):
     )
     listed2 = manifest_files(cells)
     assert len(listed2) > len(listed)
-    # partition-less dups sink: manifest-less by design
-    assert not os.path.isfile(f"{state}/dups/{MANIFEST_NAME}")
+    assert os.path.isfile(f"{state}/dups/{MANIFEST_NAME}")
 
 
 def test_derived_partsupp_properties(spark):

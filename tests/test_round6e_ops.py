@@ -289,13 +289,19 @@ def _auc(spark, scored, buckets=4):
 
 
 def _brute_auc(scored):
-    # pairwise definition with half credit on ties
+    # pairwise definition with half credit on ties, rounded half-up on
+    # the double's shortest decimal form as Spark's round() does;
+    # Python's round() is half-to-even, so an exact tie such as
+    # 0.5078125 (32.5 wins of 64 pairs) would round the other way
+    from decimal import ROUND_HALF_UP, Decimal
+
     pos = [s for s, p in scored if p]
     neg = [s for s, p in scored if not p]
     wins = sum(
         1.0 if p > n else (0.5 if p == n else 0.0) for p in pos for n in neg
     )
-    return round(wins / (len(pos) * len(neg)), 6)
+    auc = Decimal(repr(wins / (len(pos) * len(neg))))
+    return float(auc.quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP))
 
 
 def test_auc_perfect_and_reversed(spark):

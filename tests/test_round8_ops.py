@@ -130,9 +130,13 @@ def test_semantic_cells_stream_maintenance_multipass(spark, tmp_path):
         (r["vec_id"], r["cell"]) for r in ivf_assign(emb, cents).collect()
     )
     assert got_pairs == want_pairs
-    got_dups = {
-        tuple(r) for r in spark.read.parquet(f"{state}/dups").collect()
-    }
+
+    def dups():
+        return spark.read.parquet(f"{state}/dups").select(
+            "new_id", "dup_of", "cos_sim"
+        )
+
+    got_dups = {tuple(r) for r in dups().collect()}
     assert got_dups == expected_dups and len(got_dups) > 0
 
     # idempotence: a pass with no new files changes nothing
@@ -141,7 +145,7 @@ def test_semantic_cells_stream_maintenance_multipass(spark, tmp_path):
     )
     assert spark.read.parquet(f"{state}/cells").count() == emb.count()
     assert (
-        len({tuple(r) for r in spark.read.parquet(f"{state}/dups").collect()})
+        len({tuple(r) for r in dups().collect()})
         == len(got_dups)
     )
 

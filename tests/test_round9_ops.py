@@ -156,30 +156,6 @@ def test_takedown_stream_bucketed_store(spark, tmp_path):
     assert _bucket_files(index_dir) == snap
 
 
-def test_flat_swap_leaves_complete_copy(spark, tmp_path):
-    """_swap_flat_dir must never unlink the live dir before the new
-    one is in place: after the swap the live dir holds the new rows,
-    and no step window exists where neither copy is complete (proxy:
-    the retired dir is created by rename, so a crash between the two
-    renames leaves the full old copy under .retired-*)."""
-    from mapreduce_inverted_index_spark.streaming.sketches import _swap_flat_dir
-
-    live = str(tmp_path / "state")
-    spark.range(5).write.parquet(live)
-    _swap_flat_dir(spark.range(10, 13), live, "t")
-    assert sorted(r["id"] for r in spark.read.parquet(live).collect()) == [
-        10,
-        11,
-        12,
-    ]
-    # no tmp/retired dirs left behind
-    assert not [
-        d
-        for d in os.listdir(tmp_path)
-        if d.startswith("state.tmp-") or d.startswith("state.retired-")
-    ]
-
-
 def test_colocated_doc_tier_has_zero_exchange(spark):
     """The doc-keyed bucket pair (tf x dl) must SortMergeJoin with
     ZERO Exchange anywhere in the plan — both tables pre-partitioned

@@ -6,7 +6,8 @@ wraps ``operators.store`` entry points by attribute name. Nothing
 else runs these on every change, so a helper deleted or renamed in
 the package would break them silently; these tests fail instead.
 Inside the package, only ``operators/store.py`` may drive the
-partition-swap commit steps.
+partition-swap commit steps, and no other module under ``operators/``
+or ``streaming/`` renames or removes files.
 """
 
 from __future__ import annotations
@@ -214,4 +215,47 @@ def test_only_the_store_module_drives_partition_swaps():
                 for n in names
                 if n in STORE_COMMIT_INTERNALS
             ]
+    assert not offenders, "\n".join(offenders)
+
+
+FS_MUTATIONS = {
+    "os": {"rename", "replace", "remove", "unlink"},
+    "shutil": {"rmtree", "move"},
+}
+
+
+def test_only_the_store_module_renames_or_removes_files():
+    """Every maintained state commits through ``operators/store.py``;
+    an operator or streaming module that renames or removes files has
+    a commit path of its own. ``plans/`` temp-dir cleanup and the
+    ``sources/`` data-source writers (their own commit protocol) are
+    out of scope."""
+    offenders = []
+    store = os.path.join(ROOT, PKG, "operators", "store.py")
+    for sub in ("operators", "streaming"):
+        for path in sorted(
+            glob.glob(
+                os.path.join(ROOT, PKG, sub, "**", "*.py"), recursive=True
+            )
+        ):
+            if path == store:
+                continue
+            rel = os.path.relpath(path, ROOT)
+            with open(path) as f:
+                tree = ast.parse(f.read(), path)
+            for node in ast.walk(tree):
+                if (
+                    isinstance(node, ast.Attribute)
+                    and isinstance(node.value, ast.Name)
+                    and node.attr in FS_MUTATIONS.get(node.value.id, ())
+                ):
+                    offenders.append(
+                        f"{rel}:{node.lineno}: {node.value.id}.{node.attr}"
+                    )
+                elif isinstance(node, ast.ImportFrom) and node.level == 0:
+                    offenders += [
+                        f"{rel}:{node.lineno}: {node.module}.{a.name}"
+                        for a in node.names
+                        if a.name in FS_MUTATIONS.get(node.module, ())
+                    ]
     assert not offenders, "\n".join(offenders)

@@ -680,8 +680,8 @@ def race() -> None:
     # ---- semantic cell store: streaming APPEND storm, STREAM-BORN
     # store (VERDICT r12 ask #6). The seed here is the loop's own
     # first pass over a 500k-embedding landing batch — the store is
-    # created by _publish_batch_files, which since r13 writes the
-    # reader manifest on FIRST publish (before r13 a stream-born
+    # created by store.append_partitions, which writes the reader
+    # manifest on the FIRST append (before r13 a stream-born
     # store stayed manifest-less until its first delete/compact, and
     # a directory-listing probe racing a multi-cell append could see
     # some cells' new batch file but not others — exactly the mixed
