@@ -1,4 +1,4 @@
-"""Time-series joins Spark lacks as builtins: as-of and range joins,
+"""Time-series joins Spark lacks as builtins: as-of and band joins,
 composed from existing DataFrame ops (the SURVEY §4.3 guidance:
 composition first, Pandas UDFs only if semantics demand).
 
@@ -13,10 +13,6 @@ One shuffle on the key (the window), no range-explosion, no skew
 beyond the key's own — the standard scalable formulation. A
 merge-join-per-key ``applyInPandas`` variant would trade JVM window
 state for Python; unnecessary here.
-
-**Range join** (pairs within a time band) = equi-join on the key +
-band predicate. Catalyst plans the equi part as a hash join and the
-band as a post-filter, so cost is Σ|key-group|² only within keys.
 """
 
 from __future__ import annotations
@@ -24,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-__all__ = ["asof_join", "range_join", "keyless_band_self_join"]
+__all__ = ["asof_join", "keyless_band_self_join"]
 
 
 def asof_join(
@@ -82,23 +78,6 @@ def asof_join(
         *[F.col(f.name) for f in left.schema.fields],
         *[F.col("_asof").getField(c).alias(f"asof_{c}") for c in right_vals],
     )
-
-
-def range_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_ts: str,
-    right_ts: str,
-    max_gap_seconds: int,
-) -> DataFrame:
-    """Pairs sharing ``key`` whose timestamps differ by at most
-    ``max_gap_seconds``. Equi-join on the key carries the band
-    predicate as a join filter."""
-    gap = F.abs(
-        F.unix_timestamp(left[left_ts]) - F.unix_timestamp(right[right_ts])
-    )
-    return left.join(right, (left[key] == right[key]) & (gap <= max_gap_seconds))
 
 
 def keyless_band_self_join(

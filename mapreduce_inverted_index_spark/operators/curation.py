@@ -46,8 +46,6 @@ def contamination_hits(
     docs: DataFrame,
     benchmark: DataFrame,
     n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     doc_shingles: DataFrame | None = None,
     bench_shingles: DataFrame | None = None,
 ) -> DataFrame:
@@ -65,9 +63,9 @@ def contamination_hits(
     with the MinHash family).
     """
     if doc_shingles is None:
-        doc_shingles = word_shingles(docs, n, text_col, id_col)
+        doc_shingles = word_shingles(docs, n)
     if bench_shingles is None:
-        bench_shingles = word_shingles(benchmark, n, text_col, id_col)
+        bench_shingles = word_shingles(benchmark, n)
     doc_sh = doc_shingles.select(
         "doc_id", F.explode("shingles").alias("shingle")
     )
@@ -86,32 +84,21 @@ def decontaminate(
     docs: DataFrame,
     benchmark: DataFrame,
     n: int = 3,
-    min_hits: int = 1,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
-    """The corpus minus documents overlapping the benchmark by at
-    least ``min_hits`` shingles (left-anti join on the flagged ids —
+    """The corpus minus documents sharing at least one shingle with
+    the benchmark (left-anti join on the flagged ids —
     document text never shuffles)."""
-    flagged = contamination_hits(docs, benchmark, n, text_col, id_col).where(
-        F.col("n_hits") >= min_hits
+    flagged = contamination_hits(docs, benchmark, n).where(
+        F.col("n_hits") >= 1
     )
     return docs.join(
-        flagged.select(F.col("doc_id").alias(id_col)), id_col, "left_anti"
+        flagged.select(F.col("doc_id").alias("doc_id")), "doc_id", "left_anti"
     )
 
 
 def policy_filter(
     docs: DataFrame,
     blocklist: tuple[str, ...] = (),
-    min_tokens: int = 20,
-    max_tokens: int = 100_000,
-    min_mean_word_len: float = 2.0,
-    max_mean_word_len: float = 10.0,
-    min_type_token_ratio: float = 0.3,
-    min_stopword_hits: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Gopher/C4-style rule-based document filter with REASON CODES:
     every document gets a keep/drop decision plus the
@@ -121,14 +108,14 @@ def policy_filter(
 
     Rules (fixed order — the reasons string is deterministic):
       ``too_short`` / ``too_long``   token count outside
-                                     [min_tokens, max_tokens]
+                                     [20, 100 000]
       ``word_len``                   mean word length outside
-                                     [min_mean_word_len, max_mean_word_len]
+                                     [2.0, 10.0]
       ``low_diversity``              distinct/total token ratio below
-                                     min_type_token_ratio (the
-                                     repeated-boilerplate signal)
-      ``no_stopwords``               fewer than min_stopword_hits
-                                     occurrences of ubiquitous
+                                     0.3 (the repeated-boilerplate
+                                     signal)
+      ``no_stopwords``               fewer than 2 occurrences of
+                                     ubiquitous
                                      function words (Gopher's "is
                                      this prose at all" test)
       ``blocklist``                  any blocklist term present
@@ -145,10 +132,10 @@ def policy_filter(
     """
     from mapreduce_inverted_index_spark.functions.text import tokenize
 
-    d = docs.select(F.col(id_col).alias("doc_id"), tokenize(text_col).alias("toks"))
+    d = docs.select(F.col("doc_id").alias("doc_id"), tokenize("text").alias("toks"))
     # coalesce: a NULL text (failed fetch — the reference's S2
     # failure mode keeps the row) tokenizes to NULL under ANSI mode,
-    # and NULL < min_tokens is NULL, which concat_ws would silently
+    # and NULL < 20 is NULL, which concat_ws would silently
     # skip — the broken doc would sail through keep=true. Pin it to
     # 0 tokens so too_short fires.
     n_tokens = F.coalesce(F.size("toks"), F.lit(0))
@@ -185,15 +172,15 @@ def policy_filter(
     rule = lambda cond, code: F.when(cond, F.lit(code))  # noqa: E731
     reasons = F.concat_ws(
         ";",
-        rule(F.col("n_tokens") < min_tokens, "too_short"),
-        rule(F.col("n_tokens") > max_tokens, "too_long"),
+        rule(F.col("n_tokens") < 20, "too_short"),
+        rule(F.col("n_tokens") > 100_000, "too_long"),
         rule(
-            (F.col("mean_word_len") < min_mean_word_len)
-            | (F.col("mean_word_len") > max_mean_word_len),
+            (F.col("mean_word_len") < 2.0)
+            | (F.col("mean_word_len") > 10.0),
             "word_len",
         ),
-        rule(F.col("type_token_ratio") < min_type_token_ratio, "low_diversity"),
-        rule(F.col("stopword_hits") < min_stopword_hits, "no_stopwords"),
+        rule(F.col("type_token_ratio") < 0.3, "low_diversity"),
+        rule(F.col("stopword_hits") < 2, "no_stopwords"),
         rule(F.col("blocklist_hits") > 0, "blocklist"),
     )
     return m.select(
@@ -205,7 +192,6 @@ def policy_filter(
 def contrastive_negatives(
     docs: DataFrame,
     k: int = 4,
-    id_col: str = "doc_id",
     group_col: str = "source",
 ) -> DataFrame:
     """Deterministic negative sampling for contrastive training: for
@@ -236,7 +222,7 @@ def contrastive_negatives(
     from mapreduce_inverted_index_spark.operators.ids import assign_dense_ids
 
     idx = assign_dense_ids(
-        docs.select(F.col(id_col).alias("_id"), F.col(group_col).alias("_grp")),
+        docs.select(F.col("doc_id").alias("_id"), F.col(group_col).alias("_grp")),
         order_by="_id",
         id_name="_rk",
     )
@@ -298,7 +284,6 @@ def stratified_sample(
     strata_col: str,
     rates: dict[str, float],
     default_rate: float = 0.0,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Deterministic per-stratum sampling: keep a row iff its id's
     md5-bucket (0-99) falls under its stratum's percentage — the
@@ -306,7 +291,7 @@ def stratified_sample(
     1 part code, ..."). No shuffle at all: a pure filter the scan can
     evaluate; rates are compiled into the predicate.
     """
-    bucket = _md5_bucket(F.col(id_col))
+    bucket = _md5_bucket(F.col("doc_id"))
     rate = F.lit(default_rate * 100)
     for value, r in sorted(rates.items()):
         rate = F.when(F.col(strata_col) == value, F.lit(r * 100)).otherwise(rate)
@@ -316,11 +301,8 @@ def stratified_sample(
 def pack_sequences(
     docs: DataFrame,
     budget_tokens: int = 2048,
-    group_col: str = "source",
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
-    """Contiguous sequence packing: within each ``group_col``, docs
+    """Contiguous sequence packing: within each ``source``, docs
     (ordered by id) are packed into training sequences of
     ``budget_tokens`` by cumulative estimated token count — sequence
     k holds the docs whose preceding cumsum lies in
@@ -332,15 +314,15 @@ def pack_sequences(
     seq_id, n_docs, seq_tokens``. Token estimate = ceil(chars/4), the
     standard BPE heuristic (see ``textstats.token_stats``).
     """
-    est = F.ceil(F.length(text_col) / 4.0).cast("bigint")
+    est = F.ceil(F.length("text") / 4.0).cast("bigint")
     w = (
-        Window.partitionBy(group_col)
-        .orderBy(id_col)
+        Window.partitionBy("source")
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     tagged = docs.select(
-        F.col(group_col).alias("source"),
-        F.col(id_col).alias("doc_id"),
+        F.col("source").alias("source"),
+        F.col("doc_id").alias("doc_id"),
         est.alias("est_tokens"),
     ).select(
         "source",
@@ -361,7 +343,6 @@ def corpus_shuffle(
     df: DataFrame,
     id_col: str = "doc_id",
     seed: str = "42",
-    rank_name: str = "shuffle_rank",
 ) -> DataFrame:
     """Deterministic global corpus shuffle: a dense 0-based training
     order by ``md5(seed:id)`` — the reproducible permutation every
@@ -380,7 +361,7 @@ def corpus_shuffle(
     ride through it; callers re-join payloads by id (or write
     sorted-by-rank and read back, the production layout).
 
-    Output: ``id_col, rank_name`` with ranks exactly equal to
+    Output: ``id_col, shuffle_rank`` with ranks exactly equal to
     ``row_number() OVER (ORDER BY md5, id) - 1``. Changing ``seed``
     yields an independent permutation (fresh epoch order).
     """
@@ -391,12 +372,11 @@ def corpus_shuffle(
     ordered = keyed.repartitionByRange("_shuffle_key", id_col).sortWithinPartitions(
         "_shuffle_key", id_col
     )
-    return assign_partition_ids(ordered, rank_name).drop("_shuffle_key")
+    return assign_partition_ids(ordered, "shuffle_rank").drop("_shuffle_key")
 
 
 def train_val_test_split(
     df: DataFrame,
-    id_col: str = "doc_id",
     val_pct: int = 5,
     test_pct: int = 5,
 ) -> DataFrame:
@@ -409,7 +389,7 @@ def train_val_test_split(
     keeps eval sets uncontaminated across pipeline re-runs. Adds
     ``split``; pure projection (no shuffle, scan-evaluable).
     """
-    bucket = _md5_bucket(F.col(id_col))
+    bucket = _md5_bucket(F.col("doc_id"))
     train_cut = 100 - val_pct - test_pct
     return df.withColumn(
         "split",
@@ -419,18 +399,13 @@ def train_val_test_split(
     )
 
 
-def temperature_sample(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    group_col: str = "source",
-    alpha: float = 0.5,
-    target_frac: float = 0.4,
-) -> DataFrame:
+def temperature_sample(df: DataFrame) -> DataFrame:
     """Temperature-based mixture sampling (the T5/mT5 data-mixing
-    step): per-group keep rates proportional to ``count^alpha`` so
-    small sources are up-weighted relative to their raw share
-    (alpha=1 reproduces natural proportions; alpha->0 approaches
-    uniform-over-groups). Rows are kept by deterministic md5 bucket
+    step): per-``source`` keep rates proportional to
+    ``count^alpha``, alpha = 0.5, so small sources are up-weighted
+    relative to their raw share (alpha=1 would reproduce natural
+    proportions; alpha->0 approaches uniform-over-groups), scaled so
+    about 40 % of the rows are kept. Rows are kept by deterministic md5 bucket
     — reproducible, partition-independent, stable under reruns, and
     a doc's keep/drop never depends on execution order.
 
@@ -449,18 +424,13 @@ def temperature_sample(
     Output: input rows that survive, plus ``keep_bps`` (the group's
     keep rate in basis points) for auditability.
     """
-    if alpha != 0.5:
-        raise ValueError(
-            "alpha is fixed at 0.5: sqrt is correctly rounded (engine-"
-            "portable); pow is not — see docstring"
-        )
     # counts feeds the totals row AND the rate table (no shared
     # Exchange), so unpersisted the corpus was scanned once per
     # branch plus once for the final filter join — three scans for a
     # ≤|groups|-row aggregate. Persist the tiny table: two scans
     # (the aggregate and the filtered output), the minimum this
     # operator can do.
-    counts = df.groupBy(group_col).agg(F.count("*").alias("_c")).persist()
+    counts = df.groupBy("source").agg(F.count("*").alias("_c")).persist()
     # _sw sums doubles across groups — order-dependent as raw floats.
     # Round each sqrt to 9 places (still correctly-rounded, identical
     # both engines) and sum as DECIMAL: exact and order-independent,
@@ -472,22 +442,22 @@ def temperature_sample(
         .alias("_sw"),
     )
     rates = counts.crossJoin(F.broadcast(tot)).select(
-        group_col,
+        "source",
         F.floor(
             F.least(
                 F.lit(1.0),
-                F.sqrt("_c") / F.col("_sw") * F.lit(float(target_frac))
+                F.sqrt("_c") / F.col("_sw") * F.lit(0.4)
                 * F.col("_n") / F.col("_c"),
             )
             * 10000
         ).cast("int").alias("keep_bps"),
     )
     bucket = (
-        F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 8), 16, 10)
+        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
         .cast("bigint") % 10000
     )
     return (
-        df.join(F.broadcast(rates), group_col)
+        df.join(F.broadcast(rates), "source")
         .where(bucket < F.col("keep_bps"))
     )
 
@@ -560,8 +530,6 @@ def dsir_importance_weights(
     docs: DataFrame,
     target: DataFrame,
     n_buckets: int = 4096,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Data Selection via Importance Resampling (DSIR, Xie et al.
     2023, arXiv:2302.03169): per-document log importance weight
@@ -599,8 +567,8 @@ def dsir_importance_weights(
 
     def buckets(df: DataFrame) -> DataFrame:
         return df.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(tokenize(text_col)).alias("term"),
+            F.col("doc_id").alias("doc_id"),
+            F.explode(tokenize("text")).alias("term"),
         ).select("doc_id", _md5_bucket(F.col("term"), n_buckets).alias("b"))
 
     dec = "decimal(18,9)"

@@ -64,13 +64,13 @@ ROWS_PER_BAND = NUM_PERM // BANDS
 _P31 = (1 << 31) - 1
 
 
-def _perm_constants(n: int = NUM_PERM) -> list[tuple[int, int]]:
+def _perm_constants() -> list[tuple[int, int]]:
     """Deterministic (a, b) pairs derived from md5 — stable across
     runs/sessions with no RNG state."""
     import hashlib
 
     out = []
-    for p in range(n):
+    for p in range(NUM_PERM):
         d = hashlib.md5(f"minhash-perm-{p}".encode()).digest()
         a = (int.from_bytes(d[:8], "big") % (_P31 - 1)) + 1  # a != 0
         b = int.from_bytes(d[8:], "big") % _P31
@@ -88,7 +88,7 @@ def normalize_for_dedup(col) -> F.Column:
     return F.regexp_replace(F.trim(F.lower(c)), r"\s+", " ")
 
 
-def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Exact duplicate groups: one row per distinct content hash with
     the keeper (min id) and the copy count.
 
@@ -98,16 +98,15 @@ def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     """
     return (
         docs.select(
-            F.md5(normalize_for_dedup(text_col)).alias("content_hash"),
-            F.col(id_col).alias("doc_id"),
+            F.md5(normalize_for_dedup("text")).alias("content_hash"),
+            F.col("doc_id").alias("doc_id"),
         )
         .groupBy("content_hash")
         .agg(F.min("doc_id").alias("doc_id"), F.count("*").alias("n_copies"))
     )
 
 
-def word_shingles(docs: DataFrame, n: int = 2, text_col: str = "text",
-                  id_col: str = "doc_id", *, extra_cols: tuple[str, ...] = ()) -> DataFrame:
+def word_shingles(docs: DataFrame, n: int = 2, *, extra_cols: tuple[str, ...] = ()) -> DataFrame:
     """Distinct word n-gram shingles per document.
 
     Stopwords are kept (dedup should see the text as-is); shorter
@@ -122,8 +121,8 @@ def word_shingles(docs: DataFrame, n: int = 2, text_col: str = "text",
     runtime of this whole operator). zip_with lambdas touch only
     their bound variables, so tokenization stays O(1) per row.
     """
-    toks = tokenize(text_col)
-    d = docs.select(F.col(id_col).alias("doc_id"), *extra_cols, toks.alias("toks"))
+    toks = tokenize("text")
+    d = docs.select(F.col("doc_id").alias("doc_id"), *extra_cols, toks.alias("toks"))
     m = F.greatest(F.size("toks") - (n - 1), F.lit(0))
     parts = [F.slice("toks", k + 1, m) for k in range(n)]
     acc = parts[0]
@@ -139,6 +138,11 @@ def _jaccard(a, b) -> F.Column:
     inter = F.size(F.array_intersect(a, b)).cast("double")
     union = F.size(F.array_union(a, b)).cast("double")
     return F.round(inter / union, 6)
+
+
+# Hot-block cap of the blocked pair generators: a block larger than
+# this is split into hash-chunk sub-joins (see bounded_block_join).
+MAX_BLOCK_ROWS = 10_000
 
 
 def bounded_block_join(
@@ -220,18 +224,14 @@ def bounded_block_join(
 def ngram_jaccard_pairs(
     docs: DataFrame,
     threshold: float = 0.35,
-    n: int = 2,
-    block_col: str = "source",
-    text_col: str = "text",
-    id_col: str = "doc_id",
     shingles: DataFrame | None = None,
-    max_block_rows: int | None = 10_000,
+    max_block_rows: int | None = MAX_BLOCK_ROWS,
     method: str = "index",
     max_shingle_df: int | None = 1_000,
 ) -> DataFrame:
     """Blocked n-gram Jaccard similarity join.
 
-    The candidate space is confined to ``block_col`` groups, so the
+    The candidate space is confined to ``source`` groups, so the
     pair space is Σ_b |b|² instead of N² — the difference between
     feasible and impossible at 100 TB. Output: ``doc_a, doc_b,
     jaccard``; both methods return IDENTICAL rows (pytest-pinned):
@@ -276,14 +276,14 @@ def ngram_jaccard_pairs(
       blocks are small or shingle overlap is too sparse to pay the
       exploded-stream shuffle.
 
-    ``shingles``: optional prebuilt ``(doc_id, <block_col>, shingles)``
+    ``shingles``: optional prebuilt ``(doc_id, source, shingles)``
     table (e.g. persisted once and shared across several dedup passes);
     built from ``docs`` when omitted.
     """
     sh = (
         shingles
         if shingles is not None
-        else word_shingles(docs, n, text_col, id_col, extra_cols=(block_col,))
+        else word_shingles(docs, extra_cols=("source",))
     )
     if method == "index":
         if threshold <= 0:
@@ -295,7 +295,7 @@ def ngram_jaccard_pairs(
             F.col("doc_id").alias("_d"), F.size("shingles").alias("_n")
         )
         ex = sh.select(
-            F.col(block_col).alias("blk"),
+            F.col("source").alias("blk"),
             F.col("doc_id").alias("doc_id"),
             F.explode("shingles").alias("g"),
         )
@@ -399,12 +399,12 @@ def ngram_jaccard_pairs(
     if method != "pairs":
         raise ValueError(f"unknown method {method!r}")
     a = sh.select(
-        F.col(block_col).alias("blk"),
+        F.col("source").alias("blk"),
         F.col("doc_id").alias("doc_a"),
         F.col("shingles").alias("sh_a"),
     )
     b = sh.select(
-        F.col(block_col).alias("blk"),
+        F.col("source").alias("blk"),
         F.col("doc_id").alias("doc_b"),
         F.col("shingles").alias("sh_b"),
     )
@@ -415,8 +415,7 @@ def ngram_jaccard_pairs(
     )
 
 
-def minhash_signatures(docs: DataFrame, n: int = 3, text_col: str = "text",
-                       id_col: str = "doc_id") -> DataFrame:
+def minhash_signatures(docs: DataFrame) -> DataFrame:
     """64-permutation MinHash signature per document.
 
     Plan shape: explode shingles → ONE md5-prefix hash per shingle
@@ -427,7 +426,7 @@ def minhash_signatures(docs: DataFrame, n: int = 3, text_col: str = "text",
     ~10× slower). The groupBy's map-side partial mins collapse each
     partition to its distinct docs × 64 longs before any shuffle.
     """
-    return _minhash_signatures_from(word_shingles(docs, n, text_col, id_col))
+    return _minhash_signatures_from(word_shingles(docs, 3))
 
 
 def _minhash_signatures_from(sh: DataFrame) -> DataFrame:
@@ -502,10 +501,7 @@ def band_table(sigs: DataFrame) -> DataFrame:
     )
 
 
-def write_minhash_state(
-    docs: DataFrame, path: str, n: int = 3,
-    text_col: str = "text", id_col: str = "doc_id",
-) -> None:
+def write_minhash_state(docs: DataFrame, path: str) -> None:
     """Persist the corpus's dedup state — ``{path}/bands`` and
     ``{path}/shingles`` parquet — the storage half of incremental
     near-dup: signatures are computed ONCE per document ever, then a
@@ -519,7 +515,7 @@ def write_minhash_state(
     shuffle-free at 100 TB, save it with
     ``bucketBy(n, "band", "key").saveAsTable`` on BOTH the writer and
     the batch side (the ``write_index_tables`` pattern)."""
-    sh = word_shingles(docs, n, text_col, id_col).persist()
+    sh = word_shingles(docs, 3).persist()
     band_table(_minhash_signatures_from(sh)).repartition("key").write.mode(
         "overwrite"
     ).parquet(f"{path}/bands")
@@ -532,9 +528,6 @@ def minhash_incremental_dedup(
     base_bands: DataFrame,
     base_shingles: DataFrame,
     threshold: float = 0.35,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Near-dup matches of a NEW batch against a stored corpus state —
     the form a production pipeline actually runs: the corpus's band
@@ -553,7 +546,7 @@ def minhash_incremental_dedup(
     The batch's shingle table is persisted because it feeds both the
     signature pipeline and the verify join.
     """
-    new_sh = word_shingles(new_docs, n, text_col, id_col).persist()
+    new_sh = word_shingles(new_docs, 3).persist()
     new_bands = band_table(_minhash_signatures_from(new_sh))
     cands = (
         new_bands.select(
@@ -589,9 +582,6 @@ def minhash_incremental_dedup(
 def minhash_near_dup(
     docs: DataFrame,
     threshold: float = 0.35,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     shingles: DataFrame | None = None,
 ) -> DataFrame:
     """Unblocked near-duplicate pairs via MinHash LSH + exact verify.
@@ -614,7 +604,7 @@ def minhash_near_dup(
     if shingles is not None:
         sh_all = shingles.select("doc_id", "shingles")
     else:
-        sh_all = word_shingles(docs, n, text_col, id_col).persist()
+        sh_all = word_shingles(docs, 3).persist()
     bands = band_table(_minhash_signatures_from(sh_all))
     # Persist the band table: BOTH sides of the self-join below are
     # derived from it, and without a persist Spark recomputes the
@@ -654,8 +644,7 @@ def minhash_near_dup(
 SIMHASH_BITS = 60
 
 
-def simhash_signatures(docs: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id") -> DataFrame:
+def simhash_signatures(docs: DataFrame) -> DataFrame:
     """60-bit SimHash per document over stopword-filtered terms.
 
     Classic Charikar construction: each term votes ±tf on every bit
@@ -690,8 +679,8 @@ def simhash_signatures(docs: DataFrame, text_col: str = "text",
     half = SIMHASH_BITS // 2  # 30: bits i and i+30 share an agg
     field_mask = (1 << half) - 1
     occ = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(terms(text_col, keep_duplicates=True)).alias("term"),
+        F.col("doc_id").alias("doc_id"),
+        F.explode(terms("text", keep_duplicates=True)).alias("term"),
     ).select(
         "doc_id",
         F.conv(F.substring(F.md5("term"), 1, 15), 16, 10).cast("bigint").alias("h"),
@@ -729,11 +718,7 @@ def simhash_signatures(docs: DataFrame, text_col: str = "text",
 def simhash_candidate_pairs(
     docs: DataFrame,
     max_hamming: int = 8,
-    block_col: str = "source",
-    text_col: str = "text",
-    id_col: str = "doc_id",
     sigs: DataFrame | None = None,
-    max_block_rows: int | None = 10_000,
 ) -> DataFrame:
     """Near-dup candidates: blocked pairs with Hamming(simhash) ≤ k.
 
@@ -742,11 +727,11 @@ def simhash_candidate_pairs(
     on simhash prefixes/rotations instead — same plan shape.)
 
     ``sigs``: optional prebuilt ``(doc_id, simhash)`` signature table.
-    ``max_block_rows``: hot-block task-time bound (see
+    A hot block is split at ``MAX_BLOCK_ROWS`` rows (see
     :func:`bounded_block_join`).
     """
-    sigs = (sigs if sigs is not None else simhash_signatures(docs, text_col, id_col)).join(
-        docs.select(F.col(id_col).alias("doc_id"), F.col(block_col).alias("blk")),
+    sigs = (sigs if sigs is not None else simhash_signatures(docs)).join(
+        docs.select(F.col("doc_id").alias("doc_id"), F.col("source").alias("blk")),
         "doc_id",
     )
     # Three derivations read this (doc_id, simhash, blk) table: both
@@ -759,7 +744,7 @@ def simhash_candidate_pairs(
     )
     b = sigs.select(F.col("blk"), F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sig_b"))
     return (
-        bounded_block_join(a, b, "blk", "doc_a", "doc_b", max_block_rows)
+        bounded_block_join(a, b, "blk", "doc_a", "doc_b", MAX_BLOCK_ROWS)
         .select(
             "doc_a",
             "doc_b",
@@ -773,10 +758,6 @@ def fuzzy_key_pairs(
     docs: DataFrame,
     max_dist: int = 5,
     key_len: int = 32,
-    block_col: str = "source",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_block_rows: int | None = 10_000,
 ) -> DataFrame:
     """Edit-distance fuzzy matching: blocked pairs whose normalized
     text PREFIX keys are within ``max_dist`` Levenshtein edits — the
@@ -794,15 +775,15 @@ def fuzzy_key_pairs(
     blocked pair generator here. Output: ``doc_a, doc_b, distance``.
     """
     keyed = docs.select(
-        F.col(block_col).alias("blk"),
-        F.col(id_col).alias("doc_id"),
-        F.substring(normalize_for_dedup(text_col), 1, key_len).alias("k"),
+        F.col("source").alias("blk"),
+        F.col("doc_id").alias("doc_id"),
+        F.substring(normalize_for_dedup("text"), 1, key_len).alias("k"),
     )
     a = keyed.select("blk", F.col("doc_id").alias("doc_a"), F.col("k").alias("ka"))
     b = keyed.select("blk", F.col("doc_id").alias("doc_b"), F.col("k").alias("kb"))
     dist = F.levenshtein("ka", "kb", max_dist)
     return (
-        bounded_block_join(a, b, "blk", "doc_a", "doc_b", max_block_rows)
+        bounded_block_join(a, b, "blk", "doc_a", "doc_b", MAX_BLOCK_ROWS)
         .select("doc_a", "doc_b", dist.cast("int").alias("distance"))
         .where((F.col("distance") >= 0) & (F.col("distance") <= max_dist))
     )
@@ -812,8 +793,6 @@ def fuzzy_unblocked_pairs(
     docs: DataFrame,
     max_dist: int = 3,
     key_len: int = 32,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """UNBLOCKED edit-distance fuzzy matching: all pairs whose
     full-length normalized-prefix keys are within ``max_dist``
@@ -861,9 +840,9 @@ def fuzzy_unblocked_pairs(
     widths = [base + (1 if i < rem else 0) for i in range(n_seg)]
     starts = [1 + sum(widths[:i]) for i in range(n_seg)]  # 1-based
 
-    norm = normalize_for_dedup(text_col)
+    norm = normalize_for_dedup("text")
     keyed = docs.where(F.length(norm) >= key_len).select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id").alias("doc_id"),
         F.substring(norm, 1, key_len).alias("key"),
     )
     index_structs = F.array(*[
@@ -911,8 +890,6 @@ def fuzzy_unblocked_pairs(
 def simhash_hamming_candidates(
     docs: DataFrame,
     max_hamming: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     sigs: DataFrame | None = None,
 ) -> DataFrame:
     """UNBLOCKED corpus-wide SimHash near-dups: all pairs with
@@ -939,7 +916,7 @@ def simhash_hamming_candidates(
         for i in range(n_bands)
     ]
     offsets = [sum(widths[:i]) for i in range(n_bands)]
-    sigs = sigs if sigs is not None else simhash_signatures(docs, text_col, id_col)
+    sigs = sigs if sigs is not None else simhash_signatures(docs)
     band_structs = F.array(
         *[
             F.struct(

@@ -22,7 +22,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mapreduce_inverted_index_spark.operators.checkpointing import truncate_lineage
-from mapreduce_inverted_index_spark.operators.dedup import bounded_block_join
+from mapreduce_inverted_index_spark.operators.dedup import (
+    MAX_BLOCK_ROWS,
+    bounded_block_join,
+)
 
 __all__ = [
     "cooccurrence_edges",
@@ -31,19 +34,15 @@ __all__ = [
 ]
 
 
-def cooccurrence_edges(
-    events: DataFrame,
-    bucket: str = "minute",
-    max_block_rows: int | None = 10_000,
-) -> DataFrame:
+def cooccurrence_edges(events: DataFrame) -> DataFrame:
     """Distinct undirected edges ``(u, v), u < v`` between users
-    active on the same ``event_type`` within the same clock
-    ``bucket`` — the standard co-occurrence edge derivation
-    (sessions sharing a context become edges).
+    active on the same ``event_type`` within the same clock minute
+    — the standard co-occurrence edge derivation (sessions sharing a
+    context become edges).
 
-    ``bucket`` is THE scale knob, and it must tighten as event rate
-    grows: co-occurrence edge count is Σ|ctx|², so a context window
-    whose population grows linearly with traffic saturates the graph
+    The clock bucket is THE scale knob, and it must tighten as event
+    rate grows: co-occurrence edge count is Σ|ctx|², so a context
+    window whose population grows linearly with traffic saturates the graph
     into a clique (measured here: hour-buckets at 10x the event rate
     put ~70% of all user pairs adjacent, at which point triangle
     work degenerates to C(n,3) no matter how it's counted — no
@@ -54,9 +53,9 @@ def cooccurrence_edges(
 
     The pair generator is the blocked self-join shared with the
     dedup family (``bounded_block_join``): the block key is the
-    (event_type, bucket) context, distinct-ified per user BEFORE
+    (event_type, minute) context, distinct-ified per user BEFORE
     the join so a chatty user contributes one row per context, not
-    one per event; ``max_block_rows`` chunks a hot context (a
+    one per event; ``MAX_BLOCK_ROWS`` chunks a hot context (a
     flash-mob minute) into k² bounded sub-joins instead of one
     straggler task.
 
@@ -76,7 +75,7 @@ def cooccurrence_edges(
             F.concat_ws(
                 "",
                 "event_type",
-                F.date_trunc(bucket, "ts").cast("string"),
+                F.date_trunc("minute", "ts").cast("string"),
             ).alias("ctx"),
             F.col("user_id"),
         )
@@ -85,7 +84,7 @@ def cooccurrence_edges(
     a = ctx.select("ctx", F.col("user_id").alias("u"))
     b = ctx.select("ctx", F.col("user_id").alias("v"))
     return (
-        bounded_block_join(a, b, "ctx", "u", "v", max_block_rows)
+        bounded_block_join(a, b, "ctx", "u", "v", MAX_BLOCK_ROWS)
         .select("u", "v")
         .distinct()
     )
@@ -263,11 +262,13 @@ def bfs_levels(
     return visited
 
 
+_NANO = 10**9  # rank fixed-point unit: BIGINT nano-ranks
+
+
 def pagerank_fixed_point(
     edges: DataFrame,
     d_pct: int = 85,
     iters: int = 5,
-    scale: int = 10**9,
     reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """PageRank over undirected ``(u, v)`` edges in FIXED-POINT
@@ -281,12 +282,12 @@ def pagerank_fixed_point(
 
     Per iteration (the standard power step, integer-floored):
       ``contrib(u) = rank(u) div deg(u)``      (exact split)
-      ``rank'(v) = ((100 - d_pct) · scale) div (100 · N)
+      ``rank'(v) = ((100 - d_pct) · 10⁹) div (100 · N)
                    + (d_pct · Σ contrib) div 100``
     Floor division leaks ≤ 1 nano-unit per division — a defined,
-    deterministic part of the semantics (documented, not noise); with
-    scale = 10⁹ the leak is ~1e-9 per vertex per round, far below any
-    ranking-relevant difference.
+    deterministic part of the semantics (documented, not noise); at
+    10⁹ nano-units per unit the leak is ~1e-9 per vertex per round,
+    far below any ranking-relevant difference.
 
     Scale shape: the edge list (doubled for undirectedness) and the
     degree table persist across rounds; each round is one
@@ -318,13 +319,13 @@ def pagerank_fixed_point(
     try:
         deg = de.groupBy("src").agg(F.count("*").alias("deg")).persist()
         n = deg.agg(F.count("*").alias("_n"))
-        teleport = F.expr(f"({(100 - d_pct)} * {scale}L) div (100 * _n)")
+        teleport = F.expr(f"({(100 - d_pct)} * {_NANO}L) div (100 * _n)")
         state = (
             deg.crossJoin(F.broadcast(n))
             .select(
                 F.col("src").alias("id"),
                 "deg",
-                F.expr(f"{scale}L div _n").alias("rank_nano"),
+                F.expr(f"{_NANO}L div _n").alias("rank_nano"),
             )
         )
         state = truncate_lineage(state, reliable=reliable_checkpoint)
@@ -364,5 +365,5 @@ def pagerank_fixed_point(
     return state.select(
         "id",
         "rank_nano",
-        (F.col("rank_nano").cast("double") / F.lit(float(scale))).alias("rank"),
+        (F.col("rank_nano").cast("double") / F.lit(float(_NANO))).alias("rank"),
     )

@@ -62,7 +62,7 @@ __all__ = [
 ]
 
 
-def doc_terms(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def doc_terms(docs: DataFrame) -> DataFrame:
     """Map phase: one row per (doc_id, term), terms distinct per doc.
 
     Equivalent of the reference's ``map_terms_to_documents``
@@ -75,20 +75,20 @@ def doc_terms(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     (array_except with a literal array is per-row interpreted work).
     """
     return docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.array_distinct(tokenize(text_col))).alias("term"),
+        F.col("doc_id").alias("doc_id"),
+        F.explode(F.array_distinct(tokenize("text"))).alias("term"),
     ).where(F.expr(_NOT_STOP_SQL))
 
 
-def doc_term_freq(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def doc_term_freq(docs: DataFrame) -> DataFrame:
     """(doc_id, term, tf) with in-document duplicates counted — the
     term-frequency variant of :func:`doc_terms` (same explode-then-
     InSet shape).
     """
     return (
         docs.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(tokenize(text_col)).alias("term"),
+            F.col("doc_id").alias("doc_id"),
+            F.explode(tokenize("text")).alias("term"),
         )
         .where(F.expr(_NOT_STOP_SQL))
         .groupBy("doc_id", "term")
@@ -96,7 +96,7 @@ def doc_term_freq(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
     )
 
 
-def build_index(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def build_index(docs: DataFrame) -> DataFrame:
     """The flagship query: documents → inverted index.
 
     Output: ``term STRING, postings ARRAY<BIGINT> (sorted, distinct),
@@ -105,14 +105,14 @@ def build_index(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     (``reducer/src/processor.py:36-77``; first-wins == set semantics
     here because the payload is just doc_id — SURVEY.md §7.4).
     """
-    pairs = doc_terms(docs, text_col, id_col)
+    pairs = doc_terms(docs)
     return pairs.groupBy("term").agg(
         F.sort_array(F.collect_set("doc_id")).alias("postings"),
         F.count("*").alias("df"),
     )
 
 
-def doc_freq(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def doc_freq(docs: DataFrame) -> DataFrame:
     """Document frequency per term (no postings payload).
 
     The array-free aggregate — at 100 TB you compute stats like this
@@ -120,18 +120,18 @@ def doc_freq(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") ->
     count per partition, so shuffle volume is O(distinct terms).
     """
     return (
-        doc_terms(docs, text_col, id_col)
+        doc_terms(docs)
         .groupBy("term")
         .agg(F.count("*").alias("df"))
     )
 
 
-def index_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def index_stats(docs: DataFrame) -> DataFrame:
     """Corpus-level counters — the reference's metadata block
     (``mapper/src/processor.py:62,121``, ``reducer/src/processor.py:103``)
     as one aggregate row: total postings, distinct terms, documents.
     """
-    pairs = doc_terms(docs, text_col, id_col)
+    pairs = doc_terms(docs)
     return pairs.agg(
         F.count("*").alias("num_postings"),
         F.countDistinct("term").alias("num_terms"),
@@ -164,8 +164,6 @@ def write_index_tables(
     path: str,
     *,
     buckets: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     prefix: str = "mii",
 ) -> tuple[str, str]:
     """Materialize the BUCKETED index tier: the postings index and the
@@ -182,12 +180,12 @@ def write_index_tables(
     """
     index_name = f"{prefix}_index_b{buckets}"
     tf_name = f"{prefix}_tf_b{buckets}"
-    (build_index(docs, text_col, id_col)
+    (build_index(docs)
         .write.mode("overwrite")
         .bucketBy(buckets, "term").sortBy("term")
         .option("path", f"{path}/index")
         .saveAsTable(index_name))
-    (doc_term_freq(docs, text_col, id_col)
+    (doc_term_freq(docs)
         .write.mode("overwrite")
         .bucketBy(buckets, "term").sortBy("term")
         .option("path", f"{path}/tf")
@@ -200,8 +198,6 @@ def write_doc_tables(
     path: str,
     *,
     buckets: int = 16,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     prefix: str = "mii",
 ) -> tuple[str, str]:
     """Materialize the DOC-keyed co-located bucket tier — the
@@ -222,7 +218,7 @@ def write_doc_tables(
     """
     tf_name = f"{prefix}_dtf_b{buckets}"
     dlen_name = f"{prefix}_dlen_b{buckets}"
-    tf = doc_term_freq(docs, text_col, id_col)
+    tf = doc_term_freq(docs)
     (tf.write.mode("overwrite")
         .bucketBy(buckets, "doc_id").sortBy("doc_id")
         .option("path", f"{path}/dtf")

@@ -97,17 +97,17 @@ def decode_image(payload: bytes) -> object:
     raise NotImplementedError("unreachable in this container")
 
 
-def as_media_table(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def as_media_table(docs: DataFrame) -> DataFrame:
     """Deterministic media table derived from ``documents``: payload =
     utf-8 bytes of the text, kind cycles image/audio/video/text.
     Stands in for a real multimodal corpus with byte-true payloads."""
     kind = F.element_at(
         F.lit(["image", "audio", "video", "text"]),
-        (F.col(id_col) % 4 + 1).cast("int"),
+        (F.col("doc_id") % 4 + 1).cast("int"),
     )
-    payload = F.encode(F.col(text_col), "UTF-8")
+    payload = F.encode(F.col("text"), "UTF-8")
     return docs.select(
-        F.col(id_col).alias("media_id"),
+        F.col("doc_id").alias("media_id"),
         kind.alias("kind"),
         payload.alias("payload"),
         F.struct(
@@ -128,7 +128,7 @@ def media_stats(media: DataFrame) -> DataFrame:
     )
 
 
-def extract_features(media: DataFrame, dim: int = FEATURE_DIM) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Feature extraction over binary payloads via ``mapInPandas``
     (Arrow-batched; one Python round-trip per batch, not per row).
 
@@ -156,7 +156,7 @@ def extract_features(media: DataFrame, dim: int = FEATURE_DIM) -> DataFrame:
                 arr = np.frombuffer(payload, dtype=np.uint8)
                 n = int(arr.size)
                 if n == 0:
-                    feats.append([0.0] * dim)
+                    feats.append([0.0] * FEATURE_DIM)
                     continue
                 s = int(arr.sum(dtype=np.int64))
                 ss = int((arr.astype(np.int64) ** 2).sum())
@@ -170,7 +170,7 @@ def extract_features(media: DataFrame, dim: int = FEATURE_DIM) -> DataFrame:
                     int((arr > 96).sum()) / n,
                     float(int(arr[0])),
                 ]
-                feats.append(base[:dim])
+                feats.append(base[:FEATURE_DIM])
             yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],
@@ -266,12 +266,12 @@ def resize_payloads(media: DataFrame, out_len: int = 16) -> DataFrame:
     return media.mapInPandas(resizer, schema=schema)
 
 
-def media_phash(media: DataFrame, blocks: int = PHASH_BITS) -> DataFrame:
+def media_phash(media: DataFrame) -> DataFrame:
     """Perceptual hash over binary payloads: the aHash scheme (pHash
     family) applied at the byte level — split the payload into
-    ``blocks`` equal spans, set bit b iff span b's mean byte value is
-    ≥ the payload's global mean. Output: ``media_id, phash``
-    (``blocks``-bit BIGINT).
+    ``PHASH_BITS`` equal spans, set bit b iff span b's mean byte value
+    is ≥ the payload's global mean. Output: ``media_id, phash``
+    (``PHASH_BITS``-bit BIGINT).
 
     A real image pipeline computes the same bits over an 8×8
     downsampled luma plane after decode; the decode step is this
@@ -300,13 +300,13 @@ def media_phash(media: DataFrame, blocks: int = PHASH_BITS) -> DataFrame:
             "+ instr('0123456789abcdef', substr(_hx, 2*i, 1)) - 1)"
         ),
     ).withColumn("_total", F.expr("aggregate(_bytes, 0L, (a, x) -> a + x)"))
-    span_len = f"(((blk + 1) * _n) div {blocks}) - ((blk * _n) div {blocks})"
+    span_len = f"(((blk + 1) * _n) div {PHASH_BITS}) - ((blk * _n) div {PHASH_BITS})"
     span_sum = (
-        f"aggregate(slice(_bytes, cast((blk * _n) div {blocks} as int) + 1, "
+        f"aggregate(slice(_bytes, cast((blk * _n) div {PHASH_BITS} as int) + 1, "
         f"cast({span_len} as int)), 0L, (a, x) -> a + x)"
     )
     phash = F.expr(
-        f"aggregate(sequence(0, {blocks - 1}), 0L, (acc, blk) -> acc + "
+        f"aggregate(sequence(0, {PHASH_BITS - 1}), 0L, (acc, blk) -> acc + "
         f"CASE WHEN {span_len} > 0 AND {span_sum} * _n >= _total * ({span_len}) "
         f"THEN shiftleft(1L, cast(blk as int)) ELSE 0L END)"
     )
@@ -316,7 +316,6 @@ def media_phash(media: DataFrame, blocks: int = PHASH_BITS) -> DataFrame:
 def media_phash_near_dup(
     media: DataFrame,
     max_hamming: int = 3,
-    sigs: DataFrame | None = None,
 ) -> DataFrame:
     """Near-duplicate media pairs: ``media_a, media_b, hamming`` for
     all pairs with ``Hamming(phash) ≤ max_hamming`` — found by the
@@ -342,7 +341,7 @@ def media_phash_near_dup(
     # CANDIDATE ROW — measured 264 s vs ~4 s on 500 docs. Same
     # hazard class as word_shingles' CollapseProject lesson
     # (dedup.py); at 100 TB the signatures are a written table.
-    sigs = sigs if sigs is not None else media_phash(media).persist()
+    sigs = media_phash(media).persist()
     band_structs = F.array(
         *[
             F.struct(

@@ -44,8 +44,6 @@ __all__ = [
 def doc_passages(
     docs: DataFrame,
     k: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """One row per non-overlapping ``k``-word passage:
     ``doc_id, pos (1-based token offset), passage_hash``.
@@ -61,7 +59,7 @@ def doc_passages(
     shuffle row at (32-char hash, ids) — passage text never leaves
     the map side.
     """
-    d = docs.select(F.col(id_col).alias("doc_id"), tokenize(text_col).alias("toks"))
+    d = docs.select(F.col("doc_id").alias("doc_id"), tokenize("text").alias("toks"))
     starts = d.where(F.size("toks") > 0).select(
         "doc_id",
         "toks",
@@ -82,8 +80,6 @@ def chunk_documents(
     docs: DataFrame,
     width: int = 64,
     stride: int = 48,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """RAG-ingest chunking: OVERLAPPING ``width``-word windows every
     ``stride`` words (stride < width ⇒ width−stride words of overlap,
@@ -111,7 +107,7 @@ def chunk_documents(
     token array is materialized by the generator, then sliced —
     never re-tokenized per chunk.
     """
-    d = docs.select(F.col(id_col).alias("doc_id"), tokenize(text_col).alias("toks"))
+    d = docs.select(F.col("doc_id").alias("doc_id"), tokenize("text").alias("toks"))
     starts = d.where(F.size("toks") > 0).select(
         "doc_id",
         "toks",
@@ -132,8 +128,6 @@ def chunk_documents(
 def duplicate_spans(
     docs: DataFrame,
     k: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     min_docs: int = 2,
 ) -> DataFrame:
     """Exact SUBSTRING-granularity dedup (the Lee-et-al duplicate-span
@@ -178,7 +172,7 @@ def duplicate_spans(
     from pyspark.sql import Window
 
     d = docs.select(
-        F.col(id_col).alias("doc_id"), tokenize(text_col).alias("toks")
+        F.col("doc_id").alias("doc_id"), tokenize("text").alias("toks")
     )
     # CollapseProject discipline (see doc_passages): materialize toks
     # through the generator, slice after — never re-tokenize per pos
@@ -235,8 +229,6 @@ def passage_doc_freq(
     docs: DataFrame,
     k: int = 8,
     min_docs: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Passages appearing in ≥ ``min_docs`` DISTINCT documents:
     ``passage_hash, n_docs`` — the boilerplate candidate set.
@@ -248,7 +240,7 @@ def passage_doc_freq(
     is bounded by distinct (passage, doc) pairs, not corpus size.
     """
     return (
-        doc_passages(docs, k, text_col, id_col)
+        doc_passages(docs, k)
         .groupBy("passage_hash")
         .agg(F.countDistinct("doc_id").alias("n_docs"))
         .where(F.col("n_docs") >= min_docs)
@@ -259,8 +251,6 @@ def boilerplate_profile(
     docs: DataFrame,
     k: int = 8,
     min_docs: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Per-document boilerplate annotation: ``doc_id, n_passages,
     n_common, retained_ratio`` where ``n_common`` counts passage
@@ -279,7 +269,7 @@ def boilerplate_profile(
     # tokenize + chunk + md5 pass for the broadcast side — the
     # duplicate_spans two-consumer hazard). Persisted for the query's
     # lifetime; LRU-evicted, clearCache drops it.
-    passages = doc_passages(docs, k, text_col, id_col).persist()
+    passages = doc_passages(docs, k).persist()
     common = (
         passages.groupBy("passage_hash")
         .agg(F.countDistinct("doc_id").alias("n_docs"))

@@ -19,6 +19,9 @@ from pyspark.sql import functions as F
 
 __all__ = ["column_profile", "chi_square_independence", "binary_auc", "quantile_normalize", "gini_coefficient", "anova_f", "bootstrap_ci"]
 
+# scores and values quantize to this grid before exact integer math
+_QUANT = 10**6
+
 
 def column_profile(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     """Per-column profile: ``column, n_rows, n_null, n_distinct,
@@ -132,7 +135,6 @@ def binary_auc(
     score_col: F.Column,
     positive_col: F.Column,
     buckets: int = 32,
-    quant: int = 10**6,
 ) -> DataFrame:
     """EXACT ROC-AUC of a score against a binary label at any scale —
     the classifier-eval metric a curation pipeline computes over a
@@ -162,7 +164,7 @@ def binary_auc(
 
     Output (one row): ``n_pos, n_neg, auc``.
     """
-    q = F.floor(score_col.cast("double") * F.lit(float(quant)) + F.lit(0.5)).cast(
+    q = F.floor(score_col.cast("double") * F.lit(float(_QUANT)) + F.lit(0.5)).cast(
         "bigint"
     )
     y = F.when(positive_col, 1).otherwise(0)
@@ -214,7 +216,6 @@ def quantile_normalize(
     id_col: str,
     score_col: F.Column,
     buckets: int = 32,
-    quant: int = 10**6,
 ) -> DataFrame:
     """Quantile (rank) normalization of a score column: each row's
     score becomes its mid-rank percentile ``(below + ties/2) / N``
@@ -238,7 +239,7 @@ def quantile_normalize(
         bucketed_prefix_sum,
     )
 
-    q = F.floor(score_col.cast("double") * F.lit(float(quant)) + F.lit(0.5)).cast(
+    q = F.floor(score_col.cast("double") * F.lit(float(_QUANT)) + F.lit(0.5)).cast(
         "bigint"
     )
     v = df.select(F.col(id_col), q.alias("_q"))
@@ -330,7 +331,6 @@ def anova_f(
     df: DataFrame,
     group_col: str,
     value_col: F.Column,
-    quant: int = 10**6,
 ) -> DataFrame:
     """One-way ANOVA F statistic of a numeric column across a
     categorical grouping — the numeric-by-category association
@@ -351,7 +351,7 @@ def anova_f(
 
     Output (one row): ``n_rows, k_groups, f_stat, eta_sq``.
     """
-    q = F.floor(value_col.cast("double") * F.lit(float(quant)) + F.lit(0.5)).cast(
+    q = F.floor(value_col.cast("double") * F.lit(float(_QUANT)) + F.lit(0.5)).cast(
         "bigint"
     )
     per = (
@@ -401,7 +401,6 @@ def bootstrap_ci(
     key_cols: Sequence[str],
     n_reps: int = 32,
     quant: int = 100,
-    z: float = 1.96,
 ) -> DataFrame:
     """Resampling-based uncertainty for a corpus-scale mean — the
     answer to "the mean moved 0.3% since last snapshot; is that
@@ -430,7 +429,7 @@ def bootstrap_ci(
     2·Var(full mean), so the replicate spread is deflated by √2
     (delete-half jackknife family):
 
-        ci = full_mean ± z · sd_replicates / √2
+        ci = full_mean ± 1.96 · sd_replicates / √2
 
     Output (one row): ``n_rows, n_reps, full_mean, sd_reps, ci_lo,
     ci_hi`` (means rounded to 6; all engine-portable).
@@ -515,7 +514,7 @@ def bootstrap_ci(
         / F.col("n_rows").cast("double")
         / F.lit(float(quant))
     )
-    half = F.lit(float(z)) * sd / F.sqrt(F.lit(2.0))
+    half = F.lit(1.96) * sd / F.sqrt(F.lit(2.0))
     return out.select(
         "n_rows",
         "n_reps",

@@ -25,8 +25,6 @@ __all__ = [
     "join_dim",
     "top_k_per_group",
     "global_top_k",
-    "running_total",
-    "lag_lead",
     "sessionize",
     "ewma",
     "gap_fill_daily",
@@ -38,17 +36,10 @@ __all__ = [
 ]
 
 
-def join_dim(
-    fact: DataFrame,
-    dim: DataFrame,
-    on: str | list[str],
-    how: str = "inner",
-    *,
-    broadcast_dim: bool = True,
-) -> DataFrame:
-    """Fact↔dimension join; dimension broadcast by default so the
+def join_dim(fact: DataFrame, dim: DataFrame, on: str | list[str]) -> DataFrame:
+    """Inner fact↔dimension join; the dimension is broadcast so the
     fact side stays un-shuffled (map-side hash join)."""
-    return fact.join(F.broadcast(dim) if broadcast_dim else dim, on, how)
+    return fact.join(F.broadcast(dim), on)
 
 
 def _cols(cols: Sequence[Column | str]) -> list[Column]:
@@ -60,14 +51,13 @@ def top_k_per_group(
     group_by: Sequence[str],
     order_by: Sequence[Column | str],
     k: int,
-    rank_col: str = "rn",
 ) -> DataFrame:
     """Top-k rows per group via ``row_number``; caller must make
     ``order_by`` a total order (include a unique key)."""
     w = Window.partitionBy(*group_by).orderBy(*_cols(order_by))
     return (
-        df.withColumn(rank_col, F.row_number().over(w))
-        .where(F.col(rank_col) <= k)
+        df.withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") <= k)
     )
 
 
@@ -75,35 +65,6 @@ def global_top_k(df: DataFrame, order_by: Sequence[Column | str], k: int) -> Dat
     """Global top-k — planned as TakeOrderedAndProject, never a full
     cluster-wide sort."""
     return df.orderBy(*_cols(order_by)).limit(k)
-
-
-def running_total(
-    df: DataFrame,
-    group_by: Sequence[str],
-    order_by: Sequence[Column | str],
-    value: Column,
-    alias: str,
-) -> DataFrame:
-    """Cumulative aggregate per group (rows unbounded-preceding..current)."""
-    w = (
-        Window.partitionBy(*group_by)
-        .orderBy(*_cols(order_by))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return df.withColumn(alias, F.sum(value).over(w))
-
-
-def lag_lead(
-    df: DataFrame,
-    group_by: Sequence[str],
-    order_by: Sequence[Column | str],
-    col: str,
-) -> DataFrame:
-    """Previous/next value of ``col`` within each group."""
-    w = Window.partitionBy(*group_by).orderBy(*_cols(order_by))
-    return df.withColumn(f"prev_{col}", F.lag(col).over(w)).withColumn(
-        f"next_{col}", F.lead(col).over(w)
-    )
 
 
 def sessionize(
@@ -193,8 +154,6 @@ def gap_fill_daily(
     key_col: str,
     ts_col: str,
     value_agg: Column,
-    *,
-    day_col: str = "day",
 ) -> DataFrame:
     """Densify a per-key daily series and forward-fill the gaps.
 
@@ -219,23 +178,23 @@ def gap_fill_daily(
     (forward-filled), ``is_gap``.
     """
     daily = (
-        df.withColumn(day_col, F.to_date(F.col(ts_col)))
-        .groupBy(key_col, day_col)
+        df.withColumn("day", F.to_date(F.col(ts_col)))
+        .groupBy(key_col, "day")
         .agg(value_agg.alias("day_value"))
     )
     bounds = daily.groupBy(key_col).agg(
-        F.min(day_col).alias("_d0"), F.max(day_col).alias("_d1")
+        F.min("day").alias("_d0"), F.max("day").alias("_d1")
     )
     spine = bounds.select(
-        key_col, F.explode(F.sequence("_d0", "_d1")).alias(day_col)
+        key_col, F.explode(F.sequence("_d0", "_d1")).alias("day")
     )
     w = (
         Window.partitionBy(key_col)
-        .orderBy(day_col)
+        .orderBy("day")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return (
-        spine.join(daily, [key_col, day_col], "left")
+        spine.join(daily, [key_col, "day"], "left")
         .withColumn("filled_value", F.last("day_value", ignorenulls=True).over(w))
         .withColumn("is_gap", F.col("day_value").isNull())
     )
@@ -294,8 +253,6 @@ def group_trend_slope(
     group_cols: Sequence[str],
     x_col: str,
     y_col: str,
-    *,
-    y_decimal: str = "decimal(18,2)",
 ) -> DataFrame:
     """Per-group least-squares slope + intercept of ``y`` over an
     integer axis ``x`` (the closed-form simple regression — the
@@ -307,7 +264,7 @@ def group_trend_slope(
 
     Engine-exactness: ``x`` is integer (cast to DECIMAL(10,0) so the
     ``x·y`` product type never walks Spark's precision-39
-    allowPrecisionLoss path) and ``y`` is quantized to ``y_decimal``,
+    allowPrecisionLoss path) and ``y`` is quantized to DECIMAL(18,2),
     so all five sufficient statistics (n, Σx, Σy, Σxy, Σx²) are
     EXACT decimals/bigints — order- and partitioning-independent,
     unlike a float covariance which no two engines sum in the same
@@ -320,7 +277,7 @@ def group_trend_slope(
     reduces each partition to 5 numbers per group before the
     shuffle.
     """
-    y = F.col(y_col).cast(y_decimal)
+    y = F.col(y_col).cast("decimal(18,2)")
     x = F.col(x_col).cast("decimal(10,0)")
     sufficient = df.groupBy(*group_cols).agg(
         F.count("*").alias("_n"),

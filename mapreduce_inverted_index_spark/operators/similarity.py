@@ -66,8 +66,6 @@ def brute_force_topk(
     embeddings: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact cosine top-k for each query vector.
 
@@ -76,7 +74,7 @@ def brute_force_topk(
     (self-matches excluded; rounded cosine + id tiebreak keeps the
     ranking deterministic).
     """
-    cand = embeddings.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vec"))
+    cand = embeddings.select(F.col("vec_id").alias("vec_id"), F.col("embedding").alias("vec"))
     scored = (
         cand.crossJoin(F.broadcast(queries))
         .where(F.col("vec_id") != F.col("query_id"))
@@ -96,28 +94,27 @@ def brute_force_topk(
 def embedding_near_dup(
     embeddings: DataFrame,
     threshold: float = 0.4,
-    block_col: str = "label",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_block_rows: int | None = 10_000,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, blocked to bound the
     pair space (same blocking argument as text dedup).
-    Output: ``vec_a, vec_b, cos_sim``.
+    Blocks are ``label`` groups. Output: ``vec_a, vec_b, cos_sim``.
 
-    ``max_block_rows`` bounds per-task time when one block dominates:
+    ``MAX_BLOCK_ROWS`` bounds per-task time when one block dominates:
     oversized blocks are hash-chunked into exact sub-joins (see
     ``dedup.bounded_block_join``); results are unchanged.
     """
-    from mapreduce_inverted_index_spark.operators.dedup import bounded_block_join
+    from mapreduce_inverted_index_spark.operators.dedup import (
+        MAX_BLOCK_ROWS,
+        bounded_block_join,
+    )
 
     e = embeddings.select(
-        F.col(block_col).alias("blk"), F.col(id_col).alias("vid"), F.col(vec_col).alias("v")
+        F.col("label").alias("blk"), F.col("vec_id").alias("vid"), F.col("embedding").alias("v")
     )
     a = e.select(F.col("blk"), F.col("vid").alias("vec_a"), F.col("v").alias("va"))
     b = e.select(F.col("blk"), F.col("vid").alias("vec_b"), F.col("v").alias("vb"))
     return (
-        bounded_block_join(a, b, "blk", "vec_a", "vec_b", max_block_rows)
+        bounded_block_join(a, b, "blk", "vec_a", "vec_b", MAX_BLOCK_ROWS)
         .select(
             "vec_a",
             "vec_b",
@@ -131,8 +128,6 @@ def ivf_multi_assign(
     embeddings: DataFrame,
     cents: DataFrame,
     r: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Soft IVF assignment: each vector indexed under its ``r``
     nearest (max-cosine) cells — one output row per (vector, cell).
@@ -157,7 +152,7 @@ def ivf_multi_assign(
     short-circuits to an empty result — the legacy join's behavior —
     instead of building a degenerate literal.
     """
-    e = embeddings.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vec"))
+    e = embeddings.select(F.col("vec_id").alias("vec_id"), F.col("embedding").alias("vec"))
     rows = [
         (row["cell"], row["centroid"])
         for row in cents.select("cell", "centroid").collect()
@@ -182,11 +177,6 @@ def semantic_dedup_pairs(
     cents: DataFrame | None = None,
     tau: float = 0.4,
     r: int = 3,
-    n_cells: int = 16,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_block_rows: int | None = 10_000,
 ) -> DataFrame:
     """SemDeDup-style semantic near-duplicate pairs: vectors sharing
     at least one of their ``r`` nearest k-means cells, verified
@@ -201,15 +191,18 @@ def semantic_dedup_pairs(
     measured-recall contract against the brute-force anchor, same
     pattern as the pruned IVF probe.
     """
-    from mapreduce_inverted_index_spark.operators.dedup import bounded_block_join
+    from mapreduce_inverted_index_spark.operators.dedup import (
+        MAX_BLOCK_ROWS,
+        bounded_block_join,
+    )
 
     if cents is None:
-        cents = ivf_centroids(embeddings, n_cells, iters, id_col, vec_col)
-    multi = ivf_multi_assign(embeddings, cents, r, id_col, vec_col)
+        cents = ivf_centroids(embeddings)
+    multi = ivf_multi_assign(embeddings, cents, r)
     a = multi.select("cell", F.col("vec_id").alias("a_id"), F.col("vec").alias("va"))
     b = multi.select("cell", F.col("vec_id").alias("b_id"), F.col("vec").alias("vb"))
     return (
-        bounded_block_join(a, b, "cell", "a_id", "b_id", max_block_rows)
+        bounded_block_join(a, b, "cell", "a_id", "b_id", MAX_BLOCK_ROWS)
         .select(
             "a_id",
             "b_id",
@@ -247,13 +240,13 @@ def _hyperplane_sign(vec_col: str, plane: int, dim: int) -> F.Column:
     return F.when(signed >= 0, F.lit(1)).otherwise(F.lit(0))
 
 
-def lsh_signature(vec_col: str, n_planes: int = N_PLANES, dim: int = 64) -> F.Column:
-    """Pack ``n_planes`` hyperplane signs into one integer bucket id.
+def lsh_signature(vec_col: str, dim: int = 64) -> F.Column:
+    """Pack ``N_PLANES`` hyperplane signs into one integer bucket id.
     ``dim`` must EQUAL the vector length (``zip_with`` null-pads any
     length mismatch, which nulls the fold).
 
     Generated as ONE SQL string parsed JVM-side: the Column form
-    built n_planes·dim literal nodes one py4j call at a time (~840
+    built N_PLANES·dim literal nodes one py4j call at a time (~840
     round-trips for 6 planes x 64 dims — seconds of pure plan
     construction on a loaded driver; the simhash_signatures finding,
     OPTIMIZATION_r13 §7). Identical expression tree —
@@ -266,14 +259,14 @@ def lsh_signature(vec_col: str, n_planes: int = N_PLANES, dim: int = 64) -> F.Co
     # literal top-level column here, not F.col's struct-field path.
     quoted = vec_col.replace("`", "``")
     terms = []
-    for p in range(n_planes):
+    for p in range(N_PLANES):
         signs = ", ".join(
             f"{float(s)}D" for s in hyperplane_signs(dim, p)
         )
         terms.append(
             f"IF(aggregate(zip_with(`{quoted}`, array({signs}), "
             "(x, s) -> CAST(x AS DOUBLE) * s), 0D, "
-            f"(acc, v) -> acc + v) >= 0, {1 << (n_planes - 1 - p)}, 0)"
+            f"(acc, v) -> acc + v) >= 0, {1 << (N_PLANES - 1 - p)}, 0)"
         )
     return F.expr(" + ".join(terms))
 
@@ -282,9 +275,6 @@ def lsh_bucket_topk(
     embeddings: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    n_planes: int = N_PLANES,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int | None = None,
 ) -> DataFrame:
     """Approximate top-k: score only candidates in the query's LSH
@@ -298,14 +288,14 @@ def lsh_bucket_topk(
     pass it explicitly in pipelines).
     """
     if dim is None:
-        dim = embeddings.select(F.size(vec_col)).first()[0]
+        dim = embeddings.select(F.size("embedding")).first()[0]
     cand = embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("vec"),
-        lsh_signature(vec_col, n_planes, dim).alias("bucket"),
+        F.col("vec_id").alias("vec_id"),
+        F.col("embedding").alias("vec"),
+        lsh_signature("embedding", dim=dim).alias("bucket"),
     )
     q = queries.select(
-        "query_id", "query_vec", lsh_signature("query_vec", n_planes, dim).alias("bucket")
+        "query_id", "query_vec", lsh_signature("query_vec", dim=dim).alias("bucket")
     )
     scored = (
         cand.join(F.broadcast(q), "bucket")
@@ -370,8 +360,6 @@ def ivf_centroids(
     embeddings: DataFrame,
     n_cells: int = 16,
     iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     checkpoint: bool = True,
 ) -> DataFrame:
     """Deterministic k-means codebook: ``(cell, centroid)``.
@@ -410,7 +398,7 @@ def ivf_centroids(
     corpus short-circuits: the loop stops and the empty ``(cell,
     centroid)`` codebook returns, as the legacy route produced.
     """
-    e = embeddings.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v"))
+    e = embeddings.select(F.col("vec_id").alias("vid"), F.col("embedding").alias("v"))
     seeds = (
         e.select(
             F.pmod(F.xxhash64("vid"), F.lit(n_cells)).alias("bucket"),
@@ -473,8 +461,6 @@ def ivf_centroids(
 def ivf_assign(
     embeddings: DataFrame,
     cents: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Tag every vector with its nearest (max-cosine) cell. At scale
@@ -501,7 +487,7 @@ def ivf_assign(
     short-circuits to an empty result, matching the old join.
     """
     e = embeddings.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vec"), *extra_cols
+        F.col("vec_id").alias("vec_id"), F.col("embedding").alias("vec"), *extra_cols
     )
     rows = [
         (r["cell"], r["centroid"])
@@ -520,9 +506,6 @@ def ivf_topk(
     k: int = 10,
     n_cells: int = 16,
     n_probe: int = 4,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     cents: DataFrame | None = None,
     assigned: DataFrame | None = None,
 ) -> DataFrame:
@@ -542,9 +525,9 @@ def ivf_topk(
     persist partitioned by cell, reuse across probes).
     """
     if cents is None:
-        cents = ivf_centroids(embeddings, n_cells, iters, id_col, vec_col)
+        cents = ivf_centroids(embeddings, n_cells)
     if assigned is None:
-        assigned = ivf_assign(embeddings, cents, id_col, vec_col)
+        assigned = ivf_assign(embeddings, cents)
     pw = Window.partitionBy("query_id").orderBy(F.desc("cos_c"), F.asc("cell"))
     probes = (
         queries.crossJoin(F.broadcast(cents))
@@ -574,9 +557,7 @@ def ivf_topk(
     )
 
 
-def write_ivf_cells(
-    assigned: DataFrame, path: str, files_per_cell: int = 1
-) -> None:
+def write_ivf_cells(assigned: DataFrame, path: str) -> None:
     """Materialize the cell-tagged corpus ``partitionBy(cell)`` —
     the IVF build artifact. After this write, a probe of p cells
     reads p directories and nothing else (``PartitionFilters`` on
@@ -593,30 +574,17 @@ def write_ivf_cells(
     A hash ``repartition`` on the cell key first clusters each cell
     into ONE write task (the compaction path's layout, see
     ``_compact_cells``), and ``sortWithinPartitions(vec_id)`` makes
-    the per-file vec_id min/max stats tight and the layout canonical.
-    ``files_per_cell > 1`` salts the repartition key
-    (deterministically, ``pmod(xxhash64(vec_id))`` — guide §2.5) so a
-    cell bigger than one sensible output file splits into a bounded
-    number of pieces; the per-test/bench default of one file per cell
-    is right whenever a cell fits a single file (clusters size it as
-    ~cell_bytes / target_file_size)."""
+    the per-file vec_id min/max stats tight and the layout canonical."""
     from mapreduce_inverted_index_spark.operators.store import seed_store
 
-    if files_per_cell > 1:
-        clustered = assigned.repartition(
-            F.col("cell"),
-            F.pmod(F.xxhash64("vec_id"), F.lit(files_per_cell)),
-        )
-    else:
-        clustered = assigned.repartition("cell")
-    seed_store(clustered.sortWithinPartitions("vec_id"), path, "cell")
+    clustered = assigned.repartition("cell").sortWithinPartitions("vec_id")
+    seed_store(clustered, path, "cell")
 
 
 def delete_from_ivf_cells(
     spark,
     path: str,
     vec_ids: "list[int] | DataFrame",
-    id_col: str = "vec_id",
 ) -> list[int]:
     """Takedown from the IVF cell store — the DELETE half of the
     embedding-state maintenance pair (:func:`write_ivf_cells` /
@@ -645,7 +613,7 @@ def delete_from_ivf_cells(
     )
 
     if isinstance(vec_ids, DataFrame):
-        dead = vec_ids.select(F.col(id_col).alias("vec_id"))
+        dead = vec_ids.select(F.col("vec_id").alias("vec_id"))
     else:
         dead = spark.createDataFrame(
             [(int(v),) for v in vec_ids], "vec_id bigint"
@@ -778,8 +746,6 @@ def ivf_pruned_scan_topk(
 
 def quantize_embeddings(
     embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Symmetric int8 scalar quantization: per-vector scale =
@@ -794,7 +760,7 @@ def quantize_embeddings(
     them back to zeros). Output: ``(vec_id, *extra_cols, scale,
     qvec ARRAY<INT>)``.
     """
-    v = F.col(vec_col)
+    v = F.col("embedding")
     scale = F.array_max(F.transform(v, lambda x: F.abs(x.cast("double")))) / 127.0
     qvec = F.when(scale == 0.0, F.transform(v, lambda x: F.lit(0))).otherwise(
         F.transform(
@@ -802,7 +768,7 @@ def quantize_embeddings(
         )
     )
     return embeddings.select(
-        F.col(id_col).alias("vec_id"),
+        F.col("vec_id").alias("vec_id"),
         *extra_cols,
         scale.alias("scale"),
         qvec.alias("qvec"),
@@ -821,8 +787,6 @@ def quantized_rerank_topk(
     queries: DataFrame,
     k: int = 10,
     m: int = 32,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Two-stage ANN: score candidates on the int8-QUANTIZED vectors
     (the 4×-smaller store a 100 TB probe actually scans — see
@@ -843,7 +807,7 @@ def quantized_rerank_topk(
     (exact), rank``; self-matches excluded, rounded-cosine + id
     tiebreaks at both stages.
     """
-    qt = quantize_embeddings(embeddings, id_col=id_col, vec_col=vec_col)
+    qt = quantize_embeddings(embeddings)
     cand = qt.select(
         "vec_id", dequantize("qvec", "scale").alias("deq")
     )
@@ -864,7 +828,7 @@ def quantized_rerank_topk(
     )
     exact = (
         embeddings.select(
-            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vec")
+            F.col("vec_id").alias("vec_id"), F.col("embedding").alias("vec")
         )
         .join(F.broadcast(shortlist), "vec_id")
         .join(
@@ -883,11 +847,7 @@ def quantized_rerank_topk(
     )
 
 
-def label_centroids(
-    embeddings: DataFrame,
-    label_col: str = "label",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def label_centroids(embeddings: DataFrame) -> DataFrame:
     """Per-label centroid components, computed order-independently.
 
     ``posexplode`` → quantize each component to DECIMAL(18,6) → one
@@ -905,8 +865,8 @@ def label_centroids(
     Output: ``label, dim, c DECIMAL(18,9)`` (centroid component).
     """
     comp = embeddings.select(
-        F.col(label_col).alias("label"),
-        F.posexplode(vec_col).alias("dim", "v"),
+        F.col("label").alias("label"),
+        F.posexplode("embedding").alias("dim", "v"),
     ).select(
         "label",
         "dim",
@@ -919,11 +879,7 @@ def label_centroids(
     )
 
 
-def label_centroid_cosines(
-    embeddings: DataFrame,
-    label_col: str = "label",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def label_centroid_cosines(embeddings: DataFrame) -> DataFrame:
     """Pairwise cosine similarity between label centroids — the
     class-confusability matrix of a labeled embedding corpus.
 
@@ -933,7 +889,7 @@ def label_centroid_cosines(
     the centroids themselves. Output: ``label_a, label_b, cosine``
     (label_a < label_b).
     """
-    cent = label_centroids(embeddings, label_col, vec_col)
+    cent = label_centroids(embeddings)
     a = cent.select(
         "dim", F.col("label").alias("label_a"), F.col("c").alias("ca")
     )
@@ -963,9 +919,6 @@ def hard_negatives(
     embeddings: DataFrame,
     anchors: DataFrame,
     k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
 ) -> DataFrame:
     """Hard-negative mining for contrastive training: for each anchor
     vector, the ``k`` most-cosine-similar corpus vectors with a
@@ -985,9 +938,9 @@ def hard_negatives(
     deterministic (rounded-cosine, id) tiebreak.
     """
     cand = embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("vec"),
-        F.col(label_col).alias("_lbl"),
+        F.col("vec_id").alias("vec_id"),
+        F.col("embedding").alias("vec"),
+        F.col("label").alias("_lbl"),
     )
     scored = (
         cand.crossJoin(F.broadcast(anchors))
@@ -1012,7 +965,6 @@ def hard_negatives_ivf(
     anchors: DataFrame,
     k: int = 3,
     n_probe: int = 4,
-    label_col: str = "label",
 ) -> DataFrame:
     """Hard-negative mining over the IVF cell layout — the
     corpus-scale candidate path :func:`hard_negatives`'s docstring
@@ -1061,7 +1013,7 @@ def hard_negatives_ivf(
     scanned = snap.where(F.col("cell").isin(cells))
     scored = (
         scanned.join(F.broadcast(probes), "cell")
-        .where(F.col(label_col) != F.col("query_label"))
+        .where(F.col("label") != F.col("query_label"))
         .select(
             "query_id",
             "vec_id",
@@ -1169,8 +1121,6 @@ def gram_matrix(
 def pca_project(
     emb: DataFrame,
     k: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """PCA projection of the embedding corpus onto its top-``k``
     principal components — dimensionality reduction before ANN /
@@ -1190,7 +1140,7 @@ def pca_project(
     the sum of dropped eigenvalues (checked in the catalog's
     contract query and tests).
 
-    Output: ``<id_col>, proj ARRAY<DOUBLE>`` (length k). Eigenvector
+    Output: ``vec_id, proj ARRAY<DOUBLE>`` (length k). Eigenvector
     sign is fixed by forcing each component's largest-|coordinate|
     entry positive, so results are deterministic across runs.
     """
@@ -1202,7 +1152,7 @@ def pca_project(
         for pdf in batches:
             if not len(pdf):
                 continue
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             n += mat.shape[0]
             s = mat.sum(0) if s is None else s + mat.sum(0)
             gg = mat.T @ mat
@@ -1219,7 +1169,7 @@ def pca_project(
             )
 
     agg = (
-        emb.select(vec_col)
+        emb.select("embedding")
         .mapInPandas(stats, schema="i int, j int, v double")
         .groupBy("i", "j")
         .agg(F.sum("v").alias("v"))
@@ -1250,17 +1200,17 @@ def pca_project(
         for pdf in batches:
             if not len(pdf):
                 continue
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             y = (mat - m) @ c
-            yield pd.DataFrame({"_pid": pdf[id_col], "proj": list(y)})
+            yield pd.DataFrame({"_pid": pdf["vec_id"], "proj": list(y)})
 
     # id schema follows the input column's type (string keys, int32
     # ids, ...) so the Arrow pass never casts through long
-    id_type = emb.schema[id_col].dataType.simpleString()
-    out = emb.select(id_col, vec_col).mapInPandas(
+    id_type = emb.schema["vec_id"].dataType.simpleString()
+    out = emb.select("vec_id", "embedding").mapInPandas(
         project, schema=f"_pid {id_type}, proj array<double>"
     )
-    return out.withColumnRenamed("_pid", id_col)
+    return out.withColumnRenamed("_pid", "vec_id")
 
 
 def semantic_incremental_dedup(
@@ -1269,8 +1219,6 @@ def semantic_incremental_dedup(
     cents: DataFrame,
     tau: float = 0.4,
     r: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     broadcast: "bool | str" = "auto",
     broadcast_max_rows: int = 100_000,
 ) -> DataFrame:
@@ -1307,7 +1255,7 @@ def semantic_incremental_dedup(
     measured-recall contract against the brute-force anchor, same
     pattern as ``semantic_dedup_contract``.
     """
-    multi = ivf_multi_assign(new_embeddings, cents, r, id_col, vec_col)
+    multi = ivf_multi_assign(new_embeddings, cents, r)
     a = multi.select(
         "cell", F.col("vec_id").alias("new_id"), F.col("vec").alias("va")
     )

@@ -47,17 +47,16 @@ def hll_rollup(
     keys: Sequence[str],
     bucket: Column,
     value: str,
-    lgk: int = 12,
 ) -> DataFrame:
     """Per-(keys, bucket) HLL sketches of ``value``.
 
     One pass over the raw data, map-side partial sketch merges, and
-    the output is O(|keys| × |buckets|) rows of ≤ 2^lgk-byte blobs —
+    the output is O(|keys| × |buckets|) rows of ≤ 2^12-byte blobs (lgK 12) —
     the thing you persist so the raw scan never happens again.
     Output: ``*keys, bucket, sketch BINARY``.
     """
     return df.groupBy(*keys, bucket.alias("bucket")).agg(
-        F.hll_sketch_agg(value, F.lit(lgk)).alias("sketch")
+        F.hll_sketch_agg(value, F.lit(12)).alias("sketch")
     )
 
 
@@ -75,9 +74,7 @@ def hll_merge(sketches: DataFrame, keys: Sequence[str],
     )
 
 
-def frequent_items(
-    items: DataFrame, col: str, phi: float, counters_factor: int = 2
-) -> DataFrame:
+def frequent_items(items: DataFrame, col: str, phi: float) -> DataFrame:
     """EXACT φ-heavy hitters (every item with frequency ≥ φ·N) found
     without ever shuffling the full key space — the two-phase
     sketch-then-verify pattern that replaces a full ``groupBy(key)``
@@ -85,7 +82,7 @@ def frequent_items(
     billions but the answer is tiny.
 
     Phase 1 — candidates: one narrow ``mapInPandas`` pass runs a
-    Misra-Gries summary per partition (k = counters_factor/φ
+    Misra-Gries summary per partition (k = 2/φ
     counters; batch-level exact counts merged with the standard
     MG-merge: add, subtract the (k+1)-th largest, drop ≤ 0). MG
     undercounts by at most n_p/(k+1), and an item with global
@@ -127,7 +124,7 @@ def frequent_items(
 
     if not (0.0 < phi < 1.0):
         raise ValueError(f"phi must be in (0, 1), got {phi}")
-    k = int(math.ceil(counters_factor / phi))
+    k = int(math.ceil(2 / phi))
 
     def mg_partition(batches):
         # Counters live in a pandas Series (index = item, value =
@@ -197,15 +194,13 @@ def approx_quantiles_rank_checked(
     key: str,
     value: str,
     qs: Sequence[float],
-    accuracy: int = 10_000,
-    slack: float = 0.01,
 ) -> DataFrame:
     """Approximate per-group quantiles with a self-verifying rank bound.
 
-    ``approx_percentile`` guarantees rank error ≤ 1/accuracy, not
+    ``approx_percentile`` guarantees rank error ≤ 1/accuracy (10 000 here), not
     value error — so the checkable contract is on RANK: for each
     group and q, the fraction of rows ≤ the approximate value must
-    sit within ``1/accuracy + slack`` of q. Output: ``<key>, q,
+    sit within ``1/accuracy + 0.01`` of q. Output: ``<key>, q,
     within_tol`` — every row TRUE unless the sketch breaks its own
     guarantee.
 
@@ -215,7 +210,7 @@ def approx_quantiles_rank_checked(
     """
     qarr = F.array(*[F.lit(float(q)) for q in qs])
     approx = df.groupBy(key).agg(
-        F.approx_percentile(value, qarr, F.lit(accuracy)).alias("vals")
+        F.approx_percentile(value, qarr, F.lit(10_000)).alias("vals")
     )
     per_q = approx.select(
         key,
@@ -233,7 +228,7 @@ def approx_quantiles_rank_checked(
             ).alias("rank_frac")
         )
     )
-    tol = 1.0 / accuracy + slack
+    tol = 1.0 / 10_000 + 0.01  # the sketch's rank bound plus slack
     return ranked.select(
         key,
         "q",

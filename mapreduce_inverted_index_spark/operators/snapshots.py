@@ -33,14 +33,12 @@ def snapshot_merge(
     base: DataFrame,
     delta: DataFrame,
     key_cols: list[str],
-    version_col: str = "_version",
-    deleted_col: str = "_deleted",
 ) -> DataFrame:
     """Last-writer-wins MERGE: one surviving row per key — the
-    highest ``version_col`` across base ∪ delta (ties broken toward
+    highest ``_version`` across base ∪ delta (ties broken toward
     the delta side, then by a stable hash of the row so the result
     is total-order deterministic) — with tombstoned keys
-    (``deleted_col`` true on the winner) dropped entirely.
+    (``_deleted`` true on the winner) dropped entirely.
 
     Shape at scale: ONE shuffle on the merge key (the window's
     partitionBy); the delta never needs to fit in memory and the
@@ -50,7 +48,7 @@ def snapshot_merge(
     merge) for the index-side equivalent.
 
     Both inputs must share a schema containing ``key_cols``,
-    ``version_col`` and ``deleted_col``. The final tiebreak hashes
+    ``_version`` and ``_deleted``. The final tiebreak hashes
     the WHOLE row (not the key — that is constant within the window
     partition), so even two same-key same-version rows on the same
     side resolve identically under any partitioning or retry.
@@ -62,14 +60,14 @@ def snapshot_merge(
         F.concat_ws("\x1f", *[F.col(c).cast("string") for c in base.columns])
     )
     w = Window.partitionBy(*key_cols).orderBy(
-        F.col(version_col).desc(),
+        F.col("_version").desc(),
         F.col("_src").desc(),
         row_hash,
     )
     return (
         tagged.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
-        .where(~F.col(deleted_col))
+        .where(~F.col("_deleted"))
         .drop("_rn", "_src")
     )
 
@@ -135,8 +133,6 @@ def _md5_long(col: F.Column) -> F.Column:
 def shard_manifest(
     df: DataFrame,
     n_shards: int,
-    id_col: str = "doc_id",
-    bytes_col: str | None = "n_chars",
 ) -> DataFrame:
     """Training-shard manifest: assign every row to
     ``md5(id) mod n_shards`` and roll up per shard: ``shard,
@@ -149,18 +145,13 @@ def shard_manifest(
     shards of near-equal size — md5 equidistributes ids regardless
     of id clustering, which range-partitioning would inherit).
     """
-    shard = F.pmod(_md5_long(F.col(id_col)), F.lit(n_shards)).alias("shard")
-    size = (
-        F.sum(F.col(bytes_col)).alias("total_bytes")
-        if bytes_col
-        else F.count("*").alias("total_bytes")
-    )
+    shard = F.pmod(_md5_long(F.col("doc_id")), F.lit(n_shards)).alias("shard")
     return (
-        df.select(shard, F.col(id_col).alias("_id"), "*")
+        df.select(shard, F.col("doc_id").alias("_id"), "*")
         .groupBy("shard")
         .agg(
             F.count("*").alias("n_rows"),
-            size,
+            F.sum("n_chars").alias("total_bytes"),
             F.min("_id").alias("min_id"),
             F.max("_id").alias("max_id"),
         )
@@ -171,7 +162,6 @@ def group_sample(
     df: DataFrame,
     group_col: str,
     n_per_group: int,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Deterministic uniform-ish sample of ``n_per_group`` rows per
     group: rank rows inside each group by ``md5(id)`` (a fixed
@@ -187,7 +177,7 @@ def group_sample(
     ``sample_rank``.
     """
     w = Window.partitionBy(group_col).orderBy(
-        F.md5(F.col(id_col).cast("string")), F.col(id_col)
+        F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
     )
     return (
         df.withColumn("sample_rank", F.row_number().over(w))

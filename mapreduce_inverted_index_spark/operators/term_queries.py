@@ -92,8 +92,7 @@ def prefix_query(spark, index_table: str, prefix: str) -> DataFrame:
     )
 
 
-def and_query(docs: DataFrame, terms_wanted: list[str],
-              text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def and_query(docs: DataFrame, terms_wanted: list[str]) -> DataFrame:
     """Docs containing ALL the given terms (postings intersection).
 
     Relational form: filter pairs to the wanted terms, then require
@@ -101,7 +100,7 @@ def and_query(docs: DataFrame, terms_wanted: list[str],
     One narrow filter + one small-keyspace aggregate — no index
     materialization needed, and the filter prunes before any shuffle.
     """
-    pairs = doc_terms(docs, text_col, id_col)
+    pairs = doc_terms(docs)
     return (
         pairs.where(F.col("term").isin(terms_wanted))
         .groupBy("doc_id")
@@ -111,10 +110,9 @@ def and_query(docs: DataFrame, terms_wanted: list[str],
     )
 
 
-def or_query(docs: DataFrame, terms_wanted: list[str],
-             text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def or_query(docs: DataFrame, terms_wanted: list[str]) -> DataFrame:
     """Docs containing ANY of the given terms (postings union)."""
-    pairs = doc_terms(docs, text_col, id_col)
+    pairs = doc_terms(docs)
     return (
         pairs.where(F.col("term").isin(terms_wanted))
         .select("doc_id")
@@ -122,18 +120,16 @@ def or_query(docs: DataFrame, terms_wanted: list[str],
     )
 
 
-def not_query(docs: DataFrame, include_term: str, exclude_term: str,
-              text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def not_query(docs: DataFrame, include_term: str, exclude_term: str) -> DataFrame:
     """Docs with ``include_term`` but NOT ``exclude_term``
     (postings difference) — a left-anti join on doc_id."""
-    pairs = doc_terms(docs, text_col, id_col)
+    pairs = doc_terms(docs)
     inc = pairs.where(F.col("term") == include_term).select("doc_id")
     exc = pairs.where(F.col("term") == exclude_term).select("doc_id")
     return inc.join(exc, "doc_id", "left_anti")
 
 
-def tf_idf(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-           round_to: int = 4) -> DataFrame:
+def tf_idf(docs: DataFrame) -> DataFrame:
     """tf-idf score per (doc_id, term).
 
     tf = raw in-doc term count (duplicates preserved through the
@@ -149,9 +145,9 @@ def tf_idf(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     """
     from mapreduce_inverted_index_spark.operators.inverted_index import doc_term_freq
 
-    tf = doc_term_freq(docs, text_col, id_col).persist()
+    tf = doc_term_freq(docs).persist()
     df_ = tf.groupBy("term").agg(F.count("*").alias("df"))
-    total = docs.agg(F.countDistinct(id_col).alias("n_docs"))
+    total = docs.agg(F.countDistinct("doc_id").alias("n_docs"))
     return (
         tf.join(df_, "term")
         .crossJoin(F.broadcast(total))
@@ -160,14 +156,13 @@ def tf_idf(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
             "term",
             "tf",
             "df",
-            F.round(F.col("tf") * F.log(F.col("n_docs") / F.col("df")), round_to)
+            F.round(F.col("tf") * F.log(F.col("n_docs") / F.col("df")), 4)
              .alias("tfidf"),
         )
     )
 
 
-def positional_terms(docs: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
+def positional_terms(docs: DataFrame) -> DataFrame:
     """(doc_id, pos, term) over raw normalized tokens — the positional
     stream the reference's mapper drops (``mapper/src/processor.py:190``
     keeps only ``set(terms)``). Positions are offsets in the full
@@ -176,13 +171,12 @@ def positional_terms(docs: DataFrame, text_col: str = "text",
     from mapreduce_inverted_index_spark.functions.text import tokenize
 
     return docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(tokenize(text_col)).alias("pos", "term"),
+        F.col("doc_id").alias("doc_id"),
+        F.posexplode(tokenize("text")).alias("pos", "term"),
     )
 
 
-def positional_index(docs: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
+def positional_index(docs: DataFrame) -> DataFrame:
     """Positional inverted index: ``term → [(doc_id, positions)]``.
 
     The next index shape up from the reference's doc-only postings —
@@ -193,7 +187,7 @@ def positional_index(docs: DataFrame, text_col: str = "text",
     positions ARRAY<INT>>> (both levels sorted), df``.
     """
     per_doc = (
-        positional_terms(docs, text_col, id_col)
+        positional_terms(docs)
         .groupBy("term", "doc_id")
         .agg(F.sort_array(F.collect_list(F.col("pos").cast("int"))).alias("positions"))
     )
@@ -205,8 +199,7 @@ def positional_index(docs: DataFrame, text_col: str = "text",
     )
 
 
-def phrase_query(docs: DataFrame, phrase: list[str], text_col: str = "text",
-                 id_col: str = "doc_id") -> DataFrame:
+def phrase_query(docs: DataFrame, phrase: list[str]) -> DataFrame:
     """Exact-phrase query: docs where ``phrase`` occurs as consecutive
     tokens. Output: ``doc_id, n_occurrences``.
 
@@ -225,7 +218,7 @@ def phrase_query(docs: DataFrame, phrase: list[str], text_col: str = "text",
         [(w, j) for j, w in enumerate(phrase)], "term string, slot int"
     )
     hits = (
-        positional_terms(docs, text_col, id_col)
+        positional_terms(docs)
         .join(F.broadcast(slots), "term")
         .select("doc_id", (F.col("pos") - F.col("slot")).alias("start"))
     )
@@ -242,9 +235,7 @@ def phrase_query(docs: DataFrame, phrase: list[str], text_col: str = "text",
 
 
 def bm25_rank(docs: DataFrame, query_terms: list[str], *, k1: float = 1.2,
-              b: float = 0.75, k: int = 10, text_col: str = "text",
-              id_col: str = "doc_id",
-              tf: DataFrame | None = None,
+              b: float = 0.75, k: int = 10, tf: DataFrame | None = None,
               dl: DataFrame | None = None) -> DataFrame:
     """Okapi BM25 top-k ranking for a bag-of-terms query.
 
@@ -276,7 +267,7 @@ def bm25_rank(docs: DataFrame, query_terms: list[str], *, k1: float = 1.2,
     from mapreduce_inverted_index_spark.operators.inverted_index import doc_term_freq
 
     if tf is None:
-        tf = doc_term_freq(docs, text_col, id_col).persist()
+        tf = doc_term_freq(docs).persist()
     if dl is None:
         dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl")).persist()
     else:
@@ -335,8 +326,6 @@ def tfidf_cosine_pairs(
     docs: DataFrame,
     threshold: float = 0.3,
     max_df: int | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """All-pairs document cosine similarity over tf-idf vectors via a
     posting-list join — the classic sparse similarity join (and the
@@ -368,7 +357,7 @@ def tfidf_cosine_pairs(
     """
     from mapreduce_inverted_index_spark.operators.inverted_index import doc_term_freq
 
-    tf = doc_term_freq(docs, text_col, id_col).persist()
+    tf = doc_term_freq(docs).persist()
     n_docs = docs.agg(F.count("*").alias("n_docs"))
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
     if max_df is not None:
@@ -417,15 +406,14 @@ def tfidf_cosine_pairs(
     )
 
 
-def top_k_terms(docs: DataFrame, k: int = 25,
-                text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def top_k_terms(docs: DataFrame, k: int = 25) -> DataFrame:
     """Top-k terms by document frequency (ties broken by term) —
     sort + limit on an already-tiny aggregate, so the global sort is
     cheap regardless of corpus size."""
     from mapreduce_inverted_index_spark.operators.inverted_index import doc_freq
 
     return (
-        doc_freq(docs, text_col, id_col)
+        doc_freq(docs)
         .orderBy(F.desc("df"), F.asc("term"))
         .limit(k)
     )

@@ -61,15 +61,15 @@ def _marker_hits(toks: Column, words: tuple[str, ...]) -> Column:
     return F.size(F.filter(toks, lambda t: t.isin(*words)))
 
 
-def language_id(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def language_id(docs: DataFrame) -> DataFrame:
     """Marker-word language ID: per-language evidence counts and an
     argmax prediction ('und' — undetermined — when no marker hits).
 
     Output: ``doc_id, hits_de, hits_en, hits_es, hits_fr,
     pred_lang``. Tie-break: language code ascending (deterministic).
     """
-    toks = tokenize(text_col)
-    d = docs.select(F.col(id_col).alias("doc_id"), toks.alias("toks"))
+    toks = tokenize("text")
+    d = docs.select(F.col("doc_id").alias("doc_id"), toks.alias("toks"))
     hit_cols = {lang: _marker_hits(F.col("toks"), ws) for lang, ws in LANG_MARKERS.items()}
     out = d.select(
         "doc_id", *[c.alias(f"hits_{lang}") for lang, c in hit_cols.items()]
@@ -81,7 +81,7 @@ def language_id(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     return out.withColumn("pred_lang", pred)
 
 
-def token_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def token_stats(docs: DataFrame) -> DataFrame:
     """Token-count profile per document.
 
     Output: ``doc_id, n_tokens`` (whitespace tokens), ``n_terms``
@@ -89,12 +89,12 @@ def token_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     ``est_bpe_tokens`` (chars/4 heuristic), ``stopword_ratio``,
     ``type_token_ratio`` (both rounded, NULL-safe for empty docs).
     """
-    toks = tokenize(text_col)
+    toks = tokenize("text")
     d = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(text_col).alias("text"),
+        F.col("doc_id").alias("doc_id"),
+        F.col("text").alias("text"),
         toks.alias("toks"),
-        terms(text_col).alias("trm"),
+        terms("text").alias("trm"),
     )
     n_tokens = F.size("toks")
     # ONE SQL string instead of 179 per-word py4j lit calls (r14, the
@@ -117,7 +117,7 @@ def token_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     )
 
 
-def quality_profile(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def quality_profile(docs: DataFrame) -> DataFrame:
     """Heuristic quality score in [0, 1] per document — the standard
     pre-training filter features (length band, mean word length,
     lexical diversity, alpha ratio) combined with fixed weights.
@@ -125,9 +125,9 @@ def quality_profile(docs: DataFrame, text_col: str = "text", id_col: str = "doc_
     Output: ``doc_id, n_chars_obs, mean_word_len, alpha_ratio,
     lex_diversity, quality_score, is_quality``.
     """
-    toks = tokenize(text_col)
+    toks = tokenize("text")
     d = docs.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"), toks.alias("toks")
+        F.col("doc_id").alias("doc_id"), F.col("text").alias("text"), toks.alias("toks")
     )
     n_tokens = F.size("toks")
     n_chars = F.length("text")
@@ -162,8 +162,7 @@ def quality_profile(docs: DataFrame, text_col: str = "text", id_col: str = "doc_
     )
 
 
-def fingerprints(docs: DataFrame, gram: int = 5, text_col: str = "text",
-                 id_col: str = "doc_id") -> DataFrame:
+def fingerprints(docs: DataFrame) -> DataFrame:
     """Document fingerprints: whole-content md5 + a shift-resistant
     char-n-gram min-hash (winnowing-style: the minimum md5 over all
     character 5-grams of the normalized text — stable under content
@@ -171,18 +170,18 @@ def fingerprints(docs: DataFrame, gram: int = 5, text_col: str = "text",
 
     Output: ``doc_id, content_md5, min_gram_md5``.
     """
-    norm = F.regexp_replace(F.trim(normalize_text(text_col)), r"\s+", " ")
-    d = docs.select(F.col(id_col).alias("doc_id"), norm.alias("norm"))
+    norm = F.regexp_replace(F.trim(normalize_text("text")), r"\s+", " ")
+    d = docs.select(F.col("doc_id").alias("doc_id"), norm.alias("norm"))
     # n-grams via zip_with over shifted char slices — NOT
     # transform(sequence, i -> substring(norm, i, g)): an outer alias
     # referenced inside a lambda gets its defining expression inlined
     # and re-evaluated per element (see word_shingles).
     chars = F.split(F.col("norm"), "")
-    m = F.greatest(F.length("norm") - (gram - 1), F.lit(0))
+    m = F.greatest(F.length("norm") - 4, F.lit(0))
     acc = F.slice(chars, 1, m)
-    for k in range(1, gram):
+    for k in range(1, 5):
         acc = F.zip_with(acc, F.slice(chars, k + 1, m), lambda a, b: F.concat(a, b))
-    grams = F.when(F.length("norm") >= gram, acc).otherwise(F.array(F.col("norm")))
+    grams = F.when(F.length("norm") >= 5, acc).otherwise(F.array(F.col("norm")))
     return d.select(
         "doc_id",
         F.md5("norm").alias("content_md5"),
@@ -227,24 +226,24 @@ def sql_redact_pii(text_expr: str) -> str:
     return e
 
 
-def pii_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def pii_stats(docs: DataFrame) -> DataFrame:
     """Per-document PII profile: match count per pattern family, the
     redacted-text md5, and a changed flag. Output: ``doc_id,
     n_email, n_ipv4, n_ssn, n_phone, redacted_md5, was_redacted``."""
     counts = [
-        F.regexp_count(F.col(text_col), F.lit(pat)).alias(f"n_{name}")
+        F.regexp_count(F.col("text"), F.lit(pat)).alias(f"n_{name}")
         for name, pat, _ in PII_PATTERNS
     ]
-    red = redact_pii(text_col)
+    red = redact_pii("text")
     return docs.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id").alias("doc_id"),
         *counts,
         F.md5(red).alias("redacted_md5"),
-        (red != F.col(text_col)).alias("was_redacted"),
+        (red != F.col("text")).alias("was_redacted"),
     )
 
 
-def repetition_profile(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def repetition_profile(docs: DataFrame) -> DataFrame:
     """Repetition heuristics (the Gopher/MassiveText-style filters):
     per-doc duplicate-token ratio and top-bigram frequency ratio —
     boilerplate and degenerate repetition score high on both.
@@ -256,8 +255,8 @@ def repetition_profile(docs: DataFrame, text_col: str = "text", id_col: str = "d
     dup_token_ratio, top_bigram_ratio`` (ratios NULL for empty/
     sub-bigram docs).
     """
-    toks = tokenize(text_col)
-    d = docs.select(F.col(id_col).alias("doc_id"), toks.alias("toks"))
+    toks = tokenize("text")
+    d = docs.select(F.col("doc_id").alias("doc_id"), toks.alias("toks"))
     m = F.greatest(F.size("toks") - 1, F.lit(0))
     bigrams = F.when(
         F.size("toks") >= 2,
@@ -303,8 +302,6 @@ def repetition_profile(docs: DataFrame, text_col: str = "text", id_col: str = "d
 
 def lm_unigram_scores(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     persist_tf: bool = True,
 ) -> DataFrame:
     """Per-document corpus-LM quality score: average negative log
@@ -336,7 +333,7 @@ def lm_unigram_scores(
         doc_term_freq,
     )
 
-    tf = doc_term_freq(docs, text_col, id_col)
+    tf = doc_term_freq(docs)
     if persist_tf:
         tf = tf.persist()
     lm = (
@@ -380,7 +377,6 @@ def lm_unigram_scores(
 def build_vocab(
     docs: DataFrame,
     max_size: int | None = None,
-    text_col: str = "text",
 ) -> DataFrame:
     """Frequency-ranked vocabulary: ``term, n_occ, token_id`` with
     ids dense 0.. by (frequency desc, term asc) — the deterministic
@@ -394,7 +390,7 @@ def build_vocab(
     histogram window). ``max_size`` truncates to the top-V ids.
     """
     counts = (
-        docs.select(F.explode(tokenize(text_col)).alias("term"))
+        docs.select(F.explode(tokenize("text")).alias("term"))
         .groupBy("term")
         .agg(F.count("*").alias("n_occ"))
     )
@@ -410,15 +406,12 @@ def build_vocab(
 def encode_docs(
     docs: DataFrame,
     vocab: DataFrame | None = None,
-    unk_id: int = -1,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Token-id encoding: each document's token stream as an INT
     ARRAY under a broadcast vocabulary — the array the trainer
     actually consumes (`pack_sequences` upstream budget-counts it;
     this materializes it). Out-of-vocabulary tokens encode as
-    ``unk_id``. Output: ``doc_id, n_tokens, token_ids``.
+    ``-1``. Output: ``doc_id, n_tokens, token_ids``.
 
     Shape at scale: tokens carry their position through a BROADCAST
     vocab join (the corpus never shuffles to look up ids), then one
@@ -429,15 +422,15 @@ def encode_docs(
     ordering: the sort is explicit on the carried position.
     """
     if vocab is None:
-        vocab = build_vocab(docs, text_col=text_col)
+        vocab = build_vocab(docs)
     tok = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(tokenize(text_col)).alias("pos", "term"),
+        F.col("doc_id").alias("doc_id"),
+        F.posexplode(tokenize("text")).alias("pos", "term"),
     )
     enc = tok.join(F.broadcast(vocab.select("term", "token_id")), "term", "left").select(
         "doc_id",
         "pos",
-        F.coalesce(F.col("token_id"), F.lit(unk_id)).cast("int").alias("tid"),
+        F.coalesce(F.col("token_id"), F.lit(-1)).cast("int").alias("tid"),
     )
     return (
         enc.groupBy("doc_id")
@@ -454,7 +447,6 @@ def encode_docs(
 def distribution_divergence(
     docs: DataFrame,
     part_col: Column,
-    text_col: str = "text",
 ) -> DataFrame:
     """Hellinger distance between the token distributions of two
     corpus partitions — the distribution-shift monitor a training
@@ -491,7 +483,7 @@ def distribution_divergence(
 
     tok = docs.select(
         part_col.alias("_in_a"),
-        F.explode(terms(text_col, keep_duplicates=True)).alias("term"),
+        F.explode(terms("text", keep_duplicates=True)).alias("term"),
     )
     cnt = tok.groupBy("term").agg(
         F.sum(F.when(F.col("_in_a"), 1).otherwise(0)).alias("na"),
@@ -521,10 +513,7 @@ def distribution_divergence(
     )
 
 
-def token_entropy(
-    docs: DataFrame,
-    text_col: str = "text",
-) -> DataFrame:
+def token_entropy(docs: DataFrame) -> DataFrame:
     """Shannon entropy (nats) of the corpus token distribution, plus
     the normalized form — the vocabulary-diversity health metric a
     curation pipeline tracks across snapshots (entropy collapsing =
@@ -547,7 +536,7 @@ def token_entropy(
     from mapreduce_inverted_index_spark.functions.text import terms
 
     cnt = (
-        docs.select(F.explode(terms(text_col, keep_duplicates=True)).alias("term"))
+        docs.select(F.explode(terms("text", keep_duplicates=True)).alias("term"))
         .groupBy("term")
         .agg(F.count("*").alias("_c"))
     )
@@ -573,9 +562,6 @@ def token_entropy(
 def hashed_classifier_scores(
     docs: DataFrame,
     n_buckets: int = 1024,
-    weights: DataFrame | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """fastText-style linear text-classifier INFERENCE as pure
     relational plumbing — the shape of the quality/toxicity
@@ -591,9 +577,9 @@ def hashed_classifier_scores(
     broadcast hash join + one partial-agg groupBy — no shuffle of
     tokens, no vocabulary build, no Python in the row path.
 
-    ``weights``: a ``(bucket BIGINT, w_milli BIGINT)`` table — in
+    The weights are a ``(bucket BIGINT, w_milli BIGINT)`` table — in
     real use the trained weights, loaded and broadcast exactly as
-    here. The default is a deterministic synthetic stand-in
+    here. This one is a deterministic synthetic stand-in
     (Knuth-multiplicative spread of the bucket id onto a
     [-1000, 1000] milli grid) so the operator is oracle-checkable:
     integer milli-weights make margins EXACT bigint sums in any
@@ -604,20 +590,16 @@ def hashed_classifier_scores(
     Docs whose token list is empty produce no output row (no
     features → no score), matching the SQL GROUP BY twin.
 
-    Output: ``id_col, n_tokens, margin DOUBLE (exact at 3
+    Output: ``doc_id, n_tokens, margin DOUBLE (exact at 3
     decimals), quality_pass BOOLEAN (margin > 0)``.
     """
-    spark = docs.sparkSession
-    if weights is None:
-        weights = spark.range(n_buckets).select(
-            F.col("id").alias("bucket"),
-            ((F.col("id") * F.lit(2654435761)) % 2001 - 1000).alias(
-                "w_milli"
-            ),
-        )
+    weights = docs.sparkSession.range(n_buckets).select(
+        F.col("id").alias("bucket"),
+        ((F.col("id") * F.lit(2654435761)) % 2001 - 1000).alias("w_milli"),
+    )
     toks = docs.select(
-        F.col(id_col),
-        F.explode(terms(text_col, keep_duplicates=True)).alias("term"),
+        F.col("doc_id"),
+        F.explode(terms("text", keep_duplicates=True)).alias("term"),
     )
     feats = toks.withColumn(
         "bucket",
@@ -626,25 +608,21 @@ def hashed_classifier_scores(
     )
     scored = (
         feats.join(F.broadcast(weights), "bucket")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_tokens"),
             F.sum("w_milli").alias("_mm"),
         )
     )
     return scored.select(
-        id_col,
+        "doc_id",
         "n_tokens",
         (F.col("_mm").cast("double") / F.lit(1000.0)).alias("margin"),
         (F.col("_mm") > 0).alias("quality_pass"),
     )
 
 
-def vocab_growth_curve(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def vocab_growth_curve(docs: DataFrame) -> DataFrame:
     """Heaps'-law vocabulary growth: after ingesting docs in id
     order, how many tokens have been seen and how many DISTINCT
     terms — the curve whose flattening (or refusal to flatten)
@@ -673,8 +651,8 @@ def vocab_growth_curve(
     # unpersisted the tokenize pass ran twice (the bm25_rank
     # discipline). LRU-evicted; clearCache drops it.
     tf = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(terms(text_col, keep_duplicates=True)).alias("term"),
+        F.col("doc_id").alias("doc_id"),
+        F.explode(terms("text", keep_duplicates=True)).alias("term"),
     ).persist()
     per_doc = tf.groupBy("doc_id").agg(F.count("*").alias("_nt"))
     first_doc = tf.groupBy("term").agg(F.min("doc_id").alias("doc_id"))
@@ -682,7 +660,7 @@ def vocab_growth_curve(
         F.count("*").alias("_nv")
     )
     base = (
-        docs.select(F.col(id_col).alias("doc_id"))
+        docs.select(F.col("doc_id").alias("doc_id"))
         .join(per_doc, "doc_id", "left")
         .join(new_per_doc, "doc_id", "left")
         .select(
@@ -742,8 +720,6 @@ def bpe_symbol_expr(tok_col, merges: list[tuple[str, str]]):
 def bpe_train(
     docs: DataFrame,
     n_merges: int = 8,
-    text_col: str = "text",
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """BPE tokenizer TRAINING: iterate the ``bpe_merge_step`` rule
     ``n_merges`` rounds and emit the learned merge table —
@@ -771,9 +747,8 @@ def bpe_train(
        symbol string (the same left-to-right non-overlapping pass
        semantics ``bpe_encode`` replays),
 
-    with per-round lineage truncation (the PageRank discipline;
-    ``reliable_checkpoint=True`` swaps localCheckpoint for
-    fault-tolerant ``checkpoint()`` on multi-hour corpora).
+    with per-round lineage truncation (the PageRank discipline,
+    ``localCheckpoint``).
     Training stops early if no pair remains.
 
     The truncation is LAZY and placed at the TOP of each round, so
@@ -800,7 +775,7 @@ def bpe_train(
 
     spark = docs.sparkSession
     sym = (
-        docs.select(F.explode(tokenize(text_col)).alias("tok"))
+        docs.select(F.explode(tokenize("text")).alias("tok"))
         .groupBy("tok")
         .agg(F.count("*").cast("bigint").alias("n"))
         .select(
@@ -816,9 +791,7 @@ def bpe_train(
     current = sym
     merges: list[tuple[int, str, str, int]] = []
     for step in range(n_merges):
-        current = truncate_lineage(
-            current, reliable=reliable_checkpoint, eager=False
-        )
+        current = truncate_lineage(current, eager=False)
         syms = F.array_remove(
             F.split(F.regexp_replace("s", "^,+|,+$", ""), ",,"), ""
         )
@@ -856,8 +829,6 @@ def bpe_train(
 def bpe_encode(
     docs: DataFrame,
     merges: list[tuple[str, str]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Apply a learned BPE merge list to every token occurrence of
     every document — the ENCODE half of the tokenizer tier
@@ -877,8 +848,8 @@ def bpe_encode(
     sym = bpe_symbol_expr(F.col("tok"), merges)
     return (
         docs.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(tokenize(text_col)).alias("tok"),
+            F.col("doc_id").alias("doc_id"),
+            F.explode(tokenize("text")).alias("tok"),
         )
         .withColumn(
             "symbols",
@@ -893,11 +864,8 @@ def bpe_encode(
 def lm_bigram_scores(
     docs: DataFrame,
     lam: float = 0.75,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     broadcast_lm: "bool | str" = "auto",
     broadcast_max_rows: int = 1_000_000,
-    persist_tokens: bool = True,
 ) -> DataFrame:
     """Per-document interpolated BIGRAM-LM quality score — the
     next-order upgrade of :func:`lm_unigram_scores` (a CCNet-style
@@ -940,14 +908,13 @@ def lm_bigram_scores(
     """
     from mapreduce_inverted_index_spark.functions.text import tokenize
 
-    base = docs.select(F.col(id_col).alias("doc_id"), tokenize(text_col).alias("toks"))
+    base = docs.select(F.col("doc_id").alias("doc_id"), tokenize("text").alias("toks"))
     # the tokenized corpus feeds FOUR branches (route probe, unigram
     # counts, bigram stream, final per-doc left join) — unpersisted,
     # each branch re-runs the tokenize scan (the bm25_rank tf
     # persist discipline; LRU-evicted, clearCache drops it;
     # at 100 TB read a materialized tokens table instead)
-    if persist_tokens:
-        base = base.persist()
+    base = base.persist()
     bi = base.where(F.size("toks") >= 2).select(
         "doc_id",
         F.explode(
@@ -1040,8 +1007,6 @@ def lm_bigram_scores(
 def skipgram_pairs(
     docs: DataFrame,
     window: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Corpus-wide skip-gram co-occurrence counts — the (center,
     context) pair table word2vec / GloVe training starts from: for
@@ -1066,7 +1031,7 @@ def skipgram_pairs(
     from mapreduce_inverted_index_spark.functions.text import tokenize
 
     w = int(window)
-    toks = tokenize(text_col)
+    toks = tokenize("text")
     # left neighbors: slice(toks, max(i-w,0)+1, min(i,w)) ;
     # right neighbors: slice(toks, i+2, min(w, n-i-1))  (1-based slice)
     pairs = F.expr(

@@ -94,11 +94,14 @@ def _sql_scaled_jaccard_pairs(t: float, bigrams: str) -> str:
     """
 
 
-def _sql_pointer_jump_components(n_rounds: int = 20) -> str:
+_JUMP_ROUNDS = 20
+
+
+def _sql_pointer_jump_components() -> str:
     """Unrolled min-label pointer jumping over ``edges(doc_a, doc_b)``
     -> ``comp(doc_id, component)``; component = min reachable doc_id,
     identical to the recursive-CTE reach but with O(V) state per
-    round. ``n_rounds`` = 20 covers any <= 2^20-diameter pointer
+    round. ``_JUMP_ROUNDS`` = 20 covers any <= 2^20-diameter pointer
     chain — far past a 50k-node graph's worst case."""
     parts = [
         """sym AS MATERIALIZED (
@@ -109,7 +112,7 @@ def _sql_pointer_jump_components(n_rounds: int = 20) -> str:
         "l0 AS MATERIALIZED (SELECT a AS node, least(a, min(b)) AS label"
         " FROM sym GROUP BY a)",
     ]
-    for k in range(n_rounds):
+    for k in range(_JUMP_ROUNDS):
         parts.append(f"""l{k + 1} AS MATERIALIZED (
       SELECT v.node,
              least(v.label, p.label, coalesce(nb.m, v.label)) AS label
@@ -121,7 +124,7 @@ def _sql_pointer_jump_components(n_rounds: int = 20) -> str:
     )""")
     parts.append(
         f"comp AS (SELECT node AS doc_id, CAST(label AS BIGINT) AS component"
-        f" FROM l{n_rounds})"
+        f" FROM l{_JUMP_ROUNDS})"
     )
     return ",\n    ".join(parts)
 

@@ -214,22 +214,22 @@ def register_crawl_source(spark) -> None:
 _HTTP_SCHEMA = "doc_id long, url string, text string"
 
 
-def _http_json(url: str, timeout: float = 10.0) -> dict:
+def _http_json(url: str) -> dict:
     import json
     from urllib.request import urlopen
 
-    with urlopen(url, timeout=timeout) as resp:
+    with urlopen(url, timeout=10.0) as resp:
         return json.loads(resp.read().decode("utf-8"))
 
 
-def _http_text(url: str, timeout: float = 10.0) -> str | None:
+def _http_text(url: str) -> str | None:
     """Fetch one document; None on any HTTP/connection error (the
     failed-fetch path — the doc_id is consumed, no row emitted)."""
     from urllib.error import HTTPError, URLError
     from urllib.request import urlopen
 
     try:
-        with urlopen(url, timeout=timeout) as resp:
+        with urlopen(url, timeout=10.0) as resp:
             return resp.read().decode("utf-8")
     except (HTTPError, URLError, TimeoutError):
         return None

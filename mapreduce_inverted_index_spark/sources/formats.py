@@ -47,8 +47,6 @@ def write_final_index_json(
     *,
     creation_time: str | None = None,
     timestamp: int | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     url_col: str | None = "source",
 ) -> str:
     """Reference-EXACT final artifact: one pretty-printed JSON file
@@ -84,10 +82,10 @@ def write_final_index_json(
 
     from mapreduce_inverted_index_spark.operators.inverted_index import doc_terms
 
-    pairs = doc_terms(docs, text_col, id_col)
+    pairs = doc_terms(docs)
     if url_col is not None:
         urls = docs.select(
-            F.col(id_col).alias("doc_id"), F.col(url_col).alias("url")
+            F.col("doc_id").alias("doc_id"), F.col(url_col).alias("url")
         ).dropDuplicates(["doc_id"])
         pairs = pairs.join(F.broadcast(urls), "doc_id", "left")
         occ = F.struct(F.col("doc_id"), F.col("url"))
@@ -122,14 +120,14 @@ def write_final_index_json(
     return output_file
 
 
-def write_csv(df: DataFrame, path: str, *, header: bool = True) -> None:
-    df.write.mode("overwrite").option("header", header).csv(path)
+def write_csv(df: DataFrame, path: str) -> None:
+    df.write.mode("overwrite").option("header", True).csv(path)
 
 
-def read_csv(spark: SparkSession, path: str, schema: StructType, *, header: bool = True) -> DataFrame:
+def read_csv(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
     return (
         spark.read.schema(schema)
-        .option("header", header)
+        .option("header", True)
         .option("mode", "PERMISSIVE")
         .csv(path)
     )

@@ -118,8 +118,3 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, Data
     wanted = names or TABLES
     return {n: load_table(spark, sf_dir, n) for n in wanted}
 
-
-def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
-    """Expose every table as a temp view so ``spark.sql`` works too."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

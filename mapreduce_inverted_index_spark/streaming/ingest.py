@@ -203,8 +203,6 @@ def maintain_semantic_cells_available_now(
     n_cells: int = 16,
     tau: float = 0.4,
     r: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     max_files_per_cell: "int | None" = 8,
 ) -> None:
     """Stream-maintained semantic-dedup state — the embedding-space
@@ -289,9 +287,9 @@ def maintain_semantic_cells_available_now(
         with mutation_lease(cells_dir):
             if not os.path.isdir(cells_dir):
                 store.seed_store(
-                    ivf_centroids(
-                        batch_df, n_cells, 3, id_col, vec_col
-                    ).withColumn("part", F.lit(0)),
+                    ivf_centroids(batch_df, n_cells, 3).withColumn(
+                        "part", F.lit(0)
+                    ),
                     cents_dir,
                     "part",
                 )
@@ -301,7 +299,7 @@ def maintain_semantic_cells_available_now(
                 "part"
             )
             store.append_partitions(
-                ivf_assign(batch_df, cents, id_col, vec_col),
+                ivf_assign(batch_df, cents),
                 cells_dir,
                 "cell",
                 batch_id,
@@ -315,8 +313,6 @@ def maintain_semantic_cells_available_now(
                 cents,
                 tau=tau,
                 r=r,
-                id_col=id_col,
-                vec_col=vec_col,
             )
             store.append_partitions(
                 dups.withColumn("batch", F.lit(batch_id)),

@@ -186,14 +186,15 @@ def sliding_avg_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def session_windows(spark: SparkSession, sf_dir: str, gap: str = "30 minutes") -> DataFrame:
-    """Per-user sessionization: events closer than ``gap`` merge into
-    one session; the session closes ``gap`` after its last event.
+def session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-user sessionization: events closer than 30 minutes merge
+    into one session; the session closes 30 minutes after its last
+    event.
     Output: user_id, session_start, session_end, n_events."""
     ev = events_stream(spark, sf_dir)
     agg = (
         ev.withWatermark("ts", "1 hour")
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count("*").alias("n_events"))
     )
     out = _run_to_table(agg)
@@ -205,17 +206,15 @@ def session_windows(spark: SparkSession, sf_dir: str, gap: str = "30 minutes") -
     )
 
 
-def stream_attribution_join(
-    spark: SparkSession, sf_dir: str, horizon: str = "1 hour"
-) -> DataFrame:
+def stream_attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked stream-stream interval join: each click joins the
-    same user's purchases landing within ``horizon`` after it — the
+    same user's purchases landing within one hour after it — the
     canonical attribution query, and the streaming operator family
     (two buffered sides + event-time range condition) that windowed
     aggs can't express.
 
     State bounds: BOTH sides carry a watermark and the join condition
-    bounds purchase_ts to (click_ts, click_ts + horizon], so Spark
+    bounds purchase_ts to (click_ts, click_ts + 1 hour], so Spark
     can evict buffered rows once the watermark passes — state is
     O(events within watermark + horizon), not O(stream). With a
     single AvailableNow batch nothing is late, so the result equals
@@ -247,7 +246,7 @@ def stream_attribution_join(
         purchases,
         F.expr(
             "user_id = p_user_id AND purchase_ts > click_ts "
-            f"AND purchase_ts <= click_ts + INTERVAL {horizon}"
+            "AND purchase_ts <= click_ts + INTERVAL 1 hour"
         ),
     )
     out = _run_to_table(
@@ -261,15 +260,13 @@ def stream_attribution_join(
     )
 
 
-def stream_attribution_join_outer(
-    spark: SparkSession, sf_dir: str, horizon: str = "1 hour"
-) -> DataFrame:
+def stream_attribution_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT OUTER watermarked stream-stream interval join: every click
     emits — matched ones per qualifying purchase, unmatched ones ONCE
     with NULL purchase columns *after the watermark passes their join
     window* (the state-eviction point: Spark can only declare "no
     purchase will ever match" once no future input can land inside
-    (click_ts, click_ts + horizon]).
+    (click_ts, click_ts + 1 hour]).
 
     The outer side is the semantics batch joins get for free but
     streams must EARN through watermarks, and it is exactly the shape
@@ -277,7 +274,7 @@ def stream_attribution_join_outer(
     whose window the final watermark never passes are withheld — on
     an unbounded stream they'd still be waiting for a match, and the
     AvailableNow run faithfully reproduces that: the oracle restricts
-    NULL rows to clicks with ``click_ts + horizon < min(max click ts,
+    NULL rows to clicks with ``click_ts + 1 hour < min(max click ts,
     max purchase ts) - delay`` (the two-source global watermark under
     the default min policy). Output: ``user_id, click_id,
     purchase_id (nullable), lag_us (nullable)``.
@@ -306,7 +303,7 @@ def stream_attribution_join_outer(
         purchases,
         F.expr(
             "user_id = p_user_id AND purchase_ts > click_ts "
-            f"AND purchase_ts <= click_ts + INTERVAL {horizon}"
+            "AND purchase_ts <= click_ts + INTERVAL 1 hour"
         ),
         "left_outer",
     )

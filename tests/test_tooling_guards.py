@@ -8,6 +8,10 @@ the package would break them silently; these tests fail instead.
 Inside the package, only ``operators/store.py`` may drive the
 partition-swap commit steps, and no other module under ``operators/``
 or ``streaming/`` renames or removes files.
+
+Calls from those scripts must also match the package's signatures,
+and every option of a package function must be set by some caller
+and read by the function.
 """
 
 from __future__ import annotations
@@ -16,6 +20,7 @@ import ast
 import glob
 import importlib
 import importlib.util
+import inspect
 import os
 import sys
 
@@ -259,3 +264,257 @@ def test_only_the_store_module_renames_or_removes_files():
                         if a.name in FS_MUTATIONS.get(node.module, ())
                     ]
     assert not offenders, "\n".join(offenders)
+
+
+# Tier-1 runs none of these; a package signature change that drifts
+# from their calls would only surface when someone runs them.
+UNRUN_SCRIPTS = SCRIPTS + sorted(glob.glob(os.path.join(ROOT, "perfbench", "*.py")))
+
+
+def _bound_package_names(tree: ast.AST) -> dict:
+    """Local name -> package module or object for every absolute
+    import of the package in ``tree``, at any nesting depth."""
+    bound = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and node.level == 0:
+            mod = node.module or ""
+            if mod != PKG and not mod.startswith(PKG + "."):
+                continue
+            m = importlib.import_module(mod)
+            for a in node.names:
+                if hasattr(m, a.name):
+                    bound[a.asname or a.name] = getattr(m, a.name)
+                elif importlib.util.find_spec(f"{mod}.{a.name}") is not None:
+                    bound[a.asname or a.name] = importlib.import_module(
+                        f"{mod}.{a.name}"
+                    )
+        elif isinstance(node, ast.Import):
+            for a in node.names:
+                if a.name == PKG or a.name.startswith(PKG + "."):
+                    m = importlib.import_module(a.name)
+                    if a.asname:
+                        bound[a.asname] = m
+                    else:
+                        bound[PKG] = importlib.import_module(PKG)
+    return bound
+
+
+def _resolve(expr: ast.expr, bound: dict):
+    if isinstance(expr, ast.Name):
+        return bound.get(expr.id)
+    if isinstance(expr, ast.Attribute):
+        owner = _resolve(expr.value, bound)
+        if inspect.ismodule(owner):
+            return getattr(owner, expr.attr, None)
+    return None
+
+
+@pytest.mark.parametrize(
+    "path", UNRUN_SCRIPTS, ids=[os.path.relpath(p, ROOT) for p in UNRUN_SCRIPTS]
+)
+def test_script_package_calls_match_signatures(path):
+    """Every call from a script to an imported package function names
+    only parameters the function has, and passes no more positional
+    arguments than it accepts."""
+    with open(path) as f:
+        tree = ast.parse(f.read(), path)
+    bound = _bound_package_names(tree)
+    drift = []
+    for call in ast.walk(tree):
+        if not isinstance(call, ast.Call):
+            continue
+        fn = _resolve(call.func, bound)
+        if not inspect.isfunction(fn) or not fn.__module__.startswith(PKG):
+            continue
+        params = inspect.signature(fn).parameters.values()
+        kinds = {p.kind for p in params}
+        where = f"line {call.lineno}: {fn.__module__}.{fn.__name__}"
+        if inspect.Parameter.VAR_KEYWORD not in kinds:
+            names = {
+                p.name
+                for p in params
+                if p.kind
+                in (p.POSITIONAL_OR_KEYWORD, p.KEYWORD_ONLY)
+            }
+            drift += [
+                f"{where}: no parameter {kw.arg!r}"
+                for kw in call.keywords
+                if kw.arg is not None and kw.arg not in names
+            ]
+        if inspect.Parameter.VAR_POSITIONAL not in kinds and not any(
+            isinstance(a, ast.Starred) for a in call.args
+        ):
+            n_pos = sum(
+                p.kind in (p.POSITIONAL_ONLY, p.POSITIONAL_OR_KEYWORD)
+                for p in params
+            )
+            if len(call.args) > n_pos:
+                drift.append(
+                    f"{where}: {len(call.args)} positional arguments, "
+                    f"accepts {n_pos}"
+                )
+    assert not drift, "\n".join(drift)
+
+
+# Options no code in the repo sets that stay configurable: deployment
+# settings, chosen by whoever runs the job rather than by any caller.
+DEPLOYMENT_OPTIONS = {
+    ("session.py", "get_spark", "master"): (
+        "Spark master URL of the deployment (the session builder's "
+        "default when omitted)"
+    ),
+    ("streaming/ingest.py", "maintain_semantic_cells_available_now", "glob"): (
+        "file pattern of the deployment's embedding landing directory"
+    ),
+    ("streaming/ingest.py", "maintain_takedowns_available_now", "glob"): (
+        "file pattern of the deployment's takedown landing directory"
+    ),
+    ("streaming/ingest.py", "maintain_cell_takedowns_available_now", "glob"): (
+        "file pattern of the deployment's takedown landing directory"
+    ),
+}
+
+# Every file whose calls count as setting a package option.
+CALLER_FILES = sorted(
+    set(
+        glob.glob(os.path.join(ROOT, PKG, "**", "*.py"), recursive=True)
+        + glob.glob(os.path.join(ROOT, "tests", "*.py"))
+        + UNRUN_SCRIPTS
+    )
+)
+
+
+def _defaulted(fn: ast.FunctionDef) -> "list[str]":
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    return [p.arg for p in pos[len(pos) - len(a.defaults) :]] + [
+        p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+    ]
+
+
+def _package_functions() -> dict:
+    """``(module path relative to the package, name) -> FunctionDef``
+    for every module-level function of the package."""
+    out = {}
+    root = os.path.join(ROOT, PKG)
+    for path in sorted(glob.glob(os.path.join(root, "**", "*.py"), recursive=True)):
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        rel = os.path.relpath(path, root)
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                out[(rel, node.name)] = node
+    return out
+
+
+def _set_options(funcs: dict) -> set:
+    """``(module, function, option)`` for every option some call sets:
+    by keyword, by position, by ``*``/``**`` unpacking, or through
+    ``functools.partial``. A call that passes an enclosing function's
+    own option straight through sets the callee's option only if some
+    caller sets the enclosing one."""
+    by_name = {}
+    for key in funcs:
+        by_name.setdefault(key[1], []).append(key)
+    pkg_root = os.path.join(ROOT, PKG)
+    direct, forwards = set(), {}
+    for path in CALLER_FILES:
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        rel = os.path.relpath(path, pkg_root)
+        local = {
+            n.name
+            for n in tree.body
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+        }
+        aliases = {
+            a.asname: a.name
+            for node in ast.walk(tree)
+            if isinstance(node, ast.ImportFrom)
+            for a in node.names
+            if a.asname
+        }
+
+        def targets(func):
+            if isinstance(func, ast.Name):
+                if func.id in local and (rel, func.id) in funcs:
+                    return [(rel, func.id)]
+                return by_name.get(aliases.get(func.id, func.id), [])
+            if isinstance(func, ast.Attribute):
+                return by_name.get(func.attr, [])
+            return []
+
+        for top in tree.body:
+            enc = (rel, getattr(top, "name", None))
+            enc_opts = set(_defaulted(funcs[enc])) if enc in funcs else set()
+            for call in ast.walk(top):
+                if not isinstance(call, ast.Call):
+                    continue
+                args, tgts = call.args, targets(call.func)
+                if (
+                    not tgts
+                    and getattr(call.func, "attr", getattr(call.func, "id", ""))
+                    == "partial"
+                    and args
+                ):
+                    args, tgts = args[1:], targets(args[0])
+                for tgt in tgts:
+                    fn = funcs[tgt]
+                    params = [p.arg for p in fn.args.posonlyargs + fn.args.args]
+                    opts = set(_defaulted(fn))
+                    sets = []
+                    for i, arg in enumerate(args):
+                        if isinstance(arg, ast.Starred):
+                            sets += [(p, None) for p in params[i:]]
+                            break
+                        if i < len(params):
+                            sets.append((params[i], arg))
+                    for kw in call.keywords:
+                        if kw.arg is None:
+                            sets += [(p, None) for p in opts]
+                        else:
+                            sets.append((kw.arg, kw.value))
+                    for p, value in sets:
+                        if p not in opts:
+                            continue
+                        if isinstance(value, ast.Name) and value.id in enc_opts:
+                            src = (*enc, value.id)
+                            if src != (*tgt, p):
+                                forwards.setdefault(src, set()).add((*tgt, p))
+                        else:
+                            direct.add((*tgt, p))
+    done, todo = set(direct), list(direct)
+    while todo:
+        for dst in forwards.get(todo.pop(), ()):
+            if dst not in done:
+                done.add(dst)
+                todo.append(dst)
+    return done
+
+
+def test_every_package_option_is_set_and_read():
+    """Each defaulted parameter of a module-level package function is
+    a configuration tests and benchmarks must cover. Every one must
+    be set by some call in the repo (package, tests, tools,
+    perfbench, ``bench.py``, ``__spark_entry__.py``) unless it is a
+    deployment setting in ``DEPLOYMENT_OPTIONS``, and every one must
+    be read by its function's body: an option the body ignores
+    silently drops what its caller asked for."""
+    funcs = _package_functions()
+    options = {(*key, p) for key, fn in funcs.items() for p in _defaulted(fn)}
+    assert set(DEPLOYMENT_OPTIONS) <= options, set(DEPLOYMENT_OPTIONS) - options
+    unset = sorted(options - _set_options(funcs) - set(DEPLOYMENT_OPTIONS))
+    unread = sorted(
+        (*key, p)
+        for key, fn in funcs.items()
+        for p in _defaulted(fn)
+        if not any(
+            isinstance(n, ast.Name) and n.id == p and isinstance(n.ctx, ast.Load)
+            for stmt in fn.body
+            for n in ast.walk(stmt)
+        )
+    )
+    assert not unset and not unread, "\n".join(
+        [f"unset: {m}:{f}({p})" for m, f, p in unset]
+        + [f"unread: {m}:{f}({p})" for m, f, p in unread]
+    )
