@@ -489,10 +489,15 @@ def open_snapshot(
     """Reader-side committed-snapshot OPEN: return ``(df, manifest)``
     — a DataFrame over exactly the data files the manifest names
     (partition column included, so partition predicates still reach
-    the scan as ``PartitionFilters``) and the manifest it resolved. A
-    committed-empty store (every partition taken down) opens as an
-    empty DataFrame of the recorded schema; a directory with no
-    manifest raises ``FileNotFoundError`` (:func:`read_manifest`).
+    the scan as ``PartitionFilters``) and the manifest it resolved.
+    The files are read with the manifest's recorded ``schema``, not
+    parquet footer inference, so no Spark job runs at open (Spark
+    still lists more than ~32 paths in a parallel job); data columns
+    keep the recorded order and the partition column comes last with
+    its recorded type. A committed-empty store (every partition taken
+    down) opens as an empty DataFrame of the recorded schema; a
+    directory with no manifest raises ``FileNotFoundError``
+    (:func:`read_manifest`).
 
     If a named file is missing, a swap is in flight (the writer
     renamed dirs but has not refreshed the manifest yet) or a writer
@@ -535,15 +540,17 @@ def open_snapshot(
             for k, fns in sorted(manifest["parts"].items())
             for fn in fns
         ]
+        schema = StructType.fromJson(json.loads(manifest["schema"]))
         if not files:
-            schema = StructType.fromJson(json.loads(manifest["schema"]))
             return spark.createDataFrame([], schema), manifest
         if not all(os.path.isfile(p) for p in files):
             last = "the manifest names files that are missing"
             time.sleep(wait_sec)
             continue
         try:
-            df = spark.read.option("basePath", path).parquet(*files)
+            df = spark.read.schema(schema).option("basePath", path).parquet(
+                *files
+            )
             n_indexed = len(df.inputFiles())
         except Exception as e:  # driver-side PATH_NOT_FOUND mid-swap
             if "PATH_NOT_FOUND" not in str(e):

@@ -330,6 +330,27 @@ def test_term_lookup_store_prunes_partitions(spark, tmp_path):
     plan = got._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [" in plan and "bucket" in plan, plan[:2000]
 
+    # the folded IN list is exactly the probe terms' buckets, hashed
+    # here independently over a DataFrame of the terms
+    import re
+
+    from mapreduce_inverted_index_spark.operators.store import read_manifest
+
+    n_buckets = read_manifest(path, "bucket")["n_buckets"]
+    want_buckets = sorted(
+        {
+            r["b"]
+            for r in spark.createDataFrame([(t,) for t in terms], "term string")
+            .select(
+                F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int").alias("b")
+            )
+            .collect()
+        }
+    )
+    in_list = re.search(r"PartitionFilters: \[[^\]]*bucket#\d+ IN \(([^)]*)\)", plan)
+    assert in_list, plan[:2000]
+    assert sorted(int(b) for b in in_list.group(1).split(",")) == want_buckets
+
     want = sorted(
         map(
             tuple,
