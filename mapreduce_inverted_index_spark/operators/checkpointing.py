@@ -2,22 +2,23 @@
 connected components): every round must cut the logical plan or it
 grows linearly with iterations and analysis/codegen time blows up.
 
-Two grades, one switch:
+The grade follows the deployment, not the caller:
 
-* ``reliable=False`` (default): ``localCheckpoint`` — blocks stored on
-  executors, no filesystem round-trip. Fast, correct, but NOT
-  fault-tolerant: losing an executor loses blocks whose lineage was
-  truncated away, failing the job. The right default for local mode
-  and for clusters where re-running a failed iterative query is
-  cheaper than checkpoint IO every round.
-* ``reliable=True``: ``checkpoint()`` into the application's
-  configured checkpoint directory (HDFS/S3-grade storage on a real
-  cluster) — executor loss replays from the checkpoint files, the
-  100 TB fault-tolerance story for multi-hour iterative jobs. Costs
-  one write + read of the state per round; callers opt in per query.
+* no checkpoint directory (the default): ``localCheckpoint`` —
+  blocks stored on executors, no filesystem round-trip. Fast,
+  correct, but NOT fault-tolerant: losing an executor loses blocks
+  whose lineage was truncated away, failing the job. The right
+  choice for local mode and for clusters where re-running a failed
+  iterative query is cheaper than checkpoint IO every round.
+* a checkpoint directory set on the SparkContext
+  (``spark.sparkContext.setCheckpointDir``, HDFS/S3-grade storage on
+  a real cluster): ``checkpoint()`` into it — executor loss replays
+  from the checkpoint files, the fault-tolerance story for
+  multi-hour iterative jobs. Costs one write + read of the state per
+  round.
 
-The flag only changes WHERE truncated state lives — results are
-bit-identical on both grades (pytest-pinned for all three iterative
+The grade only changes WHERE truncated state lives — results are
+bit-identical on both (pytest-pinned for all three iterative
 operators).
 """
 
@@ -29,16 +30,8 @@ __all__ = ["truncate_lineage"]
 
 
 def truncate_lineage(
-    df: DataFrame, *, reliable: bool = False, eager: bool = False
+    df: DataFrame, *, eager: bool = False
 ) -> DataFrame:
-    if not reliable:
+    if df.sparkSession.sparkContext.getCheckpointDir() is None:
         return df.localCheckpoint(eager=eager)
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() is None:
-        raise ValueError(
-            "reliable_checkpoint=True requires a checkpoint directory: "
-            "call spark.sparkContext.setCheckpointDir('<fault-tolerant "
-            "path>') first (HDFS/S3 on a cluster; any shared dir "
-            "locally)."
-        )
     return df.checkpoint(eager=eager)

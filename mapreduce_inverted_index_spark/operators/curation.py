@@ -45,11 +45,10 @@ POLICY_STOPWORDS = ("the", "a", "and", "of", "to", "in", "that", "with")
 def contamination_hits(
     docs: DataFrame,
     benchmark: DataFrame,
-    n: int = 3,
     doc_shingles: DataFrame | None = None,
     bench_shingles: DataFrame | None = None,
 ) -> DataFrame:
-    """Per-document count of word n-gram shingles shared with a
+    """Per-document count of word trigram shingles shared with a
     benchmark/eval set — the overlap signal behind test-set
     decontamination. Output: ``doc_id, n_hits`` (docs with ≥1 hit).
 
@@ -63,9 +62,9 @@ def contamination_hits(
     with the MinHash family).
     """
     if doc_shingles is None:
-        doc_shingles = word_shingles(docs, n)
+        doc_shingles = word_shingles(docs, 3)
     if bench_shingles is None:
-        bench_shingles = word_shingles(benchmark, n)
+        bench_shingles = word_shingles(benchmark, 3)
     doc_sh = doc_shingles.select(
         "doc_id", F.explode("shingles").alias("shingle")
     )
@@ -83,12 +82,11 @@ def contamination_hits(
 def decontaminate(
     docs: DataFrame,
     benchmark: DataFrame,
-    n: int = 3,
 ) -> DataFrame:
     """The corpus minus documents sharing at least one shingle with
     the benchmark (left-anti join on the flagged ids —
     document text never shuffles)."""
-    flagged = contamination_hits(docs, benchmark, n).where(
+    flagged = contamination_hits(docs, benchmark).where(
         F.col("n_hits") >= 1
     )
     return docs.join(
@@ -192,15 +190,15 @@ def policy_filter(
 def contrastive_negatives(
     docs: DataFrame,
     k: int = 4,
-    group_col: str = "source",
 ) -> DataFrame:
     """Deterministic negative sampling for contrastive training: for
     every anchor document, ``k`` pseudo-random negatives drawn
     uniformly from the corpus by md5 arithmetic — ``negative j of
     anchor a = the document at dense rank md5(a ‖ ':' ‖ j) mod N``.
-    Output: ``anchor_id, neg_no (1..k), neg_id, same_group`` (the
-    flag callers use to drop or down-weight in-group "negatives"
-    that may be semantically positive).
+    Output: ``anchor_id, neg_no (1..k), neg_id, same_group`` (whether
+    both share a ``source``: the flag callers use to drop or
+    down-weight in-group "negatives" that may be semantically
+    positive).
 
     Why hash-indexed, not ``rand()``: the batch a trainer sees must
     be REPLAYABLE — across retries, engines, and partitionings — or
@@ -222,7 +220,7 @@ def contrastive_negatives(
     from mapreduce_inverted_index_spark.operators.ids import assign_dense_ids
 
     idx = assign_dense_ids(
-        docs.select(F.col("doc_id").alias("_id"), F.col(group_col).alias("_grp")),
+        docs.select(F.col("doc_id").alias("_id"), F.col("source").alias("_grp")),
         order_by="_id",
         id_name="_rk",
     )
@@ -341,18 +339,16 @@ def pack_sequences(
 
 def corpus_shuffle(
     df: DataFrame,
-    id_col: str = "doc_id",
-    seed: str = "42",
 ) -> DataFrame:
     """Deterministic global corpus shuffle: a dense 0-based training
-    order by ``md5(seed:id)`` — the reproducible permutation every
+    order by ``md5('42:' || doc_id)`` — the reproducible permutation every
     training run needs (epoch order must be replayable for debugging
     and for elastic restarts, so ``rand()`` is out).
 
     Scale shape: the total order is established by a RANGE
     repartition on the hash (uniform by construction — md5 output is
     unskewed, so the range partitions are balanced regardless of how
-    skewed ``id_col`` is) + a per-partition sort, and ranks come from
+    skewed ``doc_id`` is) + a per-partition sort, and ranks come from
     :func:`~mapreduce_inverted_index_spark.operators.ids.assign_partition_ids`
     (per-partition counts -> driver prefix sums, O(#partitions)
     driver state) — NOT a global row_number window, whose empty
@@ -361,28 +357,25 @@ def corpus_shuffle(
     ride through it; callers re-join payloads by id (or write
     sorted-by-rank and read back, the production layout).
 
-    Output: ``id_col, shuffle_rank`` with ranks exactly equal to
-    ``row_number() OVER (ORDER BY md5, id) - 1``. Changing ``seed``
-    yields an independent permutation (fresh epoch order).
+    Output: ``doc_id, shuffle_rank`` with ranks exactly equal to
+    ``row_number() OVER (ORDER BY md5, doc_id) - 1``.
     """
     from mapreduce_inverted_index_spark.operators.ids import assign_partition_ids
 
-    h = F.md5(F.concat_ws(":", F.lit(seed), F.col(id_col).cast("string")))
-    keyed = df.select(F.col(id_col), h.alias("_shuffle_key"))
-    ordered = keyed.repartitionByRange("_shuffle_key", id_col).sortWithinPartitions(
-        "_shuffle_key", id_col
+    h = F.md5(F.concat_ws(":", F.lit("42"), F.col("doc_id").cast("string")))
+    keyed = df.select(F.col("doc_id"), h.alias("_shuffle_key"))
+    ordered = keyed.repartitionByRange("_shuffle_key", "doc_id").sortWithinPartitions(
+        "_shuffle_key", "doc_id"
     )
     return assign_partition_ids(ordered, "shuffle_rank").drop("_shuffle_key")
 
 
 def train_val_test_split(
     df: DataFrame,
-    val_pct: int = 5,
-    test_pct: int = 5,
 ) -> DataFrame:
     """Deterministic held-out split assignment: each row's id hashes
-    to a [0,100) md5-bucket; the first ``100 - val - test`` buckets
-    are train, then val, then test. Hash-keyed (not random) so the
+    to a [0,100) md5-bucket; the first 90 buckets are train, the next
+    5 val, the last 5 test. Hash-keyed (not random) so the
     assignment is reproducible run-to-run, independent of
     partitioning, and STABLE UNDER CORPUS GROWTH — a doc never
     migrates between splits when new data arrives, the property that
@@ -390,11 +383,10 @@ def train_val_test_split(
     ``split``; pure projection (no shuffle, scan-evaluable).
     """
     bucket = _md5_bucket(F.col("doc_id"))
-    train_cut = 100 - val_pct - test_pct
     return df.withColumn(
         "split",
-        F.when(bucket < train_cut, F.lit("train"))
-        .when(bucket < train_cut + val_pct, F.lit("val"))
+        F.when(bucket < 90, F.lit("train"))
+        .when(bucket < 95, F.lit("val"))
         .otherwise(F.lit("test")),
     )
 
@@ -466,7 +458,6 @@ def weighted_sample(
     df: DataFrame,
     weight_col: str,
     k: int,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Deterministic weight-biased top-k sample (the A-ES / priority-
     sampling shape): each row gets priority ``md5_long(id) div
@@ -487,7 +478,7 @@ def weighted_sample(
     Plan shape: scan-side priority expression + global top-k =
     ``TakeOrderedAndProject`` (per-partition heaps of k, never a
     full sort/shuffle of the corpus). Ties (same priority) break on
-    ``id_col``, so the kept SET is a total-order prefix — exactly
+    ``doc_id``, so the kept SET is a total-order prefix — exactly
     replayable by an ORDER BY/LIMIT oracle.
 
     Output: the k sampled rows plus ``priority``.
@@ -503,7 +494,7 @@ def weighted_sample(
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     h = F.conv(
-        F.substring(F.md5(F.col(id_col).cast("string")), 1, 15), 16, 10
+        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10
     ).cast("bigint")
     # upper bound 9.2e18: past bigint range the cast would overflow —
     # ANSI mode raises anyway, but non-ANSI sessions would get a NULL
@@ -521,7 +512,7 @@ def weighted_sample(
         df.withColumn("_wsp_h", h)
         .withColumn("priority", pri)
         .drop("_wsp_h")
-        .orderBy("priority", id_col)
+        .orderBy("priority", "doc_id")
         .limit(k)
     )
 

@@ -225,192 +225,149 @@ def ngram_jaccard_pairs(
     docs: DataFrame,
     threshold: float = 0.35,
     shingles: DataFrame | None = None,
-    max_block_rows: int | None = MAX_BLOCK_ROWS,
-    method: str = "index",
-    max_shingle_df: int | None = 1_000,
+    max_shingle_df: int = 1_000,
 ) -> DataFrame:
     """Blocked n-gram Jaccard similarity join.
 
     The candidate space is confined to ``source`` groups, so the
     pair space is Σ_b |b|² instead of N² — the difference between
     feasible and impossible at 100 TB. Output: ``doc_a, doc_b,
-    jaccard``; both methods return IDENTICAL rows (pytest-pinned):
+    jaccard``.
 
-    * ``method="index"`` (default): inverted-index co-occurrence
-      form — explode shingles, equi-join on (block, shingle), count
-      shared shingles per pair, then |A∪B| = nA + nB − i. Per-pair
-      cost is an AGGREGATE INCREMENT; total work ∝ the shared-shingle
-      stream Σ_g c_g², not Σ_b |b|² × |shingles| array intersects.
-      The r12 sf1 timing sweep measured the pair form at 36× for 10×
-      data on dedup-shaped blocks (62M pairs × ~800-element
-      intersects); this form collapses that to the co-occurrence
-      aggregation. Requires ``threshold > 0`` (zero-overlap pairs
-      never materialize).
+    Inverted-index co-occurrence form: explode shingles, equi-join on
+    (block, shingle), count shared shingles per pair, then
+    |A∪B| = nA + nB − i. Per-pair cost is an AGGREGATE INCREMENT;
+    total work ∝ the shared-shingle stream Σ_g c_g², not
+    Σ_b |b|² × |shingles| array intersects. The r12 sf1 timing sweep
+    measured a block-pair form with array intersects at 36× for 10×
+    data on dedup-shaped blocks (62M pairs × ~800-element
+    intersects); this form collapses that to the co-occurrence
+    aggregation. Requires ``threshold > 0`` (zero-overlap pairs never
+    materialize).
 
-      Skew guard: a shingle shared by c docs of one block puts c²
-      rows on a single (block, shingle) join key — a near-universal
-      shingle turns the co-occurrence join into one straggler task.
-      ``max_shingle_df`` bounds the TASK, not the work: shingles
-      whose per-block df exceeds the cap run their self-join CHUNKED
-      — each posting pins a hash chunk of ceil(df/cap) on one side
-      and enumerates chunks on the other (the
-      :func:`bounded_block_join` construction applied to the
-      (block, shingle) key), so every qualifying co-occurrence row
-      still materializes exactly once, per-task fanout is ≤ cap²,
-      and TOTAL work is unchanged. Σ_g c_g² is intrinsic to exact
-      intersection counting — a first r13 cut that routed hot
-      shingles' DOCS through the pair path bounded tasks but
-      multiplied total work ~800× on corpora where most shingles are
-      legitimately dense (this fixture's ~96-bigram block vocabulary
-      puts every shingle in ~half its block; the pair path is the
-      36×-flagged plan, not an escape hatch). Chunking is the only
-      lossless answer that keeps both bounds. ``None`` disables the
-      guard (pure single-key join); ``max_block_rows`` applies to
-      ``method="pairs"`` only — the index form's per-task knob is
-      ``max_shingle_df``.
-    * ``method="pairs"``: bounded block-pair join with array
-      intersects. ``max_block_rows`` bounds per-task time when one
-      block is hot (oversized blocks split into hash-chunk sub-joins
-      via :func:`bounded_block_join`, results unchanged). Per-PAIR
-      cost is a full array intersect, so this form only wins when
-      blocks are small or shingle overlap is too sparse to pay the
-      exploded-stream shuffle.
+    Skew guard: a shingle shared by c docs of one block puts c² rows
+    on a single (block, shingle) join key — a near-universal shingle
+    turns the co-occurrence join into one straggler task.
+    ``max_shingle_df`` bounds the TASK, not the work: shingles whose
+    per-block df exceeds the cap run their self-join CHUNKED — each
+    posting pins a hash chunk of ceil(df/cap) on one side and
+    enumerates chunks on the other (the :func:`bounded_block_join`
+    construction applied to the (block, shingle) key), so every
+    qualifying co-occurrence row still materializes exactly once,
+    per-task fanout is ≤ cap², and TOTAL work is unchanged. Σ_g c_g²
+    is intrinsic to exact intersection counting — a first r13 cut
+    that routed hot shingles' DOCS through a pair path bounded tasks
+    but multiplied total work ~800× on corpora where most shingles are
+    legitimately dense (this fixture's ~96-bigram block vocabulary
+    puts every shingle in ~half its block). Chunking is the only
+    lossless answer that keeps both bounds.
 
     ``shingles``: optional prebuilt ``(doc_id, source, shingles)``
     table (e.g. persisted once and shared across several dedup passes);
     built from ``docs`` when omitted.
     """
+    if threshold <= 0:
+        raise ValueError(
+            "ngram_jaccard_pairs requires threshold > 0 (zero-overlap "
+            "pairs never materialize)"
+        )
     sh = (
         shingles
         if shingles is not None
         else word_shingles(docs, extra_cols=("source",))
     )
-    if method == "index":
-        if threshold <= 0:
-            raise ValueError(
-                "method='index' requires threshold > 0 (zero-overlap "
-                "pairs never materialize); use method='pairs'"
-            )
-        sizes = sh.select(
-            F.col("doc_id").alias("_d"), F.size("shingles").alias("_n")
-        )
-        ex = sh.select(
-            F.col("source").alias("blk"),
-            F.col("doc_id").alias("doc_id"),
-            F.explode("shingles").alias("g"),
-        )
-        if max_shingle_df is None:
-            co = (
-                ex.select("blk", F.col("doc_id").alias("doc_a"), "g")
-                .join(
-                    ex.select("blk", F.col("doc_id").alias("doc_b"), "g"),
-                    ["blk", "g"],
-                )
-                .where(F.col("doc_a") < F.col("doc_b"))
-                .select("doc_a", "doc_b")
-            )
-        else:
-            # Split the exploded stream at the df cap. Cold keys run
-            # the plain single-key self-join; hot keys run the SAME
-            # join chunked k = ceil(df/cap) ways — each posting pins
-            # its own hash chunk on one side and enumerates the
-            # other's, so every qualifying (a, b, g) row matches in
-            # exactly one (chunk_a, chunk_b) cell and per-task fanout
-            # is <= cap^2. The explicit repartition width pins the
-            # chunk spread against AQE's input-sized coalescing (the
-            # bounded_block_join lesson).
-            dfc = ex.groupBy("blk", "g").agg(F.count("*").alias("_df"))
-            hot_g = dfc.where(F.col("_df") > max_shingle_df)
-            ex_cold = ex.join(
-                hot_g.select("blk", "g"), ["blk", "g"], "left_anti"
-            )
-            ex_hot = ex.join(
-                hot_g.select(
-                    "blk",
-                    "g",
-                    F.ceil(F.col("_df") / F.lit(max_shingle_df))
-                    .cast("int")
-                    .alias("_k"),
-                ),
-                ["blk", "g"],
-            )
-            co_cold = (
-                ex_cold.select("blk", F.col("doc_id").alias("doc_a"), "g")
-                .join(
-                    ex_cold.select(
-                        "blk", F.col("doc_id").alias("doc_b"), "g"
-                    ),
-                    ["blk", "g"],
-                )
-                .where(F.col("doc_a") < F.col("doc_b"))
-                .select("doc_a", "doc_b")
-            )
-            a_hot = ex_hot.select(
-                "blk",
-                "g",
-                F.col("doc_id").alias("doc_a"),
-                F.pmod(F.xxhash64("doc_id"), F.col("_k"))
-                .cast("int")
-                .alias("_ca"),
-                F.explode(
-                    F.sequence(F.lit(0), F.col("_k") - 1)
-                ).alias("_cb"),
-            )
-            b_hot = ex_hot.select(
-                "blk",
-                "g",
-                F.col("doc_id").alias("doc_b"),
-                F.explode(
-                    F.sequence(F.lit(0), F.col("_k") - 1)
-                ).alias("_ca"),
-                F.pmod(F.xxhash64("doc_id"), F.col("_k"))
-                .cast("int")
-                .alias("_cb"),
-            )
-            n_part = int(
-                ex.sparkSession.conf.get(
-                    "spark.sql.shuffle.partitions", "32"
-                )
-            )
-            co_hot = (
-                a_hot.repartition(n_part, "blk", "g", "_ca", "_cb")
-                .join(
-                    b_hot.repartition(n_part, "blk", "g", "_ca", "_cb"),
-                    ["blk", "g", "_ca", "_cb"],
-                )
-                .where(F.col("doc_a") < F.col("doc_b"))
-                .select("doc_a", "doc_b")
-            )
-            co = co_cold.unionByName(co_hot)
-        inter = co.groupBy("doc_a", "doc_b").agg(F.count("*").alias("_i"))
-        na = sizes.select(F.col("_d").alias("doc_a"), F.col("_n").alias("_na"))
-        nb = sizes.select(F.col("_d").alias("doc_b"), F.col("_n").alias("_nb"))
-        jacc = F.round(
-            F.col("_i").cast("double")
-            / (F.col("_na") + F.col("_nb") - F.col("_i")),
-            6,
-        )
-        return (
-            inter.join(na, "doc_a")
-            .join(nb, "doc_b")
-            .select("doc_a", "doc_b", jacc.alias("jaccard"))
-            .where(F.col("jaccard") >= threshold)
-        )
-    if method != "pairs":
-        raise ValueError(f"unknown method {method!r}")
-    a = sh.select(
+    sizes = sh.select(
+        F.col("doc_id").alias("_d"), F.size("shingles").alias("_n")
+    )
+    ex = sh.select(
         F.col("source").alias("blk"),
+        F.col("doc_id").alias("doc_id"),
+        F.explode("shingles").alias("g"),
+    )
+    # Split the exploded stream at the df cap. Cold keys run
+    # the plain single-key self-join; hot keys run the SAME
+    # join chunked k = ceil(df/cap) ways — each posting pins
+    # its own hash chunk on one side and enumerates the
+    # other's, so every qualifying (a, b, g) row matches in
+    # exactly one (chunk_a, chunk_b) cell and per-task fanout
+    # is <= cap^2. The explicit repartition width pins the
+    # chunk spread against AQE's input-sized coalescing (the
+    # bounded_block_join lesson).
+    dfc = ex.groupBy("blk", "g").agg(F.count("*").alias("_df"))
+    hot_g = dfc.where(F.col("_df") > max_shingle_df)
+    ex_cold = ex.join(
+        hot_g.select("blk", "g"), ["blk", "g"], "left_anti"
+    )
+    ex_hot = ex.join(
+        hot_g.select(
+            "blk",
+            "g",
+            F.ceil(F.col("_df") / F.lit(max_shingle_df))
+            .cast("int")
+            .alias("_k"),
+        ),
+        ["blk", "g"],
+    )
+    co_cold = (
+        ex_cold.select("blk", F.col("doc_id").alias("doc_a"), "g")
+        .join(
+            ex_cold.select(
+                "blk", F.col("doc_id").alias("doc_b"), "g"
+            ),
+            ["blk", "g"],
+        )
+        .where(F.col("doc_a") < F.col("doc_b"))
+        .select("doc_a", "doc_b")
+    )
+    a_hot = ex_hot.select(
+        "blk",
+        "g",
         F.col("doc_id").alias("doc_a"),
-        F.col("shingles").alias("sh_a"),
+        F.pmod(F.xxhash64("doc_id"), F.col("_k"))
+        .cast("int")
+        .alias("_ca"),
+        F.explode(
+            F.sequence(F.lit(0), F.col("_k") - 1)
+        ).alias("_cb"),
     )
-    b = sh.select(
-        F.col("source").alias("blk"),
+    b_hot = ex_hot.select(
+        "blk",
+        "g",
         F.col("doc_id").alias("doc_b"),
-        F.col("shingles").alias("sh_b"),
+        F.explode(
+            F.sequence(F.lit(0), F.col("_k") - 1)
+        ).alias("_ca"),
+        F.pmod(F.xxhash64("doc_id"), F.col("_k"))
+        .cast("int")
+        .alias("_cb"),
     )
-    pairs = bounded_block_join(a, b, "blk", "doc_a", "doc_b", max_block_rows)
+    n_part = int(
+        ex.sparkSession.conf.get(
+            "spark.sql.shuffle.partitions", "32"
+        )
+    )
+    co_hot = (
+        a_hot.repartition(n_part, "blk", "g", "_ca", "_cb")
+        .join(
+            b_hot.repartition(n_part, "blk", "g", "_ca", "_cb"),
+            ["blk", "g", "_ca", "_cb"],
+        )
+        .where(F.col("doc_a") < F.col("doc_b"))
+        .select("doc_a", "doc_b")
+    )
+    co = co_cold.unionByName(co_hot)
+    inter = co.groupBy("doc_a", "doc_b").agg(F.count("*").alias("_i"))
+    na = sizes.select(F.col("_d").alias("doc_a"), F.col("_n").alias("_na"))
+    nb = sizes.select(F.col("_d").alias("doc_b"), F.col("_n").alias("_nb"))
+    jacc = F.round(
+        F.col("_i").cast("double")
+        / (F.col("_na") + F.col("_nb") - F.col("_i")),
+        6,
+    )
     return (
-        pairs.select("doc_a", "doc_b", _jaccard("sh_a", "sh_b").alias("jaccard"))
+        inter.join(na, "doc_a")
+        .join(nb, "doc_b")
+        .select("doc_a", "doc_b", jacc.alias("jaccard"))
         .where(F.col("jaccard") >= threshold)
     )
 
@@ -955,7 +912,6 @@ def simhash_hamming_candidates(
 def dup_components(
     pairs: DataFrame,
     max_iter: int = 25,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Connected components over near-dup pairs: cluster pairwise
     matches into duplicate groups (the step after any similarity
@@ -969,9 +925,8 @@ def dup_components(
 
     Each round is one distributed join + min-aggregation; lineage
     is truncated per round (``checkpointing.truncate_lineage``:
-    ``localCheckpoint`` by default, fault-tolerant ``checkpoint()``
-    into the configured checkpoint dir with
-    ``reliable_checkpoint=True`` — results identical). The
+    ``localCheckpoint``, or fault-tolerant ``checkpoint()`` into the
+    session's checkpoint dir when one is set — results identical). The
     driver-side loop holds only a changed-row COUNT, never data.
 
     Output: ``doc_id, component`` (= min doc_id reachable) for every
@@ -1024,7 +979,6 @@ def dup_components(
             sym.select(F.col("doc_a").alias("node"))
             .distinct()
             .withColumn("label", F.col("node")),
-            reliable=reliable_checkpoint,
             eager=True,
         )
         for _ in range(max_iter):
@@ -1051,7 +1005,6 @@ def dup_components(
             new_labels = truncate_lineage(
                 prop.join(lut, prop.label == F.col("_ln"), "left")
                 .select("node", F.coalesce("_ll", "label").alias("label")),
-                reliable=reliable_checkpoint,
                 eager=False,
             )
             changed = (

@@ -185,7 +185,6 @@ def bfs_levels(
     edges: DataFrame,
     seeds: DataFrame,
     max_hops: int = 4,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Multi-source breadth-first levels over undirected ``(u, v)``
     edges: for every vertex within ``max_hops`` of any seed, the
@@ -207,12 +206,10 @@ def bfs_levels(
     against the visited set (second shuffle) — so each round's cost
     is O(frontier out-degree), NOT O(graph). The visited set and
     each frontier are lineage-truncated per round
-    (``localCheckpoint`` by default; ``reliable_checkpoint=True``
-    writes rounds to the configured checkpoint dir instead — the
-    cluster-grade fault-tolerance switch, results identical, see
-    ``checkpointing.truncate_lineage``). The driver loop holds only
-    the hop COUNTER —
-    no data, no convergence ``collect``. Rounds whose frontier is
+    (``localCheckpoint``, or the session's checkpoint dir when one is
+    set — results identical, see ``checkpointing.truncate_lineage``).
+    The driver loop holds only the hop COUNTER — no data, no
+    convergence ``collect``. Rounds whose frontier is
     already empty cost two empty-input jobs each, never a scan.
 
     Seeds outside the vertex set are still emitted at level 0 (they
@@ -236,8 +233,7 @@ def bfs_levels(
         visited = truncate_lineage(
             seeds.select(F.col(seeds.columns[0]).cast("long").alias("id"))
             .distinct()
-            .withColumn("level", F.lit(0)),
-            reliable=reliable_checkpoint,
+            .withColumn("level", F.lit(0))
         )
         frontier = visited
         for hop in range(1, max_hops + 1):
@@ -248,15 +244,10 @@ def bfs_levels(
             )
             frontier = truncate_lineage(
                 reached.join(visited, "id", "left_anti")
-                .withColumn("level", F.lit(hop)),
-                reliable=reliable_checkpoint,
+                .withColumn("level", F.lit(hop))
             )
-            visited = truncate_lineage(
-                visited.unionAll(frontier), reliable=reliable_checkpoint
-            )
-        visited = truncate_lineage(
-            visited, reliable=reliable_checkpoint, eager=True
-        )
+            visited = truncate_lineage(visited.unionAll(frontier))
+        visited = truncate_lineage(visited, eager=True)
     finally:
         spark.conf.set(conf_key, orig_parts)
     return visited
@@ -269,7 +260,6 @@ def pagerank_fixed_point(
     edges: DataFrame,
     d_pct: int = 85,
     iters: int = 5,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """PageRank over undirected ``(u, v)`` edges in FIXED-POINT
     integer arithmetic: ranks live as nano-units (``rank · 10⁹`` as
@@ -295,11 +285,10 @@ def pagerank_fixed_point(
     one left join back onto the vertex set — the Pregel message
     pattern as three Catalyst-planned hash operations. Lineage is
     truncated per round via ``checkpointing.truncate_lineage`` —
-    ``localCheckpoint`` by default, fault-tolerant ``checkpoint()``
-    with ``reliable_checkpoint=True`` (same switch as
-    ``dedup.dup_components``; results identical). The driver loop
-    holds an
-    iteration COUNTER only — no data, no convergence collect.
+    ``localCheckpoint``, or fault-tolerant ``checkpoint()`` when the
+    session has a checkpoint dir (results identical). The driver loop
+    holds an iteration COUNTER only — no data, no convergence
+    collect.
 
     Output: ``id, rank_nano (BIGINT), rank (DOUBLE = nano / 10⁹)``.
     """
@@ -328,7 +317,7 @@ def pagerank_fixed_point(
                 F.expr(f"{_NANO}L div _n").alias("rank_nano"),
             )
         )
-        state = truncate_lineage(state, reliable=reliable_checkpoint)
+        state = truncate_lineage(state)
         for _ in range(iters):
             contrib = (
                 state.join(de, state.id == de.src)
@@ -351,15 +340,13 @@ def pagerank_fixed_point(
                     ).alias("rank_nano"),
                 )
             )
-            state = truncate_lineage(state, reliable=reliable_checkpoint)
+            state = truncate_lineage(state)
         # Shuffle-partition conf is read at EXECUTION, not plan build,
         # so the chain must materialize inside the conf window: one
         # eager checkpoint of the final state evaluates all rounds
         # (per-round checkpoints stay lazy truncation points). Same
         # build-time-jobs tradeoff as ivf_centroids' default.
-        state = truncate_lineage(
-            state, reliable=reliable_checkpoint, eager=True
-        )
+        state = truncate_lineage(state, eager=True)
     finally:
         spark.conf.set(conf_key, orig_parts)
     return state.select(

@@ -17,8 +17,9 @@ Scale notes (100 TB posture):
     handling plus the per-doc distinct (which caps any (term,doc)
     pair at 1) keep reducer partitions bounded by distinct-doc counts.
   * the final index is a DataFrame, not a single JSON dict — persist
-    with ``write_index`` (Parquet, optionally bucketed by term) so
-    term lookups become partition/bucket-pruned scans.
+    it as the term-hash-bucketed store (``write_index_store``) or the
+    ``bucketBy(term)`` tables (``write_index_tables``) so term lookups
+    become partition/bucket-pruned scans.
 """
 
 from __future__ import annotations
@@ -44,7 +45,6 @@ __all__ = [
     "build_index",
     "index_stats",
     "doc_freq",
-    "write_index",
     "write_index_tables",
     "write_doc_tables",
     "merge_index",
@@ -137,26 +137,6 @@ def index_stats(docs: DataFrame) -> DataFrame:
         F.countDistinct("term").alias("num_terms"),
         F.countDistinct("doc_id").alias("num_docs"),
     )
-
-
-def write_index(index: DataFrame, path: str, *, buckets: int = 0, json_parity: bool = False) -> None:
-    """Persist the index (K2, ``reducer/src/processor.py:90-113``).
-
-    Canonical sink is Parquet; ``buckets > 0`` bucket-sorts by term so
-    future term lookups and index-index joins are shuffle-free.
-    ``json_parity`` additionally writes a single JSON file like the
-    reference's ``inverted_index_{ts}.json`` — test-only (a 100 TB
-    index cannot be one JSON file).
-    """
-    if buckets:
-        (index.write.mode("overwrite")
-              .bucketBy(buckets, "term").sortBy("term")
-              .option("path", path)
-              .saveAsTable(f"inverted_index_b{buckets}"))
-    else:
-        index.write.mode("overwrite").parquet(path)
-    if json_parity:
-        index.coalesce(1).write.mode("overwrite").json(path + ".json")
 
 
 def write_index_tables(
@@ -306,7 +286,7 @@ def merge_index(base: DataFrame, delta: DataFrame) -> DataFrame:
     then full-outer-merge on term: postings = sorted distinct union,
     df recomputed from the merged postings. One shuffle on term (and
     none at all if both sides were written ``bucketBy(term)`` — see
-    :func:`write_index`). Invariant (test + oracle-checked):
+    :func:`write_index_tables`). Invariant (test + oracle-checked):
     ``merge_index(build_index(old), build_index(new)) ==
     build_index(old ∪ new)`` when old/new partition the corpus.
     """

@@ -27,7 +27,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 __all__ = [
-    "interleave_bits",
     "sql_interleave_bits",
     "grid_cells",
     "zorder_key",
@@ -36,23 +35,11 @@ __all__ = [
 ]
 
 
-def interleave_bits(x: F.Column, y: F.Column, bits: int = 8) -> F.Column:
-    """Morton interleave of two ``bits``-wide non-negative ints:
-    bit i of ``x`` lands at position 2i, of ``y`` at 2i+1. Pure
-    shift/mask arithmetic — 2·bits codegen'd terms, no UDF, and the
-    identical expression runs in DuckDB for the oracle."""
-    z = F.lit(0).cast("bigint")
-    for i in range(bits):
-        z = (
-            z
-            + F.shiftleft(F.shiftright(x, i).bitwiseAND(F.lit(1)), 2 * i)
-            + F.shiftleft(F.shiftright(y, i).bitwiseAND(F.lit(1)), 2 * i + 1)
-        )
-    return z
-
-
 def sql_interleave_bits(x: str, y: str, bits: int = 8) -> str:
-    """DuckDB twin of :func:`interleave_bits` (same shift/mask sum)."""
+    """Morton interleave of two ``bits``-wide non-negative ints as
+    one SQL expression: bit i of ``x`` lands at position 2i, of ``y``
+    at 2i+1. Pure shift/mask arithmetic, no UDF; the identical text
+    parses in Spark SQL and DuckDB, so the oracle replays it."""
     terms = []
     for i in range(bits):
         terms.append(f"((({x} >> {i}) & 1) << {2 * i})")
@@ -101,11 +88,9 @@ def zorder_key(
     """
     cx = grid_cells(df, col_x, bits).withColumnRenamed("cell", "_gx")
     cy = grid_cells(df, col_y, bits).withColumnRenamed("cell", "_gy")
-    # The Morton fold is parsed JVM-side from the SQL twin (valid
-    # Spark SQL too) instead of the 2·bits-term Column chain of
-    # interleave_bits — one py4j call instead of ~64 (the
-    # prefix-primitive construction finding; interleave_bits stays
-    # the Column-level API, pytest pins the two forms equal).
+    # The Morton fold is parsed JVM-side from one SQL string instead
+    # of a 2·bits-term Column chain — one py4j call instead of ~64
+    # (the prefix-primitive construction finding).
     return (
         df.join(cx.withColumnRenamed("value", col_x), col_x)
         .join(cy.withColumnRenamed("value", col_y), col_y)

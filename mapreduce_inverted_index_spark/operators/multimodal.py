@@ -187,21 +187,21 @@ def extract_features(media: DataFrame) -> DataFrame:
     )
 
 
-def sample_frames(media: DataFrame, frame_bytes: int = 64, stride: int = 4) -> DataFrame:
-    """Frame sampling for video payloads: every ``stride``-th
-    ``frame_bytes`` block, as a Pandas UDF over binary columns (the
-    real version decodes containers; the batch/partition shape is
-    identical). One output row per sampled frame."""
+def sample_frames(media: DataFrame) -> DataFrame:
+    """Frame sampling for video payloads: every 4th 64-byte block, as
+    a Pandas UDF over binary columns (the real version decodes
+    containers; the batch/partition shape is identical). One output
+    row per sampled frame."""
 
     def sampler(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, nos, frames = [], [], []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
                 blocks = [
-                    payload[i : i + frame_bytes]
-                    for i in range(0, len(payload), frame_bytes)
+                    payload[i : i + 64]
+                    for i in range(0, len(payload), 64)
                 ]
-                for no, blk in enumerate(blocks[::stride]):
+                for no, blk in enumerate(blocks[::4]):
                     ids.append(mid)
                     nos.append(no)
                     frames.append(blk)

@@ -149,7 +149,7 @@ def ivf_multi_assign(
     at plan-build time (callers holding a lazy ``cents`` pay its
     compute here, not at the first action); duplicate input rows pass
     through per-row (nothing groups the corpus); an EMPTY codebook
-    short-circuits to an empty result — the legacy join's behavior —
+    short-circuits to an empty result — the retired join's behavior —
     instead of building a degenerate literal.
     """
     e = embeddings.select(F.col("vec_id").alias("vec_id"), F.col("embedding").alias("vec"))
@@ -162,7 +162,7 @@ def ivf_multi_assign(
             "cell", F.lit(None).cast("int")
         )
     # sorting the 3-field (cos, negc, cell) structs desc orders
-    # exactly like the legacy (cos, negc) sort — negc is unique, so
+    # exactly like the retired join's (cos, negc) sort — negc is unique, so
     # the third field never decides
     top = F.slice(
         F.sort_array(_cell_score_structs("vec", rows), asc=False), 1, r
@@ -322,15 +322,16 @@ def _cell_score_structs(vec_col, cents_rows) -> Column:
     one ``zip_with`` lambda — one small expression regardless of
     n_cells. Unrolling a struct per centroid instead generates a
     plan Janino must compile per NEW codebook (measured: 1.3s warm
-    vs 0.23s at 2k vectors x 16 cells); the legacy broadcast
-    crossJoin + corpus aggregate is 4.2x slower than this at 500k
-    vectors x 64 cells. Each (vector, centroid) cosine is the same
-    :func:`cosine_similarity` expression tree in all three routes,
-    so outputs are float-identical (forced-route pytest)."""
+    vs 0.23s at 2k vectors x 16 cells); the broadcast crossJoin +
+    corpus aggregate (``ivf_centroids(checkpoint=False)``) is 4.2x
+    slower than this at 500k vectors x 64 cells. Each (vector,
+    centroid) cosine is the same :func:`cosine_similarity` expression
+    tree in all three routes, so outputs are float-identical
+    (forced-route pytest)."""
     if not cents_rows:
         raise ValueError(
             "empty codebook: callers short-circuit to an empty result "
-            "(the legacy join's behavior) before building the literal"
+            "(the retired join's behavior) before building the literal"
         )
     v = F.col(vec_col) if isinstance(vec_col, str) else vec_col
     idx = F.lit([int(cell) for cell, _ in cents_rows])
@@ -383,20 +384,20 @@ def ivf_centroids(
     against centroid literals, so the corpus is never joined or
     aggregated to be assigned and per-round lineage stays constant
     (no localCheckpoint blocks needed). It runs iters+1 tiny jobs at
-    BUILD time (laziness lost). Cluster callers that need a fully
-    lazy, fault-tolerant-lineage plan pass ``checkpoint=False`` and
-    take the legacy route: per round, crossJoin against the
-    BROADCAST codebook plus a corpus-sized max_by aggregate —
-    float-identical output (forced-route pytest), linear both ways,
-    but one extra corpus aggregate per round.
+    BUILD time (laziness lost). ``checkpoint=False`` is the fully
+    lazy reference route the tests pin the default against (no
+    oracle checks the codebook itself): per round, crossJoin against
+    the BROADCAST codebook plus a corpus-sized max_by aggregate —
+    float-identical output, linear both ways, but one extra corpus
+    aggregate per round.
 
-    Edge semantics of the checkpoint route (differ from the legacy
+    Edge semantics of the checkpoint route (differ from the reference
     route): the per-round collect makes codebook compute EAGER at
     build time, and duplicate ``(id, vec)`` input rows each weight
-    the centroid means per-row (the legacy route's ``groupBy(vid,
+    the centroid means per-row (the reference route's ``groupBy(vid,
     v)`` collapsed exact duplicates before averaging). An empty
     corpus short-circuits: the loop stops and the empty ``(cell,
-    centroid)`` codebook returns, as the legacy route produced.
+    centroid)`` codebook returns, as the reference route produces.
     """
     e = embeddings.select(F.col("vec_id").alias("vid"), F.col("embedding").alias("v"))
     seeds = (
@@ -445,8 +446,8 @@ def ivf_centroids(
         )
         # literal route: the next round collects anyway and the plan
         # is shallow (one scan + two aggs), so no per-round
-        # checkpoint blocks; legacy route: lazy by contract, lineage
-        # cost accepted
+        # checkpoint blocks; reference route: lazy by contract,
+        # lineage cost accepted
         cents = new_cents
     if checkpoint:
         # materialize the RETURNED codebook once: downstream
@@ -1028,7 +1029,7 @@ def hard_negatives_ivf(
 
 
 def gram_matrix(
-    emb: DataFrame, vec_col: str = "embedding", scale: int = 1_000_000
+    emb: DataFrame, vec_col: str = "embedding"
 ) -> DataFrame:
     """Distributed uncentered Gram matrix G = Σ_v q(v) q(v)^T over an
     embedding column — the one-pass reduction under PCA/whitening/
@@ -1043,14 +1044,14 @@ def gram_matrix(
     product — unusable at scale).
 
     Exactness across engines: components quantize to fixed-point
-    ``floor(x * scale + 0.5)`` int64 BEFORE any product (explicit
+    ``floor(x * 10^6 + 0.5)`` int64 BEFORE any product (explicit
     round-half-up — numpy's round() is half-to-even, SQL ROUND is
     half-away; floor(+0.5) sidesteps both), and int64 sums are
     order-independent, so a SQL oracle phrased as the naive unnest
     self-join reproduces the distributed result bit-for-bit.
 
     Output: ``i, j, gram`` for the upper triangle (i <= j), gram in
-    units of scale^-2.
+    units of 10^-12.
     """
     import numpy as np
     import pandas as pd
@@ -1061,7 +1062,7 @@ def gram_matrix(
     # int64 overflow guard: numpy wraps SILENTLY past 2^63, so (a)
     # each BATCH matmul is sliced so |cell| <= rows * (max|q|)^2 stays
     # under the budget — a single 10k-row Arrow batch of |x|~100
-    # vectors at scale=1e6 would wrap inside one q.T @ q otherwise —
+    # vectors at the 1e6 scale would wrap inside one q.T @ q otherwise —
     # and (b) the ACCUMULATOR flushes a partial whenever its largest
     # |cell| could no longer absorb the next slice (budget = 2^62;
     # bounds computed from the actual batch values in Python ints,
@@ -1069,6 +1070,7 @@ def gram_matrix(
     # cross-partial sum runs in DECIMAL(38,0) — exact far past 2^63 —
     # and only casts back to long for the output contract.
     _BUDGET = 1 << 62
+    _SCALE = 1_000_000  # fixed-point units per 1.0
 
     def partial_grams(batches):
         acc = None
@@ -1085,14 +1087,14 @@ def gram_matrix(
             if not len(pdf):
                 continue
             mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            q = np.floor(mat * scale + 0.5).astype(np.int64)
+            q = np.floor(mat * _SCALE + 0.5).astype(np.int64)
             m = int(np.abs(q).max())  # Python int: cannot wrap
             per_row = m * m  # max one-row contribution to one cell
             if per_row > _BUDGET:
                 raise ValueError(
                     f"gram_matrix: a single row's cell contribution "
-                    f"({per_row}) exceeds the int64 budget — lower "
-                    f"scale= (currently {scale}) for |x| up to {m / scale}"
+                    f"({per_row}) exceeds the int64 budget at fixed-point "
+                    f"scale {_SCALE} (|x| up to {m / _SCALE})"
                 )
             rows_per_slice = (
                 len(q) if per_row == 0 else max(1, _BUDGET // per_row)
@@ -1219,7 +1221,6 @@ def semantic_incremental_dedup(
     cents: DataFrame,
     tau: float = 0.4,
     r: int = 3,
-    broadcast: "bool | str" = "auto",
     broadcast_max_rows: int = 100_000,
 ) -> DataFrame:
     """Semantic near-dup matches of a NEW embedding batch against a
@@ -1238,15 +1239,12 @@ def semantic_incremental_dedup(
     cell directories. Candidate IO — not just candidate compute — is
     r/n_cells of the corpus per batch.
 
-    ``broadcast="auto"`` (default) probes the batch with a BOUNDED
-    ``limit(n+1).count()`` (the :func:`skew.choose_join_route`
-    discipline) and only broadcast-hints when the batch is at most
-    ``broadcast_max_rows`` ids — an oversized batch (a backfill
-    replay, a day-one bulk load) falls back to a plain shuffle join
-    on ``cell`` instead of failing the broadcast build. Pass
-    ``True``/``False`` to force a side when the caller already knows
-    the batch size (e.g. a foreachBatch loop with bounded
-    maxFilesPerTrigger). Result rows are identical on every route.
+    The batch is probed with a BOUNDED ``limit(n+1).count()`` (the
+    :func:`skew.choose_join_route` discipline) and only
+    broadcast-hinted when it is at most ``broadcast_max_rows`` ids —
+    an oversized batch (a backfill replay, a day-one bulk load) falls
+    back to a plain shuffle join on ``cell`` instead of failing the
+    broadcast build. Result rows are identical on both routes.
 
     Output: ``new_id, dup_of, cos_sim`` (distinct), every stored
     vector the new one shares a probed cell with at
@@ -1262,13 +1260,11 @@ def semantic_incremental_dedup(
     b = base_cells.select(
         "cell", F.col("vec_id").alias("dup_of"), F.col("vec").alias("vb")
     )
-    if broadcast == "auto":
-        # bounded probe on the PRE-multi-assign batch (r× smaller)
-        probe = new_embeddings.limit(
-            broadcast_max_rows + 1
-        ).count()
-        broadcast = probe <= broadcast_max_rows
-    left = F.broadcast(a) if broadcast else a
+    # bounded probe on the PRE-multi-assign batch (r× smaller)
+    probe = new_embeddings.limit(
+        broadcast_max_rows + 1
+    ).count()
+    left = F.broadcast(a) if probe <= broadcast_max_rows else a
     return (
         left.join(b, "cell")
         .select(

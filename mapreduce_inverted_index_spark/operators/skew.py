@@ -343,7 +343,6 @@ def auto_routed_join(
     hot_threshold: int = 32,
     broadcast_max_rows: int = 10_000,
     salt_source: str | None = None,
-    route: str | None = None,
 ) -> tuple[DataFrame, str]:
     """Histogram-routed inner join: run :func:`choose_join_route`'s
     census and dispatch to the strategy it names — closing the loop
@@ -361,21 +360,17 @@ def auto_routed_join(
       over ``n_salts`` reducers, cold keys join plainly.
     * ``'plain'`` — single shuffle join; AQE splits residual skew.
 
-    ``route`` overrides the census (tests pin each path; production
-    replays a previously scouted decision without re-counting).
-
     Returns ``(joined, route)`` — joined columns are all of ``left``
     then all of ``right`` on every route (positional internal renames,
     so self-joins and shared column names work uniformly).
     """
-    if route is None:
-        route = choose_join_route(
-            left,
-            right,
-            left_key,
-            hot_threshold=hot_threshold,
-            broadcast_max_rows=broadcast_max_rows,
-        )
+    route = choose_join_route(
+        left,
+        right,
+        left_key,
+        hot_threshold=hot_threshold,
+        broadcast_max_rows=broadcast_max_rows,
+    )
     if route == "salted":
         return (
             salted_skew_join(
@@ -389,8 +384,6 @@ def auto_routed_join(
             ),
             route,
         )
-    if route not in ("broadcast", "plain"):
-        raise ValueError(f"unknown route {route!r}")
     # broadcast / plain share one join shape; positional renames keep
     # self-joins and duplicate column names legal, like salted_skew_join
     lnames = [f"__arj_l{i}" for i in range(len(left.columns))]

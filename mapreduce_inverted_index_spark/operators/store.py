@@ -542,7 +542,11 @@ def open_snapshot(
         ]
         schema = StructType.fromJson(json.loads(manifest["schema"]))
         if not files:
-            return spark.createDataFrame([], schema), manifest
+            # the partition column last, as a read of the files puts it
+            empty = StructType(
+                [f for f in schema if f.name != part_col] + [schema[part_col]]
+            )
+            return spark.createDataFrame([], empty), manifest
         if not all(os.path.isfile(p) for p in files):
             last = "the manifest names files that are missing"
             time.sleep(wait_sec)

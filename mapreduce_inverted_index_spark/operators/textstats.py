@@ -302,7 +302,6 @@ def repetition_profile(docs: DataFrame) -> DataFrame:
 
 def lm_unigram_scores(
     docs: DataFrame,
-    persist_tf: bool = True,
 ) -> DataFrame:
     """Per-document corpus-LM quality score: average negative log
     probability per token under an add-one-smoothed unigram model of
@@ -333,9 +332,7 @@ def lm_unigram_scores(
         doc_term_freq,
     )
 
-    tf = doc_term_freq(docs)
-    if persist_tf:
-        tf = tf.persist()
+    tf = doc_term_freq(docs).persist()
     lm = (
         tf.groupBy("term")
         .agg(F.sum("tf").alias("c"))
@@ -376,7 +373,6 @@ def lm_unigram_scores(
 
 def build_vocab(
     docs: DataFrame,
-    max_size: int | None = None,
 ) -> DataFrame:
     """Frequency-ranked vocabulary: ``term, n_occ, token_id`` with
     ids dense 0.. by (frequency desc, term asc) — the deterministic
@@ -387,7 +383,7 @@ def build_vocab(
     (≲ millions), orders of magnitude below corpus size — so the
     single final window task is fine here even though it would not
     be on the corpus (same reasoning as ``layout.grid_cells``'
-    histogram window). ``max_size`` truncates to the top-V ids.
+    histogram window).
     """
     counts = (
         docs.select(F.explode(tokenize("text")).alias("term"))
@@ -400,18 +396,17 @@ def build_vocab(
     vocab = counts.withColumn(
         "token_id", (F.row_number().over(w) - 1).cast("int")
     )
-    return vocab.where(F.col("token_id") < max_size) if max_size else vocab
+    return vocab
 
 
 def encode_docs(
     docs: DataFrame,
-    vocab: DataFrame | None = None,
 ) -> DataFrame:
     """Token-id encoding: each document's token stream as an INT
-    ARRAY under a broadcast vocabulary — the array the trainer
-    actually consumes (`pack_sequences` upstream budget-counts it;
-    this materializes it). Out-of-vocabulary tokens encode as
-    ``-1``. Output: ``doc_id, n_tokens, token_ids``.
+    ARRAY under the corpus's own broadcast vocabulary
+    (:func:`build_vocab`) — the array the trainer actually consumes
+    (`pack_sequences` upstream budget-counts it; this materializes
+    it). Output: ``doc_id, n_tokens, token_ids``.
 
     Shape at scale: tokens carry their position through a BROADCAST
     vocab join (the corpus never shuffles to look up ids), then one
@@ -421,16 +416,15 @@ def encode_docs(
     side. Order correctness does NOT rely on collect_list internal
     ordering: the sort is explicit on the carried position.
     """
-    if vocab is None:
-        vocab = build_vocab(docs)
+    vocab = build_vocab(docs)
     tok = docs.select(
         F.col("doc_id").alias("doc_id"),
         F.posexplode(tokenize("text")).alias("pos", "term"),
     )
-    enc = tok.join(F.broadcast(vocab.select("term", "token_id")), "term", "left").select(
+    enc = tok.join(F.broadcast(vocab.select("term", "token_id")), "term").select(
         "doc_id",
         "pos",
-        F.coalesce(F.col("token_id"), F.lit(-1)).cast("int").alias("tid"),
+        F.col("token_id").cast("int").alias("tid"),
     )
     return (
         enc.groupBy("doc_id")
@@ -863,7 +857,6 @@ def bpe_encode(
 
 def lm_bigram_scores(
     docs: DataFrame,
-    lam: float = 0.75,
     broadcast_lm: "bool | str" = "auto",
     broadcast_max_rows: int = 1_000_000,
 ) -> DataFrame:
@@ -872,7 +865,7 @@ def lm_bigram_scores(
     perplexity-proxy filter; unigram models can't see word-order
     degeneracy, a bigram model scores "the the the the" as the
     garbage it is). Score = average negative log of
-    ``lam * P_ml(w|prev) + (1-lam) * P_add1(w)`` over the document's
+    ``0.75 * P_ml(w|prev) + 0.25 * P_add1(w)`` over the document's
     token bigrams; higher = less corpus-like.
 
     Engine-stability discipline (the ``lm_unigram_scores`` pattern
@@ -967,9 +960,9 @@ def lm_bigram_scores(
             "w",
             F.round(
                 F.ln(
-                    F.lit(float(lam))
+                    F.lit(0.75)
                     * (F.col("c2").cast("double") / F.col("c1_prev").cast("double"))
-                    + F.lit(1.0 - float(lam))
+                    + F.lit(0.25)
                     * ((F.col("c1").cast("double") + 1.0) / (F.col("n_corpus") + F.col("v_corpus")))
                 ),
                 9,

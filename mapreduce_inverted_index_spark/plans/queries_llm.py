@@ -2772,8 +2772,8 @@ def _sql_bpe_train(k: int) -> str:
         "is one row per distinct token, never per occurrence), each "
         "round one map-side-combined pair-count pass + a one-row "
         "argmax driver read + one codegen'd replace, with per-round "
-        "lineage truncation (the PageRank discipline, "
-        "reliable_checkpoint-capable). Emits the merge TABLE that "
+        "lineage truncation (the PageRank discipline). Emits the "
+        "merge TABLE that "
         "bpe_encode consumes; the oracle replays the full greedy "
         "argmax chain as 8 unrolled CTE rounds, so a green row "
         "proves every intermediate argmax, not just the final "

@@ -28,11 +28,9 @@ __all__ = [
 ]
 
 
-def write_json(df: DataFrame, path: str, *, single_file: bool = False) -> None:
-    """JSON-lines sink. ``single_file`` coalesces to one part for
-    small parity outputs ONLY — a 100 TB result is never one file."""
-    out = df.coalesce(1) if single_file else df
-    out.write.mode("overwrite").json(path)
+def write_json(df: DataFrame, path: str) -> None:
+    """JSON-lines sink, one part file per partition."""
+    df.write.mode("overwrite").json(path)
 
 
 def read_json(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
@@ -47,12 +45,12 @@ def write_final_index_json(
     *,
     creation_time: str | None = None,
     timestamp: int | None = None,
-    url_col: str | None = "source",
 ) -> str:
     """Reference-EXACT final artifact: one pretty-printed JSON file
     ``inverted_index_{timestamp}.json`` shaped
     ``{"metadata": {creation_time, num_terms, timestamp},
-    "index": {term: [{"doc_id": d, "url": u}, ...]}}`` — the byte
+    "index": {term: [{"doc_id": d, "url": u}, ...]}}`` (``u`` is the
+    document's ``source``) — the byte
     shape of ``reducer/src/processor.py:90-113`` (json.dump with
     indent=2), with the reducer's merge → sort-by-doc_id →
     dedup-first-wins per term (``reducer/src/processor.py:64-77``).
@@ -82,15 +80,11 @@ def write_final_index_json(
 
     from mapreduce_inverted_index_spark.operators.inverted_index import doc_terms
 
-    pairs = doc_terms(docs)
-    if url_col is not None:
-        urls = docs.select(
-            F.col("doc_id").alias("doc_id"), F.col(url_col).alias("url")
-        ).dropDuplicates(["doc_id"])
-        pairs = pairs.join(F.broadcast(urls), "doc_id", "left")
-        occ = F.struct(F.col("doc_id"), F.col("url"))
-    else:
-        occ = F.struct(F.col("doc_id"))
+    urls = docs.select(
+        F.col("doc_id").alias("doc_id"), F.col("source").alias("url")
+    ).dropDuplicates(["doc_id"])
+    pairs = doc_terms(docs).join(F.broadcast(urls), "doc_id", "left")
+    occ = F.struct(F.col("doc_id"), F.col("url"))
     per_term = (
         pairs.groupBy("term")
         .agg(F.sort_array(F.collect_set(occ)).alias("occurrences"))
@@ -145,7 +139,7 @@ def read_orc(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.orc(path)
 
 
-def read_text_corpus(spark: SparkSession, path: str, *, dense: bool = False) -> DataFrame:
+def read_text_corpus(spark: SparkSession, path: str) -> DataFrame:
     """Raw-document ingestion: one row per text FILE (not per line),
     ``(doc_id BIGINT, source STRING, text STRING)``.
 
@@ -153,21 +147,16 @@ def read_text_corpus(spark: SparkSession, path: str, *, dense: bool = False) -> 
     (``mapper/src/processor.py:135-161``): each file is one document,
     its path the provenance.
 
-    doc_ids default to the SCALE-SAFE assignment
+    doc_ids come from the SCALE-SAFE assignment
     (``operators.ids.assign_partition_ids``: per-partition offsets +
     local increment — the reference's actual ``doc_id_start``
     mechanism, ``master/src/coordinator.py:57``, with no
     single-partition stage anywhere in the plan). Ids are dense and
     unique; they follow Spark's file-split order.
-
-    ``dense=True`` opts into the reference-parity global ordering
-    (``row_number`` over the file path — stable across reruns because
-    paths are unique and totally ordered) at the cost of funneling
-    the final numbering through ONE task; reserve it for corpora
-    small enough that a single task can see every row.
     """
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
+
+    from mapreduce_inverted_index_spark.operators.ids import assign_partition_ids
 
     files = (
         spark.read.format("text")
@@ -178,17 +167,8 @@ def read_text_corpus(spark: SparkSession, path: str, *, dense: bool = False) -> 
             F.col("value").alias("text"),
         )
     )
-    if not dense:
-        from mapreduce_inverted_index_spark.operators.ids import assign_partition_ids
-
-        tagged = assign_partition_ids(files, id_name="doc_id")
-        return tagged.select("doc_id", "source", "text")
-    w = Window.orderBy("source")
-    return files.select(
-        (F.row_number().over(w) - 1).cast("bigint").alias("doc_id"),
-        "source",
-        "text",
-    )
+    tagged = assign_partition_ids(files, id_name="doc_id")
+    return tagged.select("doc_id", "source", "text")
 
 
 def read_evolved_parquet(spark: SparkSession, *paths: str) -> DataFrame:

@@ -99,8 +99,6 @@ def maintain_chunks_available_now(
     sf_dir: str,
     sink_dir: str,
     checkpoint_path: str,
-    width: int = 64,
-    stride: int = 48,
     glob: str = "documents.parquet",
 ) -> None:
     """Incremental RAG-chunk maintenance: one AvailableNow pass chunks
@@ -125,9 +123,7 @@ def maintain_chunks_available_now(
     )
     from mapreduce_inverted_index_spark.streaming.sketches import docs_stream
 
-    chunks = chunk_documents(
-        docs_stream(spark, sf_dir, glob), width=width, stride=stride
-    )
+    chunks = chunk_documents(docs_stream(spark, sf_dir, glob))
     q = (
         chunks.writeStream.format("parquet")
         .option("path", sink_dir)

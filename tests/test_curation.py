@@ -32,13 +32,13 @@ def test_decontaminate_removes_overlapping_docs(spark):
 
     hits = {
         r["doc_id"]: r["n_hits"]
-        for r in contamination_hits(docs, bench, n=3).collect()
+        for r in contamination_hits(docs, bench).collect()
     }
     # docs 1 and 3 share the 'quick brown fox' trigram with the bench
     assert set(hits) == {1, 3}
 
     survivors = sorted(
-        r["doc_id"] for r in decontaminate(docs, bench, n=3).collect()
+        r["doc_id"] for r in decontaminate(docs, bench).collect()
     )
     assert survivors == [2]
 
@@ -47,7 +47,7 @@ def test_contamination_benchmark_side_is_broadcast(spark):
     docs = _docs(spark, [(1, "web", "alpha beta gamma delta")])
     bench = _docs(spark, [(9, "eval", "beta gamma delta epsilon")])
     plan = (
-        contamination_hits(docs, bench, n=3)
+        contamination_hits(docs, bench)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

@@ -166,11 +166,10 @@ def test_http_crawl_to_reference_artifact_end_to_end(spark, site_url, tmp_path):
         spark.read.format("http_crawl").option("base_url", site_url).load()
     )
     out = write_final_index_json(
-        crawled,
+        crawled.withColumnRenamed("url", "source"),
         str(tmp_path),
         creation_time="2026-01-01T00:00:00",
         timestamp=1,
-        url_col="url",
     )
     with open(out) as f:
         artifact = json.load(f)

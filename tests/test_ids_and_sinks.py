@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import Row
@@ -12,10 +11,6 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 from mapreduce_inverted_index_spark.operators.ids import (
     assign_dense_ids,
     assign_partition_ids,
-)
-from mapreduce_inverted_index_spark.operators.inverted_index import (
-    build_index,
-    write_index,
 )
 from mapreduce_inverted_index_spark.sources.formats import (
     read_csv,
@@ -50,7 +45,7 @@ def test_json_roundtrip_and_permissive_corruption(spark, tmp_path):
     )
     df = spark.createDataFrame([Row(a=1, b="x"), Row(a=2, b="y")], schema)
     path = str(tmp_path / "j")
-    write_json(df, path, single_file=True)
+    write_json(df, path)
     # add a corrupt record as an extra part file (appending in place
     # would break the hadoop .crc checksum)
     with open(os.path.join(path, "part-extra.json"), "w") as f:
@@ -70,45 +65,6 @@ def test_csv_roundtrip(spark, tmp_path):
     write_csv(df, path)
     back = read_csv(spark, path, schema)
     assert sorted((r["k"], r["v"]) for r in back.collect()) == [(1, "a"), (2, "b")]
-
-
-def test_write_index_parquet_and_json_parity(spark, tmp_path):
-    docs = spark.createDataFrame(
-        [Row(doc_id=0, text="cat sat"), Row(doc_id=1, text="cat ran")]
-    )
-    index = build_index(docs)
-    path = str(tmp_path / "idx")
-    write_index(index, path, json_parity=True)
-    back = spark.read.parquet(path)
-    assert {r["term"] for r in back.collect()} == {"cat", "sat", "ran"}
-    # json parity file carries the same index, one part (reference K2)
-    jdir = path + ".json"
-    jfiles = [p for p in os.listdir(jdir) if p.endswith(".json")]
-    assert len(jfiles) == 1
-    terms = set()
-    with open(os.path.join(jdir, jfiles[0])) as f:
-        for line in f:
-            terms.add(json.loads(line)["term"])
-    assert terms == {"cat", "sat", "ran"}
-
-
-def test_write_index_bucketed_by_term(spark, tmp_path):
-    from pyspark.sql import Row
-
-    docs = spark.createDataFrame(
-        [Row(doc_id=i, text=f"cat dog t{i}") for i in range(20)]
-    )
-    index = build_index(docs)
-    path = str(tmp_path / "bidx")
-    write_index(index, path, buckets=4)
-    back = spark.table("inverted_index_b4")
-    assert back.count() == index.count()
-    # bucket metadata survived: joining two term-bucketed reads plans
-    # no exchange on the join key
-    joined = back.alias("a").join(spark.table("inverted_index_b4").alias("b"), "term")
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange hashpartitioning(term" not in plan
-    spark.sql("DROP TABLE inverted_index_b4")
 
 
 def test_orc_roundtrip(spark, sf_smoke, tmp_path):
@@ -138,13 +94,10 @@ def test_read_text_corpus_one_row_per_file(spark, tmp_path):
     by_name = {r["source"].rsplit("/", 1)[-1]: r["text"] for r in out}
     assert by_name["a.txt"] == "first doc\nwith two lines"  # whole file, not lines
     assert by_name["b.txt"] == "second doc"
-    # the scale-safe default must have NO global window stage (the
-    # single-partition row_number funnel is opt-in only)
+    # scale-safe ids: NO global window stage (no single-partition
+    # row_number funnel)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan
-
-    dense = read_text_corpus(spark, str(d), dense=True).collect()
-    assert [r["doc_id"] for r in sorted(dense, key=lambda r: r["source"])] == [0, 1]
 
 
 def test_bucketed_index_tier_shuffle_free(spark, tmp_path):

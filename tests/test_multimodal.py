@@ -58,7 +58,7 @@ def test_feature_values_deterministic_and_exact(spark):
 
 
 def test_frame_sampling_geometry(spark):
-    frames = M.sample_frames(_media(spark), frame_bytes=64, stride=4).collect()
+    frames = M.sample_frames(_media(spark)).collect()
     # only the video row (id=2, 500 bytes) produces frames:
     # ceil(500/64) = 8 blocks, every 4th -> blocks 0 and 4
     assert {r["media_id"] for r in frames} == {2}

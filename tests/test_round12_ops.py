@@ -75,10 +75,33 @@ def test_within_doc_repeat_alone_does_not_flag(spark):
     assert _spans(spark, rows, k=4) == []
 
 
+def _pair_form_jaccard(docs, threshold):
+    """The pair form, brute force: every same-block pair of the
+    operator's own shingle sets, intersected in Python."""
+    from mapreduce_inverted_index_spark.operators.dedup import word_shingles
+
+    sh = word_shingles(docs, extra_cols=("source",)).collect()
+    out = []
+    for x in sh:
+        for y in sh:
+            if x["source"] != y["source"] or x["doc_id"] >= y["doc_id"]:
+                continue
+            a, b = set(x["shingles"]), set(y["shingles"])
+            j = len(a & b) / len(a | b)
+            if j >= threshold:
+                out.append((x["doc_id"], y["doc_id"], j))
+    return sorted(out)
+
+
+def _assert_same_pairs(got, want):
+    assert [(a, b) for a, b, _ in got] == [(a, b) for a, b, _ in want]
+    assert all(abs(g[2] - w[2]) < 1e-6 for g, w in zip(got, want))
+
+
 def test_ngram_jaccard_index_form_equals_pair_form(spark):
     """The r12 sf1 timing sweep flagged the pair form at 36x for 10x
-    data; the new default inverted-index co-occurrence form must
-    return the identical (pair, score) rows — both on near-dup
+    data; the inverted-index co-occurrence form must return the same
+    (pair, score) rows as the brute-force pair form — both on near-dup
     clusters and across a threshold boundary."""
     from mapreduce_inverted_index_spark.operators.dedup import (
         ngram_jaccard_pairs,
@@ -96,21 +119,21 @@ def test_ngram_jaccard_index_form_equals_pair_form(spark):
     )
     for t in (0.2, 0.5):
         idx = sorted(map(tuple, ngram_jaccard_pairs(
-            docs, threshold=t, method="index").collect()))
-        prs = sorted(map(tuple, ngram_jaccard_pairs(
-            docs, threshold=t, method="pairs").collect()))
-        assert idx == prs and len(idx) > 0
+            docs, threshold=t).collect()))
+        assert len(idx) > 0
+        _assert_same_pairs(idx, _pair_form_jaccard(docs, t))
 
 
 def test_ngram_jaccard_hot_shingle_routing(spark):
     """VERDICT r12 ask #4: plant a near-universal shingle and prove
-    the index form's df-cap (a) actually fires — the physical plan
-    grows the cold/chunked-hot Union — and (b) stays lossless: output
-    pinned equal to method="pairs" and to the uncapped index form.
-    Hot keys run their co-occurrence self-join CHUNKED (per-task
-    fanout <= cap^2, total work unchanged); a pair sharing both hot
-    and cold shingles gets its intersection count summed across the
-    two streams by the single groupBy."""
+    the df-cap stays lossless: output pinned equal to the brute-force
+    pair form at a cap that splits the keys into hot and cold, at the
+    default cap (every key cold) and at cap 1 (every key hot, so the
+    whole result comes through the chunked path). Hot keys run their
+    co-occurrence self-join CHUNKED (per-task fanout <= cap^2, total
+    work unchanged); a pair sharing both hot and cold shingles gets
+    its intersection count summed across the two streams by the
+    single groupBy."""
     from mapreduce_inverted_index_spark.operators.dedup import (
         ngram_jaccard_pairs,
     )
@@ -131,32 +154,14 @@ def test_ngram_jaccard_hot_shingle_routing(spark):
     docs = spark.createDataFrame(
         rows, "doc_id bigint, source string, text string"
     )
-    capped = ngram_jaccard_pairs(
-        docs, threshold=0.1, method="index", max_shingle_df=5
-    )
-    plan = capped._jdf.queryExecution().executedPlan().toString()
-    assert "Union" in plan, "df-cap did not route any hot docs"
-    uncapped = ngram_jaccard_pairs(
-        docs, threshold=0.1, method="index", max_shingle_df=None
-    )
-    assert "Union" not in (
-        uncapped._jdf.queryExecution().executedPlan().toString()
-    )
-    want = sorted(
-        map(tuple, ngram_jaccard_pairs(
-            docs, threshold=0.1, method="pairs").collect())
-    )
-    got_capped = sorted(map(tuple, capped.collect()))
-    got_uncapped = sorted(map(tuple, uncapped.collect()))
-    assert got_capped == want == got_uncapped
-    # the hot-cold cross pair is present (routing emitted it)
-    ids = {(a, b) for a, b, _ in got_capped}
-    assert any(a < 6 <= 9 < b for a, b in ids)
-    # degenerate cap: everything hot -> pure pair-path, still equal
-    all_hot = sorted(map(tuple, ngram_jaccard_pairs(
-        docs, threshold=0.1, method="index", max_shingle_df=1
-    ).collect()))
-    assert all_hot == want
+    want = _pair_form_jaccard(docs, 0.1)
+    # the hot-cold cross pair is present
+    assert any(a < 6 <= 9 < b for a, b, _ in want)
+    for cap in (5, 1_000, 1):
+        got = sorted(map(tuple, ngram_jaccard_pairs(
+            docs, threshold=0.1, max_shingle_df=cap
+        ).collect()))
+        _assert_same_pairs(got, want)
 
 
 def test_ngram_jaccard_index_form_rejects_zero_threshold(spark):
@@ -170,7 +175,7 @@ def test_ngram_jaccard_index_form_rejects_zero_threshold(spark):
         [(1, "s", "a b c")], "doc_id bigint, source string, text string"
     )
     with _pytest.raises(ValueError, match="threshold > 0"):
-        ngram_jaccard_pairs(docs, threshold=0.0, method="index")
+        ngram_jaccard_pairs(docs, threshold=0.0)
 
 
 def test_extension_tokens_merge_into_maximal_span(spark):

@@ -120,9 +120,9 @@ def test_bounded_block_join_exact_under_hot_block(spark):
 
 
 def test_ngram_jaccard_bounded_matches_unbounded(spark):
-    """End-to-end operator equality: the task-time bound must not
+    """End-to-end operator equality: the per-task df cap must not
     change a single (pair, score) row even when it actually splits
-    (cap of 3 rows forces chunking on the fixture's sources)."""
+    (a cap of 3 chunks every shingle of the fixture's hot source)."""
     from mapreduce_inverted_index_spark.operators.dedup import ngram_jaccard_pairs
 
     texts = [
@@ -130,10 +130,8 @@ def test_ngram_jaccard_bounded_matches_unbounded(spark):
         for i in range(12)
     ] + [(100 + i, "cold", "completely different words here") for i in range(4)]
     docs = spark.createDataFrame(texts, "doc_id bigint, source string, text string")
-    unb = ngram_jaccard_pairs(docs, threshold=0.2, max_block_rows=None,
-                              method="pairs")
-    bnd = ngram_jaccard_pairs(docs, threshold=0.2, max_block_rows=3,
-                              method="pairs")
+    unb = ngram_jaccard_pairs(docs, threshold=0.2)
+    bnd = ngram_jaccard_pairs(docs, threshold=0.2, max_shingle_df=3)
     ru = sorted(map(tuple, unb.collect()))
     rb = sorted(map(tuple, bnd.collect()))
     assert ru == rb

@@ -253,13 +253,15 @@ def test_semantic_dedup_precision_and_recall_sf0001(spark, sf_smoke):
 
 
 def test_interleave_bits_known_values(spark):
-    from mapreduce_inverted_index_spark.operators.layout import interleave_bits
+    from mapreduce_inverted_index_spark.operators.layout import (
+        sql_interleave_bits,
+    )
 
     df = spark.createDataFrame(
         [(3, 1), (0, 0), (255, 0), (0, 255), (255, 255)], "x bigint, y bigint"
     )
     got = [r["z"] for r in df.select(
-        interleave_bits(F.col("x"), F.col("y"), 8).alias("z")
+        F.expr(sql_interleave_bits("x", "y", 8)).alias("z")
     ).collect()]
     # x bits at even positions, y bits at odd
     assert got == [
@@ -269,29 +271,18 @@ def test_interleave_bits_known_values(spark):
         0b1010101010101010,
         0xFFFF,
     ]
-
-
-def test_interleave_bits_column_and_sql_forms_equal(spark):
-    # zorder_key builds the Morton key from the SQL twin (one parsed
-    # expression instead of the 2·bits-term Column chain); this pins
-    # the two forms bit-identical over a dense value sweep.
-    from mapreduce_inverted_index_spark.operators.layout import (
-        interleave_bits,
-        sql_interleave_bits,
-    )
-
-    df = spark.range(0, 1 << 16).selectExpr(
+    # a stride through the dense 8-bit grid against a Python interleave
+    sweep = spark.range(0, 1 << 16, 257).selectExpr(
         "CAST(id % 256 AS BIGINT) AS x", "CAST(id div 256 AS BIGINT) AS y"
     )
-    n_diff = (
-        df.select(
-            interleave_bits(F.col("x"), F.col("y"), 8).alias("a"),
-            F.expr(sql_interleave_bits("x", "y", 8)).alias("b"),
+    for r in sweep.select(
+        "x", "y", F.expr(sql_interleave_bits("x", "y", 8)).alias("z")
+    ).collect():
+        want = sum(
+            ((r["x"] >> i) & 1) << (2 * i) | ((r["y"] >> i) & 1) << (2 * i + 1)
+            for i in range(8)
         )
-        .where("a <> b")
-        .count()
-    )
-    assert n_diff == 0
+        assert r["z"] == want, (r["x"], r["y"])
 
 
 def test_zorder_envelopes_are_2d_narrow(spark, sf_oracle):
@@ -339,7 +330,7 @@ def test_lm_scores_rank_common_below_rare(spark):
         "doc_id bigint, text string",
     )
     got = {r["doc_id"]: r["neg_logprob_per_tok"]
-           for r in lm_unigram_scores(docs, persist_tf=False).collect()}
+           for r in lm_unigram_scores(docs).collect()}
     assert got[11] > got[10]
     assert got[11] == got[12]
 

@@ -262,24 +262,24 @@ def test_stream_chunk_ingest_equals_batch(spark, tmp_path):
 
     def expected():
         docs = spark.read.parquet(str(landing / "*.parquet"))
-        return sorted(map(tuple, chunk_documents(docs, 8, 5).collect()))
+        return sorted(map(tuple, chunk_documents(docs).collect()))
 
-    drop_shard("s1", [(1, " ".join(f"w{i}" for i in range(20)))])
+    drop_shard("s1", [(1, " ".join(f"w{i}" for i in range(150)))])
     drop_shard("s2", [(2, "alpha beta gamma")])
     maintain_chunks_available_now(
-        spark, str(landing), sink, ckpt, width=8, stride=5, glob="*.parquet"
+        spark, str(landing), sink, ckpt, glob="*.parquet"
     )
     assert stored() == expected()
 
-    drop_shard("s3", [(3, " ".join(f"x{i}" for i in range(12)))])
+    drop_shard("s3", [(3, " ".join(f"x{i}" for i in range(100)))])
     maintain_chunks_available_now(
-        spark, str(landing), sink, ckpt, width=8, stride=5, glob="*.parquet"
+        spark, str(landing), sink, ckpt, glob="*.parquet"
     )
     after_two = stored()
     assert after_two == expected()
 
     maintain_chunks_available_now(
-        spark, str(landing), sink, ckpt, width=8, stride=5, glob="*.parquet"
+        spark, str(landing), sink, ckpt, glob="*.parquet"
     )
     assert stored() == after_two
 
@@ -441,7 +441,7 @@ def test_contrastive_negatives_semantics(spark):
     docs = spark.createDataFrame(
         [(i, f"s{i % 3}") for i in range(40)], "doc_id bigint, source string"
     )
-    out = contrastive_negatives(docs, k=4, group_col="source").collect()
+    out = contrastive_negatives(docs, k=4).collect()
     by_anchor = {}
     for r in out:
         assert r["neg_id"] != r["anchor_id"]
@@ -457,7 +457,6 @@ def test_contrastive_negatives_semantics(spark):
             "doc_id bigint, source string",
         ).repartition(7),
         k=4,
-        group_col="source",
     ).collect()
     key = lambda rows: sorted((r["anchor_id"], r["neg_no"], r["neg_id"]) for r in rows)  # noqa: E731
     assert key(again) == key(out)
@@ -511,9 +510,9 @@ def test_policy_filter_null_text_is_dropped(spark):
 
 # ----------------------------------------------------- vocab encoding
 
-def test_encode_docs_roundtrip_and_unk(spark):
-    """Encoding under the full vocab is lossless (decode == original
-    token stream); truncating the vocab maps the tail to unk_id."""
+def test_encode_docs_roundtrip(spark):
+    """Encoding under the corpus vocab is lossless (decode == original
+    token stream)."""
     from mapreduce_inverted_index_spark.operators.textstats import (
         build_vocab,
         encode_docs,
@@ -536,10 +535,3 @@ def test_encode_docs_roundtrip_and_unk(spark):
     assert [inv[t] for t in enc[1]] == "red blue red green red blue".split()
     assert [inv[t] for t in enc[2]] == "blue green yellow".split()
     assert 3 not in enc  # empty doc: no row (matches tokenize-empty)
-    # truncated vocab: yellow falls out -> unk (-1) at its position
-    small = build_vocab(docs, max_size=3)
-    enc2 = {
-        r["doc_id"]: list(r["token_ids"])
-        for r in encode_docs(docs, vocab=small).collect()
-    }
-    assert enc2[2] == [0, 2, -1]

@@ -66,7 +66,7 @@ def test_gap_fill_spine_and_fill(spark):
 
 def test_split_partition_and_proportions(spark):
     docs = spark.range(0, 2000).withColumnRenamed("id", "doc_id")
-    out = train_val_test_split(docs, val_pct=5, test_pct=5)
+    out = train_val_test_split(docs)
     counts = {r["split"]: r["n"] for r in
               out.groupBy("split").agg(F.count("*").alias("n")).collect()}
     assert sum(counts.values()) == 2000, "every row exactly one split"

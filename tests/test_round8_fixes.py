@@ -91,21 +91,15 @@ def test_semantic_incremental_broadcast_gate(spark):
     cents = S.ivf_centroids(base)
     cells = S.ivf_assign(base, cents).select("vec_id", "vec", "cell")
 
-    forced = S.semantic_incremental_dedup(
-        new, cells, cents, tau=0.4, r=6, broadcast=True
+    # the default threshold broadcast-hints this batch; a threshold
+    # below the batch size must take the shuffle route — the batch no
+    # longer broadcast-hints unbounded
+    small = S.semantic_incremental_dedup(new, cells, cents, tau=0.4, r=6)
+    big = S.semantic_incremental_dedup(
+        new, cells, cents, tau=0.4, r=6, broadcast_max_rows=3
     )
-    shuffled = S.semantic_incremental_dedup(
-        new, cells, cents, tau=0.4, r=6, broadcast=False
-    )
-    # auto with a probe threshold below the batch size must take the
-    # shuffle route — the batch no longer broadcast-hints unbounded
-    auto_big = S.semantic_incremental_dedup(
-        new, cells, cents, tau=0.4, r=6, broadcast="auto",
-        broadcast_max_rows=3,
-    )
-    want = sorted(map(tuple, forced.collect()))
-    assert sorted(map(tuple, shuffled.collect())) == want
-    assert sorted(map(tuple, auto_big.collect())) == want
+    want = sorted(map(tuple, small.collect()))
+    assert sorted(map(tuple, big.collect())) == want
     assert len(want) > 0
     # the HINT must be gone (AQE may still pick broadcast at runtime
     # from actual sizes — that's the desired behavior: a size-based
@@ -117,8 +111,7 @@ def test_semantic_incremental_broadcast_gate(spark):
             df._jdf.queryExecution().optimizedPlan().toString()
         ).count("strategy=broadcast")
 
-    assert hints(forced) == hints(shuffled) + 1
-    assert hints(auto_big) == hints(shuffled)
+    assert hints(small) == hints(big) + 1
 
 
 def test_crawl_stream_fetches_each_listing_page_once():

@@ -568,7 +568,7 @@ def test_lm_bigram_scores_semantics(spark):
         [(1, "alpha beta gamma"), (2, "alpha beta delta"), (3, "solo")],
         "doc_id long, text string",
     )
-    rows = {r["doc_id"]: r for r in lm_bigram_scores(docs, lam=0.75).collect()}
+    rows = {r["doc_id"]: r for r in lm_bigram_scores(docs).collect()}
     assert rows[3]["n_bigrams"] == 0 and rows[3]["nll_per_bigram"] is None
     # hand computation: corpus tokens N=7, V=5
     # c1: alpha 2, beta 2, gamma 1, delta 1, solo 1

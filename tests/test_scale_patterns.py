@@ -278,11 +278,8 @@ def test_salted_skew_join_equals_plain_join(spark):
 def test_auto_routed_join_routes_and_equivalence(spark):
     """choose_join_route picks the documented route for each census
     regime, and auto_routed_join returns the identical result set on
-    every route — forced or census-chosen (routing independence)."""
-    from mapreduce_inverted_index_spark.operators.skew import (
-        auto_routed_join,
-        choose_join_route,
-    )
+    every route (routing independence)."""
+    from mapreduce_inverted_index_spark.operators.skew import auto_routed_join
 
     left = spark.range(5_000).select(
         F.when(F.col("id") % 10 < 9, F.lit(7)).otherwise(F.col("id") % 50).alias("k"),
@@ -298,33 +295,18 @@ def test_auto_routed_join_routes_and_equivalence(spark):
 
     # census regimes: small right -> broadcast; big right + hot key
     # (key 7 has 4500 rows) -> salted; big right, no hot key -> plain
-    assert choose_join_route(left, right, "k", broadcast_max_rows=50) == "broadcast"
-    assert (
-        choose_join_route(left, right, "k", hot_threshold=200, broadcast_max_rows=10)
-        == "salted"
-    )
-    assert (
-        choose_join_route(left, right, "k", hot_threshold=10**9, broadcast_max_rows=10)
-        == "plain"
-    )
-
-    for forced in ("broadcast", "salted", "plain"):
+    for want_route, hot, bmax in (
+        ("broadcast", 200, 50),
+        ("salted", 200, 10),
+        ("plain", 10**9, 10),
+    ):
         joined, route = auto_routed_join(
-            left, right, "k", "rk", n_salts=8, hot_threshold=200,
-            salt_source="row_id", route=forced,
+            left, right, "k", "rk", n_salts=8, hot_threshold=hot,
+            broadcast_max_rows=bmax, salt_source="row_id",
         )
-        assert route == forced
+        assert route == want_route
         got = sorted((r["k"], r["row_id"], r["attr"]) for r in joined.collect())
-        assert got == plain, f"mismatch on forced route {forced}"
-
-    # census-chosen path end-to-end (salted regime)
-    joined, route = auto_routed_join(
-        left, right, "k", "rk", n_salts=8, hot_threshold=200,
-        broadcast_max_rows=10, salt_source="row_id",
-    )
-    assert route == "salted"
-    got = sorted((r["k"], r["row_id"], r["attr"]) for r in joined.collect())
-    assert got == plain
+        assert got == plain, f"mismatch on route {route}"
 
 
 def test_keyless_band_self_join_equals_naive(spark):

@@ -141,3 +141,29 @@ def test_open_snapshot_reads_recorded_schema(spark, stores, kind, schema):
     assert df.schema.simpleString() == schema
     assert n_open == 0
     assert df.count() > 0
+
+
+def test_emptied_store_keeps_its_column_order(spark, tmp_path):
+    """A store seeded with its partition column first opens with the
+    same columns and types once every partition is taken down as it
+    did while holding files: the partition column last."""
+    from mapreduce_inverted_index_spark.operators.similarity import (
+        delete_from_ivf_cells,
+        write_ivf_cells,
+    )
+    from mapreduce_inverted_index_spark.operators.store import open_snapshot
+
+    path = str(tmp_path / "cells")
+    write_ivf_cells(
+        spark.createDataFrame(
+            [(i, i % 2, [float(i), 1.0]) for i in range(4)],
+            "vec_id bigint, cell int, vec array<double>",
+        ),
+        path,
+    )
+    before, _ = open_snapshot(spark, path, "cell")
+    delete_from_ivf_cells(spark, path, list(range(4)))
+    after, manifest = open_snapshot(spark, path, "cell")
+    assert not manifest["parts"] and after.count() == 0
+    assert after.columns == before.columns == ["vec_id", "vec", "cell"]
+    assert after.dtypes == before.dtypes

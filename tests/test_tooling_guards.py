@@ -11,7 +11,8 @@ or ``streaming/`` renames or removes files.
 
 Calls from those scripts must also match the package's signatures,
 and every option of a package function must be set by some caller
-and read by the function.
+and read by the function. A test counts as a caller only for the
+options listed in ``TEST_SEAMS``.
 """
 
 from __future__ import annotations
@@ -372,13 +373,106 @@ DEPLOYMENT_OPTIONS = {
     ("streaming/ingest.py", "maintain_cell_takedowns_available_now", "glob"): (
         "file pattern of the deployment's takedown landing directory"
     ),
+    ("streaming/ingest.py", "maintain_chunks_available_now", "glob"): (
+        "file pattern of the deployment's document landing directory"
+    ),
+    ("streaming/sketches.py", "docs_stream", "glob"): (
+        "file pattern of the deployment's document landing directory"
+    ),
+    ("streaming/sketches.py", "maintain_frequent_terms_available_now", "glob"): (
+        "file pattern of the deployment's document landing directory"
+    ),
+    ("streaming/sketches.py", "verified_heavy_terms", "glob"): (
+        "file pattern of the deployment's document landing directory"
+    ),
 }
 
-# Every file whose calls count as setting a package option.
+# Options only tests set that stay, each with the test that sets it
+# and why: a cap, threshold, retry timing or injected clock the test
+# needs at a value the package never reaches at fixture scale, or an
+# alternative path that is the only reference the test checks the
+# default against. A test call sets no other option.
+TEST_SEAMS = {
+    ("operators/dedup.py", "dup_components", "max_iter"): (
+        "test_round2_fixes.py::test_dup_components_raises_when_iteration_cap_too_low",
+        "a cap of 1 round is the only way a fixture-sized graph fails "
+        "to converge, which the non-convergence raise needs",
+    ),
+    ("operators/dedup.py", "ngram_jaccard_pairs", "max_shingle_df"): (
+        "test_round12_ops.py::test_ngram_jaccard_hot_shingle_routing",
+        "no fixture shingle reaches the default df cap of 1000, so the "
+        "chunked hot-key join runs only under a cap of 1 or 5",
+    ),
+    ("operators/quality.py", "binary_auc", "buckets"): (
+        "test_round6e_ops.py::test_auc_matches_pairwise_definition_and_buckets",
+        "the default 32 prefix-sum buckets give each of the fixture's "
+        "few distinct scores a bucket of its own; 1-16 buckets make "
+        "in-bucket running sums and bucket offsets both carry",
+    ),
+    ("operators/quality.py", "gini_coefficient", "buckets"): (
+        "test_round6e_ops.py::test_gini_matches_brute_force",
+        "the default 32 prefix-sum buckets give each of the fixture's "
+        "6 distinct values a bucket of its own; 4 make in-bucket "
+        "running sums and bucket offsets both carry",
+    ),
+    ("operators/quality.py", "quantile_normalize", "buckets"): (
+        "test_round6e_ops.py::test_quantile_normalize_bucket_invariance_and_bounds",
+        "buckets=1, the single-partition prefix, is the reference the "
+        "4- and 16-bucket results are pinned to",
+    ),
+    ("operators/similarity.py", "ivf_centroids", "checkpoint"): (
+        "test_ivf_assign_routes.py::test_codebook_routes_are_float_identical",
+        "the broadcast max_by route is the only reference the default "
+        "literal-argmax codebook is compared against; no oracle checks "
+        "the codebook",
+    ),
+    ("operators/similarity.py", "semantic_incremental_dedup", "broadcast_max_rows"): (
+        "test_round8_fixes.py::test_semantic_incremental_broadcast_gate",
+        "a fixture batch never exceeds the default 100k-row broadcast "
+        "gate, so the shuffle route runs only under a threshold of 3",
+    ),
+    ("operators/skew.py", "bloom_prefiltered_join", "k"): (
+        "test_round8_ops.py::test_bloom_prefiltered_join_exactness_and_selectivity",
+        "one hash per key saturates a 64-bit filter, the false-positive "
+        "flood the join must still discard",
+    ),
+    ("operators/skew.py", "bloom_prefiltered_join", "m_bits"): (
+        "test_round8_ops.py::test_bloom_prefiltered_join_non_multiple_of_64_bits",
+        "filter sizes off the 64-bit word grid and a saturated 64-bit "
+        "filter are never chosen by the package",
+    ),
+    ("operators/store.py", "open_snapshot", "retries"): (
+        "test_round11_manifest.py::test_reader_never_sees_mixed_view_across_swap_states",
+        "frozen mid-swap states fail loud after 3 retries instead of "
+        "the default 40",
+    ),
+    ("operators/store.py", "open_snapshot", "wait_sec"): (
+        "test_round11_manifest.py::test_reader_never_sees_mixed_view_across_swap_states",
+        "a 10 ms retry wait keeps the frozen-state tests fast",
+    ),
+    ("operators/textstats.py", "lm_bigram_scores", "broadcast_max_rows"): (
+        "test_round9_ops.py::test_lm_bigram_auto_probe_is_bounded",
+        "the fixture LM never exceeds the default 1M-row broadcast gate, "
+        "so the automatic shuffle route runs only under a threshold of 10",
+    ),
+    ("sources/formats.py", "write_final_index_json", "creation_time"): (
+        "test_ids_and_sinks.py::test_final_index_json_reference_byte_shape",
+        "an injected clock makes the artifact's bytes comparable",
+    ),
+    ("sources/formats.py", "write_final_index_json", "timestamp"): (
+        "test_ids_and_sinks.py::test_final_index_json_reference_byte_shape",
+        "an injected clock makes the artifact's name and bytes comparable",
+    ),
+}
+
+TESTS_DIR = os.path.join(ROOT, "tests")
+
+# Every file whose calls count as setting a package option; a test
+# file's calls count only for ``TEST_SEAMS``.
 CALLER_FILES = sorted(
     set(
         glob.glob(os.path.join(ROOT, PKG, "**", "*.py"), recursive=True)
-        + glob.glob(os.path.join(ROOT, "tests", "*.py"))
+        + glob.glob(os.path.join(TESTS_DIR, "*.py"))
         + UNRUN_SCRIPTS
     )
 )
@@ -407,21 +501,23 @@ def _package_functions() -> dict:
     return out
 
 
-def _set_options(funcs: dict) -> set:
-    """``(module, function, option)`` for every option some call sets:
-    by keyword, by position, by ``*``/``**`` unpacking, or through
-    ``functools.partial``. A call that passes an enclosing function's
-    own option straight through sets the callee's option only if some
-    caller sets the enclosing one."""
+def _set_options(funcs: dict, files=CALLER_FILES) -> set:
+    """``(module, function, option)`` for every option some call in
+    ``files`` sets: by keyword, by position, by ``*``/``**``
+    unpacking, or through ``functools.partial``. A call from a test
+    file sets an option only if it is in ``TEST_SEAMS``. A call that
+    passes an enclosing function's own option straight through sets
+    the callee's option only if some caller sets the enclosing one."""
     by_name = {}
     for key in funcs:
         by_name.setdefault(key[1], []).append(key)
     pkg_root = os.path.join(ROOT, PKG)
     direct, forwards = set(), {}
-    for path in CALLER_FILES:
+    for path in files:
         with open(path) as f:
             tree = ast.parse(f.read(), path)
         rel = os.path.relpath(path, pkg_root)
+        from_test = os.path.dirname(path) == TESTS_DIR
         local = {
             n.name
             for n in tree.body
@@ -475,7 +571,9 @@ def _set_options(funcs: dict) -> set:
                         else:
                             sets.append((kw.arg, kw.value))
                     for p, value in sets:
-                        if p not in opts:
+                        if p not in opts or (
+                            from_test and (*tgt, p) not in TEST_SEAMS
+                        ):
                             continue
                         if isinstance(value, ast.Name) and value.id in enc_opts:
                             src = (*enc, value.id)
@@ -495,14 +593,14 @@ def _set_options(funcs: dict) -> set:
 def test_every_package_option_is_set_and_read():
     """Each defaulted parameter of a module-level package function is
     a configuration tests and benchmarks must cover. Every one must
-    be set by some call in the repo (package, tests, tools,
-    perfbench, ``bench.py``, ``__spark_entry__.py``) unless it is a
-    deployment setting in ``DEPLOYMENT_OPTIONS``, and every one must
-    be read by its function's body: an option the body ignores
-    silently drops what its caller asked for."""
+    be set by some call in the package, tools, perfbench,
+    ``bench.py`` or ``__spark_entry__.py``, or by a test if it is a
+    test seam in ``TEST_SEAMS``, unless it is a deployment setting in
+    ``DEPLOYMENT_OPTIONS``; and every one must be read by its
+    function's body: an option the body ignores silently drops what
+    its caller asked for."""
     funcs = _package_functions()
     options = {(*key, p) for key, fn in funcs.items() for p in _defaulted(fn)}
-    assert set(DEPLOYMENT_OPTIONS) <= options, set(DEPLOYMENT_OPTIONS) - options
     unset = sorted(options - _set_options(funcs) - set(DEPLOYMENT_OPTIONS))
     unread = sorted(
         (*key, p)
@@ -518,3 +616,29 @@ def test_every_package_option_is_set_and_read():
         [f"unset: {m}:{f}({p})" for m, f, p in unset]
         + [f"unread: {m}:{f}({p})" for m, f, p in unread]
     )
+
+
+def test_option_allowlists_are_current():
+    """Every ``DEPLOYMENT_OPTIONS`` and ``TEST_SEAMS`` key is still a
+    defaulted parameter of its function, no option is in both, and
+    every seam is set by the test it names, so an entry left behind by
+    a later deletion fails here."""
+    funcs = _package_functions()
+    options = {(*key, p) for key, fn in funcs.items() for p in _defaulted(fn)}
+    listed = set(DEPLOYMENT_OPTIONS) | set(TEST_SEAMS)
+    assert listed <= options, sorted(listed - options)
+    assert not set(DEPLOYMENT_OPTIONS) & set(TEST_SEAMS)
+    stale = []
+    for key, (test_id, reason) in sorted(TEST_SEAMS.items()):
+        path, name = test_id.split("::")
+        path = os.path.join(TESTS_DIR, path)
+        if not reason or not os.path.isfile(path):
+            stale.append(f"{key}: {test_id}")
+            continue
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        if name not in {
+            n.name for n in tree.body if isinstance(n, ast.FunctionDef)
+        } or key not in _set_options(funcs, [path]):
+            stale.append(f"{key}: {test_id}")
+    assert not stale, "\n".join(stale)
