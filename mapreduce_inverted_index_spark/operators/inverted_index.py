@@ -54,6 +54,7 @@ __all__ = [
     "gap_decode_postings",
     "delete_from_index",
     "index_bucket_col",
+    "term_bucket",
     "write_index_store",
     "read_index_store",
     "delete_from_index_store",
@@ -318,6 +319,62 @@ def index_bucket_col(term: "F.Column | str", n_buckets: int = INDEX_STORE_BUCKET
     return F.pmod(F.xxhash64(t), F.lit(n_buckets)).cast("int")
 
 
+_M64 = (1 << 64) - 1
+_P1, _P2, _P3, _P4, _P5 = (
+    0x9E3779B185EBCA87,
+    0xC2B2AE3D27D4EB4F,
+    0x165667B19E3779F9,
+    0x85EBCA77C2B2AE63,
+    0x27D4EB2F165667C5,
+)
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def term_bucket(term: str, n_buckets: int) -> int:
+    """:func:`index_bucket_col` of one term, computed in Python: Spark's
+    ``xxhash64`` (XXH64 of the UTF-8 bytes, seed 42, read as a signed
+    long) ``pmod n_buckets``. A driver-side probe hashes its terms with
+    this and no Spark job; a test pins it to ``F.xxhash64``."""
+    b = term.encode("utf-8")
+    n, seed, i = len(b), 42, 0
+    if n >= 32:
+        v = [seed + _P1 + _P2 & _M64, seed + _P2, seed, seed - _P1 & _M64]
+        while i + 32 <= n:
+            v = [
+                _round(v[j], int.from_bytes(b[i + 8 * j : i + 8 * j + 8], "little"))
+                for j in range(4)
+            ]
+            i += 32
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)) & _M64
+        for x in v:
+            h = ((h ^ _round(0, x)) * _P1 + _P4) & _M64
+    else:
+        h = seed + _P5
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        h ^= _round(0, int.from_bytes(b[i : i + 8], "little"))
+        h = (_rotl(h, 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        h ^= int.from_bytes(b[i : i + 4], "little") * _P1 & _M64
+        h = (_rotl(h, 23) * _P2 + _P3) & _M64
+        i += 4
+    for c in b[i:]:
+        h ^= c * _P5 & _M64
+        h = _rotl(h, 11) * _P1 & _M64
+    h = (h ^ (h >> 33)) * _P2 & _M64
+    h = (h ^ (h >> 29)) * _P3 & _M64
+    h ^= h >> 32
+    return (h - (1 << 64) if h >> 63 else h) % n_buckets
+
+
 def _packed_buckets(
     index: DataFrame, n_buckets: int, n_files: int
 ) -> DataFrame:
@@ -482,34 +539,40 @@ def merge_into_index_store(spark, path: str, delta: DataFrame) -> list[int]:
 
 
 def term_lookup_store(spark, path: str, terms: "list[str]") -> DataFrame:
-    """Exact term probe over the PARTITIONED index store: the probe
-    terms' buckets become a partition-literal predicate, so the scan
-    opens only those bucket directories (``PartitionFilters`` on the
-    plan, pytest-audited) — the directory-layout twin of the
+    """Exact term probe over the PARTITIONED index store, served from
+    the driver with no Spark job: the probe terms' buckets are hashed
+    in Python (:func:`term_bucket`, with the ``n_buckets`` of the
+    manifest the read resolved), exactly those buckets' manifest-named
+    files are read with pyarrow, filtered to the probe terms, and the
+    rows come back as a local DataFrame (a ``LocalTableScan``;
+    ``collect`` runs no job either). A lookup holds at most one row
+    per distinct term, so nothing lands on the driver that a Spark
+    task would not hold anyway. The directory-layout twin of the
     bucketed-TABLE lookup (``term_queries.term_lookup_bucketed``).
-    Each bucket id is :func:`index_bucket_col` over a term literal,
-    hashed with the ``n_buckets`` of the manifest the snapshot open
-    resolved; Catalyst constant-folds it into the ``IN`` list, so the
-    bucket list is never collected and the lookup runs as one Spark
-    job, the scan.
 
     Output: ``term, postings ARRAY<BIGINT>, df``.
 
-    Like :func:`read_index_store`, opens one committed snapshot
-    through the reader manifest (mid-swap probes never see a mixed
-    listing); the bucket predicate still reaches the
-    explicit-file-list scan as ``PartitionFilters`` (pytest-audited),
-    so pruning is unchanged.
+    Like :func:`read_index_store`, reads one committed snapshot
+    through the reader manifest (``store.read_partitions``): a probe
+    concurrent with a swap sees the pre- or post-swap rows or fails
+    loud, never a mixed listing.
     """
     from mapreduce_inverted_index_spark.operators.store import (
-        open_snapshot,
+        read_partitions,
     )
 
-    snap, manifest = open_snapshot(spark, path, "bucket")
-    buckets = [index_bucket_col(F.lit(t), manifest["n_buckets"]) for t in terms]
-    return (
-        snap.where(F.col("bucket").isin(buckets) & F.col("term").isin(terms))
-        .select("term", "postings", "df")
+    table = read_partitions(
+        path,
+        "bucket",
+        lambda m: {term_bucket(t, m["n_buckets"]) for t in terms},
+        ["term", "postings", "df"],
+        [("term", "in", terms)],
+    )
+    # one chunk: a probed bucket with none of the terms reads as a
+    # 0-row record batch, and Spark's Arrow input silently drops every
+    # row after such a batch
+    return spark.createDataFrame(
+        table.combine_chunks(), "term string, postings array<bigint>, df bigint"
     )
 
 

@@ -58,6 +58,7 @@ __all__ = [
     "purge_swap_orphans",
     "mutation_lease",
     "open_snapshot",
+    "read_partitions",
     "read_manifest",
     "refresh_manifest",
     "MANIFEST_NAME",
@@ -479,13 +480,71 @@ def refresh_manifest(
     return manifest
 
 
-def open_snapshot(
-    spark,
-    path: str,
-    part_col: str,
-    retries: int = 40,
-    wait_sec: float = 0.05,
-) -> "tuple[DataFrame, dict]":
+class _MidSwap(Exception):
+    """A committed snapshot's files did not all resolve: a swap is in
+    flight or a writer died mid-swap."""
+
+
+def _read_committed(
+    path: str, part_col: str, read, retries: int = 40, wait_sec: float = 0.05
+):
+    """The readers' snapshot loop: read the manifest and return
+    ``read(manifest)``. ``read`` raises :class:`_MidSwap` when files the
+    manifest names are gone: a swap is in flight (the writer renamed
+    dirs but has not refreshed the manifest yet) or a writer died
+    mid-swap. Then re-read the manifest and retry, up to ``retries``.
+    A completing swap converges (its manifest refresh lands and the
+    new snapshot verifies); a crashed one keeps the stale manifest
+    until the next mutation's entry recovery rolls the data back and
+    refreshes — until then this fails LOUD instead of returning a
+    partial view. A directory with no manifest raises
+    ``FileNotFoundError`` (:func:`read_manifest`)."""
+    import time
+
+    last = None
+    for _ in range(retries):
+        try:
+            return read(read_manifest(path, part_col))
+        except _MidSwap as e:
+            last = str(e)
+        time.sleep(wait_sec)
+    raise RuntimeError(
+        f"{path}: could not materialize one committed snapshot through "
+        f"{retries} attempts — a writer is mid-swap (retry once it "
+        f"commits) or died mid-swap (any mutator's entry recovery heals "
+        f"the store). Last observation: {last}"
+    )
+
+
+def _present_files(
+    path: str, part_col: str, manifest: dict, parts
+) -> "list[str]":
+    """The manifest's data files of ``parts``, or :class:`_MidSwap` if
+    any is missing."""
+    files = [
+        f"{path}/{part_col}={k}/{fn}"
+        for k in sorted(parts)
+        for fn in manifest["parts"].get(k, ())
+    ]
+    if not all(os.path.isfile(p) for p in files):
+        raise _MidSwap("the manifest names files that are missing")
+    return files
+
+
+def _recorded_schema(manifest: dict, part_col: str):
+    """The manifest's recorded ``StructType``, the partition column
+    last, as a read of the files puts it."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromJson(json.loads(manifest["schema"]))
+    return StructType(
+        [f for f in schema if f.name != part_col] + [schema[part_col]]
+    )
+
+
+def open_snapshot(spark, path: str, part_col: str) -> "tuple[DataFrame, dict]":
     """Reader-side committed-snapshot OPEN: return ``(df, manifest)``
     — a DataFrame over exactly the data files the manifest names
     (partition column included, so partition predicates still reach
@@ -497,16 +556,8 @@ def open_snapshot(
     its recorded type. A committed-empty store (every partition taken
     down) opens as an empty DataFrame of the recorded schema; a
     directory with no manifest raises ``FileNotFoundError``
-    (:func:`read_manifest`).
-
-    If a named file is missing, a swap is in flight (the writer
-    renamed dirs but has not refreshed the manifest yet) or a writer
-    died mid-swap: re-read the manifest and re-check, up to
-    ``retries``. A completing swap converges (its manifest refresh
-    lands and the new snapshot verifies); a crashed one keeps the
-    stale manifest until the next mutation's entry recovery rolls the
-    data back and refreshes — until then this fails LOUD instead of
-    returning a partial view.
+    (:func:`read_manifest`). Missing files re-resolve or fail loud
+    (:func:`_read_committed`).
 
     Why a VERIFIED open and not just ``spark.read.parquet(*files)``:
     Spark checks the explicit paths on the DRIVER (missing files are
@@ -527,30 +578,12 @@ def open_snapshot(
     readers overlapping many mutations are the transactional
     format's job.
     """
-    import json
-    import time
 
-    from pyspark.sql.types import StructType
-
-    last = None
-    for _ in range(retries):
-        manifest = read_manifest(path, part_col)
-        files = [
-            f"{path}/{part_col}={k}/{fn}"
-            for k, fns in sorted(manifest["parts"].items())
-            for fn in fns
-        ]
-        schema = StructType.fromJson(json.loads(manifest["schema"]))
+    def read(manifest):
+        schema = _recorded_schema(manifest, part_col)
+        files = _present_files(path, part_col, manifest, manifest["parts"])
         if not files:
-            # the partition column last, as a read of the files puts it
-            empty = StructType(
-                [f for f in schema if f.name != part_col] + [schema[part_col]]
-            )
-            return spark.createDataFrame([], empty), manifest
-        if not all(os.path.isfile(p) for p in files):
-            last = "the manifest names files that are missing"
-            time.sleep(wait_sec)
-            continue
+            return spark.createDataFrame([], schema), manifest
         try:
             df = spark.read.schema(schema).option("basePath", path).parquet(
                 *files
@@ -559,19 +592,43 @@ def open_snapshot(
         except Exception as e:  # driver-side PATH_NOT_FOUND mid-swap
             if "PATH_NOT_FOUND" not in str(e):
                 raise
-            last = f"driver existence check: {e}"
-            time.sleep(wait_sec)
-            continue
-        if n_indexed == len(files):
-            return df, manifest
-        last = f"file index holds {n_indexed} of {len(files)} resolved files"
-        time.sleep(wait_sec)
-    raise RuntimeError(
-        f"{path}: could not materialize one committed snapshot through "
-        f"{retries} attempts — a writer is mid-swap (retry once it "
-        f"commits) or died mid-swap (any mutator's entry recovery heals "
-        f"the store). Last observation: {last}"
-    )
+            raise _MidSwap(f"driver existence check: {e}") from None
+        if n_indexed != len(files):
+            raise _MidSwap(
+                f"file index holds {n_indexed} of {len(files)} resolved files"
+            )
+        return df, manifest
+
+    return _read_committed(path, part_col, read)
+
+
+def read_partitions(path: str, part_col: str, parts, columns, filters):
+    """Driver-side read of some partitions of one committed snapshot,
+    with no Spark job: a ``pyarrow.Table`` of ``columns`` over the
+    data files the manifest names for the partition values
+    ``parts(manifest)`` returns, row-filtered by the pyarrow
+    ``filters`` (row groups whose min/max stats miss are skipped).
+    ``parts`` is a function of the manifest so a probe hashes with
+    the arity of the snapshot it reads. The same manifest resolve and
+    missing-file retry as :func:`open_snapshot`
+    (:func:`_read_committed`); a snapshot with none of those files
+    reads as an empty table of the recorded schema.
+    """
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    def read(manifest):
+        want = {str(p) for p in parts(manifest)}
+        files = _present_files(path, part_col, manifest, want)
+        if not files:
+            schema = to_arrow_schema(_recorded_schema(manifest, part_col))
+            return schema.empty_table().select(columns)
+        try:
+            return pq.read_table(files, columns=columns, filters=filters)
+        except FileNotFoundError as e:
+            raise _MidSwap(f"pyarrow read: {e}") from None
+
+    return _read_committed(path, part_col, read)
 
 
 def purge_swap_orphans(path: str) -> "list[str]":

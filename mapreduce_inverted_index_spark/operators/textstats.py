@@ -856,9 +856,7 @@ def bpe_encode(
 
 
 def lm_bigram_scores(
-    docs: DataFrame,
-    broadcast_lm: "bool | str" = "auto",
-    broadcast_max_rows: int = 1_000_000,
+    docs: DataFrame, broadcast_max_rows: int = 1_000_000
 ) -> DataFrame:
     """Per-document interpolated BIGRAM-LM quality score — the
     next-order upgrade of :func:`lm_unigram_scores` (a CCNet-style
@@ -882,20 +880,19 @@ def lm_bigram_scores(
     rollup. Docs with fewer than two tokens emit ``n_bigrams = 0``
     with a NULL score.
 
-    Join-route gate (``broadcast_lm="auto"``, default — the
-    ``semantic_incremental_dedup`` discipline): a bounded
-    ``limit(n+1).count()`` probe of the DISTINCT-bigram count decides
-    whether the LM (and the two vocabulary-sized unigram dims inside
-    it) broadcast or shuffle-hash-join on ``(prev, w)``. A
+    Join-route gate (the ``semantic_incremental_dedup`` discipline): a
+    bounded probe of the bigram count against ``broadcast_max_rows``
+    decides whether the LM (and the two vocabulary-sized unigram dims
+    inside it) broadcast or shuffle-hash-join on ``(prev, w)``. A
     ship-a-trusted-LM deployment (CCNet-style) is
     executor-memory-bounded and broadcasts; but the operator as
     written induces its LM from the INPUT corpus, and a web-scale
     corpus's bigram table is not broadcast-sized — above the
     threshold every LM join falls back to a plain shuffle join, with
-    results identical on both routes (pytest forces each and pins
-    equality; the per-distinct-bigram decimal rounding makes the
-    score order-independent, so the route never leaks into values).
-    Pass ``True``/``False`` to force a side.
+    results identical on both routes (pytest reaches the shuffle route
+    with ``broadcast_max_rows=0`` and pins equality; the
+    per-distinct-bigram decimal rounding makes the score
+    order-independent, so the route never leaks into values).
 
     Output: ``doc_id, n_bigrams, nll_per_bigram``.
     """
@@ -928,19 +925,17 @@ def lm_bigram_scores(
         F.col("_v").cast("double").alias("v_corpus"),
     )
     c2 = bi.groupBy("prev", "w").agg(F.count("*").alias("c2"))
-    if broadcast_lm == "auto":
-        # bounded probe via a cheap UPPER bound: distinct bigrams <=
-        # total bigram occurrences = sum(max(|toks|-1, 0)) — one
-        # map+sum scan (partial-agg scalar, no explode, no shuffle).
-        # Counting the distinct-bigram table itself would pay the
-        # full bigram aggregation a second time (measured 6x the
-        # query cost at sf0.1); the upper bound is strictly MORE
-        # conservative — broadcast only when even the occurrence
-        # count fits — and both routes are value-identical anyway.
-        occ = base.select(
-            F.sum(F.greatest(F.size("toks") - 1, F.lit(0))).alias("n")
-        ).first()["n"]
-        broadcast_lm = (occ or 0) <= broadcast_max_rows
+    # bounded probe via a cheap UPPER bound: distinct bigrams <=
+    # total bigram occurrences = sum(max(|toks|-1, 0)) — one map+sum
+    # scan (partial-agg scalar, no explode, no shuffle). Counting the
+    # distinct-bigram table itself would pay the full bigram
+    # aggregation a second time (measured 6x the query cost at
+    # sf0.1); the upper bound is strictly MORE conservative —
+    # broadcast only when even the occurrence count fits — and both
+    # routes are value-identical anyway.
+    occ = base.select(
+        F.sum(F.greatest(F.size("toks") - 1, F.lit(0))).alias("n")
+    ).first()["n"]
     # Above the threshold the LM side is explicitly hinted
     # shuffle_hash: small-scale size ESTIMATES would otherwise let
     # the planner broadcast anyway (or worse, broadcast the corpus
@@ -948,7 +943,7 @@ def lm_bigram_scores(
     # OOM the executors on an unbounded LM.
     _b = (
         F.broadcast
-        if broadcast_lm
+        if (occ or 0) <= broadcast_max_rows
         else (lambda df: df.hint("shuffle_hash"))
     )
     lm = (

@@ -19,7 +19,7 @@ from mapreduce_inverted_index_spark.functions.text import (
 )
 from mapreduce_inverted_index_spark.operators import inverted_index as idx
 from mapreduce_inverted_index_spark.operators import term_queries as tq
-from mapreduce_inverted_index_spark.plans.registry import register
+from mapreduce_inverted_index_spark.plans.registry import register, work_root
 from mapreduce_inverted_index_spark.sources.tables import load_table
 
 # Query terms guaranteed to exist in the synthetic vocabulary
@@ -907,7 +907,6 @@ def q_crawl_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_suffix_query_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
     import os
-    import tempfile
 
     # pid in BOTH the path and the table-name prefix (the
     # q_smb_join_lineitem_orders convention): a concurrent
@@ -915,7 +914,7 @@ def q_suffix_query_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and a table name shared across processes would point at
     # another pid's deleted /tmp location
     tag = f"{hashlib.md5(sf_dir.encode()).hexdigest()[:6]}_{os.getpid()}"
-    path = f"{tempfile.gettempdir()}/mii_ridx_{tag}"
+    path = f"{work_root()}/mii_ridx_{tag}"
     rtable = tq.write_reversed_index(
         idx.build_index(_docs(spark, sf_dir)), path, buckets=8,
         prefix=f"mii_{tag}",
@@ -956,13 +955,12 @@ def q_suffix_query_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_colocated_doc_tf_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
     import os
-    import tempfile
 
     # pid in path AND table names (the q_smb_join_lineitem_orders
     # convention); the guard checks both tables so a crash between
     # the two writes can't strand a half-built pair
     tag = f"{hashlib.md5(sf_dir.encode()).hexdigest()[:6]}_{os.getpid()}"
-    base = f"{tempfile.gettempdir()}/mii_dtab_{tag}"
+    base = f"{work_root()}/mii_dtab_{tag}"
     prefix = f"mii_{tag}"
     tf_name = f"{prefix}_dtf_b16"
     dlen_name = f"{prefix}_dlen_b16"
@@ -1003,9 +1001,11 @@ def q_colocated_doc_tf_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Exact term probe over the PARTITIONED index store (the "
         "write_index_store layout the streaming takedown queue "
-        "maintains): the probe terms' hash buckets become a "
-        "partition-literal predicate, so the scan opens ONLY those "
-        "bucket directories (PartitionFilters, pytest-audited) — the "
+        "maintains), served with no Spark job: the driver hashes the "
+        "probe terms to their buckets, reads ONLY those buckets' "
+        "manifest-named files with pyarrow, filtered to the probe "
+        "terms, and returns the rows as a LocalTableScan (pytest "
+        "pins the files read and the zero jobs) — the "
         "directory-layout twin of term_lookup_bucketed's bucketed-"
         "TABLE probe, and the lookup story for the store the "
         "maintenance loops actually write. "
@@ -1014,10 +1014,9 @@ def q_colocated_doc_tf_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_term_lookup_store_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
     import os
-    import tempfile
 
-    tag = f"{hashlib.md5(sf_dir.encode()).hexdigest()[:6]}_{os.getpid()}"
-    path = f"{tempfile.gettempdir()}/mii_pstore_{tag}"
+    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:6]
+    path = f"{work_root()}/mii_pstore_{tag}"
     if not os.path.isdir(path):
         idx.write_index_store(idx.build_index(_docs(spark, sf_dir)), path)
     return idx.term_lookup_store(spark, path, [_T1, _T2, _T3]).select(
@@ -1051,7 +1050,7 @@ def q_index_store_merge_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     docs = _docs(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="mii_storemerge_")
+    work = tempfile.mkdtemp(prefix="mii_storemerge_", dir=work_root())
     path = f"{work}/store"
     idx.write_index_store(
         idx.build_index(docs.where(F.col("doc_id") % 3 != 0)), path
@@ -1092,10 +1091,9 @@ def q_index_store_merge_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_bm25_topk_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
     import os
-    import tempfile
 
     tag = f"{hashlib.md5(sf_dir.encode()).hexdigest()[:6]}_{os.getpid()}"
-    base = f"{tempfile.gettempdir()}/mii_dtab_{tag}"
+    base = f"{work_root()}/mii_dtab_{tag}"
     prefix = f"mii_{tag}"
     tf_name, dlen_name = f"{prefix}_dtf_b16", f"{prefix}_dlen_b16"
     if not (

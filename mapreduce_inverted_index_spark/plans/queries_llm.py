@@ -23,7 +23,7 @@ from mapreduce_inverted_index_spark.functions.text import sql_terms, sql_tokens
 from mapreduce_inverted_index_spark.operators import dedup as D
 from mapreduce_inverted_index_spark.operators import similarity as S
 from mapreduce_inverted_index_spark.operators import textstats as T
-from mapreduce_inverted_index_spark.plans.registry import register
+from mapreduce_inverted_index_spark.plans.registry import register, work_root
 from mapreduce_inverted_index_spark.sources.tables import load_table
 
 _TOKS = sql_tokens("text")
@@ -1759,7 +1759,7 @@ def q_ivf_cells_delete_vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_ivf_cells,
     )
 
-    work = tempfile.mkdtemp(prefix="mii_ivf_del_")
+    work = tempfile.mkdtemp(prefix="mii_ivf_del_", dir=work_root())
     path = f"{work}/cells"
     emb = _emb(spark, sf_dir)
     cents = _ivf_cents(spark, sf_dir)
@@ -1824,7 +1824,7 @@ def q_ivf_cells_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         append_partitions,
     )
 
-    work = tempfile.mkdtemp(prefix="mii_ivf_compact_")
+    work = tempfile.mkdtemp(prefix="mii_ivf_compact_", dir=work_root())
     path = f"{work}/cells"
     emb = _emb(spark, sf_dir)
     cents = _ivf_cents(spark, sf_dir)
@@ -2036,8 +2036,6 @@ _HN_MEAN_FLOOR = 0.7
 )
 def q_hard_negatives_ivf_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
-    import os
-    import tempfile
 
     from mapreduce_inverted_index_spark.operators.similarity import (
         hard_negatives,
@@ -2046,11 +2044,12 @@ def q_hard_negatives_ivf_contract(spark: SparkSession, sf_dir: str) -> DataFrame
         write_ivf_cells,
     )
 
-    # pid in the tag: stable within a process (bench passes reuse the
-    # written store) but unique across processes, so a concurrent
-    # pytest/driver run can't overwrite partitions mid-scan
+    # under the per-process work root: stable within a process (bench
+    # passes reuse the written store) but unique across processes, so
+    # a concurrent pytest/driver run can't overwrite partitions
+    # mid-scan
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:6]
-    path = f"{tempfile.gettempdir()}/mii_hn_cells_{tag}_{os.getpid()}"
+    path = f"{work_root()}/mii_hn_cells_{tag}"
     emb = _emb(spark, sf_dir)
     cents = _ivf_cents(spark, sf_dir)
     write_ivf_cells(ivf_assign(emb, cents, extra_cols=("label",)), path)

@@ -27,7 +27,7 @@ from mapreduce_inverted_index_spark.plans.oracle_compat import (
     sql_davg,
     sql_dsum,
 )
-from mapreduce_inverted_index_spark.plans.registry import register
+from mapreduce_inverted_index_spark.plans.registry import register, work_root
 from mapreduce_inverted_index_spark.sources.tables import load_table
 
 # Exact-decimal product expressions shared by several queries
@@ -2869,7 +2869,6 @@ def q_customer_revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_event_funnel_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
     import os
-    import tempfile
 
     tag = f"{hashlib.md5(sf_dir.encode()).hexdigest()[:6]}_{os.getpid()}"
     name = f"mii_{tag}_evu_b16"
@@ -2880,7 +2879,7 @@ def q_event_funnel_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .bucketBy(16, "user_id")
             .sortBy("user_id")
-            .option("path", f"{tempfile.gettempdir()}/mii_evu_{tag}")
+            .option("path", f"{work_root()}/mii_evu_{tag}")
             .saveAsTable(name)
         )
     ev = spark.table(name)

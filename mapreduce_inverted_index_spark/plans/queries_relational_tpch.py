@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_inverted_index_spark.plans.oracle_compat import dec
-from mapreduce_inverted_index_spark.plans.registry import register
+from mapreduce_inverted_index_spark.plans.registry import register, work_root
 from mapreduce_inverted_index_spark.sources.tables import load_table
 
 
@@ -772,7 +772,6 @@ def q_priority_shipping_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_smb_join_lineitem_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
     import os
-    import tempfile
 
     # pid in BOTH the path and the table names: the registrations
     # and their file locations live and die together per process
@@ -780,7 +779,7 @@ def q_smb_join_lineitem_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     # deleted /tmp location); the guard checks BOTH tables so a
     # crash between the two writes can't strand a half-built pair
     tag = f"{hashlib.md5(sf_dir.encode()).hexdigest()[:6]}_{os.getpid()}"
-    base = f"{tempfile.gettempdir()}/mii_smb_{tag}"
+    base = f"{work_root()}/mii_smb_{tag}"
     li_name, o_name = f"mii_smb_li_{tag}", f"mii_smb_o_{tag}"
     if not (
         spark.catalog.tableExists(li_name)

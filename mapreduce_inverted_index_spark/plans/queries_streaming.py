@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_inverted_index_spark.functions.text import sql_terms, sql_tokens
-from mapreduce_inverted_index_spark.plans.registry import register
+from mapreduce_inverted_index_spark.plans.registry import register, work_root
 from mapreduce_inverted_index_spark.streaming import windows as W
 
 _SQL_SUM_VALUE = (
@@ -228,7 +228,6 @@ def q_stream_stateful_user_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
         "proves the incremental path.",
 )
 def q_stream_frequent_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
     import tempfile
 
     from mapreduce_inverted_index_spark.streaming.sketches import (
@@ -236,7 +235,7 @@ def q_stream_frequent_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         verified_heavy_terms,
     )
 
-    work = tempfile.mkdtemp(prefix="mii_stream_mg_")
+    work = tempfile.mkdtemp(prefix="mii_stream_mg_", dir=work_root())
     maintain_frequent_terms_available_now(
         spark, sf_dir, f"{work}/state", f"{work}/ckpt", k=200
     )
@@ -271,7 +270,7 @@ def q_stream_chunk_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         maintain_chunks_available_now,
     )
 
-    work = tempfile.mkdtemp(prefix="mii_stream_chunks_")
+    work = tempfile.mkdtemp(prefix="mii_stream_chunks_", dir=work_root())
     maintain_chunks_available_now(
         spark, sf_dir, f"{work}/chunks", f"{work}/ckpt"
     )
@@ -316,7 +315,7 @@ def q_semantic_stream_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
         maintain_semantic_cells_available_now,
     )
 
-    work = tempfile.mkdtemp(prefix="mii_sem_stream_")
+    work = tempfile.mkdtemp(prefix="mii_sem_stream_", dir=work_root())
     land, state, ckpt = f"{work}/landing", f"{work}/state", f"{work}/ckpt"
     emb = load_table(spark, sf_dir, "embeddings")
     tau, r = 0.4, 6
@@ -459,7 +458,7 @@ def q_stream_takedown_queue(spark: SparkSession, sf_dir: str) -> DataFrame:
         maintain_takedowns_available_now,
     )
 
-    work = tempfile.mkdtemp(prefix="mii_takedown_")
+    work = tempfile.mkdtemp(prefix="mii_takedown_", dir=work_root())
     index_dir, queue, ckpt = f"{work}/index", f"{work}/queue", f"{work}/ckpt"
     docs = load_table(spark, sf_dir, "documents")
     write_index_store(build_index(docs), index_dir)

@@ -11,7 +11,11 @@ ops) get a rows-only check from the driver.
 
 from __future__ import annotations
 
+import atexit
 import importlib
+import os
+import shutil
+import tempfile
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -93,6 +97,29 @@ def register(
         return fn
 
     return deco
+
+
+# this process's scratch root, keyed by pid: a forked child inherits
+# the dict and the exit hook, and must neither reuse nor remove it
+_WORK_ROOTS: dict[int, str] = {}
+
+
+def work_root() -> str:
+    """The directory every catalog query puts its per-process stores
+    and work directories under: created on first use, removed at
+    interpreter exit, so runs do not pile up directories in the
+    system temp dir."""
+    pid = os.getpid()
+    if pid not in _WORK_ROOTS:
+        root = tempfile.mkdtemp(prefix=f"mii_work_{pid}_")
+        _WORK_ROOTS[pid] = root
+        atexit.register(_remove_work_root, pid, root)
+    return _WORK_ROOTS[pid]
+
+
+def _remove_work_root(pid: int, root: str) -> None:
+    if os.getpid() == pid:
+        shutil.rmtree(root, ignore_errors=True)
 
 
 _LOADED = False

@@ -94,3 +94,48 @@ def test_driver_window_is_mechanical():
         dw.registration_order(), dw.latest_green_rounds(), len(_DRIVER_PRIORITY)
     )
     assert list(_DRIVER_PRIORITY) == want
+
+
+def test_catalog_query_leaves_no_work_dir(tmp_path):
+    """A catalog query that writes a store puts it under the
+    per-process work root, and the process removes that root when it
+    exits: a driver process that runs a query and exits leaves no
+    directory behind in the temp dir."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    script = (
+        "import os\n"
+        "from mapreduce_inverted_index_spark.plans.registry import "
+        "all_queries, work_root\n"
+        "from mapreduce_inverted_index_spark.session import get_spark\n"
+        "spark = get_spark(extra_conf={'spark.ui.enabled': 'false'})\n"
+        "rows = all_queries()['term_lookup_store_pruned'].fn(\n"
+        "    spark, '/root/testdata/sf0.001').collect()\n"
+        "assert rows and os.listdir(work_root())\n"
+        "print(work_root())\n"
+    )
+    env = {
+        **os.environ,
+        "TMPDIR": str(tmp),
+        "SPARK_GRAFT_CPUS": "1",
+        "SPARK_GRAFT_DRIVER_MEM": "1g",
+        "PYTHONPATH": repo,
+    }
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=repo,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    root = out.stdout.strip().splitlines()[-1]
+    assert root.startswith(str(tmp)), root
+    assert not os.path.exists(root)
+    assert os.listdir(tmp) == []

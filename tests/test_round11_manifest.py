@@ -47,13 +47,15 @@ def _seed(spark, path, n=8):
 
 def _fast_retries(monkeypatch):
     """Readers retry ~2s by default before failing loud; frozen-state
-    tests shrink that to keep the suite fast."""
+    tests shrink that to keep the suite fast. Both readers, the Spark
+    snapshot open and the driver-side partition read, retry through
+    ``store._read_committed``."""
     from mapreduce_inverted_index_spark.operators import store as store_mod
 
     monkeypatch.setattr(
         store_mod,
-        "open_snapshot",
-        functools.partial(store_mod.open_snapshot, retries=3, wait_sec=0.01),
+        "_read_committed",
+        functools.partial(store_mod._read_committed, retries=3, wait_sec=0.01),
     )
 
 
@@ -105,6 +107,7 @@ def test_reader_never_sees_mixed_view_across_swap_states(
     from mapreduce_inverted_index_spark.operators.inverted_index import (
         build_index,
         read_index_store,
+        term_lookup_store,
     )
     from mapreduce_inverted_index_spark.operators.store import (
         refresh_manifest,
@@ -129,6 +132,10 @@ def test_reader_never_sees_mixed_view_across_swap_states(
     )
     after = _rows(read_index_store(spark, twin))
     assert before != after
+    terms = sorted(t for t, _, _ in before)
+
+    def lookup():
+        return _rows(term_lookup_store(spark, path, terms))
 
     affected = sorted(
         int(d.split("=", 1)[1])
@@ -142,6 +149,7 @@ def test_reader_never_sees_mixed_view_across_swap_states(
     for v in affected:
         shutil.copytree(f"{twin}/bucket={v}", f"{tmp}/bucket={v}")
     assert _rows(read_index_store(spark, path)) == before
+    assert lookup() == before
 
     # S2: live dirs renamed ASIDE -> manifest names missing files ->
     # loud error (not a silent partial view)
@@ -149,6 +157,8 @@ def test_reader_never_sees_mixed_view_across_swap_states(
         os.rename(f"{path}/bucket={v}", f"{tmp}/retired-bucket={v}")
     with pytest.raises(RuntimeError, match="mid-swap"):
         read_index_store(spark, path).collect()
+    with pytest.raises(RuntimeError, match="mid-swap"):
+        lookup()
 
     # S3: new dirs renamed IN, manifest not yet refreshed -> the old
     # manifest's file names are gone -> still loud, still not mixed
@@ -156,42 +166,54 @@ def test_reader_never_sees_mixed_view_across_swap_states(
         os.rename(f"{tmp}/bucket={v}", f"{path}/bucket={v}")
     with pytest.raises(RuntimeError, match="mid-swap"):
         read_index_store(spark, path).collect()
+    with pytest.raises(RuntimeError, match="mid-swap"):
+        lookup()
 
     # S4: manifest refresh = the reader-visible commit -> NEW snapshot
     refresh_manifest(path, "bucket")
     assert _rows(read_index_store(spark, path)) == after
+    assert lookup() == after
 
     shutil.rmtree(tmp)
 
 
 def test_concurrent_reader_sees_only_old_or_new(spark, tmp_path):
-    """A reader hammering the store while a real delete swap commits
-    observes only the pre-swap or post-swap snapshot (or retries
-    internally) — the end-to-end form of the state walk above."""
+    """Readers hammering the store while a real delete swap commits —
+    the Spark scan (``read_index_store``) and the driver-side probe
+    (``term_lookup_store`` of every term) — each observe only the
+    pre-swap or post-swap snapshot (or retry internally, or fail
+    loud) — the end-to-end form of the state walk above."""
     from mapreduce_inverted_index_spark.operators.inverted_index import (
         delete_from_index_store,
         read_index_store,
+        term_lookup_store,
     )
 
     path = str(tmp_path / "store")
     _seed(spark, path, n=12)
     before = _rows(read_index_store(spark, path))
-    seen: list = []
+    terms = sorted(t for t, _, _ in before)
+    readers = {
+        "scan": lambda: read_index_store(spark, path),
+        "lookup": lambda: term_lookup_store(spark, path, terms),
+    }
+    seen: dict = {name: [] for name in readers}
     stop = threading.Event()
     errs: list = []
 
     def reader():
         while not stop.is_set():
-            try:
-                seen.append(frozenset(_rows(read_index_store(spark, path))))
-            except Exception as e:
-                # loud mid-swap errors are an allowed outcome: the
-                # resolve-retry RuntimeError, or Spark's own
-                # missing-file error when a commit lands between
-                # resolution and the collect — never a silent mix.
-                # Recorded (not swallowed) so the assertions below
-                # can verify they are the LOUD kinds (ADVICE r11 #5).
-                errs.append(f"{type(e).__name__}: {e}")
+            for name, read in readers.items():
+                try:
+                    seen[name].append(frozenset(_rows(read())))
+                except Exception as e:
+                    # loud mid-swap errors are an allowed outcome: the
+                    # resolve-retry RuntimeError, or Spark's own
+                    # missing-file error when a commit lands between
+                    # resolution and the collect — never a silent mix.
+                    # Recorded (not swallowed) so the assertions below
+                    # can verify they are the LOUD kinds (ADVICE r11 #5).
+                    errs.append(f"{name}: {type(e).__name__}: {e}")
 
     t = threading.Thread(target=reader)
     t.start()
@@ -199,21 +221,25 @@ def test_concurrent_reader_sees_only_old_or_new(spark, tmp_path):
         delete_from_index_store(spark, path, [0, 1, 2])
         after = _rows(read_index_store(spark, path))
         # keep the reader running until it has demonstrably observed
-        # the POST-swap snapshot — without this, stopping right after
-        # the delete lets a run that only ever saw pre-swap reads (or
-        # only errors) pass vacuously
+        # the POST-swap snapshot through both readers — without this,
+        # stopping right after the delete lets a run that only ever
+        # saw pre-swap reads (or only errors) pass vacuously
         deadline = time.monotonic() + 60
         while (
-            frozenset(after) not in seen and time.monotonic() < deadline
+            any(frozenset(after) not in s for s in seen.values())
+            and time.monotonic() < deadline
         ):
             time.sleep(0.05)
     finally:
         stop.set()
         t.join(timeout=60)
     allowed = {frozenset(before), frozenset(after)}
-    mixed = [s for s in set(seen) if s not in allowed]
-    assert not mixed, f"mixed snapshots observed: {len(mixed)}"
-    assert frozenset(after) in set(seen), "post-swap snapshot never observed"
+    for name, snaps in seen.items():
+        mixed = [s for s in set(snaps) if s not in allowed]
+        assert not mixed, f"{name}: mixed snapshots observed: {len(mixed)}"
+        assert frozenset(after) in set(snaps), (
+            f"{name}: post-swap snapshot never observed"
+        )
     for e in errs:  # every error must be one of the loud, allowed kinds
         assert (
             "mid-swap" in e

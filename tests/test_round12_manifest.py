@@ -19,6 +19,7 @@ The manifest now carries the store schema (seeded by
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 
@@ -167,9 +168,13 @@ def test_open_snapshot_verifies_the_materialized_file_index(
         return m
 
     monkeypatch.setattr(store_mod, "read_manifest", over_resolving)
+    monkeypatch.setattr(
+        store_mod,
+        "_read_committed",
+        functools.partial(store_mod._read_committed, retries=3, wait_sec=0.01),
+    )
     with pytest.raises(RuntimeError, match="committed snapshot"):
-        store_mod.open_snapshot(spark, path, "cell", retries=3,
-                                wait_sec=0.01)
+        store_mod.open_snapshot(spark, path, "cell")
     monkeypatch.undo()
 
     # and the committed-empty path opens as an empty DataFrame

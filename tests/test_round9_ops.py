@@ -172,19 +172,22 @@ def test_colocated_doc_tier_has_zero_exchange(spark):
 
 
 def test_lm_bigram_routes_are_value_identical(spark):
-    """The LM join-route gate must never leak into values: forcing
-    broadcast and forcing shuffle yield identical rows, and the
-    shuffle route's plan really does drop the LM broadcasts."""
+    """The LM join-route gate must never leak into values: the default
+    threshold's broadcast route and a threshold of 0's shuffle route
+    yield identical rows, the default route really does broadcast the
+    LM, and the shuffle route's plan really does drop the LM
+    broadcasts."""
     from mapreduce_inverted_index_spark.operators.textstats import (
         lm_bigram_scores,
     )
     from mapreduce_inverted_index_spark.sources.tables import load_table
 
     docs = load_table(spark, SF, "documents")
-    rows_b = sorted(
-        map(tuple, lm_bigram_scores(docs, broadcast_lm=True).collect())
-    )
-    shuffled = lm_bigram_scores(docs, broadcast_lm=False)
+    broadcast = lm_bigram_scores(docs)
+    rows_b = sorted(map(tuple, broadcast.collect()))
+    plan_b = broadcast._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan_b and "ShuffledHashJoin" not in plan_b
+    shuffled = lm_bigram_scores(docs, broadcast_max_rows=0)
     assert sorted(map(tuple, shuffled.collect())) == rows_b
 
     plan = shuffled._jdf.queryExecution().executedPlan().toString()
@@ -198,8 +201,8 @@ def test_lm_bigram_routes_are_value_identical(spark):
 
 
 def test_lm_bigram_auto_probe_is_bounded(spark):
-    """auto must pick the broadcast route under the threshold and the
-    shuffle route when the threshold is tiny — same values either
+    """The probe must pick the broadcast route under the threshold and
+    the shuffle route when the threshold is tiny — same values either
     way (the gate is a plan decision, not a semantic one)."""
     from mapreduce_inverted_index_spark.operators.textstats import (
         lm_bigram_scores,
@@ -207,10 +210,8 @@ def test_lm_bigram_auto_probe_is_bounded(spark):
     from mapreduce_inverted_index_spark.sources.tables import load_table
 
     docs = load_table(spark, SF, "documents")
-    want = sorted(
-        map(tuple, lm_bigram_scores(docs, broadcast_lm=True).collect())
-    )
-    tiny = lm_bigram_scores(docs, broadcast_lm="auto", broadcast_max_rows=10)
+    want = sorted(map(tuple, lm_bigram_scores(docs).collect()))
+    tiny = lm_bigram_scores(docs, broadcast_max_rows=10)
     assert sorted(map(tuple, tiny.collect())) == want
     plan = tiny._jdf.queryExecution().executedPlan().toString()
     assert "ShuffledHashJoin" in plan
@@ -309,15 +310,76 @@ def test_merge_into_index_store_touches_only_delta_buckets(spark, tmp_path):
     assert _bucket_files(path) == after
 
 
-def test_term_lookup_store_prunes_partitions(spark, tmp_path):
-    """The store probe must reach the scan as a PartitionFilters
-    bucket predicate (opens only the probe terms' bucket dirs) and
-    return exactly the index rows for those terms."""
+def test_term_bucket_matches_spark_xxhash64(spark, monkeypatch):
+    """The Python bucket hash equals ``pmod(xxhash64(term), n)`` on
+    every term of the fixture corpus and of the benchmark's Zipf
+    vocabulary, plus edge strings: empty, non-ASCII, and 32+ bytes
+    (the 32-byte stripe loop), at bucket counts small and large
+    enough to expose any bit of the hash."""
+    import importlib.util
+    import sys
+
+    from mapreduce_inverted_index_spark.operators.inverted_index import (
+        build_index,
+        term_bucket,
+    )
+    from mapreduce_inverted_index_spark.sources.tables import load_table
+
+    spec = importlib.util.spec_from_file_location(
+        "perfbench_gen",
+        os.path.join(os.path.dirname(__file__), "..", "perfbench", "gen.py"),
+    )
+    gen = importlib.util.module_from_spec(spec)
+    # dataclasses resolve annotations through sys.modules
+    monkeypatch.setitem(sys.modules, spec.name, gen)
+    spec.loader.exec_module(gen)
+
+    fixture = [
+        r["term"]
+        for r in build_index(load_table(spark, SF, "documents"))
+        .select("term")
+        .collect()
+    ]
+    edge = ["", "é", "naïve café", "検索エンジン", "x" * 32, "ab" * 16 + "c", "ü" * 35]
+    words = fixture + list(gen.vocabulary()) + edge
+    mods = (16, 1_000_003, 2**31 - 1)
+    rows = (
+        spark.createDataFrame([(w,) for w in words], "term string")
+        .select(
+            "term",
+            F.xxhash64("term").alias("h"),
+            *[
+                F.pmod(F.xxhash64("term"), F.lit(n)).cast("int").alias(f"b{n}")
+                for n in mods
+            ],
+        )
+        .collect()
+    )
+    assert len(fixture) > 20 and len(rows) == len(words) > 50_000
+    assert any(r["h"] < 0 for r in rows) and any(r["h"] > 0 for r in rows)
+    assert max(len(w.encode()) for w in words) >= 64
+    bad = [
+        (r["term"], n)
+        for r in rows
+        for n in mods
+        if term_bucket(r["term"], n) != r[f"b{n}"]
+    ]
+    assert not bad, bad[:10]
+
+
+def test_term_lookup_store_prunes_partitions(spark, tmp_path, monkeypatch):
+    """The store probe must read exactly the manifest-named files of
+    the probe terms' buckets, hashed here independently with
+    ``F.xxhash64``, and return exactly the index rows for those
+    terms."""
+    import pyarrow.parquet as pq
+
     from mapreduce_inverted_index_spark.operators.inverted_index import (
         build_index,
         term_lookup_store,
         write_index_store,
     )
+    from mapreduce_inverted_index_spark.operators.store import read_manifest
     from mapreduce_inverted_index_spark.sources.tables import load_table
 
     docs = load_table(spark, SF, "documents")
@@ -325,31 +387,37 @@ def test_term_lookup_store_prunes_partitions(spark, tmp_path):
     path = str(tmp_path / "store")
     write_index_store(index, path)
 
+    read = []
+    real = pq.read_table
+
+    def recording(files, *a, **k):
+        read.extend(files)
+        return real(files, *a, **k)
+
+    monkeypatch.setattr(pq, "read_table", recording)
     terms = ["join", "window"]
     got = term_lookup_store(spark, path, terms)
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan and "bucket" in plan, plan[:2000]
+    monkeypatch.undo()
 
-    # the folded IN list is exactly the probe terms' buckets, hashed
-    # here independently over a DataFrame of the terms
-    import re
-
-    from mapreduce_inverted_index_spark.operators.store import read_manifest
-
-    n_buckets = read_manifest(path, "bucket")["n_buckets"]
+    manifest = read_manifest(path, "bucket")
     want_buckets = sorted(
         {
             r["b"]
             for r in spark.createDataFrame([(t,) for t in terms], "term string")
             .select(
-                F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int").alias("b")
+                F.pmod(F.xxhash64("term"), F.lit(manifest["n_buckets"]))
+                .cast("int")
+                .alias("b")
             )
             .collect()
         }
     )
-    in_list = re.search(r"PartitionFilters: \[[^\]]*bucket#\d+ IN \(([^)]*)\)", plan)
-    assert in_list, plan[:2000]
-    assert sorted(int(b) for b in in_list.group(1).split(",")) == want_buckets
+    assert len(want_buckets) == 2, want_buckets
+    assert sorted(read) == sorted(
+        f"{path}/bucket={b}/{fn}"
+        for b in want_buckets
+        for fn in manifest["parts"][str(b)]
+    )
 
     want = sorted(
         map(
@@ -359,6 +427,7 @@ def test_term_lookup_store_prunes_partitions(spark, tmp_path):
             .collect(),
         )
     )
+    assert len(want) == 2
     assert sorted(map(tuple, got.collect())) == want
 
 

@@ -1,7 +1,7 @@
 """Snapshot open and term lookup cost: ``store.open_snapshot`` reads
 the files with the manifest's recorded schema, so an open runs no
-Spark job, and ``term_lookup_store`` folds its bucket predicate into
-literals, so a lookup is one job, its scan."""
+Spark job, and ``term_lookup_store`` reads its buckets on the driver,
+so a lookup runs no job at all."""
 
 from __future__ import annotations
 
@@ -89,13 +89,20 @@ def stores(spark, tmp_path_factory):
     }
 
 
-def test_term_lookup_is_one_job(spark, stores):
-    """The open and the bucket predicate launch no job; the lookup's
-    ``collect`` launches exactly one, the scan."""
+def test_term_lookup_runs_no_job(spark, stores, tmp_path):
+    """The open runs no job; the lookup call and its ``collect`` run
+    none either, on a store holding rows and on a committed-empty
+    store (every doc taken down)."""
     from mapreduce_inverted_index_spark.operators.inverted_index import (
+        build_index,
+        delete_from_index_store,
         term_lookup_store,
+        write_index_store,
     )
-    from mapreduce_inverted_index_spark.operators.store import open_snapshot
+    from mapreduce_inverted_index_spark.operators.store import (
+        open_snapshot,
+        read_manifest,
+    )
 
     path, part_col = stores["index"]
     _, n_open = _jobs(
@@ -107,11 +114,75 @@ def test_term_lookup_is_one_job(spark, stores):
     )
     assert n_plan == 0
     rows, n_scan = _jobs(spark, "lookup-collect", df.collect)
-    assert n_scan == 1
+    assert n_scan == 0
     assert sorted((r["term"], list(r["postings"]), r["df"]) for r in rows) == [
         ("alpha", [1], 1),
         ("gamma", [2], 1),
     ]
+
+    empty = str(tmp_path / "emptied")
+    write_index_store(
+        build_index(
+            spark.createDataFrame([(1, "alpha beta")], "doc_id bigint, text string")
+        ),
+        empty,
+        n_buckets=4,
+    )
+    delete_from_index_store(spark, empty, [1])
+    assert not read_manifest(empty, "bucket")["parts"]
+    df, n_plan = _jobs(
+        spark, "empty-lookup-plan", lambda: term_lookup_store(spark, empty, ["alpha"])
+    )
+    rows, n_scan = _jobs(spark, "empty-lookup-collect", df.collect)
+    assert (n_plan, n_scan, rows) == (0, 0, [])
+    assert df.dtypes == [
+        ("term", "string"),
+        ("postings", "array<bigint>"),
+        ("df", "bigint"),
+    ]
+
+
+def test_term_lookup_keeps_rows_read_after_a_bucket_without_hits(
+    spark, tmp_path
+):
+    """A probed bucket whose file holds none of the probe terms reads
+    as an empty batch; the rows of the buckets read after it must
+    still come back. Each case probes a present term in every bucket
+    but one and an absent term in that one, so some case puts the
+    empty bucket between two with hits."""
+    from mapreduce_inverted_index_spark.operators.inverted_index import (
+        build_index,
+        term_bucket,
+        term_lookup_store,
+        write_index_store,
+    )
+
+    n = 4
+    words = [f"term{chr(97 + i // 26)}{chr(97 + i % 26)}" for i in range(40)]
+    path = str(tmp_path / "index")
+    write_index_store(
+        build_index(
+            spark.createDataFrame(
+                list(enumerate(words)), "doc_id bigint, text string"
+            )
+        ),
+        path,
+        n_buckets=n,
+    )
+    present = {b: next(w for w in words if term_bucket(w, n) == b) for b in range(n)}
+    absent = {
+        b: next(
+            t
+            for t in (f"absent{chr(97 + i)}{chr(97 + j)}" for i in range(26) for j in range(26))
+            if term_bucket(t, n) == b
+        )
+        for b in range(n)
+    }
+    assert len(set(present.values())) == n
+    for empty in range(n):
+        want = sorted(present[b] for b in range(n) if b != empty)
+        rows = term_lookup_store(spark, path, want + [absent[empty]]).collect()
+        assert sorted(r["term"] for r in rows) == want, empty
 
 
 @pytest.mark.parametrize(

@@ -138,7 +138,6 @@ def test_store_readers_look_up_open_snapshot_at_call_time(
     from mapreduce_inverted_index_spark.operators.inverted_index import (
         build_index,
         read_index_store,
-        term_lookup_store,
         write_index_store,
     )
     from mapreduce_inverted_index_spark.operators.similarity import (
@@ -179,10 +178,8 @@ def test_store_readers_look_up_open_snapshot_at_call_time(
     monkeypatch.setattr(store, "open_snapshot", counting)
     read_index_store(spark, idx)
     assert calls == ["bucket"]
-    term_lookup_store(spark, idx, ["alpha"])
-    assert calls == ["bucket", "bucket"]
     ivf_pruned_scan_topk(spark, cells, cents, queries, k=2, n_probe=1)
-    assert calls == ["bucket", "bucket", "cell"]
+    assert calls == ["bucket", "cell"]
 
 
 STORE_COMMIT_INTERNALS = (
@@ -441,19 +438,14 @@ TEST_SEAMS = {
         "filter sizes off the 64-bit word grid and a saturated 64-bit "
         "filter are never chosen by the package",
     ),
-    ("operators/store.py", "open_snapshot", "retries"): (
+    ("operators/store.py", "_read_committed", "retries"): (
         "test_round11_manifest.py::test_reader_never_sees_mixed_view_across_swap_states",
         "frozen mid-swap states fail loud after 3 retries instead of "
         "the default 40",
     ),
-    ("operators/store.py", "open_snapshot", "wait_sec"): (
+    ("operators/store.py", "_read_committed", "wait_sec"): (
         "test_round11_manifest.py::test_reader_never_sees_mixed_view_across_swap_states",
         "a 10 ms retry wait keeps the frozen-state tests fast",
-    ),
-    ("operators/textstats.py", "lm_bigram_scores", "broadcast_max_rows"): (
-        "test_round9_ops.py::test_lm_bigram_auto_probe_is_bounded",
-        "the fixture LM never exceeds the default 1M-row broadcast gate, "
-        "so the automatic shuffle route runs only under a threshold of 10",
     ),
     ("sources/formats.py", "write_final_index_json", "creation_time"): (
         "test_ids_and_sinks.py::test_final_index_json_reference_byte_shape",

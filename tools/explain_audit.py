@@ -894,12 +894,12 @@ AUDITS = [
         ["Exchange", "BroadcastHashJoin"],
     ),
     (
-        # partitioned index STORE probe: the probe terms' hash
-        # buckets reach the scan as PartitionFilters (opens only
-        # those bucket dirs); no join, no shuffle
+        # partitioned index STORE probe: the driver reads only the
+        # probe terms' bucket files and hands back local rows — no
+        # file scan, no join, no shuffle
         "term_lookup_store_pruned",
-        ["PartitionFilters: [", "bucket"],
-        ["Exchange", "Join"],
+        ["LocalTableScan"],
+        ["FileScan", "Exchange", "Join"],
     ),
     (
         # co-located BM25: the per-query doc-axis shuffle is gone —
@@ -967,7 +967,7 @@ def _lm_bigram_shuffle_route(spark):
     from mapreduce_inverted_index_spark.sources.tables import load_table
 
     return lm_bigram_scores(
-        load_table(spark, SF, "documents"), broadcast_lm=False
+        load_table(spark, SF, "documents"), broadcast_max_rows=0
     )
 
 
