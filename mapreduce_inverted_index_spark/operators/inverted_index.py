@@ -400,7 +400,8 @@ def write_index_store(
     partition-local: a takedown batch touches only the buckets whose
     postings actually contain its ids
     (:func:`delete_from_index_store` rewrites those dirs and nothing
-    else), the exact discipline the IVF cell store already has
+    else; for page-length docs that is nearly every bucket), the
+    discipline the IVF cell store already has
     (``similarity.delete_from_ivf_cells``). Directory partitioning —
     not ``bucketBy`` table buckets — because the maintenance commit
     is a per-directory swap (``store.rewrite_partitions``); the
@@ -445,47 +446,50 @@ def delete_from_index_store(
     ``similarity.delete_from_ivf_cells``: remove a batch of doc_ids,
     rewriting ONLY the bucket partitions whose postings contain them.
     Untouched bucket directories keep their exact files
-    (pytest-pinned by file listing) — at 100 TB a takedown batch
-    touching 64 docs rewrites ~64 term-buckets' worth of postings,
-    never a multi-TB index.
+    (pytest-pinned by file listing). The skip pays off only for very
+    short docs or many buckets: a doc with ~100 distinct terms misses
+    a given one of 16 buckets with probability (15/16)^100 ≈ 0.2 %,
+    so on a page-length corpus even a one-doc takedown rewrites
+    nearly every bucket.
 
-    Mechanics: one scan locates the affected buckets (explode
-    postings, broadcast semi-join on the id batch, distinct bucket —
-    shuffle rows are bucket ids, not postings); the affected buckets'
-    rows then go through :func:`delete_from_index` and are re-tagged
-    with the manifest's ``n_buckets``. Terms whose last posting dies
-    drop out, a bucket whose last term dies loses its directory.
-    Commit = ``store.rewrite_partitions``, which refuses a directory
-    with no manifest before anything is read: a flat or half-seeded
-    directory has no ``bucket=`` dirs to match, so the delete would
-    be a silent no-op and a takedown loop would checkpoint its ids
-    away. Returns the affected bucket ids.
+    Mechanics, 2 Spark jobs and no shuffle: a locate scan collects
+    the ``bucket`` of every row whose postings hold a batch id
+    (``exists(postings, x -> x IN ids)``; at most one row per
+    distinct term of the batch's docs), then the affected buckets'
+    rows go through :func:`delete_from_index` with ``bucket`` carried
+    along and are sorted within their task by ``(bucket, term)``. A
+    store row is the only row of its term and sits in its bucket's
+    file, so each row stays in the task that read that file and each
+    bucket is written back as one file, with no repartition (a file
+    Spark splits across tasks, past ``spark.sql.files.maxPartitionBytes``,
+    comes back as one file per split). A ghost batch, whose ids are
+    in no posting, runs only the locate scan; an empty batch runs
+    nothing; a DataFrame batch adds the job that collects its ids.
+    Terms whose last posting dies drop out, a bucket whose last term
+    dies loses its directory. Commit = ``store.rewrite_partitions``,
+    which refuses a directory with no manifest before anything is
+    read: a flat or half-seeded directory has no ``bucket=`` dirs to
+    match, so the delete would be a silent no-op and a takedown loop
+    would checkpoint its ids away. Returns the affected bucket ids.
     """
     from mapreduce_inverted_index_spark.operators.store import (
         rewrite_partitions,
     )
 
-    dead = _doc_id_frame(spark, doc_ids)
+    ids = _doc_id_list(doc_ids)
 
     def plan(store: DataFrame, manifest: dict):
+        if not ids:
+            return [], None
+        hit = F.expr(f"exists(postings, x -> {_in_ids(ids)})")
         affected = sorted(
-            r["bucket"]
-            for r in store.select(
-                "bucket", F.explode("postings").alias("doc_id")
-            )
-            .join(F.broadcast(dead), "doc_id")
-            .select("bucket")
-            .distinct()
-            .collect()
+            {r["bucket"] for r in store.where(hit).select("bucket").collect()}
         )
         if not affected:
             return [], None
-        base = store.where(F.col("bucket").isin(affected)).select(
-            "term", "postings", "df"
-        )
-        survivors = delete_from_index(base, dead)
-        return affected, _packed_buckets(
-            survivors, manifest["n_buckets"], len(affected)
+        base = store.where(F.col("bucket").isin(affected))
+        return affected, delete_from_index(base, ids).sortWithinPartitions(
+            "bucket", "term"
         )
 
     return rewrite_partitions(spark, path, "bucket", plan)
@@ -576,13 +580,24 @@ def term_lookup_store(spark, path: str, terms: "list[str]") -> DataFrame:
     )
 
 
-def _doc_id_frame(spark, doc_ids: "list[int] | DataFrame") -> DataFrame:
-    """A deletion batch as a one-column ``doc_id bigint`` frame."""
+def _doc_id_list(doc_ids: "list[int] | DataFrame") -> "list[int]":
+    """A deletion batch as a list of distinct ids; a DataFrame batch
+    (column ``doc_id``) is collected in one job, its null ids dropped
+    (a null matches no posting)."""
     if isinstance(doc_ids, DataFrame):
-        return doc_ids.select(F.col("doc_id").cast("bigint").alias("doc_id"))
-    return spark.createDataFrame(
-        [(int(d),) for d in doc_ids], "doc_id bigint"
-    )
+        doc_ids = [
+            r[0]
+            for r in doc_ids.select(F.col("doc_id").cast("bigint")).collect()
+            if r[0] is not None
+        ]
+    return sorted({int(d) for d in doc_ids})
+
+
+def _in_ids(ids: "list[int]") -> str:
+    """``x IN (ids)`` as ONE SQL string parsed JVM-side: the Column
+    form ``x.isin(ids)`` marshals one py4j round-trip per id (~6 s for
+    10,001 ids), the SQL form parses the same ``In`` in ~10 ms."""
+    return "x IN (" + ",".join(map(str, ids)) + ")"
 
 
 def delete_from_index(
@@ -595,19 +610,27 @@ def delete_from_index(
     out — so the result is EXACTLY ``build_index`` of the surviving
     corpus (the invariant the oracle and pytest assert).
 
-    One plan for every batch, a list of any length or a DataFrame
-    (column ``doc_id``): explode postings, broadcast-anti-join against
-    the deletion set, regroup per term with an explicit sort. One
-    shuffle on term; the plan size does not grow with the batch (an
-    inlined id literal would), and the deletion side stays
-    broadcast-sized (a multi-GB deletion list means you want
-    :func:`build_index` on the filtered corpus instead).
+    One row-local plan for every batch, a list of any length or a
+    DataFrame (column ``doc_id``, collected first): an index holds
+    one row per term, so each row keeps
+    ``filter(postings, x -> NOT x IN ids)`` where it lies — no
+    explode, join or regroup, hence no shuffle, and postings stay
+    sorted. Rows with no surviving posting are dropped first
+    (``exists``, which stops at the first survivor). The ids enter
+    the plan as one ``IN`` list (:func:`_in_ids`), which Catalyst
+    turns into a hashed ``InSet`` above 10 ids
+    (``spark.sql.optimizer.inSetConversionThreshold``). Columns
+    other than ``postings`` and ``df`` pass through, so the store
+    keeps its ``bucket``. An empty batch returns ``index`` as it is.
+    A multi-GB deletion list is out of scope: you want
+    :func:`build_index` on the filtered corpus instead.
     """
-    dead = _doc_id_frame(index.sparkSession, doc_ids)
-    pairs = index.select(
-        "term", F.explode("postings").alias("doc_id")
-    ).join(F.broadcast(dead), "doc_id", "left_anti")
-    return pairs.groupBy("term").agg(
-        F.sort_array(F.collect_list("doc_id")).alias("postings"),
-        F.count("*").cast("bigint").alias("df"),
+    ids = _doc_id_list(doc_ids)
+    if not ids:
+        return index
+    keep = f"x -> NOT {_in_ids(ids)}"
+    return (
+        index.where(F.expr(f"exists(postings, {keep})"))
+        .withColumn("postings", F.expr(f"filter(postings, {keep})"))
+        .withColumn("df", F.size("postings").cast("bigint"))
     )

@@ -149,13 +149,12 @@ def q_prefix_query_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Index maintenance, the DELETE half (merge_index is the ADD "
         "half): remove a takedown/opt-out batch from a built index "
-        "WITHOUT re-reading document text — exploded postings "
-        "broadcast-anti-joined against the batch, regrouped per term "
-        "with df recomputed; terms losing their last posting drop "
-        "out. The demo derives a BOUNDED batch (64 lowest doc_ids ≡ 0 "
-        "mod 7 — deterministic at every SF, so the collected list "
-        "never scales with the corpus); the plan is the same at every "
-        "batch size, so it stays constant-size. The "
+        "WITHOUT re-reading document text — each term's postings "
+        "filtered where they lie against one InSet of the batch's ids "
+        "(no explode, join or regroup), df recomputed; terms losing "
+        "their last posting drop out. The demo derives a BOUNDED "
+        "batch (64 lowest doc_ids ≡ 0 mod 7 — deterministic at every "
+        "SF, so the collected list never scales with the corpus). The "
         "oracle rebuilds the index from the SURVIVING corpus, so a "
         "green row proves the invariant delete(build(all)) == "
         "build(all - deleted). "

@@ -433,12 +433,13 @@ def q_stream_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(GDPR erasure / opt-outs) as a checkpointed file stream — "
         "two AvailableNow passes fold id batches into the stored "
         "BUCKETED index store (write_index_store layout) via "
-        "delete_from_index_store: each pass rewrites ONLY the "
-        "term-hash bucket partitions whose postings contain the "
-        "batch's ids (crash-safe per-dir swap; untouched bucket dirs "
-        "keep their exact files, pytest-pinned), exactly-once per "
-        "file. Per-batch IO is O(affected buckets), never O(index) — "
-        "the discipline the IVF cell store's erasure queue has. The "
+        "delete_from_index_store: each pass locates the term-hash "
+        "bucket partitions whose postings contain the batch's ids and "
+        "rewrites ONLY those, each row filtered in place (crash-safe "
+        "per-dir swap; untouched bucket dirs keep their exact files, "
+        "pytest-pinned), exactly-once per file. A doc's terms reach "
+        "most buckets, so this skips buckets only for very short docs "
+        "or many buckets. The "
         "second pass replays half the first batch (takedown queues "
         "are idempotent by nature) plus a never-ingested id (a no-op "
         "fold). Oracle = build_index of the surviving corpus, so a "

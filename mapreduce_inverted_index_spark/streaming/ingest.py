@@ -389,15 +389,16 @@ def maintain_takedowns_available_now(
     files that arrived since the last pass into the bucketed index
     store (``write_index_store`` layout).
 
-    Each batch folds via ``delete_from_index_store``, which rewrites
-    ONLY the bucket partitions whose postings contain the batch's ids
-    and commits with the shared crash-safe dir swap. Per-batch IO is
-    O(affected buckets), not O(index) — a 64-doc takedown must not
-    rewrite a multi-TB index. This is the discipline the embedding
-    twin (``maintain_cell_takedowns_available_now`` →
-    ``delete_from_ivf_cells``) has always had. A directory that is
-    not a store (no manifest) fails the micro-batch instead of
-    no-opping it away.
+    Each batch folds via ``delete_from_index_store``: one job
+    collects the batch's ids, a locate scan finds the bucket
+    partitions whose postings contain them, and a row-local rewrite
+    filters those buckets' postings in place (no shuffle) and commits
+    with the shared crash-safe dir swap. Untouched buckets keep their
+    files, but a page-length doc has terms in nearly every bucket, so
+    the skip pays off only for very short docs or many buckets; the
+    rewrite still reads and writes the affected buckets whole. A
+    directory that is not a store (no manifest) fails the micro-batch
+    instead of no-opping it away.
 
     Together with the ADD loops (index/chunks/MG/semantic cells) this
     closes the maintenance pair: a corpus pipeline runs both on a

@@ -2,8 +2,8 @@
 takedown applied THROUGH the streaming maintenance loop.
 
 ``maintain_takedowns_available_now`` folds each micro-batch via
-``delete_from_index_store`` (locate affected buckets → regroup →
-``swap_partition_dirs`` commit). A crash BETWEEN the locate and the
+``delete_from_index_store`` (locate affected buckets → row-local
+postings filter → ``swap_partition_dirs`` commit). A crash BETWEEN the locate and the
 swap means the batch's work is lost but nothing was committed; the
 checkpoint must NOT have advanced past the batch, so the next pass
 replays it and the store converges to exactly

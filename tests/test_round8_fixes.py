@@ -1,8 +1,8 @@
 """Round-8 regression tests for the VERDICT r7 / ADVICE r7 fixes:
 
-1. ``delete_from_index`` has one plan for every batch: a broadcast
-   anti join on exploded postings — NOT an O(batch)-sized inlined
-   array literal — whose result equals ``build_index`` of the
+1. ``delete_from_index`` has one plan for every batch: a row-local
+   filter of each postings array against one id set (no explode, no
+   join, no shuffle), whose result equals ``build_index`` of the
    surviving corpus.
 2. ``q_index_delete_docs`` demo derivation is bounded: the collected
    deletion list is capped at 64 ids regardless of corpus size.
@@ -15,6 +15,8 @@
 """
 
 from __future__ import annotations
+
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -65,17 +67,25 @@ def test_delete_accepts_dataframe_batch(spark, sf_smoke):
 @pytest.mark.parametrize(
     "batch", [[1, 2, 3], list(range(10_001))], ids=["3_ids", "10001_ids"]
 )
-def test_delete_plan_is_broadcast_antijoin(spark, sf_smoke, batch):
-    index = build_index(_docs(spark, sf_smoke))
+def test_delete_plan_is_row_local(spark, sf_smoke, tmp_path, batch):
+    # a stored index, as the store's delete reads one: no build shuffle
+    build_index(_docs(spark, sf_smoke)).write.parquet(str(tmp_path / "idx"))
+    index = spark.read.parquet(str(tmp_path / "idx"))
     plan = delete_from_index(index, batch)._jdf.queryExecution().executedPlan().toString()
-    assert "LeftAnti" in plan, plan[:2000]
-    # the deletion side must stay BROADCAST: a SortMergeJoin here
-    # means the whole exploded index shuffles for a tiny id batch
-    assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
-    # no id is baked into the plan as a literal (spot-check a
-    # mid-range id that appears in no smoke-fixture posting)
-    if len(batch) > 1_000:
-        assert str(len(batch) - 7) not in plan
+    # each row filters its own postings: nothing shuffles or joins
+    assert "Exchange" not in plan and "Join" not in plan, plan[:2000]
+    # the ids sit in one set per lambda predicate, the whole batch in
+    # each; Catalyst hashes it into an InSet above 10 values
+    # (spark.sql.optimizer.inSetConversionThreshold) and keeps a
+    # short list as In (the scan's DataFilters echo it cut short)
+    id_sets = [
+        {int(v) for v in m.group(2).split(",")}
+        for m in re.finditer(
+            r"lambda x\w*#\d+L (INSET |IN \()((?:\d+, ?)*\d+)(?:\)|, lambda)", plan
+        )
+    ]
+    assert id_sets and all(s == set(batch) for s in id_sets), plan[:2000]
+    assert ("INSET" in plan) == (len(batch) > 10)
 
 
 # ------------------------------- 2. bounded demo derivation

@@ -520,7 +520,7 @@ def test_smb_join_has_no_pre_join_exchange(spark):
     assert plan.count("Exchange") == 1, plan[:2000]
 
 
-def test_suffix_query_pushes_down_on_reversed_key(spark):
+def test_suffix_query_pushes_down_on_reversed_key(spark, tmp_path):
     """The reversed suffix must reach the scan as StringStartsWith on
     rterm (IO-bounded probe, no join/shuffle), and results must equal
     a plain endswith filter over the index."""
@@ -533,12 +533,9 @@ def test_suffix_query_pushes_down_on_reversed_key(spark):
     )
     from mapreduce_inverted_index_spark.sources.tables import load_table
 
-    import tempfile
-
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
     index = build_index(docs)
-    path = tempfile.mkdtemp(prefix="mii_ridx_test_")
-    rt = write_reversed_index(index, f"{path}/r", prefix="mii_t8")
+    rt = write_reversed_index(index, str(tmp_path / "r"), prefix="mii_t8")
     got = suffix_query(spark, rt, "er")
     plan = got._jdf.queryExecution().executedPlan().toString()
     assert "StringStartsWith(rterm,re)" in plan, plan[:1200]

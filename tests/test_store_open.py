@@ -1,7 +1,8 @@
-"""Snapshot open and term lookup cost: ``store.open_snapshot`` reads
-the files with the manifest's recorded schema, so an open runs no
-Spark job, and ``term_lookup_store`` reads its buckets on the driver,
-so a lookup runs no job at all."""
+"""Snapshot open, term lookup and delete cost: ``store.open_snapshot``
+reads the files with the manifest's recorded schema, so an open runs
+no Spark job; ``term_lookup_store`` reads its buckets on the driver,
+so a lookup runs no job at all; ``delete_from_index_store`` is a
+locate scan and a row-local rewrite, 2 jobs and no shuffle."""
 
 from __future__ import annotations
 
@@ -19,6 +20,26 @@ def _jobs(spark, group: str, fn):
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _sql_plans(spark, fn):
+    """``(fn(), physical plans of the SQL executions fn ran)``, read from
+    the SQL status store once the listener bus is drained."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    listener_bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def executions():
+        listener_bus.waitUntilEmpty()
+        el = store.executionsList()
+        return [el.apply(i) for i in range(el.size())]
+
+    seen = max((e.executionId() for e in executions()), default=-1)
+    out = fn()
+    return out, [
+        e.physicalPlanDescription()
+        for e in executions()
+        if e.executionId() > seen
+    ]
 
 
 @pytest.fixture(scope="module")
@@ -238,3 +259,52 @@ def test_emptied_store_keeps_its_column_order(spark, tmp_path):
     assert not manifest["parts"] and after.count() == 0
     assert after.columns == before.columns == ["vec_id", "vec", "cell"]
     assert after.dtypes == before.dtypes
+
+
+def test_store_delete_is_two_jobs_without_a_shuffle(spark, tmp_path):
+    """A batch that touches buckets runs the locate scan and the
+    rewrite: 2 jobs, neither with an Exchange. A ghost batch (ids in no
+    posting) runs the locate scan only; a DataFrame batch adds the
+    collect of its ids, after which an empty one runs nothing. The
+    store then equals ``build_index`` of the survivors."""
+    from pyspark.sql import functions as F
+
+    from mapreduce_inverted_index_spark.operators.inverted_index import (
+        build_index,
+        delete_from_index_store,
+        read_index_store,
+        write_index_store,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, f"w{chr(97 + i % 7)} x{chr(97 + i % 5)} common") for i in range(24)],
+        "doc_id bigint, text string",
+    )
+    path = str(tmp_path / "index")
+    write_index_store(build_index(docs), path, n_buckets=4)
+
+    def run(group, batch):
+        (out, n), plans = _sql_plans(
+            spark,
+            lambda: _jobs(
+                spark, group, lambda: delete_from_index_store(spark, path, batch)
+            ),
+        )
+        assert not any("Exchange" in p for p in plans), plans
+        return out, n
+
+    affected, n = run("delete", [1, 2])
+    assert affected and n == 2
+    assert run("delete-ghost", [10**9]) == ([], 1)
+    assert run("delete-empty", []) == ([], 0)
+    batch = spark.createDataFrame([(3,)], "doc_id bigint")
+    affected, n = run("delete-frame", batch)
+    assert affected and n == 3
+    assert run("delete-empty-frame", batch.where("doc_id < 0")) == ([], 1)
+
+    def rows(df):
+        return sorted((r["term"], list(r["postings"]), r["df"]) for r in df.collect())
+
+    assert rows(read_index_store(spark, path)) == rows(
+        build_index(docs.where(~F.col("doc_id").isin(1, 2, 3)))
+    )

@@ -347,9 +347,9 @@ def main() -> None:
     #  * bloom-prefiltered join: 2M fact rows against a selective
     #    3k-key dim — the prefilter drops ~80% of the fact side
     #    before the shuffle.
-    #  * delete_from_ivf_cells large-batch text twin: the >threshold
-    #    anti-join branch of delete_from_index over the 100k-doc
-    #    index (plan-size-constant deletion of 5k ids).
+    #  * delete_from_ivf_cells large-batch text twin: delete_from_index
+    #    over the 100k-doc index with a 5k-id batch, each term's
+    #    postings filtered in place against one InSet of the ids.
     from mapreduce_inverted_index_spark.operators.inverted_index import (
         delete_from_index,
     )
@@ -374,7 +374,7 @@ def main() -> None:
     idx20 = build_index(docs20)
     dead_ids = list(range(0, 100_000, 20))  # 5k ids
     timed(
-        "delete_from_index, 5k-id batch via broadcast anti-join "
+        "delete_from_index, 5k-id batch via a row-local InSet filter "
         "over the 100k-doc index",
         delete_from_index(idx20, dead_ids),
     )
