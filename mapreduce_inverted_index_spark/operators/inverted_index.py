@@ -404,7 +404,8 @@ def write_index_store(
     discipline the IVF cell store already has
     (``similarity.delete_from_ivf_cells``). Directory partitioning —
     not ``bucketBy`` table buckets — because the maintenance commit
-    is a per-directory swap (``store.rewrite_partitions``); the
+    replaces whole partition directories' files
+    (``store.rewrite_partitions``); the
     bucketed-TABLE tier for shuffle-free lookup joins is
     :func:`write_index_tables`, a different axis.
 
@@ -427,8 +428,8 @@ def read_index_store(spark, path: str) -> DataFrame:
     ``(term, postings, df)`` — the bucket partition column is storage
     layout, not index content. Opens one committed snapshot through
     the reader manifest (``store.open_snapshot``), so a scan
-    concurrent with a maintenance swap never sees a mixed directory
-    listing (it converges to the post-swap snapshot or fails loud). A
+    concurrent with a maintenance commit never sees a mixed directory
+    listing (it sees the pre- or post-commit snapshot). A
     store whose every doc has been taken down is an EMPTY index, not
     an error."""
     from mapreduce_inverted_index_spark.operators.store import (
@@ -558,8 +559,8 @@ def term_lookup_store(spark, path: str, terms: "list[str]") -> DataFrame:
 
     Like :func:`read_index_store`, reads one committed snapshot
     through the reader manifest (``store.read_partitions``): a probe
-    concurrent with a swap sees the pre- or post-swap rows or fails
-    loud, never a mixed listing.
+    concurrent with a commit sees the pre- or post-commit rows, never
+    a mixed listing.
     """
     from mapreduce_inverted_index_spark.operators.store import (
         read_partitions,

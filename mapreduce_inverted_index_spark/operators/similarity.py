@@ -599,10 +599,10 @@ def delete_from_ivf_cells(
 
     Mechanics: one partition-pruned-able scan locates the affected
     cells (broadcast semi-join on the id batch), the surviving rows
-    of ONLY those cells rewrite through a tmp directory, and the
-    affected cell dirs swap via rename (the filesystem stand-in for
-    a transactional format's partition-level REPLACE, same note as
-    ``maintain_index_available_now``). A cell whose last member dies
+    of ONLY those cells rewrite through a tmp directory, and one
+    manifest commit replaces the affected cells' files (the
+    filesystem stand-in for a transactional format's partition-level
+    REPLACE, same note as ``maintain_index_available_now``). A cell whose last member dies
     is removed entirely. Returns the affected cell ids (diagnostics /
     downstream cache invalidation). A directory with no manifest is
     refused (``FileNotFoundError`` naming :func:`write_ivf_cells`):
@@ -646,7 +646,7 @@ def compact_ivf_cells(
     maintenance loop APPEND a file per micro-batch per cell;
     :func:`delete_from_ivf_cells` removes). Cells holding more than
     ``max_files_per_cell`` parquet files are rewritten to a single
-    file each via the same tmp-write + dir-swap commit as delete;
+    file each via the same store commit as delete;
     cells at or under the threshold keep their exact files. Row
     content is untouched (pytest-pinned identity), only layout
     changes — probe latency recovers because a pruned scan opens
@@ -706,7 +706,7 @@ def ivf_pruned_scan_topk(
 
     The scan opens one committed snapshot through the store's reader
     manifest (``store.open_snapshot``): a probe concurrent with a
-    maintenance swap converges or fails loud, never reads a mixed
+    maintenance commit sees the pre- or post-commit rows, never a mixed
     listing, and a store with no manifest is refused.
     """
     from mapreduce_inverted_index_spark.operators.store import (

@@ -1,4 +1,4 @@
-"""Shared commit scaffolding for partition-dir-swapped stores.
+"""The one store format and the one commit for every maintained state.
 
 Every stored state a maintenance loop keeps current is a partitioned
 store of this one format: the term-hash-bucketed text index
@@ -8,35 +8,40 @@ semantic dup log (``batch``), and two one-partition states whose
 constant ``part`` column readers drop — the Misra-Gries summary
 (``streaming/sketches.py``) and the IVF codebook
 (``streaming/ingest.py``). This module owns what they share: the
-store format, the crash-safe commits on a bare filesystem, and the
-reader's snapshot open.
-
-Writers go through three entry points, which own the whole commit
-protocol so no operator repeats it: :func:`seed_store` (lease, purge
-crash orphans, overwrite, commit the manifest),
-:func:`rewrite_partitions` (lease, crash recovery, snapshot open, the
-caller's rewrite plan, partition swap) and :func:`append_partitions`
-(lease, crash recovery, batch-keyed file append, commit the
-manifest). An operator supplies only the DataFrame to seed or append,
-or the plan that says which partitions a batch touches and what they
-hold afterwards.
+store format, the commit on a bare filesystem, and the reader's
+snapshot open.
 
 Format: a partitioned store is its ``<part_col>=v/`` directories plus
 ``_mii_manifest.json`` — ``version``, ``part_col``, ``parts`` (the
 live data files per partition), ``schema`` (the written
 ``StructType`` JSON) and, for the index store, ``n_buckets`` (the
-term-hash arity). The manifest rename is the only commit point:
-readers open the snapshot it names (:func:`open_snapshot`), and a
+term-hash arity). The manifest alone says which files are live, as
+an Iceberg snapshot does: a file it does not name is garbage.
+Readers open the snapshot it names (:func:`open_snapshot`), and a
 directory without a manifest is not a store — readers and mutators
 refuse it, naming the seed writer.
 
+Every write is one commit (:func:`swap_partition_dirs`): stage the
+DataFrame ``partitionBy(part_col)`` in a unique ``<path>.tmp-*``
+sibling, move each staged data file and its Hadoop ``.crc`` into its
+live partition directory, rename in a manifest naming the kept prior
+files plus the moved ones, then delete every file the manifest does
+not name. The manifest rename is the only commit point: before it
+the old snapshot's files are untouched, after it the batch is
+committed and stays committed. The three entry points differ only in
+what they keep: :func:`seed_store` keeps nothing,
+:func:`rewrite_partitions` keeps every partition its plan does not
+touch, :func:`append_partitions` keeps every file but its own
+``batch-<id>.parquet``. Each runs the same deletion at entry, which
+is the whole crash recovery.
+
 At 100 TB the same bodies run against a transactional table format
-(Iceberg/Delta partition-level REPLACE and APPEND); the swap is the
-filesystem-only stand-in for that commit, and :func:`mutation_lease`
-is the stand-in for that format's writer-concurrency control — every
-mutator and maintenance fold holds it, so the entry-time crash
-recovery (:func:`recover_partition_swaps`) can safely assume any
-orphan it finds belongs to a DEAD writer.
+(Iceberg/Delta partition-level REPLACE and APPEND); this commit is
+the filesystem-only stand-in for that format's, and
+:func:`mutation_lease` is the stand-in for its writer-concurrency
+control — every mutator and maintenance fold holds it, so the
+entry-time deletion can safely assume every file the manifest does
+not name belongs to a DEAD writer.
 """
 
 from __future__ import annotations
@@ -54,8 +59,6 @@ __all__ = [
     "rewrite_partitions",
     "append_partitions",
     "swap_partition_dirs",
-    "recover_partition_swaps",
-    "purge_swap_orphans",
     "mutation_lease",
     "open_snapshot",
     "read_partitions",
@@ -75,7 +78,7 @@ _HELD_LEASES: "dict[str, list]" = {}  # key -> [thread ident, depth]
 _HELD_LOCK = threading.Lock()
 
 # bound at import so the crash-sweep tests (which monkeypatch
-# os.rename to die at every COMMIT rename in turn) don't count the
+# os.rename to die at every COMMIT call in turn) don't count the
 # lease's staged rename as a commit point: a death there leaves only
 # a dead-pid lease, healed on the next entry — no data moved, nothing
 # to sweep — and intercepting it would shift every sweep offset
@@ -102,15 +105,14 @@ def _lease_holder(lease: str) -> "int | None":
 
 @contextlib.contextmanager
 def mutation_lease(path: str):
-    """Single-writer guard for store mutations. Every mutator's first
-    act is entry-time crash recovery (:func:`recover_partition_swaps`,
-    run by every entry point that changes a committed store), which
-    treats any sibling tmp dir as an orphan of a DEAD writer and
-    rolls it back. That is only sound if writers never overlap: a
-    second live writer's recovery would roll back the first writer's
-    IN-FLIGHT swap while its checkpoint goes on to commit — a lost
-    batch with no error, the exact failure class the swaps exist to
-    prevent. This lease makes
+    """Single-writer guard for store mutations. Every writer's first
+    act is the entry-time deletion of every file the committed
+    manifest does not name (:func:`_delete_unnamed`), which treats any
+    ``<path>.tmp-*`` sibling and any unnamed partition file as the
+    leftovers of a DEAD writer. That is only sound if writers never
+    overlap: a second live writer's entry would delete the first
+    writer's staged or moved files mid-commit, and the first writer's
+    manifest would then name files that are gone. This lease makes
     the single-writer discipline executable: concurrent mutation
     fails loud instead of corrupting.
 
@@ -119,9 +121,9 @@ def mutation_lease(path: str):
     rename (a half-created lease is never visible). If the lease
     exists and its pid is a LIVE process, raise; if the pid is dead
     (a writer that crashed inside its lease), heal the lease and
-    proceed — the entry recovery inside the new lease heals the
+    proceed — the entry deletion inside the new lease heals the
     data. Re-entrant within a process, so a maintenance fold can
-    hold it around recovery + fold while the leaf mutator re-enters.
+    hold it around its whole batch while the leaf mutator re-enters.
 
     Pid liveness is same-host only — the honest scope for this
     filesystem store, which is the local stand-in for a
@@ -147,8 +149,8 @@ def mutation_lease(path: str):
                 raise RuntimeError(
                     f"{path}: store is being mutated by thread "
                     f"{held[0]} of THIS process; a second concurrent "
-                    "writer's entry-time recovery would roll back its "
-                    "in-flight swap. Run one maintenance loop per "
+                    "writer's entry would delete the files of its "
+                    "in-flight commit. Run one maintenance loop per "
                     "store (production: a transactional table "
                     "format's commit protocol)."
                 )
@@ -180,8 +182,8 @@ def mutation_lease(path: str):
                     raise RuntimeError(
                         f"{path}: store is being mutated by live "
                         f"process {holder}; a second concurrent "
-                        "writer's entry-time recovery would roll back "
-                        "its in-flight swap. Run one maintenance loop "
+                        "writer's entry would delete the files of its "
+                        "in-flight commit. Run one maintenance loop "
                         "per store (production: a transactional table "
                         "format's commit protocol)."
                     )
@@ -255,144 +257,185 @@ def _sweep_lease_orphans(lease: str) -> None:
 def seed_store(
     df: DataFrame, path: str, part_col: str, meta: "dict | None" = None
 ) -> None:
-    """Seed (or reseed) a partitioned store with ``df`` as a full
-    ``partitionBy(part_col)`` overwrite, then commit its manifest with
-    ``meta`` and ``df``'s schema. The caller lays ``df`` out (file
-    count and sort order per partition); this owns the commit.
+    """Seed (or reseed) a partitioned store with ``df``
+    ``partitionBy(part_col)``: a commit that keeps nothing of the prior
+    store, with ``meta`` and ``df``'s schema in its manifest. The
+    caller lays ``df`` out (file count and sort order per partition);
+    this owns the commit.
 
-    Seeding is a mutation too, so it holds the lease: overwriting a
-    store a live maintenance fold is mid-swap on loses the fold's
-    batch. Mid-swap orphans are purged, not recovered, before the
-    overwrite (:func:`purge_swap_orphans`). The overwrite drops any
-    prior manifest, so a seed that dies before its manifest commit
-    leaves a directory every reader and mutator refuses until a
-    re-run of the seed.
+    Seeding is a mutation too, so it holds the lease: reseeding a
+    store a live maintenance fold is committing to loses the fold's
+    batch. A reseed that dies before its manifest rename leaves the
+    prior store readable; a first seed that dies there leaves a
+    directory with no manifest, which every reader and mutator
+    refuses until a re-run of the seed.
     """
     with mutation_lease(path):
-        purge_swap_orphans(path)
-        df.write.mode("overwrite").partitionBy(part_col).parquet(path)
-        refresh_manifest(
-            path, part_col, {**(meta or {}), "schema": df.schema.json()}
+        _delete_unnamed(path, part_col)
+        swap_partition_dirs(
+            path, df, part_col, {}, {**(meta or {}), "schema": df.schema.json()}
         )
 
 
-def rewrite_partitions(spark, path: str, part_col: str, plan) -> "list":
+def rewrite_partitions(
+    spark, path: str, part_col: str, plan, meta: "dict | None" = None
+) -> "list":
     """Rewrite only the partitions a batch touches: under the lease,
-    roll back any dead writer's half-done swap
-    (:func:`recover_partition_swaps`), open the committed snapshot
-    (:func:`open_snapshot`, which refuses a directory with no
-    manifest), then call ``plan(snapshot, manifest)``. The plan
-    returns ``(affected, rewritten)``: the partition values the batch
-    touches and a DataFrame of every row those partitions hold
-    afterwards, partition column included. If anything is affected,
-    :func:`swap_partition_dirs` commits ``rewritten`` over exactly
-    those partitions; every other partition keeps its files. Returns
-    ``affected``.
+    delete what a dead writer left (:func:`_delete_unnamed`), open the
+    committed snapshot (:func:`open_snapshot`, which refuses a
+    directory with no manifest), then call ``plan(snapshot,
+    manifest)``. The plan returns ``(affected, rewritten)``: the
+    partition values the batch touches and a DataFrame of every row
+    those partitions hold afterwards, partition column included. If
+    anything is affected, one commit keeps every other partition's
+    exact files and replaces the affected ones with ``rewritten``,
+    recording ``meta`` in the manifest. Returns ``affected``.
     """
     with mutation_lease(path):
-        recover_partition_swaps(path, part_col)
+        _delete_unnamed(path, part_col)
         snapshot, manifest = open_snapshot(spark, path, part_col)
         affected, rewritten = plan(snapshot, manifest)
         if affected:
-            swap_partition_dirs(path, rewritten, part_col, affected)
+            gone = {str(v) for v in affected}
+            kept = {k: v for k, v in manifest["parts"].items() if k not in gone}
+            swap_partition_dirs(path, rewritten, part_col, kept, meta)
         return affected
 
 
 def append_partitions(
     df: DataFrame, path: str, part_col: str, batch_id: int
 ) -> None:
-    """Idempotent batch-keyed APPEND: under the lease, roll back any
-    dead writer's half-done swap (:func:`recover_partition_swaps`),
-    write ``df`` ``partitionBy(part_col)`` into a per-batch tmp dir,
-    move each partition's output file onto the DETERMINISTIC
-    ``<part_col>=v/batch-<batch_id>.parquet``, and commit the manifest
-    with ``df``'s schema — creating it when this append births the
-    store, so every store carries one from its first batch.
+    """Idempotent batch-keyed APPEND: one commit that keeps every
+    file of the store but this batch's own and names each partition's
+    one new file ``<part_col>=v/batch-<batch_id>.parquet``, with
+    ``df``'s schema in the manifest — which this append creates when
+    it births the store, so every store carries one from its first
+    batch.
 
-    The recovery comes first because appending into a half-swapped
-    store loses rows: the partition a crashed swap renamed aside
-    would be recreated holding only this batch, and the next
-    mutator's rollback would discard it to restore the retired copy.
-    A replayed batch recomputes the same rows and overwrites its own
+    A replayed batch recomputes the same rows and replaces its own
     files instead of appending duplicates — the filesystem analog of
-    a transactional sink keyed by batch id. The tmp name is
-    batch-deterministic too, so a crashed append's tmp is simply
-    overwritten by the replay.
+    a transactional sink keyed by batch id. A directory with no
+    manifest is taken as empty: it can only be a first append that
+    died before its manifest rename.
     """
+    own = f"batch-{batch_id}.parquet"
     with mutation_lease(path):
-        recover_partition_swaps(path, part_col)
-        tmp = path.rstrip("/") + f".tmp-batch-{batch_id}"
+        _delete_unnamed(path, part_col)
+        try:
+            prior = read_manifest(path, part_col)["parts"]
+        except FileNotFoundError:
+            prior = {}
+        kept = {k: [f for f in v if f != own] for k, v in prior.items()}
         # repartition on the partition column: each value's rows land
         # in one task, so each partition dir gets exactly one file
-        (
-            df.repartition(part_col)
-            .write.mode("overwrite")
-            .partitionBy(part_col)
-            .parquet(tmp)
+        swap_partition_dirs(
+            path,
+            df.repartition(part_col),
+            part_col,
+            kept,
+            {"schema": df.schema.json()},
+            own,
         )
-        os.makedirs(path, exist_ok=True)
-        for d in os.listdir(tmp):
-            if not d.startswith(f"{part_col}="):
-                continue
-            (fn,) = [
-                f for f in os.listdir(f"{tmp}/{d}") if f.endswith(".parquet")
-            ]
-            os.makedirs(f"{path}/{d}", exist_ok=True)
-            os.replace(
-                f"{tmp}/{d}/{fn}", f"{path}/{d}/batch-{batch_id}.parquet"
-            )
-        refresh_manifest(path, part_col, {"schema": df.schema.json()})
-        shutil.rmtree(tmp)
 
 
 def swap_partition_dirs(
     path: str,
-    remaining: DataFrame,
+    df: DataFrame,
     part_col: str,
-    affected: "list[int]",
+    kept: dict,
+    meta: "dict | None" = None,
+    name: "str | None" = None,
 ) -> None:
-    """Crash-safe commit for partition-level store rewrites
-    (delete/compact): write ``remaining`` ``partitionBy(part_col)``
-    into a per-call-UNIQUE tmp dir, then per affected partition move
-    the live dir ASIDE into the tmp before moving the rewritten dir
-    in — nothing is unlinked until both renames landed, so a kill at
-    any point leaves every row either live or intact inside the
-    orphaned tmp (:func:`recover_partition_swaps` rolls that tmp
-    back; a bare filesystem has no atomic multi-dir commit —
-    production targets a transactional format's REPLACE). A fixed tmp name would let a
-    post-crash replay clobber the only surviving copy of a
-    half-swapped partition; the uuid suffix closes that window.
-    Untouched partition directories are never opened, moved, or
-    rewritten — they keep their exact files (pytest-pinned by file
-    listing in both stores' test suites).
+    """The one commit every store write makes; callers hold the lease.
+    Write ``df`` ``partitionBy(part_col)`` into a unique
+    ``<path>.tmp-*`` sibling, move each staged data file with its
+    Hadoop ``.crc`` into its live partition directory (under ``name``
+    if given: one file per partition), rename in a manifest whose
+    ``parts`` are ``kept`` plus the moved files, then delete every
+    file that manifest does not name (:func:`_delete_unnamed`).
 
-    Scope note (readers): WRITERS are serialized by
-    :func:`mutation_lease` and crashes roll back via
-    :func:`recover_partition_swaps`; READERS open one committed
-    snapshot through the manifest this function refreshes after its
-    renames (:func:`refresh_manifest` / :func:`open_snapshot` — a
-    probe concurrent with the rename window converges to the
-    post-swap snapshot or fails loud, never a mixed listing). What
-    remains out of scope on a bare filesystem is multi-mutation
-    isolation for long-running readers (a job still reading files a
-    LATER mutation retired fails loud on the missing file); at 100 TB
-    the transactional format this swap stands in for keeps retired
-    files until snapshot expiry.
+    The manifest rename is the commit point. Before it, the old
+    snapshot's files are untouched and the moved ones are garbage no
+    reader opens; after it, the batch is committed, and a crash only
+    leaves garbage the next writer's entry deletes. So a reader sees
+    the old snapshot or the new one, never a mix, and no crash
+    anywhere loses a committed row. A moved file never lands on a
+    live name (staged names are unique per write) except a replayed
+    append's own ``batch-<id>.parquet``, whose rows are the same; its
+    old checksum goes first, so no reader pairs new bytes with it.
+
+    The name is kept from the directory swap this commit replaced:
+    the benchmark's tracer wraps it as its ``store.swap`` span.
+    Untouched partitions keep their exact files (pytest-pinned by
+    file listing in both stores' test suites). What is out of scope
+    on a bare filesystem is isolation for long-running readers: a job
+    still reading files a LATER commit deleted fails loud on the
+    missing file; the transactional format this stands in for keeps
+    them until snapshot expiry.
     """
-    tmp = path.rstrip("/") + f".tmp-swap-{uuid.uuid4().hex[:8]}"
-    remaining.write.mode("overwrite").partitionBy(part_col).parquet(tmp)
-    for v in affected:
-        old = f"{path}/{part_col}={v}"
-        new = f"{tmp}/{part_col}={v}"
-        if os.path.isdir(old):
-            os.rename(old, f"{tmp}/retired-{part_col}={v}")
-        if os.path.isdir(new):  # absent when the partition lost every row
-            os.rename(new, old)
-    # reader-visible commit: refresh the manifest BEFORE dropping the
-    # tmp — a crash in between leaves an orphan, whose entry-time
-    # rollback re-refreshes, so manifest and data never diverge
-    refresh_manifest(path, part_col)
-    shutil.rmtree(tmp)
+    base = path.rstrip("/")
+    tmp = f"{base}.tmp-{uuid.uuid4().hex[:8]}"
+    df.write.partitionBy(part_col).parquet(tmp)
+    parts = {k: list(v) for k, v in kept.items()}
+    os.makedirs(base, exist_ok=True)
+    for d in sorted(os.listdir(tmp)):
+        if not d.startswith(f"{part_col}="):
+            continue
+        files = sorted(
+            f for f in os.listdir(f"{tmp}/{d}") if not f.startswith(("_", "."))
+        )
+        if name is not None and len(files) > 1:
+            raise RuntimeError(f"{tmp}/{d}: {len(files)} files for one {name}")
+        os.makedirs(f"{base}/{d}", exist_ok=True)
+        for fn in files:
+            live = name or fn
+            crc = f"{base}/{d}/.{live}.crc"
+            if os.path.exists(crc):
+                os.remove(crc)
+            os.rename(f"{tmp}/{d}/{fn}", f"{base}/{d}/{live}")
+            if os.path.exists(f"{tmp}/{d}/.{fn}.crc"):
+                os.rename(f"{tmp}/{d}/.{fn}.crc", crc)
+            parts.setdefault(d.split("=", 1)[1], []).append(live)
+    refresh_manifest(base, part_col, parts, meta)
+    _delete_unnamed(base, part_col)
+
+
+def _delete_unnamed(path: str, part_col: str) -> None:
+    """Delete every ``<path>.tmp-*`` sibling and, when the store has a
+    manifest, every partition file and directory the manifest does
+    not name (a named file's ``.crc`` stays with it). Run by every
+    writer at entry, under the lease, and at the end of every commit:
+    at entry it is the whole crash recovery, because a dead writer's
+    files are unnamed until its manifest rename and garbage after it.
+    A directory with no manifest keeps its partition files: nothing
+    says which of them are garbage.
+    """
+    base = path.rstrip("/")
+    parent, stem = os.path.split(base)
+    parent = parent or "."
+    if os.path.isdir(parent):
+        for d in sorted(os.listdir(parent)):
+            if d.startswith(f"{stem}.tmp-"):
+                p = f"{parent}/{d}"
+                if os.path.isdir(p):
+                    shutil.rmtree(p)
+                else:
+                    os.remove(p)
+    try:
+        parts = read_manifest(base, part_col)["parts"]
+    except FileNotFoundError:
+        return
+    for d in sorted(os.listdir(base)):
+        if not d.startswith(f"{part_col}="):
+            continue
+        named = set(parts.get(d.split("=", 1)[1], ()))
+        if not named:
+            shutil.rmtree(f"{base}/{d}")
+            continue
+        named |= {f".{fn}.crc" for fn in named}
+        for fn in sorted(os.listdir(f"{base}/{d}")):
+            if fn not in named:
+                os.remove(f"{base}/{d}/{fn}")
 
 
 MANIFEST_NAME = "_mii_manifest.json"
@@ -420,33 +463,25 @@ def read_manifest(path: str, part_col: str) -> dict:
 
 
 def refresh_manifest(
-    path: str, part_col: str, meta: "dict | None" = None
+    path: str, part_col: str, parts: dict, meta: "dict | None" = None
 ) -> dict:
-    """Write the store's READER manifest: one atomic JSON file naming
-    every live data file per partition, committed via tmp-file +
-    rename. Called by every WRITER inside its lease, strictly AFTER
-    its partition renames land — so the manifest always describes a
-    COMMITTED state, and the single rename is the reader-visible
-    commit point.
+    """The commit point: rename in a manifest naming ``parts`` (the
+    live data files per partition value; empty partitions are
+    dropped). Called by :func:`swap_partition_dirs` inside the lease,
+    after its files are in place. The manifest is written to a
+    ``<path>.tmp-*`` sibling first, so the rename swaps one complete
+    file for another, and a writer that dies before the rename leaves
+    only garbage the next writer's entry deletes. This is the
+    bare-filesystem stand-in for a transactional format's snapshot
+    pointer (an Iceberg metadata.json at 100 TB), as the lease stands
+    in for its commit protocol.
 
-    Why: the partition-dir swap is crash-safe for writers, but a
-    reader that LISTS the store during the rename window sees a mixed
-    view — some partitions pre-swap, some post, some absent. Readers
-    that open through the manifest (:func:`open_snapshot`) never
-    list, so they see exactly one committed snapshot or fail loud —
-    never a mix. This is the bare-filesystem stand-in for a
-    transactional format's snapshot pointer (an Iceberg metadata.json
-    at 100 TB), same as the lease stands in for its commit protocol.
-
-    Listing here is safe: the caller holds the mutation lease, so no
-    swap is in flight.
-
-    ``meta`` holds the store-defining fields a seed writer records —
-    ``schema`` (``StructType.json()``, so a COMMITTED-EMPTY store
-    reads as an empty DataFrame of the right shape) and, for the
-    index store, ``n_buckets``. Every other field of the prior
-    manifest carries forward, so refreshes that hold no DataFrame
-    (swap commits, entry recovery) keep what the seed recorded.
+    ``meta`` holds the fields a writer records — ``schema``
+    (``StructType.json()``, so a COMMITTED-EMPTY store reads as an
+    empty DataFrame of the right shape), for the index store
+    ``n_buckets``, and the Misra-Gries fold's last ``batch_id``.
+    Every other field of the prior manifest carries forward, so a
+    rewrite that holds no seed metadata keeps what the seed recorded.
     """
     import json
 
@@ -454,35 +489,23 @@ def refresh_manifest(
         prior = read_manifest(path, part_col)
     except FileNotFoundError:
         prior = {}
-    parts: dict = {}
-    if os.path.isdir(path):
-        for d in sorted(os.listdir(path)):
-            if not d.startswith(f"{part_col}="):
-                continue
-            files = sorted(
-                fn
-                for fn in os.listdir(f"{path}/{d}")
-                if not fn.startswith(("_", "."))
-            )
-            if files:
-                parts[d.split("=", 1)[1]] = files
     manifest = {
         **prior,
         **(meta or {}),
         "version": uuid.uuid4().hex,
         "part_col": part_col,
-        "parts": parts,
+        "parts": {k: sorted(v) for k, v in sorted(parts.items()) if v},
     }
-    tmp = f"{path}/.{MANIFEST_NAME}.tmp-{uuid.uuid4().hex[:8]}"
+    tmp = f"{path.rstrip('/')}.tmp-{uuid.uuid4().hex[:8]}.json"
     with open(tmp, "w") as f:
         json.dump(manifest, f)
-    _fs_rename(tmp, f"{path}/{MANIFEST_NAME}")
+    os.rename(tmp, f"{path}/{MANIFEST_NAME}")
     return manifest
 
 
 class _MidSwap(Exception):
-    """A committed snapshot's files did not all resolve: a swap is in
-    flight or a writer died mid-swap."""
+    """A manifest named files that are gone: a commit landed and
+    deleted them between the manifest read and the file read."""
 
 
 def _read_committed(
@@ -490,15 +513,13 @@ def _read_committed(
 ):
     """The readers' snapshot loop: read the manifest and return
     ``read(manifest)``. ``read`` raises :class:`_MidSwap` when files the
-    manifest names are gone: a swap is in flight (the writer renamed
-    dirs but has not refreshed the manifest yet) or a writer died
-    mid-swap. Then re-read the manifest and retry, up to ``retries``.
-    A completing swap converges (its manifest refresh lands and the
-    new snapshot verifies); a crashed one keeps the stale manifest
-    until the next mutation's entry recovery rolls the data back and
-    refreshes — until then this fails LOUD instead of returning a
-    partial view. A directory with no manifest raises
-    ``FileNotFoundError`` (:func:`read_manifest`)."""
+    manifest names are gone: a commit landed after the manifest read
+    and deleted the files of the older snapshot. Then re-read the
+    manifest and retry, up to ``retries``; the new snapshot's files
+    stay until a later commit, so the retry converges. A manifest
+    whose files stay missing (removed outside the store) fails LOUD
+    instead of returning a partial view. A directory with no manifest
+    raises ``FileNotFoundError`` (:func:`read_manifest`)."""
     import time
 
     last = None
@@ -510,9 +531,9 @@ def _read_committed(
         time.sleep(wait_sec)
     raise RuntimeError(
         f"{path}: could not materialize one committed snapshot through "
-        f"{retries} attempts — a writer is mid-swap (retry once it "
-        f"commits) or died mid-swap (any mutator's entry recovery heals "
-        f"the store). Last observation: {last}"
+        f"{retries} attempts — commits kept deleting the files of the "
+        f"snapshot read (mid-swap), or the manifest names files removed "
+        f"outside the store. Last observation: {last}"
     )
 
 
@@ -565,8 +586,8 @@ def open_snapshot(spark, path: str, part_col: str) -> "tuple[DataFrame, dict]":
     as a PARALLEL JOB above ~32 paths, and that bulk listing SILENTLY
     DROPS any path deleted between the driver check and the executor
     stat ("was it deleted very recently?" is a log warning, not an
-    error — regardless of ignoreMissingFiles). A swap racing that
-    window hands back a partial FileIndex with no error: the r12
+    error — regardless of ignoreMissingFiles). A commit deleting the
+    older snapshot's files in that window hands back a partial FileIndex with no error: the r12
     decade race probe measured a 3,904-file resolve materializing
     1,728 inputFiles and aggregating 45% of the store, silently. So
     after building the DataFrame we compare ``df.inputFiles()``
@@ -589,7 +610,7 @@ def open_snapshot(spark, path: str, part_col: str) -> "tuple[DataFrame, dict]":
                 *files
             )
             n_indexed = len(df.inputFiles())
-        except Exception as e:  # driver-side PATH_NOT_FOUND mid-swap
+        except Exception as e:  # a commit deleted a file since the resolve
             if "PATH_NOT_FOUND" not in str(e):
                 raise
             raise _MidSwap(f"driver existence check: {e}") from None
@@ -629,78 +650,3 @@ def read_partitions(path: str, part_col: str, parts, columns, filters):
             raise _MidSwap(f"pyarrow read: {e}") from None
 
     return _read_committed(path, part_col, read)
-
-
-def purge_swap_orphans(path: str) -> "list[str]":
-    """Reseed-time crash-artifact purge: delete every orphaned
-    ``<path>.tmp-swap-*`` sibling WITHOUT rolling it back. An
-    overwrite reseed (``write_index_store`` / ``write_ivf_cells``)
-    replaces the store wholesale, so the pre-crash state a
-    :func:`recover_partition_swaps` rollback would restore is
-    irrelevant — but an orphan that SURVIVES the reseed is a time
-    bomb: the next mutator's entry recovery would move the pre-crash
-    retired copies in OVER the freshly-seeded partitions, silently
-    resurrecting stale data. Called inside the seeding lease, before
-    the overwrite. Returns the purged sibling names."""
-    base = os.path.basename(path.rstrip("/"))
-    parent = os.path.dirname(path.rstrip("/")) or "."
-    purged = []
-    if not os.path.isdir(parent):
-        return purged
-    for d in sorted(os.listdir(parent)):
-        if d.startswith(f"{base}.tmp-swap-"):
-            shutil.rmtree(f"{parent}/{d}", ignore_errors=True)
-            purged.append(d)
-    return purged
-
-
-def recover_partition_swaps(path: str, part_col: str) -> "list[str]":
-    """Executable crash recovery for orphaned mid-swap tmp dirs — the
-    reconciliation :func:`swap_partition_dirs` leaves as a manual
-    point, made a routine. Strategy: ROLL BACK to the pre-batch state.
-    The swap only runs inside a maintenance batch whose checkpoint
-    commits strictly after the swap returns, so a tmp that outlived
-    its process belongs to an UNcommitted batch — the stream will
-    replay it; restoring the retired copies (and discarding any
-    rewritten partitions that already landed) returns the store to
-    exactly the state that replay expects.
-
-    Per orphaned ``<path>.tmp-swap-*`` sibling, for every
-    ``retired-<part_col>=v`` inside it: the live dir currently holds
-    either nothing (crash between rename-aside and rename-in) or the
-    new copy (crash after this partition committed but before the
-    batch finished) — both roll back by moving the retired copy in.
-    Plain ``<part_col>=v`` entries are rewritten copies never renamed
-    in; the live dir still holds the old state (or the partition is
-    legitimately new), so they are dropped with the tmp. Idempotent
-    and safe to call when nothing is orphaned (returns []).
-
-    The streaming maintenance loops call this before every fold, so
-    a crash-restart cycle self-heals without an operator in the loop.
-    """
-    base = os.path.basename(path.rstrip("/"))
-    parent = os.path.dirname(path.rstrip("/")) or "."
-    recovered = []
-    if not os.path.isdir(parent):
-        return recovered
-    for d in sorted(os.listdir(parent)):
-        if not d.startswith(f"{base}.tmp-swap-"):
-            continue
-        tmp = f"{parent}/{d}"
-        for entry in sorted(os.listdir(tmp)):
-            if not entry.startswith(f"retired-{part_col}="):
-                continue
-            v_dir = entry[len("retired-"):]
-            live = f"{path}/{v_dir}"
-            if os.path.isdir(live):  # the new copy landed: discard it
-                shutil.rmtree(live)
-            os.rename(f"{tmp}/{entry}", live)
-        shutil.rmtree(tmp)
-        recovered.append(d)
-    if recovered and os.path.isfile(f"{path}/{MANIFEST_NAME}"):
-        # the rollback may have undone a state the manifest already
-        # described (crash between the manifest refresh and the tmp
-        # cleanup) — re-derive it from the healed listing so readers
-        # converge instead of failing on retired file names
-        refresh_manifest(path, part_col)
-    return recovered

@@ -157,8 +157,8 @@ def maintain_index_available_now(
     store manifest (flat, or a seed that died before its commit)
     fails the micro-batch loud, uncommitted, until it is reseeded. On
     a real cluster the same foreachBatch body targets a transactional
-    table format (Iceberg/Delta MERGE); the dir swaps are the
-    filesystem-only stand-in for that commit.
+    table format (Iceberg/Delta MERGE); the store's manifest commit
+    is the filesystem-only stand-in for that format's.
     """
     from mapreduce_inverted_index_spark.operators.inverted_index import (
         build_index,
@@ -170,9 +170,9 @@ def maintain_index_available_now(
         if not batch_df.take(1):
             return
         sess = batch_df.sparkSession
-        # single-writer guard: a concurrent writer's entry recovery
-        # would roll back THIS fold's in-flight swap (store.
-        # mutation_lease docstring); the leaf mutator re-enters
+        # single-writer guard: a concurrent writer's entry would
+        # delete THIS fold's in-flight files (store.mutation_lease
+        # docstring); the leaf mutator re-enters
         with mutation_lease(index_dir):
             delta = build_index(streamed_doc_ids(batch_df))
             if os.path.isdir(index_dir):
@@ -242,12 +242,10 @@ def maintain_semantic_cells_available_now(
     Both appends go through ``store.append_partitions`` —
     deterministic ``batch-<id>``-named files, so a micro-batch
     replayed after a crash (sink writes landed, checkpoint commit did
-    not) OVERWRITES its own files instead of appending duplicates.
-    The cell append runs first because it runs the entry-time crash
-    recovery: the prior-state read that follows opens a healed,
-    committed snapshot (``store.open_snapshot``), never a store a
-    crashed compaction left half-swapped. That read excludes the
-    batch's own cells file, so a replay derives identical matches
+    not) REPLACES its own files instead of appending duplicates.
+    The prior-state read after the cell append opens one committed
+    snapshot (``store.open_snapshot``) and excludes the batch's own
+    cells file, so a replay derives identical matches
     (pytest-pinned by a deleted-commit-marker replay test). A
     production deployment still prefers a transactional table format
     (Iceberg/Delta) keyed by ``(batch_id, vec_id)`` — this is its
@@ -277,8 +275,8 @@ def maintain_semantic_cells_available_now(
         sess = batch_df.sparkSession
         # lease on the CELL store — the state shared with the takedown
         # twin (maintain_cell_takedowns_available_now / compact):
-        # overlapping with either would let its entry recovery roll
-        # back this fold's appends mid-batch. It also serializes the
+        # overlapping with either would let its entry delete this
+        # fold's in-flight files mid-commit. It also serializes the
         # codebook seed decision; the store entry points re-enter it.
         with mutation_lease(cells_dir):
             if not os.path.isdir(cells_dir):
@@ -360,8 +358,8 @@ def _takedown_loop(
         if not batch_df.take(1):
             return
         # single-writer guard: concurrent with the matching ADD loop
-        # (or a second takedown), the other writer's entry recovery
-        # would roll back this fold's in-flight swap — fail loud
+        # (or a second takedown), the other writer's entry would
+        # delete this fold's in-flight files — fail loud
         # instead (store.mutation_lease docstring); leaf mutators
         # re-enter the lease
         with mutation_lease(state_dir):
@@ -393,7 +391,7 @@ def maintain_takedowns_available_now(
     collects the batch's ids, a locate scan finds the bucket
     partitions whose postings contain them, and a row-local rewrite
     filters those buckets' postings in place (no shuffle) and commits
-    with the shared crash-safe dir swap. Untouched buckets keep their
+    with the store's one crash-safe commit. Untouched buckets keep their
     files, but a page-length doc has terms in nearly every bucket, so
     the skip pays off only for very short docs or many buckets; the
     rewrite still reads and writes the affected buckets whole. A
@@ -434,8 +432,8 @@ def maintain_cell_takedowns_available_now(
     :func:`maintain_takedowns_available_now`: a checkpointed erasure
     queue of ``vec_id`` files folds into the IVF cell store via
     ``similarity.delete_from_ivf_cells`` — per batch, only the cell
-    partitions containing the batch's ids rewrite (tmp-write +
-    per-cell dir swap); everything else keeps its exact files. With
+    partitions containing the batch's ids rewrite (the store's one
+    commit); everything else keeps its exact files. With
     this, both stored states (text index, embedding cells) have the
     full streaming lifecycle: ADD (ingest loops), DELETE (takedown
     queues), and for cells COMPACT (:func:`similarity.

@@ -16,9 +16,11 @@ the filesystem stand-in for a transactional state table. It is a
 one-partition store of the shared format (``operators.store``;
 constant partition column ``part``, which readers drop): the first
 fold seeds it with ``store.seed_store``, every later fold commits
-with ``store.rewrite_partitions``, whose entry-time crash recovery
-rolls a half-done commit back so the replayed batch folds exactly
-once. Readers open it with ``store.open_snapshot``.
+with ``store.rewrite_partitions``. Each commit records the folded
+micro-batch id in the manifest, so a batch replayed after a crash
+(its commit landed, the checkpoint's did not) is skipped, and every
+batch folds exactly once. Readers open it with
+``store.open_snapshot``.
 """
 
 from __future__ import annotations
@@ -95,7 +97,10 @@ def maintain_frequent_terms_available_now(
     A missing ``state_dir`` is seeded by the first non-empty batch; a
     directory without a store manifest (a seed that died before its
     commit) fails the micro-batch loud, uncommitted — the index
-    loop's rule."""
+    loop's rule. Every commit records its micro-batch id as the
+    manifest's ``batch_id``; a batch at or below it is a replay of a
+    committed fold and is skipped, so the state and its checkpoint
+    must be kept (or reset) together."""
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.take(1):
@@ -113,19 +118,24 @@ def maintain_frequent_terms_available_now(
                 "part", F.lit(0)
             )
 
+        def plan(summary: DataFrame, manifest: dict):
+            if manifest.get("batch_id", -1) >= batch_id:
+                return [], None  # a replay of a committed fold
+            return [0], merged(summary.drop("part"))
+
         # single-writer guard around the seed-or-merge decision: a
-        # concurrent fold's entry recovery would roll back this fold's
-        # in-flight swap; the store entry points re-enter the lease
+        # concurrent fold's entry would delete this fold's in-flight
+        # files; the store entry points re-enter the lease
+        done = {"batch_id": batch_id}
         with store.mutation_lease(state_dir):
             if os.path.isdir(state_dir):
                 store.rewrite_partitions(
-                    batch_df.sparkSession,
-                    state_dir,
-                    "part",
-                    lambda summary, _: ([0], merged(summary.drop("part"))),
+                    batch_df.sparkSession, state_dir, "part", plan, done
                 )
             else:
-                store.seed_store(merged(counts.limit(0)), state_dir, "part")
+                store.seed_store(
+                    merged(counts.limit(0)), state_dir, "part", done
+                )
 
     q = (
         docs_stream(spark, sf_dir, glob)

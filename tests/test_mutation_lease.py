@@ -1,10 +1,11 @@
-"""Single-writer mutation lease for the partition-swapped stores.
+"""Single-writer mutation lease for the partitioned stores.
 
-Every store mutator opens with entry-time crash recovery, which rolls
-back any sibling tmp-swap dir on the assumption its writer is DEAD.
-Two live writers on one store break that assumption: writer B's
-recovery would roll back writer A's in-flight swap while A's
-checkpoint commits — a lost batch with no error. The lease
+Every store writer opens with entry-time crash recovery, which
+deletes every sibling tmp dir and every partition file the manifest
+does not name, on the assumption their writer is DEAD. Two live
+writers on one store break that assumption: writer B's entry would
+delete writer A's staged or moved files mid-commit, and A's manifest
+would then name files that are gone. The lease
 (``operators.store.mutation_lease``) makes the single-writer
 discipline executable: a second live writer fails loud, a lease left
 by a crashed (dead-pid) writer heals, and the same process re-enters

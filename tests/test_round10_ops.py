@@ -1,9 +1,9 @@
 """Round-10 hardening: the fully-emptied bucketed index store.
 
 A takedown batch that erases every remaining doc drops every
-``bucket=`` directory (``swap_partition_dirs`` retires a partition
-whose last term dies), leaving only the reader manifest, which names
-no files and still records the schema and ``n_buckets``. That store
+``bucket=`` directory (the store's commit deletes a partition whose
+last term dies), leaving only the reader manifest, which names no
+files and still records the schema and ``n_buckets``. That store
 must stay a STORE: reads see an empty index, further deletes no-op,
 and re-ingest rebuilds the bucketed layout in place.
 """
@@ -11,8 +11,10 @@ and re-ingest rebuilds the bucketed layout in place.
 from __future__ import annotations
 
 import os
+import shutil
 
 import pyspark.sql.functions as F
+import pytest
 
 SF = "/root/testdata/sf0.001"
 
@@ -162,11 +164,10 @@ def test_streaming_loops_route_emptied_store_through_store_paths(
     )
 
 
-def _swap_crash_after_one_aside(monkeypatch):
-    """Monkeypatch os.rename inside the swap to die after the first
-    rename-ASIDE (before its rename-in) — the worst partial-commit
-    point: the live store is missing a partition whose only copies
-    sit inside the orphaned tmp."""
+def _crash_at_second_commit_rename(monkeypatch):
+    """Monkeypatch os.rename inside the commit to die at its second
+    call: one staged file has moved into its live partition directory,
+    its checksum has not, and the manifest still names the old files."""
     from mapreduce_inverted_index_spark.operators import store as store_mod
 
     real_rename = os.rename
@@ -175,20 +176,35 @@ def _swap_crash_after_one_aside(monkeypatch):
     def dying_rename(src, dst):
         calls["n"] += 1
         if calls["n"] == 2:
-            raise OSError("injected crash mid-swap")
+            raise OSError("injected crash mid-commit")
         real_rename(src, dst)
 
     monkeypatch.setattr(store_mod.os, "rename", dying_rename)
 
 
-def test_recover_partition_swaps_rolls_back_to_prebatch(
+def _unnamed_files(path, part_col):
+    """Files under the store's partition directories that its manifest
+    does not name (a named file's ``.crc`` counts as named)."""
+    from mapreduce_inverted_index_spark.operators.store import read_manifest
+
+    parts = read_manifest(path, part_col)["parts"]
+    out = []
+    for d in sorted(os.listdir(path)):
+        if not d.startswith(f"{part_col}="):
+            continue
+        named = set(parts.get(d.split("=", 1)[1], ()))
+        named |= {f".{fn}.crc" for fn in named}
+        out += [f"{d}/{fn}" for fn in os.listdir(f"{path}/{d}") if fn not in named]
+    return out
+
+
+def test_crash_before_commit_point_restores_prebatch(
     spark, tmp_path, monkeypatch
 ):
-    """After a mid-swap crash, recover_partition_swaps restores the
-    EXACT pre-batch store (rolled-back partitions + discarded
-    rewrites), removes the orphaned tmp, and the replayed delete then
-    converges — the executable form of the 'manual reconciliation'
-    the swap docstring used to leave to an operator."""
+    """A crash before the manifest rename leaves the EXACT pre-batch
+    store readable, even before any recovery; the next writer's entry
+    deletes the crashed commit's staged and moved files, and the
+    replayed delete then converges."""
     import pytest
 
     from mapreduce_inverted_index_spark.operators.inverted_index import (
@@ -196,9 +212,6 @@ def test_recover_partition_swaps_rolls_back_to_prebatch(
         delete_from_index_store,
         read_index_store,
         write_index_store,
-    )
-    from mapreduce_inverted_index_spark.operators.store import (
-        recover_partition_swaps,
     )
 
     docs = spark.createDataFrame(
@@ -209,21 +222,22 @@ def test_recover_partition_swaps_rolls_back_to_prebatch(
     write_index_store(build_index(docs), path)
     before = _index_rows(read_index_store(spark, path))
 
-    _swap_crash_after_one_aside(monkeypatch)
+    _crash_at_second_commit_rename(monkeypatch)
     with pytest.raises(OSError, match="injected crash"):
         delete_from_index_store(spark, path, [0])
     monkeypatch.undo()
 
-    recovered = recover_partition_swaps(path, "bucket")
-    assert recovered, "the orphaned tmp must be found and recovered"
     assert _index_rows(read_index_store(spark, path)) == before
+    assert _unnamed_files(path, "bucket")  # the crashed commit's moves
+    assert [d for d in os.listdir(str(tmp_path)) if d.startswith("store.tmp-")]
+
+    # a ghost delete commits nothing; its entry alone heals the store
+    assert delete_from_index_store(spark, path, [999]) == []
+    assert _index_rows(read_index_store(spark, path)) == before
+    assert _unnamed_files(path, "bucket") == []
     assert not [
-        d
-        for d in os.listdir(str(tmp_path))
-        if d.startswith("store.tmp-swap-")
+        d for d in os.listdir(str(tmp_path)) if d.startswith("store.tmp-")
     ]
-    # idempotent when nothing is orphaned
-    assert recover_partition_swaps(path, "bucket") == []
 
     # the replayed batch now converges
     delete_from_index_store(spark, path, [0])
@@ -234,10 +248,11 @@ def test_recover_partition_swaps_rolls_back_to_prebatch(
 def test_takedown_loop_self_heals_after_mid_swap_crash(
     spark, tmp_path, monkeypatch
 ):
-    """End-to-end self-healing: a takedown pass crashes MID-SWAP (tmp
-    orphaned, one partition half-moved); simply RESTARTING the
-    maintenance loop recovers the store at op entry and replays the
-    uncommitted batch — no manual step, and the invariant holds."""
+    """End-to-end self-healing: a takedown pass crashes mid-commit (tmp
+    orphaned, one staged file moved in but unnamed); simply
+    RESTARTING the maintenance loop heals the store at op entry and
+    replays the uncommitted batch — no manual step, and the invariant
+    holds."""
     import pytest
 
     from mapreduce_inverted_index_spark.operators.inverted_index import (
@@ -261,7 +276,7 @@ def test_takedown_loop_self_heals_after_mid_swap_crash(
         1
     ).write.mode("append").parquet(queue)
 
-    _swap_crash_after_one_aside(monkeypatch)
+    _crash_at_second_commit_rename(monkeypatch)
     with pytest.raises(Exception, match="injected crash"):
         maintain_takedowns_available_now(spark, queue, index_dir, ckpt)
     monkeypatch.undo()
@@ -275,7 +290,7 @@ def test_takedown_loop_self_heals_after_mid_swap_crash(
     assert not [
         d
         for d in os.listdir(str(tmp_path))
-        if d.startswith("index.tmp-swap-")
+        if d.startswith("index.tmp-")
     ]
 
 
@@ -325,10 +340,10 @@ def test_takedown_loop_refuses_flat_index_and_keeps_its_batch(
 def test_ivf_cell_store_self_heals_after_mid_swap_crash(
     spark, tmp_path, monkeypatch
 ):
-    """The IVF cell store shares the partition-dir swap; a takedown
-    that crashes mid-swap must self-heal at the next op entry
-    (recover_partition_swaps runs inside delete_from_ivf_cells), and
-    the replayed delete must converge to assign-of-the-survivors."""
+    """The IVF cell store shares the one commit; a takedown that
+    crashes mid-commit must self-heal at the next op entry (the
+    entry deletion runs inside delete_from_ivf_cells), and the
+    replayed delete must converge to assign-of-the-survivors."""
     import pytest
 
     from mapreduce_inverted_index_spark.operators import store as store_mod
@@ -352,7 +367,7 @@ def test_ivf_cell_store_self_heals_after_mid_swap_crash(
     def dying_rename(src, dst):
         calls["n"] += 1
         if calls["n"] == 2:
-            raise OSError("injected crash mid-swap")
+            raise OSError("injected crash mid-commit")
         real_rename(src, dst)
 
     monkeypatch.setattr(store_mod.os, "rename", dying_rename)
@@ -360,7 +375,7 @@ def test_ivf_cell_store_self_heals_after_mid_swap_crash(
         delete_from_ivf_cells(spark, path, dead)
     monkeypatch.undo()
 
-    # replay: entry-time recovery rolls the store back, then the
+    # replay: the entry deletes the crashed commit's files, then the
     # delete applies cleanly
     delete_from_ivf_cells(spark, path, dead)
     got = sorted(
@@ -374,7 +389,7 @@ def test_ivf_cell_store_self_heals_after_mid_swap_crash(
     assert not [
         d
         for d in os.listdir(str(tmp_path))
-        if d.startswith("cells.tmp-swap-")
+        if d.startswith("cells.tmp-")
     ]
 
 
@@ -420,14 +435,37 @@ def test_half_seeded_store_fails_loud_not_flat_rebuild(spark, tmp_path):
     assert _index_rows(read_index_store(spark, path)) == want
 
 
+def _mg_drop(land, name, text):
+    """Land one single-document parquet file for the MG fold."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array([1], pa.int64()),
+                "text": pa.array([text], pa.string()),
+            }
+        ),
+        str(land / name),
+    )
+
+
+def _mg_counts(spark, state):
+    return {(r["term"], r["n"]) for r in spark.read.parquet(state).collect()}
+
+
 def test_mg_state_survives_mid_commit_crash(spark, tmp_path, monkeypatch):
     """The MG heavy-hitter state's commit used to be rmtree-then-
     rename: a crash between the two lost the live state, and the
     replay then silently merged into EMPTY state (wrong counts, no
-    error). With the swap + entry recovery, the same crash rolls back
-    and the replayed batch folds into the intact prior state."""
+    error). A crash right AFTER the manifest rename is the window
+    that remains: the fold is committed but its micro-batch is not,
+    so the stream replays it. The state keeps the committed fold, and
+    the replay folds nothing more."""
     import pytest
 
+    from mapreduce_inverted_index_spark.operators.store import MANIFEST_NAME
     from mapreduce_inverted_index_spark.streaming import sketches as sketches_mod
     from mapreduce_inverted_index_spark.streaming.sketches import (
         maintain_frequent_terms_available_now,
@@ -438,45 +476,21 @@ def test_mg_state_survives_mid_commit_crash(spark, tmp_path, monkeypatch):
     state = str(tmp_path / "state")
     ckpt = str(tmp_path / "ckpt")
 
-    def drop(name, text):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        pq.write_table(
-            pa.table(
-                {
-                    "doc_id": pa.array([1], pa.int64()),
-                    "text": pa.array([text], pa.string()),
-                }
-            ),
-            str(land / name),
-        )
-
-    def counts():
-        return {
-            (r["term"], r["n"])
-            for r in spark.read.parquet(state).collect()
-        }
-
     # pass 1: seed the state
-    drop("a.parquet", "alpha alpha beta")
+    _mg_drop(land, "a.parquet", "alpha alpha beta")
     maintain_frequent_terms_available_now(
         spark, str(land), state, ckpt, k=25, glob="*.parquet"
     )
-    seeded = counts()
-    assert ("alpha", 2) in seeded
+    assert ("alpha", 2) in _mg_counts(spark, state)
 
-    # pass 2 crashes between rename-aside and rename-in
-    drop("b.parquet", "alpha gamma")
+    # pass 2 dies right after its manifest rename
+    _mg_drop(land, "b.parquet", "alpha gamma")
     real_rename = os.rename
-    calls = {"n": 0}
 
     def dying_rename(src, dst):
-        calls["n"] += 1
-        if calls["n"] == 1:  # the rename-ASIDE of the live state
-            real_rename(src, dst)
-            raise OSError("injected crash mid-mg-commit")
         real_rename(src, dst)
+        if dst.endswith(MANIFEST_NAME):
+            raise OSError("injected crash after the mg commit point")
 
     monkeypatch.setattr(sketches_mod.os, "rename", dying_rename)
     with pytest.raises(Exception, match="injected crash"):
@@ -484,16 +498,53 @@ def test_mg_state_survives_mid_commit_crash(spark, tmp_path, monkeypatch):
             spark, str(land), state, ckpt, k=25, glob="*.parquet"
         )
     monkeypatch.undo()
-    # the bad window: the live partition is gone
-    assert not os.path.isdir(f"{state}/part=0")
+    # the fold is committed: alpha counts both batches
+    assert ("alpha", 3) in _mg_counts(spark, state)
 
-    # restart: recovery restores the seeded state, replay folds batch
-    # 2 exactly once — alpha counts BOTH batches (the old commit lost
-    # batch 1 here and reported alpha=1)
+    # restart: the stream replays batch 2, which the state already
+    # holds — it folds exactly once (a second fold reads alpha=4)
     maintain_frequent_terms_available_now(
         spark, str(land), state, ckpt, k=25, glob="*.parquet"
     )
-    assert ("alpha", 3) in counts()
+    assert _mg_counts(spark, state) == {("alpha", 3), ("beta", 1), ("gamma", 1)}
+
+
+def test_mg_fold_replay_is_idempotent(spark, tmp_path):
+    """Replaying a committed micro-batch (its state commit landed, its
+    checkpoint commit did not — simulated by deleting the batch's
+    commit marker) must not fold it twice: the fold records the
+    micro-batch id it committed and skips a batch it already holds."""
+    from mapreduce_inverted_index_spark.streaming.sketches import (
+        maintain_frequent_terms_available_now,
+    )
+
+    land = tmp_path / "landing"
+    land.mkdir()
+    state = str(tmp_path / "state")
+    ckpt = str(tmp_path / "ckpt")
+    for name, text in (("a.parquet", "alpha alpha beta"), ("b.parquet", "alpha gamma")):
+        _mg_drop(land, name, text)
+        maintain_frequent_terms_available_now(
+            spark, str(land), state, ckpt, k=25, glob="*.parquet"
+        )
+    folded = {("alpha", 3), ("beta", 1), ("gamma", 1)}
+    assert _mg_counts(spark, state) == folded
+
+    # the crash state, on a copy of the checkpoint (the driver JVM's
+    # commit-log guard flags external edits to one it already ran)
+    ckpt2 = str(tmp_path / "ckpt_after_crash")
+    shutil.copytree(ckpt, ckpt2)
+    commits = sorted(
+        f for f in os.listdir(f"{ckpt2}/commits") if not f.startswith(".")
+    )
+    os.remove(f"{ckpt2}/commits/{commits[-1]}")
+    crc = f"{ckpt2}/commits/.{commits[-1]}.crc"  # hadoop checksum twin
+    if os.path.exists(crc):
+        os.remove(crc)
+    maintain_frequent_terms_available_now(
+        spark, str(land), state, ckpt2, k=25, glob="*.parquet"
+    )
+    assert _mg_counts(spark, state) == folded
 
 
 def test_semantic_cells_replay_is_idempotent(spark, tmp_path):
@@ -539,8 +590,6 @@ def test_semantic_cells_replay_is_idempotent(spark, tmp_path):
     # guard (rightly) flags external edits to a checkpoint it already
     # ran; the copy is the same on-disk state a restarted process
     # would see.
-    import shutil
-
     ckpt2 = str(tmp_path / "ckpt_after_crash")
     shutil.copytree(ckpt, ckpt2)
     commits = sorted(
@@ -557,64 +606,175 @@ def test_semantic_cells_replay_is_idempotent(spark, tmp_path):
     assert snap("dups") == dups_before  # no duplicated matches
 
 
-def test_crash_sweep_every_rename_point_recovers(spark, tmp_path, monkeypatch):
-    """Systematic version of the hand-picked crash points: inject the
-    crash at EVERY os.rename call a bucketed takedown performs (the
-    swap does up to two renames per affected partition), then recover
-    + replay, and require exact convergence each time. If a future
-    change adds an unprotected window between any two renames, this
-    sweep finds it without anyone hand-picking the point."""
-    import pytest
-
-    from mapreduce_inverted_index_spark.operators import store as store_mod
+def _seed_index(spark, path, rows):
     from mapreduce_inverted_index_spark.operators.inverted_index import (
         build_index,
-        delete_from_index_store,
-        read_index_store,
         write_index_store,
     )
 
-    docs = spark.createDataFrame(
-        [(i, f"alpha{chr(97 + i)} common") for i in range(8)],
-        "doc_id bigint, text string",
+    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
+    write_index_store(build_index(docs), path, n_buckets=4)
+
+
+def _merge_new_bucket(spark, path):
+    """Merge doc 3 into a store of "alphaword" and "gammaword" (bucket
+    2 of 4); its "zetaaaa" hashes into bucket 1, which the store lacks."""
+    from mapreduce_inverted_index_spark.operators.inverted_index import (
+        build_index,
+        merge_into_index_store,
     )
-    dead = [0, 3, 5]
-    want = _index_rows(build_index(docs.where(~F.col("doc_id").isin(dead))))
-    real_rename = os.rename
 
-    # count the renames of a clean run first
-    path0 = str(tmp_path / "count")
-    write_index_store(build_index(docs), path0)
-    calls = {"n": 0}
+    delta = spark.createDataFrame(
+        [(3, "alphaword zetaaaa")], "doc_id bigint, text string"
+    )
+    merge_into_index_store(spark, path, build_index(delta))
 
-    def counting_rename(src, dst):
-        calls["n"] += 1
-        real_rename(src, dst)
 
-    monkeypatch.setattr(store_mod.os, "rename", counting_rename)
-    delete_from_index_store(spark, path0, dead)
-    monkeypatch.undo()
-    n_renames = calls["n"]
-    assert n_renames >= 2  # at least one aside+in pair
+def _delete_three(spark, path):
+    from mapreduce_inverted_index_spark.operators.inverted_index import (
+        delete_from_index_store,
+    )
 
-    for k in range(1, n_renames + 1):
-        path = str(tmp_path / f"sweep{k}")
-        write_index_store(build_index(docs), path)
-        state = {"n": 0}
+    delete_from_index_store(spark, path, [0, 3, 5])
 
-        def dying_rename(src, dst, _state=state, _k=k):
-            _state["n"] += 1
-            if _state["n"] == _k:
-                raise OSError(f"injected crash at rename {_k}")
-            real_rename(src, dst)
 
-        monkeypatch.setattr(store_mod.os, "rename", dying_rename)
-        with pytest.raises(OSError, match="injected crash"):
-            delete_from_index_store(spark, path, dead)
-        monkeypatch.undo()
-
-        # replay: entry-time recovery + the delete applied again
-        delete_from_index_store(spark, path, dead)
-        assert _index_rows(read_index_store(spark, path)) == want, (
-            f"crash at rename {k} did not recover"
+def _append_cells(ids, batch_id):
+    def append(spark, path):
+        from mapreduce_inverted_index_spark.operators.store import (
+            append_partitions,
         )
+
+        vecs = spark.createDataFrame(
+            [(i, i % 3, [float(i), 1.0]) for i in ids],
+            "vec_id bigint, cell int, vec array<double>",
+        )
+        append_partitions(vecs, path, "cell", batch_id)
+
+    return append
+
+
+_LETTERS = [(i, f"alpha{chr(97 + i)} common") for i in range(8)]
+
+# name -> (partition column, set up the pre-batch state, the batch)
+_SWEEP_CASES = {
+    "seed": (
+        "bucket",
+        lambda spark, path: None,
+        lambda spark, path: _seed_index(spark, path, _LETTERS),
+    ),
+    "reseed": (
+        "bucket",
+        lambda spark, path: _seed_index(spark, path, _LETTERS),
+        lambda spark, path: _seed_index(
+            spark, path, [(1, "alphaword"), (2, "betaword common")]
+        ),
+    ),
+    "merge_new_bucket": (
+        "bucket",
+        lambda spark, path: _seed_index(
+            spark, path, [(1, "alphaword"), (2, "alphaword gammaword")]
+        ),
+        _merge_new_bucket,
+    ),
+    "delete": (
+        "bucket",
+        lambda spark, path: _seed_index(spark, path, _LETTERS),
+        _delete_three,
+    ),
+    "append": ("cell", _append_cells(range(0, 6), 0), _append_cells(range(6, 10), 1)),
+}
+
+# the filesystem calls that change a store; the lease's own are
+# filtered out by path (a death there moves no data)
+_FS_MUTATIONS = (
+    (os, "rename"),
+    (os, "replace"),
+    (os, "remove"),
+    (os, "makedirs"),
+    (shutil, "rmtree"),
+)
+
+
+def _count_or_crash(monkeypatch, root, crash_at=None):
+    """Patch every mutating filesystem call on a path under ``root``
+    to count itself, and to raise at call ``crash_at``."""
+    calls = {"n": 0}
+    for mod, name in _FS_MUTATIONS:
+
+        def fake(p, *a, _real=getattr(mod, name), **k):
+            if str(p).startswith(root) and ".mutation-lease" not in str(p):
+                calls["n"] += 1
+                if calls["n"] == crash_at:
+                    raise OSError(f"injected crash at call {crash_at}")
+            return _real(p, *a, **k)
+
+        monkeypatch.setattr(mod, name, fake)
+    return calls
+
+
+@pytest.mark.parametrize("case", sorted(_SWEEP_CASES))
+def test_crash_sweep_every_rename_point_recovers(
+    spark, tmp_path, monkeypatch, case
+):
+    """Crash the batch at EVERY mutating filesystem call of its commit
+    (the moves, the manifest rename, the deletions), then require:
+    a reader sees exactly the pre-batch or the post-batch rows; the
+    next writer's entry (a no-op rewrite) leaves one of those two
+    states and no ``.tmp-*`` sibling; the replayed batch converges
+    with no file the manifest does not name. No crash point is
+    hand-picked, so a window a future change opens between any two
+    calls is found."""
+    from mapreduce_inverted_index_spark.operators import store as store_mod
+
+    part_col, prepare, batch = _SWEEP_CASES[case]
+
+    def rows(path):
+        try:
+            df = store_mod.open_snapshot(spark, path, part_col)[0]
+        except FileNotFoundError:
+            return None  # not a store
+        return sorted(
+            tuple(tuple(v) if isinstance(v, list) else v for v in r)
+            for r in df.collect()
+        )
+
+    def no_tmp(root):
+        return not [d for d in os.listdir(root) if ".tmp-" in d]
+
+    # count the calls of a clean run first
+    root = str(tmp_path / "count")
+    path = f"{root}/store"
+    os.makedirs(root)
+    prepare(spark, path)
+    pre = rows(path)
+    calls = _count_or_crash(monkeypatch, root)
+    batch(spark, path)
+    monkeypatch.undo()
+    post = rows(path)
+    assert post != pre and calls["n"] >= 3, (case, calls)
+
+    for k in range(1, calls["n"] + 1):
+        root = str(tmp_path / f"crash{k}")
+        path = f"{root}/store"
+        os.makedirs(root)
+        prepare(spark, path)
+        _count_or_crash(monkeypatch, root, crash_at=k)
+        with pytest.raises(OSError, match="injected crash"):
+            batch(spark, path)
+        monkeypatch.undo()
+        where = f"{case}: crash at call {k} of {calls['n']}"
+        assert rows(path) in (pre, post), where
+
+        # the next writer's entry: a rewrite whose plan touches nothing
+        try:
+            store_mod.rewrite_partitions(
+                spark, path, part_col, lambda snap, m: ([], None)
+            )
+        except FileNotFoundError:
+            assert pre is None, where  # only a first seed leaves no store
+        assert rows(path) in (pre, post), where
+        assert no_tmp(root), where
+
+        batch(spark, path)
+        assert rows(path) == post, where
+        assert no_tmp(root) and _unnamed_files(path, part_col) == [], where

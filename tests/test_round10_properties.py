@@ -3,8 +3,8 @@ takedown applied THROUGH the streaming maintenance loop.
 
 ``maintain_takedowns_available_now`` folds each micro-batch via
 ``delete_from_index_store`` (locate affected buckets → row-local
-postings filter → ``swap_partition_dirs`` commit). A crash BETWEEN the locate and the
-swap means the batch's work is lost but nothing was committed; the
+postings filter → ``swap_partition_dirs`` commit). A crash BETWEEN the
+locate and the commit means the batch's work is lost but nothing was committed; the
 checkpoint must NOT have advanced past the batch, so the next pass
 replays it and the store converges to exactly
 ``build_index(corpus minus taken-down ids)`` — the exactly-once story
@@ -90,11 +90,11 @@ def test_takedown_crash_before_swap_replays_and_converges(
         real = store_mod.swap_partition_dirs
         state = {"fail": True}
 
-        def dying_swap(path, remaining, part_col, affected):
+        def dying_swap(*args, **kwargs):
             if state["fail"]:
                 state["fail"] = False
                 raise OSError("injected crash between locate and swap")
-            return real(path, remaining, part_col, affected)
+            return real(*args, **kwargs)
 
         monkeypatch.setattr(store_mod, "swap_partition_dirs", dying_swap)
         try:

@@ -9,8 +9,9 @@ used rmtree, which could race a faster healer that already healed AND
 re-acquired. Staging dirs orphaned between makedirs and the lease
 rename accumulated forever. And an overwrite reseed left mid-swap
 tmp orphans in place, arming the NEXT mutator's entry recovery to
-resurrect pre-crash data over the fresh seed. This file pins the
-fixes for all four.
+resurrect pre-crash data over the fresh seed (today every writer's
+entry deletes any tmp sibling, and nothing moves data back). This
+file pins the fixes for all four.
 """
 
 from __future__ import annotations
@@ -244,9 +245,8 @@ def _orphan_swap(path: str, part_col: str, v: int) -> str:
 
 
 def test_reseed_purges_swap_orphans_index_store(spark, tmp_path):
-    """write_index_store inside its lease purges tmp-swap orphans
-    BEFORE the overwrite, so the next mutator's entry recovery cannot
-    move pre-crash retired buckets in over the fresh seed."""
+    """write_index_store inside its lease deletes tmp orphans, so no
+    pre-crash bytes can reach the fresh seed."""
     from mapreduce_inverted_index_spark.operators.inverted_index import (
         build_index,
         delete_from_index_store,

@@ -1,21 +1,18 @@
-"""Atomic reader manifest for the partition-swapped stores (VERDICT
-r10 ask #4).
+"""Atomic reader manifest for the partitioned stores (VERDICT r10
+ask #4).
 
-Writers were already crash-safe (lease + dir swap + entry rollback),
-but a READER that listed the store during the rename window could see
-a mixed view: some partitions pre-swap, some post, some absent —
-silently. Readers now resolve one committed snapshot through
-``_mii_manifest.json`` (written atomically by every writer AFTER its
-renames land): concurrent with a swap they return exactly the
-pre-swap or post-swap state, or fail loud — never a mix. This file
-drives the store through every intermediate swap state
-(crash-injection style) and asserts that invariant, plus the
-recovery/reseed manifest refreshes.
+A READER that listed the store during a commit could see a mixed
+view: some partitions pre-batch, some post, some absent — silently.
+Readers now resolve one committed snapshot through
+``_mii_manifest.json``, whose rename is every writer's one commit
+point: concurrent with a commit they return exactly the pre-batch or
+post-batch state — never a mix. This file drives the store through
+every intermediate commit state (crash-injection style) and asserts
+that invariant, plus the manifest's life across crashes.
 """
 
 from __future__ import annotations
 
-import functools
 import os
 import threading
 import time
@@ -43,20 +40,6 @@ def _seed(spark, path, n=8):
     )
     write_index_store(build_index(docs), path, n_buckets=4)
     return docs
-
-
-def _fast_retries(monkeypatch):
-    """Readers retry ~2s by default before failing loud; frozen-state
-    tests shrink that to keep the suite fast. Both readers, the Spark
-    snapshot open and the driver-side partition read, retry through
-    ``store._read_committed``."""
-    from mapreduce_inverted_index_spark.operators import store as store_mod
-
-    monkeypatch.setattr(
-        store_mod,
-        "_read_committed",
-        functools.partial(store_mod._read_committed, retries=3, wait_sec=0.01),
-    )
 
 
 def test_manifest_written_by_seed_and_refreshed_by_mutations(spark, tmp_path):
@@ -94,13 +77,12 @@ def test_manifest_written_by_seed_and_refreshed_by_mutations(spark, tmp_path):
     assert {k: sorted(v) for k, v in m2["parts"].items()} == live
 
 
-def test_reader_never_sees_mixed_view_across_swap_states(
-    spark, tmp_path, monkeypatch
-):
-    """Drive the swap's intermediate states by hand (the states a
+def test_reader_never_sees_mixed_view_across_swap_states(spark, tmp_path):
+    """Drive the commit's intermediate states by hand (the states a
     crash or a concurrent reader can observe) and assert the
-    manifest-resolving reader returns the OLD snapshot, the NEW
-    snapshot, or raises — never a partial/mixed result."""
+    manifest-resolving readers return the OLD snapshot until the
+    manifest rename and the NEW one from it on — never a partial or
+    mixed result, and never an error."""
     import shutil
     import uuid
 
@@ -108,25 +90,20 @@ def test_reader_never_sees_mixed_view_across_swap_states(
         build_index,
         read_index_store,
         term_lookup_store,
+        write_index_store,
     )
     from mapreduce_inverted_index_spark.operators.store import (
         refresh_manifest,
     )
 
-    _fast_retries(monkeypatch)
     path = str(tmp_path / "store")
     docs = _seed(spark, path)
     before = _rows(read_index_store(spark, path))
 
-    # Build the post-delete state the way the swap does, but stop at
-    # each intermediate point. Affected = every bucket containing
-    # doc 0's terms; simulate deleting doc 0 from bucket dirs by
-    # re-seeding a twin store and borrowing its partition dirs.
+    # Build the post-delete state the way the commit does, but stop at
+    # each intermediate point. Affected = every bucket; simulate
+    # deleting doc 0 by staging a twin store's partition files.
     twin = str(tmp_path / "twin")
-    from mapreduce_inverted_index_spark.operators.inverted_index import (
-        write_index_store,
-    )
-
     write_index_store(
         build_index(docs.where(F.col("doc_id") != 0)), twin, n_buckets=4
     )
@@ -134,47 +111,44 @@ def test_reader_never_sees_mixed_view_across_swap_states(
     assert before != after
     terms = sorted(t for t, _, _ in before)
 
-    def lookup():
-        return _rows(term_lookup_store(spark, path, terms))
+    def views():
+        return (
+            _rows(read_index_store(spark, path)),
+            _rows(term_lookup_store(spark, path, terms)),
+        )
 
-    affected = sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(path)
-        if d.startswith("bucket=")
-    )
-    tmp = path + f".tmp-swap-{uuid.uuid4().hex[:8]}"
+    affected = sorted(d for d in os.listdir(path) if d.startswith("bucket="))
+    old = {d: sorted(os.listdir(f"{path}/{d}")) for d in affected}
+    tmp = path + f".tmp-{uuid.uuid4().hex[:8]}"
     os.makedirs(tmp)
 
-    # S1: tmp holds rewritten copies; live untouched -> OLD snapshot
-    for v in affected:
-        shutil.copytree(f"{twin}/bucket={v}", f"{tmp}/bucket={v}")
-    assert _rows(read_index_store(spark, path)) == before
-    assert lookup() == before
+    # S1: the tmp sibling holds the staged files -> OLD snapshot
+    for d in os.listdir(twin):
+        if d.startswith("bucket="):
+            shutil.copytree(f"{twin}/{d}", f"{tmp}/{d}")
+    assert views() == (before, before)
 
-    # S2: live dirs renamed ASIDE -> manifest names missing files ->
-    # loud error (not a silent partial view)
-    for v in affected:
-        os.rename(f"{path}/bucket={v}", f"{tmp}/retired-bucket={v}")
-    with pytest.raises(RuntimeError, match="mid-swap"):
-        read_index_store(spark, path).collect()
-    with pytest.raises(RuntimeError, match="mid-swap"):
-        lookup()
+    # S2: staged files moved into the live partition dirs, beside the
+    # old ones; the manifest still names only the old -> OLD snapshot
+    parts = {}
+    for d in sorted(os.listdir(tmp)):
+        os.makedirs(f"{path}/{d}", exist_ok=True)
+        for fn in os.listdir(f"{tmp}/{d}"):
+            os.rename(f"{tmp}/{d}/{fn}", f"{path}/{d}/{fn}")
+            if not fn.startswith("."):
+                parts.setdefault(d.split("=", 1)[1], []).append(fn)
+    assert views() == (before, before)
 
-    # S3: new dirs renamed IN, manifest not yet refreshed -> the old
-    # manifest's file names are gone -> still loud, still not mixed
-    for v in affected:
-        os.rename(f"{tmp}/bucket={v}", f"{path}/bucket={v}")
-    with pytest.raises(RuntimeError, match="mid-swap"):
-        read_index_store(spark, path).collect()
-    with pytest.raises(RuntimeError, match="mid-swap"):
-        lookup()
+    # S3: the manifest rename = the commit point -> NEW snapshot
+    refresh_manifest(path, "bucket", parts)
+    assert views() == (after, after)
 
-    # S4: manifest refresh = the reader-visible commit -> NEW snapshot
-    refresh_manifest(path, "bucket")
-    assert _rows(read_index_store(spark, path)) == after
-    assert lookup() == after
-
+    # S4: the files the manifest no longer names are deleted -> NEW
+    for d, fns in old.items():
+        for fn in fns:
+            os.remove(f"{path}/{d}/{fn}")
     shutil.rmtree(tmp)
+    assert views() == (after, after)
 
 
 def test_concurrent_reader_sees_only_old_or_new(spark, tmp_path):
@@ -252,10 +226,10 @@ def test_concurrent_reader_sees_only_old_or_new(spark, tmp_path):
 def test_crash_after_manifest_refresh_heals_on_next_mutation(
     spark, tmp_path, monkeypatch
 ):
-    """Crash between the manifest refresh and the tmp cleanup: the
-    orphan makes the next mutator's entry recovery roll the DATA back
-    — and it must re-derive the manifest too, or readers would fail
-    on the retired state forever."""
+    """Crash after the manifest rename, before the commit deletes what
+    the manifest no longer names: the batch is committed and stays
+    committed (readers see the post-batch store at once), and the
+    next mutation's entry deletes the leftover files."""
     import shutil
 
     from mapreduce_inverted_index_spark.operators import store as store_mod
@@ -263,18 +237,20 @@ def test_crash_after_manifest_refresh_heals_on_next_mutation(
         delete_from_index_store,
         read_index_store,
     )
+    from mapreduce_inverted_index_spark.operators.store import read_manifest
 
     path = str(tmp_path / "store")
     _seed(spark, path)
     before = _rows(read_index_store(spark, path))
 
-    real_rmtree = shutil.rmtree
-    def dying_rmtree(p, *a, **k):
-        if ".tmp-swap-" in str(p):
-            raise OSError("injected crash before tmp cleanup")
-        return real_rmtree(p, *a, **k)
+    real_remove = os.remove
 
-    monkeypatch.setattr(store_mod.shutil, "rmtree", dying_rmtree)
+    def dying_remove(p, *a, **k):
+        if str(p).startswith(path + "/bucket="):
+            raise OSError("injected crash before the old files go")
+        return real_remove(p, *a, **k)
+
+    monkeypatch.setattr(store_mod.os, "remove", dying_remove)
     with pytest.raises(OSError, match="injected crash"):
         delete_from_index_store(spark, path, [0])
     monkeypatch.undo()
@@ -282,16 +258,29 @@ def test_crash_after_manifest_refresh_heals_on_next_mutation(
     # heal the on-disk one like a dead-writer restart would
     shutil.rmtree(path + ".mutation-lease", ignore_errors=True)
 
-    # next mutation's entry recovery rolls back AND refreshes the
-    # manifest: the store reads as the PRE-batch state (the stream
-    # replays the uncommitted batch)
+    def unnamed():
+        parts = read_manifest(path, "bucket")["parts"]
+        return [
+            fn
+            for d in os.listdir(path)
+            if d.startswith("bucket=")
+            for fn in os.listdir(f"{path}/{d}")
+            if not fn.startswith(".")
+            and fn not in parts.get(d.split("=", 1)[1], ())
+        ]
+
+    # committed: doc 0 is gone already, the old files are left over
+    got = _rows(read_index_store(spark, path))
+    assert got != before and not any(0 in t[1] for t in got)
+    assert unnamed()
+
+    # the next mutation's entry deletes them, and it commits on top
     affected = delete_from_index_store(spark, path, [7])
     assert affected
     got = _rows(read_index_store(spark, path))
     assert all(t[0] != "alphah" for t in got)  # doc 7's term gone
-    # doc 0 is back (its delete rolled back, awaiting replay)
-    assert any(0 in t[1] for t in got)
-    assert got != before
+    assert not any(0 in t[1] for t in got)  # doc 0 stays gone
+    assert unnamed() == []
 
 
 def test_manifest_less_store_fails_loud(spark, tmp_path):

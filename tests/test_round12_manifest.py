@@ -187,13 +187,11 @@ def test_open_snapshot_verifies_the_materialized_file_index(
 def test_manifest_schema_carries_forward_across_swaps(
     spark, tmp_path, monkeypatch
 ):
-    """Swap commits (delete/merge) and entry recovery refresh the
-    manifest WITHOUT holding the DataFrame — the seed-recorded schema
-    (and, for the index store, ``n_buckets``) must survive them, so
-    the store stays empty-readable and hashes new terms with its own
-    arity after any mutation sequence."""
-    import shutil
-
+    """Rewrite commits (delete/merge) write the manifest WITHOUT the
+    seed's metadata — the seed-recorded schema (and, for the index
+    store, ``n_buckets``) must survive them and a crash after the
+    manifest rename, so the store stays empty-readable and hashes new
+    terms with its own arity after any mutation sequence."""
     from mapreduce_inverted_index_spark.operators import store as store_mod
     from mapreduce_inverted_index_spark.operators.inverted_index import (
         build_index,
@@ -220,7 +218,7 @@ def test_manifest_schema_carries_forward_across_swaps(
     assert os.path.isfile(f"{path}/{MANIFEST_NAME}")
     assert read_manifest(path, "cell")["schema"] == schema0
 
-    # the index store: seed -> merge -> delete -> crash recovery
+    # the index store: seed -> merge -> delete -> crash after commit
     idx = str(tmp_path / "index")
     docs = spark.createDataFrame(
         [(i, f"alpha{chr(97 + i)} common") for i in range(6)],
@@ -235,25 +233,26 @@ def test_manifest_schema_carries_forward_across_swaps(
     merge_into_index_store(spark, idx, build_index(more))
     delete_from_index_store(spark, idx, [0])
 
-    real_rmtree = shutil.rmtree
+    real_remove = os.remove
 
-    def dying_rmtree(p, *a, **k):
-        if ".tmp-swap-" in str(p):
-            raise OSError("injected crash before tmp cleanup")
-        return real_rmtree(p, *a, **k)
+    def dying_remove(p, *a, **k):
+        if str(p).startswith(idx + "/bucket="):
+            raise OSError("injected crash before the old files go")
+        return real_remove(p, *a, **k)
 
-    monkeypatch.setattr(store_mod.shutil, "rmtree", dying_rmtree)
+    monkeypatch.setattr(store_mod.os, "remove", dying_remove)
     with pytest.raises(OSError, match="injected crash"):
         delete_from_index_store(spark, idx, [1])
     monkeypatch.undo()
-    assert store_mod.recover_partition_swaps(idx, "bucket")
+    # the next writer's entry: a ghost delete commits nothing
+    assert delete_from_index_store(spark, idx, [999]) == []
 
     healed = read_manifest(idx, "bucket")
     assert healed["n_buckets"] == 5
     assert healed["schema"] == seeded["schema"]
     assert healed["version"] != seeded["version"]
-    # doc 1's delete rolled back (awaiting replay); doc 0 stays gone
-    want = docs.where(F.col("doc_id") != 0).unionByName(more)
+    # doc 1's delete is committed, like doc 0's
+    want = docs.where(~F.col("doc_id").isin([0, 1])).unionByName(more)
     got = {
         (r["term"], tuple(r["postings"]))
         for r in read_index_store(spark, idx).collect()

@@ -416,20 +416,17 @@ def test_compact_ivf_cells_layout_only(spark, tmp_path):
         ivf_centroids,
     )
     from mapreduce_inverted_index_spark.operators.store import (
-        refresh_manifest,
+        append_partitions,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     cents = ivf_centroids(emb, 4, 3)
     path = str(tmp_path / "cells")
-    # simulate 6 streaming appends -> 6 files per cell, each committed
-    # to the manifest the way the streaming publish commits it
+    # 6 appends the way the streaming fold commits them -> 6 files per
+    # cell
     for k in range(6):
         batch = ivf_assign(emb.where(F.col("vec_id") % 6 == k), cents)
-        batch.repartition(1).write.mode("append").partitionBy("cell").parquet(
-            path
-        )
-        refresh_manifest(path, "cell", {"schema": batch.schema.json()})
+        append_partitions(batch, path, "cell", k)
 
     def files(d):
         return sorted(

@@ -1,9 +1,8 @@
 """Property tests (hypothesis) for the round-9 store lifecycle, plus
-a crash-injection proof for the partition-dir swap: for arbitrary
-tiny corpora and arbitrary delete/merge batches the bucketed store
-must equal the batch rebuild, and a rename that dies mid-swap must
-never lose a row (every row stays readable in the live dir or the
-orphaned tmp)."""
+a crash-injection proof for the store's commit: for arbitrary tiny
+corpora and arbitrary delete/merge batches the bucketed store must
+equal the batch rebuild, and a rename that dies mid-commit must never
+lose a row (the store keeps reading as its pre-batch snapshot)."""
 
 from __future__ import annotations
 
@@ -126,17 +125,22 @@ def test_store_merge_property(spark, tmp_path_factory):
 
 
 def test_swap_crash_between_renames_loses_nothing(spark, tmp_path, monkeypatch):
-    """Kill the swap after the rename-ASIDE but before the rename-IN:
-    the live dir is missing that partition, but the full old copy
-    sits intact under the tmp's retired-* name and the rewritten copy
-    under the tmp's live name — manual reconciliation recovers either
-    state. Nothing was unlinked."""
+    """Kill the commit between its first and second rename (one staged
+    file moved into its live partition directory, its checksum still
+    staged): every file the manifest names is still on disk and
+    unchanged, so the store reads exactly as before the batch, and the
+    staged rest of the batch survives in the tmp sibling. Nothing the
+    old snapshot names was unlinked or overwritten."""
+    import json
+
     from mapreduce_inverted_index_spark.operators import store as store_mod
     from mapreduce_inverted_index_spark.operators.inverted_index import (
         build_index,
         delete_from_index_store,
+        read_index_store,
         write_index_store,
     )
+    from mapreduce_inverted_index_spark.operators.store import MANIFEST_NAME
 
     docs = spark.createDataFrame(
         [(i, f"alpha{chr(97 + i)} common") for i in range(8)],
@@ -147,14 +151,21 @@ def test_swap_crash_between_renames_loses_nothing(spark, tmp_path, monkeypatch):
     before = _index_rows(
         spark.read.parquet(path).select("term", "postings", "df")
     )
+    with open(f"{path}/{MANIFEST_NAME}") as f:
+        manifest = json.load(f)
+    named = {
+        f"bucket={k}/{fn}": os.path.getsize(f"{path}/bucket={k}/{fn}")
+        for k, fns in manifest["parts"].items()
+        for fn in fns
+    }
 
     real_rename = os.rename
     calls = {"n": 0}
 
     def dying_rename(src, dst):
         calls["n"] += 1
-        if calls["n"] == 2:  # after one aside, before its rename-in
-            raise OSError("injected crash mid-swap")
+        if calls["n"] == 2:  # after one move, before its checksum
+            raise OSError("injected crash mid-commit")
         real_rename(src, dst)
 
     monkeypatch.setattr(store_mod.os, "rename", dying_rename)
@@ -162,22 +173,16 @@ def test_swap_crash_between_renames_loses_nothing(spark, tmp_path, monkeypatch):
         delete_from_index_store(spark, path, [0])
     monkeypatch.undo()
 
-    # every pre-crash row is still on disk: the live store plus the
-    # orphaned tmp (retired aside + rewritten) must cover `before`
-    tmps = [
-        d
-        for d in os.listdir(str(tmp_path))
-        if d.startswith("store.tmp-swap-")
-    ]
-    assert tmps, "the uuid tmp dir must survive the crash"
-    recovered = {}
-    for r in spark.read.parquet(path).select("term", "postings", "df").collect():
-        recovered[r["term"]] = (tuple(r["postings"]), r["df"])
-    tmp_dir = f"{tmp_path}/{tmps[0]}"
-    for d in os.listdir(tmp_dir):
-        if d.startswith("retired-bucket="):
-            part = spark.read.parquet(f"{tmp_dir}/{d}")
-            for r in part.select("term", "postings", "df").collect():
-                recovered[r["term"]] = (tuple(r["postings"]), r["df"])
-    got = sorted((t, p, df) for t, (p, df) in recovered.items())
-    assert got == before  # the ORIGINAL store reconstructs exactly
+    # the uuid tmp sibling keeps the staged rest of the batch
+    assert [
+        d for d in os.listdir(str(tmp_path)) if d.startswith("store.tmp-")
+    ], "the uuid tmp dir must survive the crash"
+    # every named file is on disk at its committed size, the manifest
+    # is the pre-batch one, and a reader sees the pre-batch rows
+    with open(f"{path}/{MANIFEST_NAME}") as f:
+        assert json.load(f) == manifest
+    assert {
+        p: os.path.getsize(f"{path}/{p}") for p in named
+    } == named
+    got = _index_rows(read_index_store(spark, path))
+    assert got == before  # the ORIGINAL store reads exactly

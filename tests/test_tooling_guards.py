@@ -5,8 +5,8 @@ internals by name, and the benchmark's tracer (``perfbench/spans.py``)
 wraps ``operators.store`` entry points by attribute name. Nothing
 else runs these on every change, so a helper deleted or renamed in
 the package would break them silently; these tests fail instead.
-Inside the package, only ``operators/store.py`` may drive the
-partition-swap commit steps, and no other module under ``operators/``
+Inside the package, only ``operators/store.py`` may drive the store's
+commit steps, and no other module under ``operators/``
 or ``streaming/`` renames or removes files.
 
 Calls from those scripts must also match the package's signatures,
@@ -184,16 +184,17 @@ def test_store_readers_look_up_open_snapshot_at_call_time(
 
 STORE_COMMIT_INTERNALS = (
     "swap_partition_dirs",
-    "recover_partition_swaps",
-    "purge_swap_orphans",
+    "refresh_manifest",
+    "_delete_unnamed",
 )
 
 
 def test_only_the_store_module_drives_partition_swaps():
-    """Stores commit through ``store.seed_store`` and
-    ``store.rewrite_partitions``; an operator that calls the swap,
-    crash-recovery or orphan-purge steps itself has forked the commit
-    protocol. Docstrings may name them; code may not."""
+    """Stores commit through ``store.seed_store``,
+    ``store.rewrite_partitions`` and ``store.append_partitions``; an
+    operator that calls the commit, its manifest rename or the
+    deletion of unnamed files (the crash recovery) itself has forked
+    the commit protocol. Docstrings may name them; code may not."""
     offenders = []
     store = os.path.join(ROOT, PKG, "operators", "store.py")
     for path in sorted(
@@ -439,13 +440,13 @@ TEST_SEAMS = {
         "filter are never chosen by the package",
     ),
     ("operators/store.py", "_read_committed", "retries"): (
-        "test_round11_manifest.py::test_reader_never_sees_mixed_view_across_swap_states",
-        "frozen mid-swap states fail loud after 3 retries instead of "
-        "the default 40",
+        "test_round12_manifest.py::test_open_snapshot_verifies_the_materialized_file_index",
+        "a file index that never matches the manifest fails loud after "
+        "3 retries instead of the default 40",
     ),
     ("operators/store.py", "_read_committed", "wait_sec"): (
-        "test_round11_manifest.py::test_reader_never_sees_mixed_view_across_swap_states",
-        "a 10 ms retry wait keeps the frozen-state tests fast",
+        "test_round12_manifest.py::test_open_snapshot_verifies_the_materialized_file_index",
+        "a 10 ms retry wait keeps the never-matching case fast",
     ),
     ("sources/formats.py", "write_final_index_json", "creation_time"): (
         "test_ids_and_sinks.py::test_final_index_json_reference_byte_shape",

@@ -381,9 +381,10 @@ def main() -> None:
 
     #  * bucket-level store takedown: the same 5k-id batch against
     #    the PARTITIONED store (64 buckets) — locate + per-bucket
-    #    rewrite + crash-safe swap, measured end-to-end including
-    #    the dir swaps (write_index_store build time excluded; it is
-    #    the once-per-corpus cost).
+    #    rewrite + crash-safe commit, measured end-to-end including
+    #    the file moves, manifest rename and old-file deletion
+    #    (write_index_store build time excluded; it is the
+    #    once-per-corpus cost).
     import shutil
     import tempfile
 
@@ -398,7 +399,7 @@ def main() -> None:
     n_buckets = len(delete_from_index_store(spark, store, dead_ids))
     print(
         f"| delete_from_index_store, 5k-id batch over the 100k-doc "
-        f"64-bucket store (locate + rewrite + swap) "
+        f"64-bucket store (locate + rewrite + commit) "
         f"| {n_buckets} buckets rewritten | "
         f"{time.perf_counter() - t0:.2f}s |"
     )
@@ -466,9 +467,9 @@ def race() -> None:
     reads. Appends one SCALING.md-style row per store.
 
     The unit-scale walk (tests/test_round11_manifest.py /
-    test_round12_manifest.py) proves every intermediate swap state;
+    test_round12_manifest.py) proves every intermediate commit state;
     this probe proves the same invariant under real decade-scale
-    mutation latencies, where the rename windows are seconds wide.
+    mutation latencies, where the commit windows are seconds wide.
     """
     import os
     import shutil
@@ -505,8 +506,8 @@ def race() -> None:
 
         CONTRACT (ADVICE r12 #5): each seed/mutation callable commits
         exactly ONE reader-visible snapshot — the store mutators here
-        (seed overwrite, delete, merge, compact, one streaming append
-        pass) all publish through a single manifest swap, so the
+        (seed, delete, merge, compact, one streaming append
+        pass) all publish through a single manifest rename, so the
         after-return fingerprint is the only state a manifest-
         resolved reader can land on. A mutator that refreshed the
         manifest more than once per call would false-FAIL this storm
@@ -613,7 +614,7 @@ def race() -> None:
     # passes — the path whose manifest refresh rides inside the fold's
     # lease (streaming/ingest.py). Store at 500k docs; each mutation
     # drops a batch of new corpus files and runs one AvailableNow pass
-    # (= one micro-batch = one bucket-merge = one manifest swap = one
+    # (= one micro-batch = one bucket-merge = one manifest rename = one
     # reader-visible commit, per the run_storm contract).
     from mapreduce_inverted_index_spark.streaming.ingest import (
         maintain_index_available_now,
